@@ -56,17 +56,22 @@ object PageRank {
     * incoming mass on one reducer (AQE splits skewed joins, not
     * skewed aggregation keys). `contribRows` must carry `_sb` (the
     * contributing src — stable content for a retry-safe salt),
-    * `node`, `contrib`.
+    * `node`, `contrib`, and `_page` when `carryPage` is set: the
+    * per-node `max(_page)` then rides both stages into the output.
     */
   private def aggContribs(contribRows: DataFrame,
-      saltHotKeys: Int): DataFrame =
+      saltHotKeys: Int, carryPage: Boolean = false): DataFrame = {
+    val flag = if (carryPage) Seq("_page") else Nil
     if (saltHotKeys > 0)
       graft.operators.SkewTools
         .saltedSumCount(contribRows, "node", "contrib",
-          salts = saltHotKeys, saltByCols = Seq("_sb"))
-        .select(col("node"), col("sum").as("incoming"))
+          salts = saltHotKeys, saltByCols = Seq("_sb"), maxCols = flag)
+        .select(col("node") +: col("sum").as("incoming") +:
+          flag.map(col): _*)
     else
-      contribRows.groupBy("node").agg(sum("contrib").as("incoming"))
+      contribRows.groupBy("node").agg(sum("contrib").as("incoming"),
+        flag.map(c => max(c).as(c)): _*)
+  }
 
   /** The static loop frames every count-based variant shares —
     * factored so the parity-critical layout (distinct edges joined
@@ -444,6 +449,16 @@ object PageRank {
     out
   }
 
+  /** Most PageRank rounds [[runOnPages]] leaves in one lazy plan.
+    * On one partition its gathers need no exchange, so consecutive
+    * rounds fuse into a single stage whose task holds every round's
+    * partial and final aggregation maps at once, at least one memory
+    * page each (2 × 32 MB a round under a 4 GB heap); cutting after
+    * this many rounds bounds that peak. 10 is the reference's round
+    * count, so its pipeline stays cut-free.
+    */
+  private val MaxFusedRounds = 10
+
   /** PageRank with the reference's EXACT page semantics
     * (/root/reference/PageRank.java:437-530): the node set is the
     * page/title set (not src ∪ dst), initial rank is 1/N with N the
@@ -453,8 +468,20 @@ object PageRank {
     * `hasOriginalPRAndOutlinkList` guard (PageRank.java:527) — so
     * their mass leaks, as in the reference.
     *
-    * Same scale shape as [[run]]: links co-partitioned by src once,
-    * only the O(|pages|) rank table moves per iteration.
+    * Each round is the reference's single gather: the page rows ride
+    * the contribution shuffle. Contribution rows
+    * `(_sb = src, node = dst, contrib, _page = false)` are unioned
+    * with one static row per page `(_sb = node, node, 0.0,
+    * _page = true)`, one `groupBy(node)` sums the contributions and
+    * takes `max(_page)`, and only keys that carry a page row survive
+    * (the :527 guard). Every page has its zero row, so a page with
+    * no in-links gets exactly `1 - d`, and the sum needs no coalesce
+    * (adding 0.0 is exact). No per-round join with the page set is
+    * planned, so AQE has nothing to turn into a per-round broadcast.
+    * Links are co-partitioned by src once and only the O(|pages|)
+    * rank table moves per round; on one partition the rounds fuse
+    * into one stage, cut every [[MaxFusedRounds]] rounds while
+    * rounds remain.
     *
     * @param pages one row per page, column `node`
     * @param links (src, dst) with MULTIPLICITY (one row per outlink
@@ -473,20 +500,23 @@ object PageRank {
     val p = pages.select("node")
       .repartition(nPart, col("node"))
       .lineageCut
+    val pageRows = p.select(col("node").as("_sb"), col("node"),
+      lit(0.0).as("contrib"), lit(true).as("_page"))
 
     var ranks = p.withColumn("rank", lit(1.0 / nPages))
-    for (_ <- 1 to iterations) {
-      val contribs = aggContribs(linked
+    for (i <- 1 to iterations) {
+      val contribs = linked
         .join(ranks, linked("src") === ranks("node"))
         .select(linked("src").as("_sb"), linked("dst").as("node"),
-          (col("rank") / col("outdeg")).as("contrib")), saltHotKeys)
-        .withColumnRenamed("node", "tgt")
-      // Left join FROM pages: contributions to non-page targets drop.
-      ranks = p
-        .join(contribs, p("node") === col("tgt"), "left")
-        .select(p("node"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
+          (col("rank") / col("outdeg")).as("contrib"),
+          lit(false).as("_page"))
+      ranks = aggContribs(contribs.union(pageRows), saltHotKeys,
+          carryPage = true)
+        .where(col("_page"))
+        .select(col("node"),
+          (lit(1.0 - damping) + lit(damping) * col("incoming")).as("rank"))
+      if (i % MaxFusedRounds == 0 && i < iterations)
+        ranks = ranks.lineageCut
     }
     ranks
   }

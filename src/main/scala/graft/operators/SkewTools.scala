@@ -27,18 +27,23 @@ import org.apache.spark.sql.functions._
 object SkewTools {
 
   /** count + sum of `valCol` per `keyCol`, skew-safe. Output columns:
-    * (keyCol, n, sum).
+    * (keyCol, n, sum, maxCols...). Each of `maxCols` is carried
+    * through both stages as its `max` under its own name (max of
+    * per-salt maxima is the key's max, so the result equals an
+    * unsalted `max`).
     */
   def saltedSumCount(df: DataFrame, keyCol: String, valCol: String,
-      salts: Int, saltByCols: Seq[String]): DataFrame = {
+      salts: Int, saltByCols: Seq[String],
+      maxCols: Seq[String] = Nil): DataFrame = {
     require(salts > 0, s"salts must be positive, got $salts")
     require(saltByCols.nonEmpty, "need stable columns to derive the salt")
+    val maxes = maxCols.map(c => max(col(c)).as(c))
     df
       .withColumn("_salt", pmod(hash(saltByCols.map(col): _*), lit(salts)))
       .groupBy(col(keyCol), col("_salt"))
-      .agg(count(lit(1)).as("_c"), sum(col(valCol)).as("_s"))
+      .agg(count(lit(1)).as("_c"), sum(col(valCol)).as("_s") +: maxes: _*)
       .groupBy(col(keyCol))
-      .agg(sum("_c").cast("long").as("n"), sum("_s").as("sum"))
+      .agg(sum("_c").cast("long").as("n"), sum("_s").as("sum") +: maxes: _*)
   }
 
   /** Salted inner equi-join for when AQE can't help: AQE splits a

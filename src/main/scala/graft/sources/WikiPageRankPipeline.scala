@@ -9,9 +9,11 @@ import graft.graph.{LinkGraph, PageRank}
   * text file out, mirroring `hadoop jar PageRank.jar <in> <out>`
   * (/root/reference/PageRank.java:246-337, main + 4 chained jobs).
   *
-  * Phases map 1:1 but collapse into ONE Spark job graph with no
-  * intermediate text-file materialization (the reference writes and
-  * re-reads the full graph as text between every job):
+  * Phases map 1:1 with no intermediate text-file materialization (the
+  * reference writes and re-reads the full graph as text between every
+  * job). On a 2,000-page dump one pass runs 14 Spark jobs, 36 before
+  * each PageRank round became a single gather (every round's page
+  * join had been a broadcast job of its own):
   *   1. page count   → pushed filter + count on the text source
   *   2. link graph   → regexp extraction (LinkGraph.parseWikiPages)
   *   3. 10×PageRank  → PageRank.runOnPages (exact reference

@@ -167,8 +167,11 @@ class GraphSpec extends SparkSpec {
     for (k <- plain.keys)
       assert(math.abs(plain(k) - salted(k)) < 1e-12, s"weighted $k")
 
+    // "ghost" is a link target with no page: its contributions must
+    // drop under salting too.
     val links = ((1 to 40).map(i => (s"n$i", "hub")) ++
-      (1 to 40).map(i => ("hub", s"n$i"))).toDF("src", "dst")
+      (1 to 40).map(i => ("hub", s"n$i")) ++
+      Seq(("hub", "ghost"))).toDF("src", "dst")
     val pages = links.select(org.apache.spark.sql.functions.col("src")
       .as("node")).distinct()
     val p1 = PageRank.runOnPages(pages, links, nPages = 41, iterations = 4)
@@ -177,6 +180,117 @@ class GraphSpec extends SparkSpec {
       saltHotKeys = 8).as[(String, Double)].collect().toMap
     for (k <- p1.keys)
       assert(math.abs(p1(k) - p2(k)) < 1e-12, s"pages $k")
+    assert(p1.keySet == p2.keySet && !p2.contains("ghost"))
+  }
+
+  /** Pages `p0..p(n-1)`, each with two outlinks to pages (one of them
+    * duplicated on every third page) and one to the non-page "ghost".
+    */
+  private def pageLinks(n: Int): Seq[(String, String)] =
+    (0 until n).flatMap { i =>
+      val a = s"p${(i * 7 + 1) % n}"
+      Seq((s"p$i", a), (s"p$i", s"p${(i * 13 + 5) % n}"), (s"p$i", "ghost")) ++
+        (if (i % 3 == 0) Seq((s"p$i", a)) else Nil)
+    }
+
+  /** `k` reference rounds (PageRank.java:523, non-page targets dropped)
+    * from `seed`, computed on the driver.
+    */
+  private def pageRounds(links: Seq[(String, String)],
+      seed: Map[String, Double], k: Int): Map[String, Double] = {
+    val outDeg = links.groupBy(_._1).map { case (s, ls) => s -> ls.size }
+    (1 to k).foldLeft(seed) { (r, _) =>
+      val in = links.filter(l => r.contains(l._2))
+        .groupMapReduce(_._2)(l => r(l._1) / outDeg(l._1))(_ + _)
+      r.map { case (p, _) => p -> (0.15 + 0.85 * in.getOrElse(p, 0.0)) }
+    }
+  }
+
+  /** Runs `body` and returns its value with the largest per-task peak
+    * execution memory among the tasks it ran. A marker job closes the
+    * window: listener events arrive in order, so once the marker's
+    * end is seen every task of `body` has been counted.
+    */
+  private def withPeakTaskMem[T](body: => T): (T, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val key = "graft.test.peakMemMarker"
+    val peak = new java.util.concurrent.atomic.AtomicLong
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          peak.accumulateAndGet(te.taskMetrics.peakExecutionMemory, math.max)
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(key) != null)
+          markerJob.set(js.jobId)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobId == markerJob.get) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(key, "end")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, peak.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("runOnPages: 30 rounds equal 3 × 10 hand-seeded rounds, memory bounded") {
+    // One partition: the gathers need no exchange, so the rounds fuse
+    // into one stage between cuts and the fusion bound is what keeps
+    // the 30-round task's memory at the 10-round task's.
+    val links = pageLinks(300)
+    val df = links.toDF("src", "dst").coalesce(1)
+    val pages = df.select(org.apache.spark.sql.functions.col("src")
+      .as("node")).distinct()
+    val (r10, peak10) = withPeakTaskMem(
+      PageRank.runOnPages(pages, df, nPages = 300, iterations = 10)
+        .as[(String, Double)].collect().toMap)
+    val (r30, peak30) = withPeakTaskMem(
+      PageRank.runOnPages(pages, df, nPages = 300, iterations = 30)
+        .as[(String, Double)].collect().toMap)
+
+    val seed = links.map(_._1).distinct.map(_ -> 1.0 / 300).toMap
+    val h10 = pageRounds(links, seed, 10)
+    val h30 = pageRounds(links, pageRounds(links, h10, 10), 10)
+    assert(r10.keySet == h10.keySet && r30.keySet == h30.keySet)
+    for (k <- h30.keys) {
+      assert(math.abs(r10(k) - h10(k)) < 1e-12, s"10 rounds $k")
+      assert(math.abs(r30(k) - h30(k)) < 1e-12, s"30 rounds $k")
+    }
+    // Each fused round holds two aggregation maps (~peak10 / 10), so
+    // without the bound the 30-round task peaks near 3 × peak10. A
+    // segment that starts from a checkpointed rank table allocates a
+    // few KB more than the first one, hence the margin below one round.
+    assert(peak10 > 0)
+    assert(peak30 < peak10 + peak10 / 10,
+      s"30-round peak $peak30 B vs 10-round $peak10 B")
+  }
+
+  test("runOnPages at 8 partitions matches the 1-partition run") {
+    val links = pageLinks(300).toDF("src", "dst").coalesce(1)
+    val pages = links.select(org.apache.spark.sql.functions.col("src")
+      .as("node")).distinct()
+    val one = PageRank.runOnPages(pages, links, nPages = 300)
+      .as[(String, Double)].collect().toMap
+    // AQE coalescing off, so the size-derived partition count stays
+    // above 1 and the unfused plan (one exchange per round) runs.
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val (many, parts) = try {
+      val r = PageRank.runOnPages(pages.repartition(8), links.repartition(8),
+        nPages = 300)
+      (r.as[(String, Double)].collect().toMap, r.rdd.getNumPartitions)
+    } finally spark.conf.set(key, prev)
+    assert(parts > 1)
+    assert(many.keySet == one.keySet)
+    for (k <- one.keys)
+      assert(math.abs(many(k) - one(k)) < 1e-12, s"node $k")
   }
 
   test("redistributeDangling: conserving recurrence exact, mass sums to 1") {

@@ -10,11 +10,16 @@ Usage: python3 tools/selfcheck.py <sfdir> <outdir> [--skip-verify] [names...]
    name + rows by value, and compare cell-for-cell.
 """
 import json
+import os
 import subprocess
 import sys
 
 import duckdb
 import pandas as pd
+
+# The checkout this script lives in (tools/..), so the check runs
+# against whichever copy of the repository it was invoked from.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -44,7 +49,7 @@ def main():
         names = " ".join(sorted(only))
         r = subprocess.run(
             ["sbt", f'runMain graft.Verify {sfdir} {outdir} {names}'.strip()],
-            capture_output=True, text=True, cwd="/root/repo")
+            capture_output=True, text=True, cwd=REPO_ROOT)
         if r.returncode != 0:
             print(r.stdout[-4000:], r.stderr[-4000:])
             sys.exit(1)
