@@ -31,9 +31,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Iterative operators with LAZY results (PageRank.run & co)
-      // keep their partitioned edge caches alive by contract until
-      // the caller materializes; the parquet write above IS that
+      // Some operators return LAZY results over frames they persist
+      // (Dedup's signature tables, by contract, until the caller
+      // materializes); the parquet write above IS that
       // materialization, so release everything before the next
       // query — a 180-query session would otherwise accumulate
       // every query's persisted frames.

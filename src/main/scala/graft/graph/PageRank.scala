@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Checkpointing.CutOps
 
@@ -19,118 +18,211 @@ import graft.operators.Checkpointing.CutOps
   *   - nodes with no outlinks keep receiving rank but emit none (rank
   *     "leaks", as in the reference — no dangling redistribution).
   *
-  * Scale design (100 TB edges / 1000 executors):
-  *   - Edges joined with out-degrees ONCE, hash-partitioned by `src`,
-  *     and persisted — the per-iteration `ranks ⋈ edges` join then
-  *     shuffles only the rank table (O(|V|)), never the edge set.
-  *     The reference re-reads and re-writes the full graph as text
-  *     files every iteration; here the big side stays resident and
-  *     partitioned.
-  *   - Contributions aggregate with map-side partial sums
-  *     (`groupBy(dst).sum` → partial HashAggregate before the
-  *     exchange), so the shuffle carries one partial per (partition,
-  *     node), not one record per edge.
-  *   - `localCheckpoint` every 3 iterations truncates the lineage so
-  *     the plan (and failure-recovery cost) stays O(1) per iteration
-  *     instead of growing with the iteration count.
-  *   - AQE splits skewed hub nodes' aggregation partitions at runtime.
+  * One core serves every entry point; the variants differ only in
+  * data — the edge weight (1 unless weighted), the per-node teleport
+  * (1.0, or `1[u∈S]/|S|` when personalized) and the dangling policy
+  * (the reference's leak, or the conserving `dm` term):
+  *   - [[statics]] cuts the edge input once, derives the out-degree
+  *     (or out-weight), and cuts the src-partitioned edge table and
+  *     the node rows. Only the O(|V|) rank table moves per round; the
+  *     edge set is never re-shuffled.
+  *   - [[gather]] is one round, the reference's single map/reduce:
+  *     contribution rows `(_sb = src, node = dst, rank/outdeg)` and
+  *     one zero row per node `(_sb = node, node, 0.0, _page = true)`
+  *     go through ONE `groupBy(node)` (map-side partial sums, or
+  *     SkewTools' salted two-stage sum), which takes `max` of every
+  *     column the node rows carry, and only keys with a node row
+  *     survive (the :527 guard). No per-round join with the node set
+  *     is planned.
+  *   - [[fixedRounds]] (`run`, `runWeighted`, `runPersonalized`,
+  *     `runOnPages`) stays lazy, so `.explain` audits and plan pins
+  *     see the rounds, and cuts every [[MaxFusedRounds]] rounds while
+  *     rounds remain; [[eagerRound]] (`residualCurve`,
+  *     `runUntilConverged`) cuts every round and carries the previous
+  *     rank on the node row, so the residual reads off the gathered
+  *     frame.
   *
-  * Cache lifecycle — SELF-RELEASING: the static loop frames (edges
-  * joined with out-degrees, the node set) are eagerly lineage-cut
-  * (localCheckpoint) rather than persisted, so their blocks live in
-  * the block manager and release with the RDD on GC — nothing is ever
-  * registered in the cache manager, and a many-query session (Bench
-  * runs hundreds of evaluations in one JVM) accumulates no cached
-  * edge tables (CacheHygieneSpec pins this for every graph operator).
-  * The fixed-iteration entry points still return a LAZY frame over
-  * those checkpoint leaves, so `.explain` audits and plan pins see
-  * the whole iteration chain; the convergence twins, whose round
-  * counts are run-dependent, cut their results eagerly and release
-  * their own loop caches before returning.
+  * Cache lifecycle — SELF-RELEASING: nothing is persisted. Every
+  * static and per-round frame is a lineage cut, whose blocks live in
+  * the block manager and release with the RDD on GC; the cache
+  * manager never sees them, so a many-query session (Bench runs
+  * hundreds of evaluations in one JVM) accumulates no cached edge
+  * tables (CacheHygieneSpec pins this for every graph operator).
   */
 object PageRank {
 
-  /** Shared contribution aggregation: sum per target node, either the
-    * plain partial-aggregated groupBy or SkewTools' two-stage salted
-    * sum when a pathological hub would otherwise land its whole
-    * incoming mass on one reducer (AQE splits skewed joins, not
-    * skewed aggregation keys). `contribRows` must carry `_sb` (the
-    * contributing src — stable content for a retry-safe salt),
-    * `node`, `contrib`, and `_page` when `carryPage` is set: the
-    * per-node `max(_page)` then rides both stages into the output.
+  /** Sum of `contrib` per node, with `max` of each `carry` column:
+    * either the plain partial-aggregated groupBy or SkewTools'
+    * two-stage salted sum when a pathological hub would otherwise
+    * land its whole incoming mass on one reducer (AQE splits skewed
+    * joins, not skewed aggregation keys). The salt derives from `_sb`
+    * (the contributing src — stable content, retry-safe).
     */
-  private def aggContribs(contribRows: DataFrame,
-      saltHotKeys: Int, carryPage: Boolean = false): DataFrame = {
-    val flag = if (carryPage) Seq("_page") else Nil
+  private def aggContribs(rows: DataFrame, saltHotKeys: Int,
+      carry: Seq[String]): DataFrame =
     if (saltHotKeys > 0)
       graft.operators.SkewTools
-        .saltedSumCount(contribRows, "node", "contrib",
-          salts = saltHotKeys, saltByCols = Seq("_sb"), maxCols = flag)
+        .saltedSumCount(rows, "node", "contrib",
+          salts = saltHotKeys, saltByCols = Seq("_sb"), maxCols = carry)
         .select(col("node") +: col("sum").as("incoming") +:
-          flag.map(col): _*)
+          carry.map(col): _*)
     else
-      contribRows.groupBy("node").agg(sum("contrib").as("incoming"),
-        flag.map(c => max(c).as(c)): _*)
+      rows.groupBy("node").agg(sum("contrib").as("incoming"),
+        carry.map(c => max(c).as(c)): _*)
+
+  /** The loop statics: `linked` = (src, dst[, weight], outw) cut and
+    * src-partitioned, `nodes` = one row per node cut and
+    * node-partitioned, `contrib` = one edge's share of its src's rank,
+    * `saltHotKeys` = the rounds' salt count (0 = unsalted).
+    */
+  private final class Statics(val linked: DataFrame, val nodes: DataFrame,
+      val contrib: Column, val saltHotKeys: Int) {
+    lazy val n: Long = nodes.count()
   }
 
-  /** The static loop frames every count-based variant shares —
-    * factored so the parity-critical layout (distinct edges joined
-    * with out-degrees ONCE, src-partitioned, eagerly lineage-cut;
-    * rank/outdeg stays a division — precomputing 1/outdeg would
-    * double-round and break bit-parity with the SQL oracle) is
-    * stated once for [[run]], [[runPersonalized]] and
-    * [[residualCurve]].
+  /** Builds the [[Statics]] from `edges` (src, dst[, weight]). The edge
+    * input is cut FIRST: it feeds the out-degree aggregate, the
+    * `linked` join and the node rows, and nothing dedupes the repeated
+    * subtree — for the wiki queries that subtree is the whole regex
+    * link extraction. A `weight` column makes the share
+    * `rank / outw * weight` with `outw = Σ weight`; otherwise it is
+    * `rank / outdeg`. Both stay divisions: precomputing 1/outdeg would
+    * double-round and break bit-parity with the SQL oracles.
     *
-    * @return (linked = (src, dst, outdeg) cut, nodes cut,
-    *   n = node count)
+    * The explicit `repartition(nPart, …)` before each static cut keeps
+    * the statics co-partitioned with the rounds' exchanges (an
+    * AQE-coalesced layout cannot co-partition, and every round would
+    * re-exchange the edge set). `nPart` is size-derived: the cut
+    * input's own partition count (1 at bench scale, so one-partition
+    * rounds fuse into one stage), but at least `saltHotKeys`: salting
+    * spreads a hub over that many reducers, and on one partition Spark
+    * plans no salt exchange at all.
+    *
+    * @param pages the node set when it is not src ∪ dst (one row per
+    *   page, column `node`); by default the node rows are src ∪ dst,
+    *   each flagged `_has_out` when it has an outlink.
     */
-  private def countStatics(edges: DataFrame)
-      : (DataFrame, DataFrame, Long) = {
-    // Cut the distinct edge set first: it feeds the out-degree
-    // aggregate, the linked join and BOTH node-union branches, and
-    // nothing dedupes the repeated subtree — for the wiki queries
-    // that subtree is the whole regex link-extraction chain,
-    // previously executed ~4× per run (round-16 optimization).
-    val e = edges.select("src", "dst").distinct().lineageCut
-    // Explicit size-adaptive repartitions before the static cuts
-    // (round-17, guide §2.4/§2.2): the partitioning-preserving cut
-    // records the FINAL layout, but AQE-coalesced layouts
-    // (ENSURE_REQUIREMENTS / REPARTITION_BY_COL) carry coalesce
-    // boundaries that cannot co-partition with the fresh exchanges
-    // the per-iteration joins plan — every round re-exchanged BOTH
-    // static sides (the loop-invariant edge set included).
-    // REPARTITION_BY_NUM is exempt from coalescing, and
-    // EnsureRequirements sizes a join's fresh exchange to match an
-    // existing compatible child partitioning — so with the statics
-    // at hashpartitioning(key, N) the loop shuffles only the O(|V|)
-    // rank/contribution stream, at N, in every round. N itself is
-    // SIZE-DERIVED, not the core-count constant: the cut edge set's
-    // AQE-coalesced partition count is the engine's own
-    // advisory-size parallelism for this graph (1 at bench scale —
-    // no 32-empty-task stages per round; input-proportional at
-    // cluster scale).
-    val nPart = math.max(e.rdd.getNumPartitions, 1)
-    val outDeg = e.groupBy("src").agg(count("*").as("outdeg"))
-    val linked = e.join(outDeg, "src")
+  private def statics(edges: DataFrame, saltHotKeys: Int = 0,
+      pages: Option[DataFrame] = None): Statics = {
+    val e = edges.lineageCut
+    val nPart = Seq(e.rdd.getNumPartitions, saltHotKeys, 1).max
+    val weighted = e.columns.contains("weight")
+    val outW = e.groupBy("src")
+      .agg((if (weighted) sum("weight") else count("*")).as("outw"))
+    val linked = e.join(outW, "src")
       .repartition(nPart, col("src"))
       .lineageCut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
+    val nodes = pages.getOrElse(
+        e.select(col("src").as("node"), lit(true).as("_has_out"))
+          .union(e.select(col("dst").as("node"), lit(false)))
+          .groupBy("node").agg(max("_has_out").as("_has_out")))
       .repartition(nPart, col("node"))
       .lineageCut
-    (linked, nodes, nodes.count())
+    val share = col("rank") / col("outw")
+    new Statics(linked, nodes,
+      if (weighted) share * col("weight") else share, saltHotKeys)
   }
 
+  /** One round, the reference's single gather: the contribution rows
+    * of `ranks` unioned with one zero row per `nodeRows` row, summed
+    * per node in one `groupBy`, keeping only keys that have a node
+    * row. Every node has its zero row, so a node with no in-links
+    * gets `incoming = 0.0` and no coalesce is needed (adding 0.0 is
+    * exact). Each column of `nodeRows` besides `node` rides the
+    * gather as `max` (contribution rows carry null there).
+    *
+    * @return (node, incoming, _page, carried columns…)
+    */
+  private def gather(s: Statics, ranks: DataFrame,
+      nodeRows: DataFrame): DataFrame = {
+    val carry = nodeRows.schema.fields.toSeq.filter(_.name != "node")
+    val contribs = s.linked.join(ranks, s.linked("src") === ranks("node"))
+      .select(Seq(s.linked("src").as("_sb"), s.linked("dst").as("node"),
+          s.contrib.as("contrib"), lit(false).as("_page")) ++
+        carry.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    val zeros = nodeRows.select(Seq(col("node").as("_sb"), col("node"),
+        lit(0.0).as("contrib"), lit(true).as("_page")) ++
+      carry.map(f => col(f.name)): _*)
+    aggContribs(contribs.union(zeros), s.saltHotKeys,
+        "_page" +: carry.map(_.name))
+      .where(col("_page"))
+  }
+
+  /** Initial ranks over `nodeRows`: `seed`'s rank where present, 1/n
+    * for every other node (new since the seed); seed nodes that left
+    * the graph drop out.
+    */
+  private def initial(nodeRows: DataFrame, n: Long,
+      seed: Option[DataFrame] = None): DataFrame = seed match {
+    case Some(prev) =>
+      nodeRows.join(prev.select(col("node"), col("rank").as("_seed")),
+          Seq("node"), "left")
+        .withColumn("rank", coalesce(col("_seed"), lit(1.0 / n)))
+        .drop("_seed")
+    case None => nodeRows.withColumn("rank", lit(1.0 / n))
+  }
+
+  /** Most PageRank rounds [[fixedRounds]] leaves in one lazy plan.
+    * On one partition the gathers need no exchange, so consecutive
+    * rounds fuse into a single stage whose task holds every round's
+    * partial and final aggregation maps at once, at least one memory
+    * page each (2 × 32 MB a round under a 4 GB heap); cutting after
+    * this many rounds bounds that peak. 10 is the reference's round
+    * count, so its pipeline stays cut-free.
+    */
+  private val MaxFusedRounds = 10
+
+  /** The lazy fixed-round loop: `PR' = (1-d)·tele + d·incoming`, or
+    * with `conserving` the mass-conserving
+    * `PR' = (1-d)/n + d·(incoming + dm/n)`, where `dm` is the previous
+    * ranks' mass on nodes without outlinks (`_has_out`, which
+    * `nodeRows` must then carry). `dm` reads the rank table a second
+    * time, so a lazy plan would double per round; the conserving
+    * round is cut eagerly instead — one small job per round, the same
+    * cadence as the `dm` aggregate itself.
+    */
+  private def fixedRounds(s: Statics, nodeRows: DataFrame,
+      init: DataFrame, iterations: Int, damping: Double,
+      tele: Column = lit(1.0), conserving: Boolean = false): DataFrame = {
+    val carry = nodeRows.columns.toSeq.filter(_ != "node").map(col)
+    var ranks = init
+    for (i <- 1 to iterations) {
+      val g = gather(s, ranks, nodeRows)
+      ranks =
+        if (conserving) {
+          val dm = ranks.filter(!col("_has_out"))
+            .agg(coalesce(sum("rank"), lit(0.0)).as("_dm"))
+          g.crossJoin(broadcast(dm))
+            .select(col("node") +: (lit(1.0 - damping) / s.n + lit(damping) *
+              (col("incoming") + col("_dm") / s.n)).as("rank") +: carry: _*)
+            .lineageCut
+        } else {
+          val next = g.select(col("node") +: (lit(1.0 - damping) * tele +
+            lit(damping) * col("incoming")).as("rank") +: carry: _*)
+          if (i % MaxFusedRounds == 0 && i < iterations) next.lineageCut
+          else next
+        }
+    }
+    ranks.select("node", "rank")
+  }
+
+  /** One eagerly cut reference round whose node rows carry the
+    * previous rank as `_prev`, so [[Residual]] reads the round's
+    * max-|Δrank| off its own output — no join with the previous ranks.
+    *
+    * @return (node, rank, _prev), cut
+    */
+  private def eagerRound(s: Statics, ranks: DataFrame,
+      damping: Double): DataFrame =
+    gather(s, ranks, ranks.select(col("node"), col("rank").as("_prev")))
+      .select(col("node"),
+        (lit(1.0 - damping) + lit(damping) * col("incoming")).as("rank"),
+        col("_prev"))
+      .lineageCut
+
+  private val Residual = max(abs(col("rank") - col("_prev")))
+
   /** @param edges DataFrame with `src`, `dst` columns (any type).
-    * @param checkpointEvery truncate rank lineage every N iterations
-    *   (0 = never). Leave OFF for bounded iteration counts: the
-    *   reference's fixed 10 iterations produce a bounded plan, and an
-    *   eager checkpoint materializes ranks mid-flight and cuts AQE's
-    *   runtime re-planning — measured 10x slower end-to-end at bench
-    *   scale. Turn on (e.g. every 20) only for deep/open-ended
-    *   iteration counts where analysis time or failure-recovery depth
-    *   would otherwise grow without bound.
     * @param saltHotKeys when > 0, the per-iteration contribution
     *   aggregation runs through [[graft.operators.SkewTools]]'s
     *   two-stage salted sum instead of a plain groupBy(dst): a
@@ -149,161 +241,59 @@ object PageRank {
     *   where DM = Σ ranks of nodes with no outlinks. The dangling
     *   mass is a one-row aggregate broadcast back into the update —
     *   an O(1)-sized cross join, no driver round-trip.
+    * @param seedRanks warm start (the runUntilConverged seed, in the
+    *   bounded-iteration form the SQL oracle can unroll): previous
+    *   ranks (node, rank) where present, 1/N for nodes new since.
     * @return DataFrame(node, rank) for every node appearing in edges.
     */
   def run(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85,
-      checkpointEvery: Int = 0, saltHotKeys: Int = 0,
-      redistributeDangling: Boolean = false,
+      saltHotKeys: Int = 0, redistributeDangling: Boolean = false,
       seedRanks: Option[DataFrame] = None): DataFrame = {
-    // Static across iterations ([[countStatics]]): (src, dst, outdeg)
-    // co-partitioned and materialized once — this is the 100-TB side.
     // `n` is the only driver-side scalar in the pipeline — mirrors
     // the reference's phase-1 page count handed to phase 2 via job
     // conf.
-    val (linked, nodes, n) = countStatics(edges)
-
-    // Static dangling flags (node has no outlinks) — only built when
-    // the conserving variant needs the per-iteration dangling mass.
-    // Derived from the already-cut `linked` (its distinct src IS the
-    // has-outlinks set), not from the lazy outDeg plan, which would
-    // re-run the edge distinct + groupBy a second time.
-    val flagged = if (redistributeDangling) {
-      nodes.join(
-          linked.select(col("src").as("node")).distinct()
-            .withColumn("_has_out", lit(true)),
-          Seq("node"), "left")
-        .select(col("node"), coalesce(col("_has_out"), lit(false)).as("_has_out"))
-        .lineageCut
-    } else nodes // unused
-
-    // Warm start (the runUntilConverged seed, in the bounded-
-    // iteration form the SQL oracle can unroll): previous ranks where
-    // present, 1/N for nodes new since the seed.
-    var ranks = seedRanks match {
-      case Some(prev) =>
-        nodes.join(prev.select(col("node"), col("rank").as("_seed")),
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("_seed"), lit(1.0 / n)).as("rank"))
-      case None => nodes.withColumn("rank", lit(1.0 / n))
-    }
-    for (i <- 1 to iterations) {
-      val contribs = aggContribs(linked
-        .join(ranks, linked("src") === ranks("node"))
-        .select(linked("src").as("_sb"), linked("dst").as("node"),
-          (col("rank") / col("outdeg")).as("contrib")), saltHotKeys)
-      ranks =
-        if (redistributeDangling) {
-          // One-row dangling-mass aggregate, broadcast into the update.
-          // This branch reads `ranks` TWICE (contributions + dangling
-          // mass), so the lazy plan would double per iteration; the
-          // eager checkpoint below cuts it to one iteration's depth —
-          // one small job per round, same cadence as the dm aggregate
-          // itself.
-          val dm = flagged.join(ranks, Seq("node"))
-            .filter(!col("_has_out"))
-            .agg(coalesce(sum("rank"), lit(0.0)).as("_dm"))
-          nodes.join(contribs, Seq("node"), "left")
-            .crossJoin(broadcast(dm))
-            .select(col("node"),
-              (lit(1.0 - damping) / n + lit(damping) *
-                (coalesce(col("incoming"), lit(0.0)) + col("_dm") / n))
-                .as("rank"))
-            .lineageCut
-        } else {
-          nodes.join(contribs, Seq("node"), "left")
-            .select(col("node"),
-              (lit(1.0 - damping) +
-                lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
-        }
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iterations) {
-        ranks = ranks.lineageCut
-      }
-    }
-    ranks
+    val s = statics(edges.select("src", "dst").distinct(), saltHotKeys)
+    // s.nodes is (node, _has_out); only the conserving round reads the flag.
+    val rows = if (redistributeDangling) s.nodes else s.nodes.select("node")
+    fixedRounds(s, rows, initial(rows, s.n, seedRanks), iterations,
+      damping, conserving = redistributeDangling)
   }
 
   /** Personalized PageRank: the teleport mass lands on a SOURCE SET
     * instead of uniformly — `PR'(u) = (1-d)·1[u∈S]/|S| + d·Σ…` —
     * ranking nodes by proximity to the sources (recommendation /
     * related-entity queries). Initial rank is the teleport vector
-    * itself. Sources are broadcast (a query-sized set); the edge side
-    * is identical to [[run]]: partitioned once, only ranks move.
+    * itself, which the node rows carry as `tele`. Sources are
+    * broadcast (a query-sized set) into the node rows once.
     */
   def runPersonalized(edges: DataFrame, sources: DataFrame,
-      iterations: Int = 10, damping: Double = 0.85,
-      saltHotKeys: Int = 0): DataFrame = {
-    val (linked, nodes, _) = countStatics(edges)
-    val s = sources.select(col("node")).distinct()
+      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
+    val s = statics(edges.select("src", "dst").distinct())
+    val src = sources.select(col("node")).distinct()
       .lineageCut
-    val nSources = s.count() // O(1) driver scalar, like run()'s n
+    val nSources = src.count() // O(1) driver scalar, like run()'s n
     require(nSources > 0, "personalized PageRank needs a non-empty source set")
-
-    // Teleport vector: (1-d)/|S| on sources, 0 elsewhere. Broadcast
-    // left-semi-style flag join; the flag column rides the rank table.
-    val flagged = nodes.join(broadcast(s.withColumn("_is_src", lit(1.0))),
+    val rows = s.nodes.join(broadcast(src.withColumn("_is_src", lit(1.0))),
         Seq("node"), "left")
       .select(col("node"),
         (coalesce(col("_is_src"), lit(0.0)) / nSources).as("tele"))
       .lineageCut
-
-    var ranks = flagged.select(col("node"), col("tele").as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = aggContribs(linked
-        .join(ranks, linked("src") === ranks("node"))
-        .select(linked("src").as("_sb"), linked("dst").as("node"),
-          (col("rank") / col("outdeg")).as("contrib")), saltHotKeys)
-      ranks = flagged
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) * col("tele") +
-            lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
-    }
-    ranks
+    fixedRounds(s, rows, rows.withColumn("rank", col("tele")), iterations,
+      damping, tele = col("tele"))
   }
 
   /** Weighted PageRank: rank flows along each edge in proportion to
     * its weight — `PR'(u) = (1-d) + d·Σ PR(v)·w(v,u)/W(v)` with
     * `W(v) = Σ_out w(v,·)` — the generalization of [[run]] (uniform
-    * weights reduce to it exactly). Same scale shape: the weighted
-    * edge set joins its out-weight once, hash-partitions by `src`,
-    * and persists; only the rank table moves per iteration.
+    * weights reduce to it exactly).
     *
     * @param edges (src, dst, weight) — weight integral or double
     */
   def runWeighted(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85, saltHotKeys: Int = 0): DataFrame = {
-    // Cut first — four consumers of the edge subtree (see
-    // countStatics); size-adaptive explicit-N repartitions so the
-    // preserved layout co-partitions with the loop's exchanges
-    // (countStatics rationale).
-    val e = edges.select("src", "dst", "weight").lineageCut
-    val nPart = math.max(e.rdd.getNumPartitions, 1)
-    val outW = e.groupBy("src").agg(sum("weight").as("outw"))
-    val linked = e.join(outW, "src")
-      .repartition(nPart, col("src"))
-      .lineageCut
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .repartition(nPart, col("node"))
-      .lineageCut
-    val n = nodes.count()
-
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      val contribs = aggContribs(linked
-        .join(ranks, linked("src") === ranks("node"))
-        .select(linked("src").as("_sb"), linked("dst").as("node"),
-          (col("rank") / col("outw") * col("weight")).as("contrib")),
-        saltHotKeys)
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
-    }
-    ranks
+    val s = statics(edges.select("src", "dst", "weight"), saltHotKeys)
+    val rows = s.nodes.select("node")
+    fixedRounds(s, rows, initial(rows, s.n), iterations, damping)
   }
 
   /** Convergence-driven PageRank: iterate until the maximum absolute
@@ -312,11 +302,10 @@ object PageRank {
     * stop on the residual instead — fewer iterations on
     * fast-converging graphs, guaranteed accuracy on slow ones.
     *
-    * The residual check is ONE driver-side scalar per iteration
-    * (`max(abs(Δ))` — same O(1) driver traffic as the phase-1 count
-    * handoff); ranks are checkpointed on the same cadence [[run]]
-    * uses for open-ended loops, since the iteration count is unknown
-    * up front.
+    * Every round is cut ([[eagerRound]]), so the plan stays one round
+    * deep whatever the round count, and the residual check is ONE
+    * driver-side scalar per round (`max(abs(Δ))` — same O(1) driver
+    * traffic as the phase-1 count handoff).
     *
     * @param seedRanks previous ranks (node, rank) to warm-start from —
     *   the INCREMENTAL recomputation path: after a delta-edge update,
@@ -328,82 +317,17 @@ object PageRank {
     */
   def runUntilConverged(edges: DataFrame, tol: Double = 1e-6,
       maxIterations: Int = 100, damping: Double = 0.85,
-      checkpointEvery: Int = 20,
       seedRanks: Option[DataFrame] = None): (DataFrame, Int) = {
-    // Cut first — four consumers of the edge subtree (see
-    // countStatics).
-    val e = edges.select("src", "dst").distinct().lineageCut
-    val nPart = math.max(e.rdd.getNumPartitions, 1)
-    val outDeg = e.groupBy("src").agg(count("*").as("outdeg"))
-    val linked = e.join(outDeg, "src")
-      .repartition(nPart, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .repartition(nPart, col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-
-    // Warm start — the INCREMENTAL recomputation path (the graph-side
-    // member of the d21/d34 incremental family): seed from a previous
-    // run's ranks instead of uniform 1/N, so a delta-edge update
-    // converges in far fewer iterations (the fixpoint is damping-
-    // contractive, and yesterday's ranks are already near it). The
-    // left join handles churn: nodes new since the seed start at 1/N,
-    // nodes that left the graph drop out naturally.
-    var ranks = seedRanks match {
-      case Some(prev) =>
-        nodes.join(prev.select(col("node"), col("rank").as("_seed")),
-            Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("_seed"), lit(1.0 / n)).as("rank"))
-      case None => nodes.withColumn("rank", lit(1.0 / n))
-    }
+    val s = statics(edges.select("src", "dst").distinct())
+    var ranks = initial(s.nodes.select("node"), s.n, seedRanks)
     var iters = 0
     var residual = Double.MaxValue
-    // The one live persisted rank frame. Tracked SEPARATELY from
-    // `ranks`: on checkpoint rounds `ranks` becomes the lineage-cut
-    // frame, and unpersisting THAT would silently miss the persisted
-    // `next` underneath it (the leak the cache-lifecycle spec pins).
-    var cached: DataFrame = null
-    try {
-      while (residual > tol && iters < maxIterations) {
-        val contribs = linked
-          .join(ranks, linked("src") === ranks("node"))
-          .select(linked("dst").as("node"),
-            (col("rank") / col("outdeg")).as("contrib"))
-          .groupBy("node")
-          .agg(sum("contrib").as("incoming"))
-        val next = nodes
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(1.0 - damping) +
-              lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // One aggregated scalar: the residual that decides termination.
-        residual = next.join(ranks.withColumnRenamed("rank", "prev"), "node")
-          .agg(max(abs(col("rank") - col("prev"))))
-          .head().getDouble(0)
-        if (cached != null) cached.unpersist()
-        cached = next
-        ranks = if (checkpointEvery > 0 && (iters + 1) % checkpointEvery == 0)
-          next.lineageCut
-        else next
-        iters += 1
-      }
-      // Eager cut: the result stops referencing the loop caches, so
-      // they can be released here rather than by the caller (the
-      // fixed-iteration entry points stay lazy by contract — see the
-      // object Scaladoc — but a convergence loop's iteration count is
-      // run-dependent, so nothing pins its plan shape).
-      val out = ranks.lineageCut
-      (out, iters)
-    } finally {
-      if (cached != null) cached.unpersist(blocking = false)
-      linked.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
+    while (residual > tol && iters < maxIterations) {
+      ranks = eagerRound(s, ranks, damping)
+      residual = ranks.agg(Residual).head().getDouble(0)
+      iters += 1
     }
+    (ranks.select("node", "rank"), iters)
   }
 
   /** Per-iteration CONVERGENCE CURVE: the max-|Δrank| residual after
@@ -413,51 +337,23 @@ object PageRank {
     * applied to the graph family). One row per iteration, residual
     * on the e9 integer grid.
     *
-    * Scale shape: the statics cut once (the [[run]] layout); each
-    * iteration's rank table is eagerly cut because it is read TWICE
-    * (next update + residual join) — lazy, the plan would double per
-    * iteration. The residual is a one-row aggregate per iteration,
-    * all `iterations` of them unioned into one bounded output.
+    * Each round is cut ([[eagerRound]]); its residual is a one-row
+    * aggregate over that cut, and all `iterations` of them are
+    * unioned into one bounded output.
     */
   def residualCurve(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "at least one iteration")
-    val (linked, nodes, n) = countStatics(edges)
-    var ranks = nodes.withColumn("rank", lit(1.0 / n)).lineageCut
-    var out: DataFrame = null
-    for (i <- 1 to iterations) {
-      val contribs = linked
-        .join(ranks, linked("src") === ranks("node"))
-        .select(linked("dst").as("node"),
-          (col("rank") / col("outdeg")).as("contrib"))
-        .groupBy("node").agg(sum("contrib").as("incoming"))
-      val next = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("incoming"), lit(0.0))).as("rank"))
-        .lineageCut
-      val res = next
-        .join(ranks.withColumnRenamed("rank", "prev"), "node")
-        .agg(max(abs(col("rank") - col("prev"))).as("r"))
+    val s = statics(edges.select("src", "dst").distinct())
+    var ranks = initial(s.nodes.select("node"), s.n)
+    (1 to iterations).map { i =>
+      ranks = eagerRound(s, ranks, damping)
+      ranks.agg(Residual.as("r"))
         .select(lit(i.toLong).as("iter"),
           floor(col("r") * 1000000000L + 0.5).cast("long")
             .as("residual_e9"))
-      out = if (out == null) res else out.union(res)
-      ranks = next
-    }
-    out
+    }.reduce(_ union _)
   }
-
-  /** Most PageRank rounds [[runOnPages]] leaves in one lazy plan.
-    * On one partition its gathers need no exchange, so consecutive
-    * rounds fuse into a single stage whose task holds every round's
-    * partial and final aggregation maps at once, at least one memory
-    * page each (2 × 32 MB a round under a 4 GB heap); cutting after
-    * this many rounds bounds that peak. 10 is the reference's round
-    * count, so its pipeline stays cut-free.
-    */
-  private val MaxFusedRounds = 10
 
   /** PageRank with the reference's EXACT page semantics
     * (/root/reference/PageRank.java:437-530): the node set is the
@@ -465,23 +361,9 @@ object PageRank {
     * phase-1 page count, out-degree counts every outlink occurrence
     * (duplicates included), and contributions to targets that are not
     * themselves pages are dropped — the reducer's
-    * `hasOriginalPRAndOutlinkList` guard (PageRank.java:527) — so
-    * their mass leaks, as in the reference.
-    *
-    * Each round is the reference's single gather: the page rows ride
-    * the contribution shuffle. Contribution rows
-    * `(_sb = src, node = dst, contrib, _page = false)` are unioned
-    * with one static row per page `(_sb = node, node, 0.0,
-    * _page = true)`, one `groupBy(node)` sums the contributions and
-    * takes `max(_page)`, and only keys that carry a page row survive
-    * (the :527 guard). Every page has its zero row, so a page with
-    * no in-links gets exactly `1 - d`, and the sum needs no coalesce
-    * (adding 0.0 is exact). No per-round join with the page set is
-    * planned, so AQE has nothing to turn into a per-round broadcast.
-    * Links are co-partitioned by src once and only the O(|pages|)
-    * rank table moves per round; on one partition the rounds fuse
-    * into one stage, cut every [[MaxFusedRounds]] rounds while
-    * rounds remain.
+    * `hasOriginalPRAndOutlinkList` guard (PageRank.java:527), which
+    * the gather's node rows implement — so their mass leaks, as in
+    * the reference. On one partition the rounds fuse into one stage.
     *
     * @param pages one row per page, column `node`
     * @param links (src, dst) with MULTIPLICITY (one row per outlink
@@ -491,33 +373,8 @@ object PageRank {
   def runOnPages(pages: DataFrame, links: DataFrame, nPages: Long,
       iterations: Int = 10, damping: Double = 0.85,
       saltHotKeys: Int = 0): DataFrame = {
-    // Size-adaptive explicit-N repartitions — the countStatics
-    // rationale (N from the linked cut's own coalesced layout).
-    val outDeg = links.groupBy("src").agg(count("*").as("outdeg"))
-    val linked0 = links.join(outDeg, "src").lineageCut
-    val nPart = math.max(linked0.rdd.getNumPartitions, 1)
-    val linked = linked0.repartition(nPart, col("src")).lineageCut
-    val p = pages.select("node")
-      .repartition(nPart, col("node"))
-      .lineageCut
-    val pageRows = p.select(col("node").as("_sb"), col("node"),
-      lit(0.0).as("contrib"), lit(true).as("_page"))
-
-    var ranks = p.withColumn("rank", lit(1.0 / nPages))
-    for (i <- 1 to iterations) {
-      val contribs = linked
-        .join(ranks, linked("src") === ranks("node"))
-        .select(linked("src").as("_sb"), linked("dst").as("node"),
-          (col("rank") / col("outdeg")).as("contrib"),
-          lit(false).as("_page"))
-      ranks = aggContribs(contribs.union(pageRows), saltHotKeys,
-          carryPage = true)
-        .where(col("_page"))
-        .select(col("node"),
-          (lit(1.0 - damping) + lit(damping) * col("incoming")).as("rank"))
-      if (i % MaxFusedRounds == 0 && i < iterations)
-        ranks = ranks.lineageCut
-    }
-    ranks
+    val s = statics(links.select("src", "dst"), saltHotKeys,
+      Some(pages.select("node")))
+    fixedRounds(s, s.nodes, initial(s.nodes, nPages), iterations, damping)
   }
 }

@@ -57,8 +57,9 @@ class CheckpointingSpec extends SparkSpec {
       .select(col("a"), (col("a") + 1).as("b"))
       .filter(col("a") % 7 =!= 0) // chains broken into components
 
+    // 25 rounds cross two of PageRank.run's fused-round cuts.
     def snapshot(): (Seq[String], Seq[String], Seq[String]) = (
-      PageRank.run(edges, iterations = 6, checkpointEvery = 2)
+      PageRank.run(edges, iterations = 25)
         .select(col("node"), round(col("rank"), 9).as("r"))
         .orderBy("node").collect().map(_.toString).toSeq,
       ConnectedComponents.dupGroups(pairs, iters = 2)
@@ -92,8 +93,8 @@ class CheckpointingSpec extends SparkSpec {
     // release their own loop caches before returning (the Scaladoc
     // contract); results must survive the release.
     val pr = assertReleasesOwnCaches("PageRank.runUntilConverged") {
-      PageRank.runUntilConverged(edges, tol = 1e-3, maxIterations = 50,
-        checkpointEvery = 5)._1.collect()
+      PageRank.runUntilConverged(edges, tol = 1e-3,
+        maxIterations = 50)._1.collect()
     }
     assert(pr.nonEmpty)
     val hits = assertReleasesOwnCaches("Hits.runUntilConverged") {

@@ -80,7 +80,7 @@ class GraphSpec extends SparkSpec {
   test("convergence-driven run stops early and matches the fixed point") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     val (ranksDf, iters) = PageRank.runUntilConverged(edges, tol = 1e-2,
-      maxIterations = 100, checkpointEvery = 5)
+      maxIterations = 100)
     val ranks = ranksDf.as[(String, Double)].collect().toMap
     // Per-iteration delta is 0.075·0.85^(k-1): < 1e-2 first at k = 14
     // — far below maxIterations, so the loop genuinely stopped on the
@@ -94,21 +94,19 @@ class GraphSpec extends SparkSpec {
   test("incremental warm start: same fixpoint, fewer iterations on a delta") {
     // A ring with a chord gives slow-ish uniform-seed convergence;
     // yesterday's ranks seed today's delta-edged graph.
-    // tol/checkpointEvery sized for a unit test: ~40 iterations cold
-    // with 5-deep lazy plans between cuts (a 1e-9 run here built
-    // 20-iteration plan strings × 3 runs and OOM'd the driver).
+    // tol sized for a unit test: ~40 iterations cold, each one an
+    // eager cut plus a residual job.
     val base = (0 until 12).map(i => (s"n$i", s"n${(i + 1) % 12}")) :+
       (("n0", "n6"))
     val (prev, _) = PageRank.runUntilConverged(base.toDF("src", "dst"),
-      tol = 1e-5, maxIterations = 100, checkpointEvery = 5)
+      tol = 1e-5, maxIterations = 100)
     // delta: one new edge, one new node hanging off the ring
     val delta = base ++ Seq(("n3", "n9"), ("n5", "nNEW"))
     val edges = delta.toDF("src", "dst")
     val (cold, itCold) = PageRank.runUntilConverged(edges,
-      tol = 1e-5, maxIterations = 100, checkpointEvery = 5)
+      tol = 1e-5, maxIterations = 100)
     val (warm, itWarm) = PageRank.runUntilConverged(edges,
-      tol = 1e-5, maxIterations = 100, checkpointEvery = 5,
-      seedRanks = Some(prev))
+      tol = 1e-5, maxIterations = 100, seedRanks = Some(prev))
     assert(itWarm < itCold,
       s"warm start should converge faster: warm=$itWarm cold=$itCold")
     val c = cold.as[(String, Double)].collect().toMap
@@ -272,25 +270,60 @@ class GraphSpec extends SparkSpec {
   }
 
   test("runOnPages at 8 partitions matches the 1-partition run") {
-    val links = pageLinks(300).toDF("src", "dst").coalesce(1)
-    val pages = links.select(org.apache.spark.sql.functions.col("src")
-      .as("node")).distinct()
-    val one = PageRank.runOnPages(pages, links, nPages = 300)
-      .as[(String, Double)].collect().toMap
+    // Every public entry point, not only runOnPages: one gather serves
+    // them all, and at one partition their rounds need no exchange.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, count}
+    val base = pageLinks(300).toDF("src", "dst")
+    /** Each entry point's output over `base` laid out by `layout`,
+      * keyed by entry point and then node (iteration for the residual
+      * curve); also runUntilConverged's iteration count and the
+      * partition counts of the runOnPages and run results.
+      */
+    def outputs(layout: DataFrame => DataFrame)
+        : (Map[String, Map[String, Double]], Int, Seq[Int]) = {
+      val links = layout(base)
+      val pages = layout(base.select(col("src").as("node")).distinct())
+      val weighted = layout(base.groupBy("src", "dst")
+        .agg(count("*").as("weight")))
+      def ranks(df: DataFrame) = df.as[(String, Double)].collect().toMap
+      val onPages = PageRank.runOnPages(pages, links, nPages = 300)
+      val plain = PageRank.run(links)
+      val (conv, iters) = PageRank.runUntilConverged(links, tol = 1e-2)
+      val curve = PageRank.residualCurve(links).as[(Long, Long)].collect()
+        .map { case (i, r) => i.toString -> r.toDouble }.toMap
+      (Map(
+        "runOnPages" -> ranks(onPages),
+        "run" -> ranks(plain),
+        "run salted" -> ranks(PageRank.run(links, saltHotKeys = 8)),
+        "run conserving" ->
+          ranks(PageRank.run(links, redistributeDangling = true)),
+        "run seeded" -> ranks(PageRank.run(links, iterations = 3,
+          seedRanks = Some(PageRank.run(links, iterations = 5)))),
+        "runWeighted" -> ranks(PageRank.runWeighted(weighted)),
+        "runPersonalized" -> ranks(PageRank.runPersonalized(links,
+          Seq("p0", "p1").toDF("node"))),
+        "residualCurve" -> curve,
+        "runUntilConverged" -> ranks(conv)),
+        iters, Seq(onPages, plain).map(_.rdd.getNumPartitions))
+    }
+    val (one, itersOne, _) = outputs(_.coalesce(1))
     // AQE coalescing off, so the size-derived partition count stays
     // above 1 and the unfused plan (one exchange per round) runs.
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
-    val (many, parts) = try {
-      val r = PageRank.runOnPages(pages.repartition(8), links.repartition(8),
-        nPages = 300)
-      (r.as[(String, Double)].collect().toMap, r.rdd.getNumPartitions)
-    } finally spark.conf.set(key, prev)
-    assert(parts > 1)
+    val (many, itersMany, parts) =
+      try outputs(_.repartition(8))
+      finally spark.conf.set(key, prev)
+    assert(parts.forall(_ > 1), s"partitions: $parts")
+    assert(itersMany == itersOne)
     assert(many.keySet == one.keySet)
-    for (k <- one.keys)
-      assert(math.abs(many(k) - one(k)) < 1e-12, s"node $k")
+    for ((entry, r1) <- one; r8 = many(entry)) {
+      assert(r1.nonEmpty && r8.keySet == r1.keySet, entry)
+      for (k <- r1.keys)
+        assert(math.abs(r8(k) - r1(k)) < 1e-12, s"$entry node $k")
+    }
   }
 
   test("redistributeDangling: conserving recurrence exact, mass sums to 1") {
