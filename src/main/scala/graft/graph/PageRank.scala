@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Checkpointing
 import graft.operators.Checkpointing.CutOps
 
 /** Iterative damped PageRank over an arbitrary `edges(src, dst)`
@@ -23,17 +24,20 @@ import graft.operators.Checkpointing.CutOps
   * (1.0, or `1[u∈S]/|S|` when personalized) and the dangling policy
   * (the reference's leak, or the conserving `dm` term):
   *   - [[statics]] cuts the edge input once, derives the out-degree
-  *     (or out-weight), and cuts the src-partitioned edge table and
-  *     the node rows. Only the O(|V|) rank table moves per round; the
-  *     edge set is never re-shuffled.
+  *     (or out-weight), and cuts the node rows and the src-partitioned
+  *     edge table, which holds every node's SELF EDGE, contributing
+  *     exactly 0.0, beside the real edges (and, for a page set, only the edges
+  *     into pages: the :527 guard, applied once). Only the O(|V|) rank
+  *     table moves per round; the edge set is never re-shuffled.
   *   - [[gather]] is one round, the reference's single map/reduce:
-  *     contribution rows `(_sb = src, node = dst, rank/outdeg)` and
-  *     one zero row per node `(_sb = node, node, 0.0, _page = true)`
-  *     go through ONE `groupBy(node)` (map-side partial sums, or
-  *     SkewTools' salted two-stage sum), which takes `max` of every
-  *     column the node rows carry, and only keys with a node row
-  *     survive (the :527 guard). No per-round join with the node set
-  *     is planned.
+  *     `edges ⋈ ranks` yields `(_sb = src, node = dst, rank/outdeg)`,
+  *     and each self edge yields exactly 0.0 plus its node's own
+  *     per-node columns — the reference mapper's re-emitted page
+  *     record. ONE `groupBy(node)` (map-side partial sums, or
+  *     SkewTools' salted two-stage sum) sums the contributions and
+  *     takes `max` of those columns. Every node has its self edge and
+  *     every edge ends at a node, so each round is one join and one
+  *     aggregate: no union, filter or join with the node set.
   *   - [[fixedRounds]] (`run`, `runWeighted`, `runPersonalized`,
   *     `runOnPages`) stays lazy, so `.explain` audits and plan pins
   *     see the rounds, and cuts every [[MaxFusedRounds]] rounds while
@@ -70,10 +74,12 @@ object PageRank {
       rows.groupBy("node").agg(sum("contrib").as("incoming"),
         carry.map(c => max(c).as(c)): _*)
 
-  /** The loop statics: `linked` = (src, dst[, weight], outw) cut and
-    * src-partitioned, `nodes` = one row per node cut and
-    * node-partitioned, `contrib` = one edge's share of its src's rank,
-    * `saltHotKeys` = the rounds' salt count (0 = unsalted).
+  /** The loop statics: `linked` = (src, dst[, weight], outw, _self)
+    * cut and src-partitioned, real edges first, then one self edge
+    * per node (`_self`, with null `weight` and `outw`); `nodes` = one
+    * row per node cut and node-partitioned; `contrib` = one real
+    * edge's share of its src's rank; `saltHotKeys` = the rounds' salt
+    * count (0 = unsalted).
     */
   private final class Statics(val linked: DataFrame, val nodes: DataFrame,
       val contrib: Column, val saltHotKeys: Int) {
@@ -81,12 +87,12 @@ object PageRank {
   }
 
   /** Builds the [[Statics]] from `edges` (src, dst[, weight]). The edge
-    * input is cut FIRST: it feeds the out-degree aggregate, the
-    * `linked` join and the node rows, and nothing dedupes the repeated
-    * subtree — for the wiki queries that subtree is the whole regex
-    * link extraction. A `weight` column makes the share
-    * `rank / outw * weight` with `outw = Σ weight`; otherwise it is
-    * `rank / outdeg`. Both stay divisions: precomputing 1/outdeg would
+    * input is cut FIRST, unless it already is a cut: it feeds the
+    * out-degree aggregate, the `linked` join and the node rows, and
+    * nothing dedupes the repeated subtree — for the wiki queries that
+    * subtree is the whole regex link extraction. A `weight` column
+    * makes the share `rank / outw * weight` with `outw = Σ weight`;
+    * otherwise it is `rank / outdeg`. Both stay divisions: precomputing 1/outdeg would
     * double-round and break bit-parity with the SQL oracles.
     *
     * The explicit `repartition(nPart, …)` before each static cut keeps
@@ -99,53 +105,59 @@ object PageRank {
     * plans no salt exchange at all.
     *
     * @param pages the node set when it is not src ∪ dst (one row per
-    *   page, column `node`); by default the node rows are src ∪ dst,
-    *   each flagged `_has_out` when it has an outlink.
+    *   page, column `node`); edges into other targets are dropped
+    *   AFTER the out-degree is taken, so they still count in it. By
+    *   default the node rows are src ∪ dst, each flagged `_has_out`
+    *   when it has an outlink.
     */
   private def statics(edges: DataFrame, saltHotKeys: Int = 0,
       pages: Option[DataFrame] = None): Statics = {
-    val e = edges.lineageCut
+    val e = Checkpointing.cutOnce(edges)
     val nPart = Seq(e.rdd.getNumPartitions, saltHotKeys, 1).max
     val weighted = e.columns.contains("weight")
     val outW = e.groupBy("src")
       .agg((if (weighted) sum("weight") else count("*")).as("outw"))
-    val linked = e.join(outW, "src")
-      .repartition(nPart, col("src"))
-      .lineageCut
     val nodes = pages.getOrElse(
         e.select(col("src").as("node"), lit(true).as("_has_out"))
           .union(e.select(col("dst").as("node"), lit(false)))
           .groupBy("node").agg(max("_has_out").as("_has_out")))
       .repartition(nPart, col("node"))
       .lineageCut
+    val withOut = e.join(outW, "src")
+    val real = if (pages.isEmpty) withOut
+      else withOut.join(nodes.select(col("node").as("dst")), Seq("dst"),
+        "left_semi")
+    val linked = real.withColumn("_self", lit(false))
+      .unionByName(nodes.select(col("node").as("src"),
+        col("node").as("dst"), lit(true).as("_self")),
+        allowMissingColumns = true)
+      .repartition(nPart, col("src"))
+      .lineageCut
     val share = col("rank") / col("outw")
     new Statics(linked, nodes,
       if (weighted) share * col("weight") else share, saltHotKeys)
   }
 
-  /** One round, the reference's single gather: the contribution rows
-    * of `ranks` unioned with one zero row per `nodeRows` row, summed
-    * per node in one `groupBy`, keeping only keys that have a node
-    * row. Every node has its zero row, so a node with no in-links
-    * gets `incoming = 0.0` and no coalesce is needed (adding 0.0 is
-    * exact). Each column of `nodeRows` besides `node` rides the
-    * gather as `max` (contribution rows carry null there).
+  /** One round, the reference's single gather: `linked ⋈ ranks` on
+    * `src`, summed per `dst` in one `groupBy`. A real edge contributes
+    * its share; a self edge contributes exactly 0.0 (its `outw` is
+    * null, so it has no share) and carries its node's `carry`
+    * columns, which ride the gather as `max` (real edges carry null
+    * there). Every node has its self edge, so a node with no in-links
+    * still gets `incoming = 0.0` and no coalesce is needed.
     *
-    * @return (node, incoming, _page, carried columns…)
+    * @param carry per-node columns, each an expression over the
+    *   node's own rank row
+    * @return (node, incoming, carried columns…)
     */
   private def gather(s: Statics, ranks: DataFrame,
-      nodeRows: DataFrame): DataFrame = {
-    val carry = nodeRows.schema.fields.toSeq.filter(_.name != "node")
-    val contribs = s.linked.join(ranks, s.linked("src") === ranks("node"))
+      carry: Seq[(String, Column)]): DataFrame = {
+    val self = s.linked("_self")
+    val rows = s.linked.join(ranks, s.linked("src") === ranks("node"))
       .select(Seq(s.linked("src").as("_sb"), s.linked("dst").as("node"),
-          s.contrib.as("contrib"), lit(false).as("_page")) ++
-        carry.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
-    val zeros = nodeRows.select(Seq(col("node").as("_sb"), col("node"),
-        lit(0.0).as("contrib"), lit(true).as("_page")) ++
-      carry.map(f => col(f.name)): _*)
-    aggContribs(contribs.union(zeros), s.saltHotKeys,
-        "_page" +: carry.map(_.name))
-      .where(col("_page"))
+          when(self, lit(0.0)).otherwise(s.contrib).as("contrib")) ++
+        carry.map { case (name, c) => when(self, c).as(name) }: _*)
+    aggContribs(rows, s.saltHotKeys, carry.map(_._1))
   }
 
   /** Initial ranks over `nodeRows`: `seed`'s rank where present, 1/n
@@ -166,28 +178,31 @@ object PageRank {
     * On one partition the gathers need no exchange, so consecutive
     * rounds fuse into a single stage whose task holds every round's
     * partial and final aggregation maps at once, at least one memory
-    * page each (2 × 32 MB a round under a 4 GB heap); cutting after
-    * this many rounds bounds that peak. 10 is the reference's round
-    * count, so its pipeline stays cut-free.
+    * page each: the 10 fused rounds of a 2,000-page wiki pass peak at
+    * 650 MB under a 4 GB heap, 2 × 32 MB a round. Cutting after this
+    * many rounds bounds that peak. 10 is the reference's round count,
+    * so its pipeline stays cut-free.
     */
   private val MaxFusedRounds = 10
 
   /** The lazy fixed-round loop: `PR' = (1-d)·tele + d·incoming`, or
     * with `conserving` the mass-conserving
     * `PR' = (1-d)/n + d·(incoming + dm/n)`, where `dm` is the previous
-    * ranks' mass on nodes without outlinks (`_has_out`, which
-    * `nodeRows` must then carry). `dm` reads the rank table a second
-    * time, so a lazy plan would double per round; the conserving
-    * round is cut eagerly instead — one small job per round, the same
-    * cadence as the `dm` aggregate itself.
+    * ranks' mass on nodes without outlinks (`_has_out`, which `init`
+    * must then carry). Every column of `init` besides `node` and
+    * `rank` is a per-node column the rounds carry. `dm` reads the
+    * rank table a second time, so a lazy plan would double per round;
+    * the conserving round is cut eagerly instead — one small job per
+    * round, the same cadence as the `dm` aggregate itself.
     */
-  private def fixedRounds(s: Statics, nodeRows: DataFrame,
-      init: DataFrame, iterations: Int, damping: Double,
-      tele: Column = lit(1.0), conserving: Boolean = false): DataFrame = {
-    val carry = nodeRows.columns.toSeq.filter(_ != "node").map(col)
+  private def fixedRounds(s: Statics, init: DataFrame, iterations: Int,
+      damping: Double, tele: Column = lit(1.0),
+      conserving: Boolean = false): DataFrame = {
+    val names = init.columns.toSeq.filterNot(Set("node", "rank"))
+    val carry = names.map(col)
     var ranks = init
     for (i <- 1 to iterations) {
-      val g = gather(s, ranks, nodeRows)
+      val g = gather(s, ranks, names.zip(carry))
       ranks =
         if (conserving) {
           val dm = ranks.filter(!col("_has_out"))
@@ -214,7 +229,7 @@ object PageRank {
     */
   private def eagerRound(s: Statics, ranks: DataFrame,
       damping: Double): DataFrame =
-    gather(s, ranks, ranks.select(col("node"), col("rank").as("_prev")))
+    gather(s, ranks, Seq("_prev" -> col("rank")))
       .select(col("node"),
         (lit(1.0 - damping) + lit(damping) * col("incoming")).as("rank"),
         col("_prev"))
@@ -255,8 +270,8 @@ object PageRank {
     val s = statics(edges.select("src", "dst").distinct(), saltHotKeys)
     // s.nodes is (node, _has_out); only the conserving round reads the flag.
     val rows = if (redistributeDangling) s.nodes else s.nodes.select("node")
-    fixedRounds(s, rows, initial(rows, s.n, seedRanks), iterations,
-      damping, conserving = redistributeDangling)
+    fixedRounds(s, initial(rows, s.n, seedRanks), iterations, damping,
+      conserving = redistributeDangling)
   }
 
   /** Personalized PageRank: the teleport mass lands on a SOURCE SET
@@ -278,7 +293,7 @@ object PageRank {
       .select(col("node"),
         (coalesce(col("_is_src"), lit(0.0)) / nSources).as("tele"))
       .lineageCut
-    fixedRounds(s, rows, rows.withColumn("rank", col("tele")), iterations,
+    fixedRounds(s, rows.withColumn("rank", col("tele")), iterations,
       damping, tele = col("tele"))
   }
 
@@ -292,8 +307,8 @@ object PageRank {
   def runWeighted(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85, saltHotKeys: Int = 0): DataFrame = {
     val s = statics(edges.select("src", "dst", "weight"), saltHotKeys)
-    val rows = s.nodes.select("node")
-    fixedRounds(s, rows, initial(rows, s.n), iterations, damping)
+    fixedRounds(s, initial(s.nodes.select("node"), s.n), iterations,
+      damping)
   }
 
   /** Convergence-driven PageRank: iterate until the maximum absolute
@@ -362,8 +377,9 @@ object PageRank {
     * (duplicates included), and contributions to targets that are not
     * themselves pages are dropped — the reducer's
     * `hasOriginalPRAndOutlinkList` guard (PageRank.java:527), which
-    * the gather's node rows implement — so their mass leaks, as in
-    * the reference. On one partition the rounds fuse into one stage.
+    * the statics apply once by dropping those edges after the
+    * out-degree is taken — so their mass leaks, as in the reference.
+    * On one partition the rounds fuse into one stage.
     *
     * @param pages one row per page, column `node`
     * @param links (src, dst) with MULTIPLICITY (one row per outlink
@@ -375,6 +391,6 @@ object PageRank {
       saltHotKeys: Int = 0): DataFrame = {
     val s = statics(links.select("src", "dst"), saltHotKeys,
       Some(pages.select("node")))
-    fixedRounds(s, s.nodes, initial(s.nodes, nPages), iterations, damping)
+    fixedRounds(s, initial(s.nodes, nPages), iterations, damping)
   }
 }

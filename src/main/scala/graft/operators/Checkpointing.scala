@@ -52,6 +52,16 @@ object Checkpointing {
     def lineageCut: DataFrame = Checkpointing.cut(df)
   }
 
+  /** [[cut]], unless `df` already reads a cut's blocks: then `df`
+    * itself, with no job. For builders handed a frame their caller may
+    * have cut already (the wiki pipeline cuts its extracted links once
+    * and derives the page set from that cut).
+    */
+  private[graft] def cutOnce(df: DataFrame): DataFrame =
+    if (org.apache.spark.sql.graftbridge.CheckpointBridge
+        .isCheckpointScan(df)) df
+    else cut(df)
+
   /** Materialize `df` eagerly and truncate its lineage, in the
     * session-selected mode.
     */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{LinkGraph, PageRank}
+import graft.operators.Checkpointing.CutOps
 
 /** The reference-compatible end-to-end pipeline: text file in → ranked
   * text file out, mirroring `hadoop jar PageRank.jar <in> <out>`
@@ -15,10 +16,18 @@ import graft.graph.{LinkGraph, PageRank}
   * each PageRank round became a single gather (every round's page
   * join had been a broadcast job of its own):
   *   1. page count   → pushed filter + count on the text source
-  *   2. link graph   → regexp extraction (LinkGraph.parseWikiPages)
+  *   2. link graph   → regexp extraction (LinkGraph.parseWikiPages),
+  *                     cut once; the page set and PageRank's statics
+  *                     both read that cut, so the text is scanned and
+  *                     matched once a pass
   *   3. 10×PageRank  → PageRank.runOnPages (exact reference
   *                     semantics: 1/N init, duplicate outlinks
-  *                     counted, non-page targets dropped)
+  *                     counted, non-page targets dropped). A round is
+  *                     one join of the cut edge table (each page's own
+  *                     record rides it as a zero-weight self edge)
+  *                     with the ranks and one aggregate per target;
+  *                     on one partition the 10 rounds fuse into one
+  *                     stage, run by the write's job
   *   4. sort + write → descending orderBy, tab-separated text, the
   *                     reference's single-reducer total order. For
   *                     cluster-scale output drop the coalesce(1):
@@ -32,8 +41,11 @@ object WikiPageRankPipeline {
       iterations: Int = 10, damping: Double = 0.85): (Long, DataFrame) = {
     val nonEmpty = pages.filter(length(trim(col(pageCol))) > 0)
     val nPages = nonEmpty.count() // phase 1 (job-conf scalar handoff)
+    // Cut once: the page set and the PageRank statics both read this
+    // cut, so the text scan and both regexes run once a pass.
     val links = LinkGraph.parseWikiPages(nonEmpty, pageCol)
       .select(col("title").as("src"), col("outlink").as("dst"))
+      .lineageCut
     val titles = links.select(col("src").as("node")).distinct()
     val ranks = PageRank.runOnPages(titles, links, nPages,
       iterations, damping)

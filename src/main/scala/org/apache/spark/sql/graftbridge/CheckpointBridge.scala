@@ -47,6 +47,16 @@ object CheckpointBridge {
       : org.apache.spark.sql.DataFrame =
     cutPreserving(df, reliable = true)
 
+  /** True when `df`'s optimized plan is a single scan of an already
+    * checkpointed RDD, i.e. `df` is a cut (under at most a no-op
+    * projection) and re-cutting it would only copy its blocks.
+    */
+  def isCheckpointScan(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan match {
+      case r: LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
+
   private def cutPreserving(df: org.apache.spark.sql.DataFrame,
       reliable: Boolean): org.apache.spark.sql.DataFrame = {
     val ds = df.asInstanceOf[Dataset[Row]]

@@ -326,6 +326,42 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("runOnPages self edges: a lone page gets the bare teleport, ghosts stay out") {
+    // Pages a, b, c and "lone", which has no out-links and no in-links,
+    // so its self edge meets a null out-degree. The links hold a
+    // duplicate (a -> b twice), a real self-loop (c -> c), which must
+    // still count, and a non-page target "ghost", which counts in a's
+    // out-degree but is never ranked. Matching the driver-side rounds
+    // at 1e-12 means no self edge adds anything to any node.
+    import org.apache.spark.sql.DataFrame
+    val links = Seq(("a", "b"), ("a", "b"), ("a", "ghost"), ("b", "a"),
+      ("b", "c"), ("c", "a"), ("c", "c"))
+    val pages = Seq("a", "b", "c", "lone")
+    val want = pageRounds(links, pages.map(_ -> 0.25).toMap, 10)
+    def check(label: String, layout: DataFrame => DataFrame,
+        saltHotKeys: Int): Unit = {
+      val out = PageRank.runOnPages(layout(pages.toDF("node")),
+        layout(links.toDF("src", "dst")), nPages = 4,
+        saltHotKeys = saltHotKeys)
+      if (label == "8 partitions") assert(out.rdd.getNumPartitions > 1)
+      val rows = out.collect()
+      assert(rows.forall(!_.isNullAt(1)), s"$label: null rank")
+      val got = rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == pages.toSet, s"$label: ${got.keySet}")
+      // The teleport term plus exactly nothing: (1 - d) + d · 0.0.
+      assert(got("lone") == 1.0 - 0.85, s"$label: lone ${got("lone")}")
+      for (p <- pages)
+        assert(math.abs(got(p) - want(p)) < 1e-12, s"$label $p")
+    }
+    check("1 partition", _.coalesce(1), 0)
+    check("salted", _.coalesce(1), 8)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try check("8 partitions", _.repartition(8), 0)
+    finally spark.conf.set(key, prev)
+  }
+
   test("redistributeDangling: conserving recurrence exact, mass sums to 1") {
     // a -> b with b dangling: under reference semantics b's outflow
     // leaks; conserving redistributes it uniformly and normalizes the

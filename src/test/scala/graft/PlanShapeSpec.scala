@@ -501,6 +501,29 @@ class PlanShapeSpec extends SparkSpec {
       s"pr_ranks_salted lost the salted first-stage exchange\n$p")
   }
 
+  test("PageRank rounds: one join and one two-phase aggregate each, no union") {
+    // pr_ranks keeps its 10 rounds in one lazy plan (the statics are
+    // cuts). A round is `linked ⋈ ranks` and one groupBy(dst), split
+    // into a partial and a final HashAggregate; each node's own record
+    // rides its self edge in `linked`. A per-round union with node
+    // rows, or a per-round join with the node set, fails here.
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = SparkEntry.queries("pr_ranks")(spark, sf).queryExecution
+      .executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+    def count(f: PartialFunction[SparkPlan, Unit]): Int = p.collect(f).size
+    assert(count { case _: UnionExec => } == 0, s"pr_ranks plans a union\n$p")
+    assert(count { case _: HashAggregateExec => } == 2 * 10,
+      s"pr_ranks is not two HashAggregates a round\n$p")
+    assert(count { case _: BaseJoinExec => } == 10,
+      s"pr_ranks is not one join a round\n$p")
+  }
+
   test("round-11 relational/pipeline shapes: broadcasts, window keys, no pair scans") {
     // q59 (TPC-H Q9 shape): every dimension side broadcasts; the
     // fact table must never shuffle through a sort-merge join before
