@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Rounds
 import graft.operators.Checkpointing.CutOps
 
 /** Multi-source BFS hop distance — the graph-DISTANCE primitive that
@@ -12,16 +12,36 @@ import graft.operators.Checkpointing.CutOps
   * any seed node, computed to a bounded number of hops.
   *
   * Scale shape (the PageRank skeleton): edges are hash-partitioned by
-  * `src` ONCE and persisted — the 100 TB side never re-shuffles; each
-  * round joins only the current FRONTIER (nodes first reached in the
-  * previous round — the small side) against them, and the min-dist
-  * consolidation is a partial aggregate on the node key. Rounds are
-  * bounded by `maxHops`, fixed for oracle parity (the caller supplies
-  * the diameter bound; open-ended termination would follow the d9
-  * convergence-check pattern: one O(1) scalar per round asking "did
-  * the frontier empty?").
+  * `src` ONCE and cut — the 100 TB side never re-shuffles, and its
+  * blocks release with the RDD; each round joins only the current
+  * FRONTIER (nodes first reached in the previous round — the small
+  * side) against them, and the min-dist consolidation is a partial
+  * aggregate on the node key. A round reads the distance table twice
+  * (frontier + carry), so every round is cut: a lazy chain would
+  * double its plan per hop.
   */
 object Bfs {
+
+  /** Edges deduplicated, src-partitioned and cut. */
+  private def statics(edges: DataFrame): DataFrame =
+    edges.select("src", "dst").distinct()
+      .repartition(col("src"))
+      .lineageCut
+
+  private def seeded(seeds: DataFrame): DataFrame =
+    seeds.select(col("node")).distinct().withColumn("dist", lit(0L))
+
+  /** Hop `h`: the frontier — nodes whose min dist is exactly h-1
+    * (first reached last round; re-expanding older nodes would only
+    * regenerate distances the min already beat) — steps along `e`.
+    */
+  private def hop(e: DataFrame, dist: DataFrame, h: Int): DataFrame = {
+    val frontier = dist.filter(col("dist") === (h - 1))
+    val reached = frontier.join(e, frontier("node") === e("src"))
+      .select(col("dst").as("node"), lit(h.toLong).as("dist"))
+    dist.union(reached)
+      .groupBy("node").agg(min("dist").as("dist"))
+  }
 
   /** @param edges directed (src, dst); deduplicated internally
     * @param seeds (node) — the source set (dist 0)
@@ -32,74 +52,28 @@ object Bfs {
   def hopDistance(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    // Eager localCheckpoint, not persist: partitioning survives into
-    // the LogicalRDD so every hop's frontier join reads the same
-    // src-partitioned layout, and the blocks self-release with the
-    // RDD instead of leaking a cache entry per evaluation.
-    val e = edges.select("src", "dst").distinct()
-      .repartition(col("src"))
-      .lineageCut
-
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-    for (h <- 1 to maxHops) {
-      // Frontier = nodes whose min dist is exactly h-1 (first reached
-      // last round): re-expanding older nodes would only regenerate
-      // distances the min already beat.
-      val frontier = dist.filter(col("dist") === (h - 1))
-      val reached = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node"), lit(h.toLong).as("dist"))
-      dist = dist.union(reached)
-        .groupBy("node").agg(min("dist").as("dist"))
-    }
-    dist
+    val e = statics(edges)
+    Rounds.fixed(seeded(seeds), maxHops, cutEvery = 1)(hop(e, _, _))
   }
 
   /** Open-ended BFS to EXHAUSTION — the convergence twin of
     * [[hopDistance]] (the d9/PageRank pattern: a fixed-round form
     * for oracle parity, a converging form for real use where the
-    * diameter is unknown). Each round asks ONE O(1) driver scalar —
-    * "did this round reach any new node?" — and stops when the
-    * frontier empties; `checkpointEvery` cuts the growing lineage on
-    * long chains (the same contract as PageRank.runUntilConverged).
+    * diameter is unknown). The reached set only grows, so a round
+    * that reaches no new node is a round whose cut counts the same
+    * rows as the last: [[Rounds.Unchanged]] stops there at no extra
+    * job.
     *
     * @return (distances, rounds run — on exhaustion the final round
     *   is the empty one that proved termination, so the graph
     *   eccentricity from the seed set is `rounds - 1`)
     */
   def hopDistanceUntilDone(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int = 1000,
-      checkpointEvery: Int = 20): (DataFrame, Int) = {
+      maxHops: Int = 1000): (DataFrame, Int) = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = edges.select("src", "dst").distinct()
-      .repartition(col("src"))
-      .lineageCut
-
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var h = 0
-    var frontierSize = dist.count() // seeds are round 0's frontier
-    while (frontierSize > 0 && h < maxHops) {
-      h += 1
-      val frontier = dist.filter(col("dist") === (h - 1))
-      val reached = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node"), lit(h.toLong).as("dist"))
-      val next0 = dist.union(reached)
-        .groupBy("node").agg(min("dist").as("dist"))
-      val next = if (checkpointEvery > 0 && h % checkpointEvery == 0)
-        next0.lineageCut
-      else next0.persist(StorageLevel.MEMORY_AND_DISK)
-      // The one scalar that decides termination: nodes first reached
-      // THIS round.
-      frontierSize = next.filter(col("dist") === h).count()
-      dist.unpersist()
-      dist = next
-    }
-    // Release the last live loop cache: the returned frame reads its
-    // own checkpoint blocks, never the persisted round frame.
-    val out = dist.lineageCut
-    dist.unpersist(blocking = false)
-    (out, h)
+    val e = statics(edges)
+    val run = Rounds.until(seeded(seeds), maxHops, Rounds.Unchanged)(
+      hop(e, _, _))
+    (run.frame, run.rounds)
   }
 }

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Checkpointing, Rounds}
 import graft.operators.Checkpointing.CutOps
 
 /** Connected components over an undirected pair list by iterative
@@ -21,8 +22,8 @@ import graft.operators.Checkpointing.CutOps
   * O(diameter) rounds, star contraction O(log n).
   *
   * Scale shape (mirrors graft.graph.PageRank): symmetric edges are
-  * hash-partitioned by `src` ONCE and persisted; every round's join
-  * reuses that partitioning, so only the O(|V|) label table moves.
+  * hash-partitioned by `src` ONCE and cut; every round's join reuses
+  * that partitioning, so only the O(|V|) label table moves.
   * The min-label groupBy is a partial aggregate — per-partition mins
   * combine before the exchange.
   */
@@ -48,31 +49,24 @@ object ConnectedComponents {
       .union(sym.select(col("src")).distinct()
         .select(col("src"), col("src").as("dst")))
       .repartition(shufflePartitions, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .lineageCut
 
-    var labels = edges.select(col("src").as("id"))
+    val init = edges.select(col("src").as("id"))
       .distinct()
       .withColumn("label", col("id"))
-    for (_ <- 1 to iters) {
-      // Labels flow along edges (self-loops carry each vertex's own
-      // label); min is a partial aggregate. The join's streamed side
-      // is the persisted edge partitioning; labels (the small side)
-      // shuffle to it.
-      labels = edges.join(labels, edges("src") === labels("id"))
+    // Labels flow along edges (self-loops carry each vertex's own
+    // label); min is a partial aggregate. The join's streamed side is
+    // the cut edge partitioning; labels (the small side) shuffle to
+    // it. The final cut materializes the O(|V|) label table ONCE, so
+    // every downstream action — and dupGroups' convergence check plus
+    // its final output — reads stored blocks instead of re-running
+    // `iters` join rounds.
+    Rounds.fixed(init, iters, iters) { (labels, _) =>
+      edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
         .groupBy("id")
         .agg(min("label").as("label"))
-    }
-    // Eager localCheckpoint: materializes the O(|V|) label table ONCE
-    // (so every downstream action — and dupGroups' convergence check
-    // plus its final output — reads stored blocks instead of re-running
-    // `iters` join rounds), truncates the iters-deep lineage, and lets
-    // the edge cache be released here instead of leaking into the
-    // caller's session (cached blocks otherwise pile up across a
-    // many-query verify run and lean on LRU eviction).
-    val out = labels.lineageCut
-    edges.unpersist()
-    out
+    }.lineageCut
   }
 
   /** Dedup consolidation: (doc_id, group_id, keep) for every doc in
@@ -93,23 +87,20 @@ object ConnectedComponents {
     // The pair list is typically the OUTPUT of an expensive candidate
     // pipeline (LSH bucket join + exact verify); it is read up to
     // three times here (edge build, convergence check, fallback), so
-    // cache it for the duration. Everything downstream materializes
-    // eagerly (labels via minLabel's checkpoint, star rounds via
-    // theirs), so the cache can be dropped before returning — the
+    // it is cut once. Everything downstream materializes eagerly
+    // (labels via minLabel's cut, star rounds via theirs), so the
     // returned plan reads only checkpointed blocks.
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val labels = minLabel(p, iters)
-      val la = labels.select(col("id").as("a"), col("label").as("la"))
-      val lb = labels.select(col("id").as("b"), col("label").as("lb"))
-      val converged = p.join(la, "a").join(lb, "b")
-        .filter(col("la") =!= col("lb"))
-        .isEmpty
-      val resolved = if (converged) labels else starContract(p)
-      resolved
-        .select(col("id").as("doc_id"), col("label").as("group_id"),
-          (col("id") === col("label")).as("keep"))
-    } finally p.unpersist(blocking = false)
+    val p = Checkpointing.cutOnce(pairs)
+    val labels = minLabel(p, iters)
+    val la = labels.select(col("id").as("a"), col("label").as("la"))
+    val lb = labels.select(col("id").as("b"), col("label").as("lb"))
+    val converged = p.join(la, "a").join(lb, "b")
+      .filter(col("la") =!= col("lb"))
+      .isEmpty
+    val resolved = if (converged) labels else starContract(p)
+    resolved
+      .select(col("id").as("doc_id"), col("label").as("group_id"),
+        (col("id") === col("label")).as("keep"))
   }
 
   /** Alternating large-star / small-star contraction — the O(log n)
@@ -128,8 +119,7 @@ object ConnectedComponents {
     * fixpoint (every component a star centered on its minimum),
     * detected by one (count, hash-sum) scalar per round — the same
     * O(1) driver traffic as `PageRank.runUntilConverged`'s residual.
-    * Each round's edge set is persisted and the previous unpersisted,
-    * so lineage stays one round deep.
+    * Each round's edge set is cut, so lineage stays one round deep.
     *
     * @param pairs undirected edges as (a, b) — both long ids
     * @return (id, label) — component minimum per vertex, identical to

@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Rounds
 import graft.operators.Checkpointing.CutOps
 
 /** Landmark-based harmonic centrality over the undirected view of an
@@ -22,7 +22,7 @@ import graft.operators.Checkpointing.CutOps
   * — rather than a float whose summation order matters.
   *
   * Scale shape: the symmetric edge list is hash-partitioned by `src`
-  * ONCE and persisted; each round expands only the (landmark, node)
+  * ONCE and cut; each round expands only the (landmark, node)
   * FRONTIER pairs first reached last round (the [[Bfs]] skeleton,
   * keyed by landmark), and min-dist consolidation is a partial
   * aggregate on (landmark, node). State is O(|L|·V), bounded by the
@@ -50,9 +50,10 @@ object Harmonic {
 
   /** The (landmark, node, min-dist) table under [[fromLandmarks]] —
     * exposed because eccentricity/diameter cards (g23) consume the
-    * same multi-source BFS before a different reduction. Every
-    * round's carry is eagerly cut, so the returned frame reads
-    * checkpoint blocks and the symmetric edge cache releases here.
+    * same multi-source BFS before a different reduction. `dist` is
+    * consumed twice per round (frontier + union), so a lazy plan would
+    * DOUBLE per hop: every round's carry is cut, and the returned
+    * frame reads checkpoint blocks.
     *
     * @return (lm, node, dist) for every node within `maxHops` of
     *   each landmark, including the landmark itself at dist 0
@@ -68,25 +69,16 @@ object Harmonic {
     val e = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      var dist = landmarks.select(col("node").as("lm")).distinct()
-        .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"))
-      for (h <- 1 to maxHops) {
-        val frontier = dist.filter(col("dist") === (h - 1))
-        val reached = frontier.join(e, frontier("node") === e("src"))
-          .select(col("lm"), col("dst").as("node"),
-            lit(h.toLong).as("dist"))
-        // `dist` is consumed twice per round (frontier + union), so
-        // the lazy plan would DOUBLE per hop — cut the O(|L|·V)
-        // carry eagerly each round (the Hits/PageRank-conserving
-        // pattern; the cut honors the reliable-checkpoint switch)
-        dist = dist.union(reached)
-          .groupBy("lm", "node").agg(min("dist").as("dist"))
-          .lineageCut
-      }
-      dist
-    } finally e.unpersist(blocking = false)
+      .lineageCut
+    val init = landmarks.select(col("node").as("lm")).distinct()
+      .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"))
+    Rounds.fixed(init, maxHops, cutEvery = 1) { (dist, h) =>
+      val frontier = dist.filter(col("dist") === (h - 1))
+      val reached = frontier.join(e, frontier("node") === e("src"))
+        .select(col("lm"), col("dst").as("node"),
+          lit(h.toLong).as("dist"))
+      dist.union(reached)
+        .groupBy("lm", "node").agg(min("dist").as("dist"))
+    }.lineageCut
   }
 }

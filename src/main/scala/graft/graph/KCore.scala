@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.{Checkpointing, Rounds}
 import graft.operators.Checkpointing.CutOps
 
 /** k-core decomposition over the undirected view of an edge list —
@@ -23,17 +23,19 @@ import graft.operators.Checkpointing.CutOps
   *     bounded form has converged).
   *
   * Scale shape: the symmetric neighbor list is hash-partitioned by
-  * `u` ONCE and persisted; each wave joins it with the O(|V|) alive
-  * list on both endpoints and re-counts degrees with a partial
-  * aggregate — the 100 TB edge set never re-shuffles.
+  * `u` ONCE and cut; each wave joins it with the O(|V|) alive list on
+  * both endpoints and re-counts degrees with a partial aggregate — the
+  * 100 TB edge set never re-shuffles. Every form peels through one
+  * level loop, [[peel]], which cuts every wave and stops early once a
+  * wave removes nothing.
   */
 object KCore {
 
-  /** Symmetric distinct-neighbor pairs (u, v), self-loops dropped.
-    * The canonical list is cut before the two-direction union:
-    * nothing dedupes the doubled subtree, and for the word-graph
-    * queries it is the whole tokenize+pair+distinct chain
-    * (round-16 optimization — one execution, not two).
+  /** Symmetric distinct-neighbor pairs (u, v), self-loops dropped,
+    * u-partitioned and cut. The canonical list is cut before the
+    * two-direction union: nothing dedupes the doubled subtree, and for
+    * the word-graph queries it is the whole tokenize+pair+distinct
+    * chain (round-16 optimization — one execution, not two).
     */
   private def sym(edges: DataFrame): DataFrame = {
     val und = edges.select(col("src"), col("dst"))
@@ -42,83 +44,98 @@ object KCore {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
       .lineageCut
+    val shufflePartitions =
+      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v")))
+      .repartition(shufflePartitions, col("u"))
+      .lineageCut
   }
 
-  private def wave(symE: DataFrame, alive: DataFrame, k: Int): DataFrame =
+  /** (u, d): each alive node's count of alive neighbors. */
+  private def degrees(symE: DataFrame, alive: DataFrame): DataFrame =
     symE
       .join(alive.withColumnRenamed("node", "u"), "u")
       .join(alive.withColumnRenamed("node", "v"), "v")
       .groupBy("u").agg(count(lit(1)).as("d"))
+
+  /** The level-`k` peel from `alive`: up to `maxWaves` synchronous
+    * waves of "keep nodes with ≥ k alive neighbors". A wave's
+    * survivors are a SUBSET of the alive set it read, so an unchanged
+    * count is an unchanged set and every further wave is the identity:
+    * [[Rounds.Unchanged]] stops there, result-identical to running
+    * every wave. The count is the wave's cut's own, so the check costs
+    * no job.
+    *
+    * @param rows `alive`'s count when known (then `alive` is a cut)
+    */
+  private def peel(symE: DataFrame, alive: DataFrame, k: Int,
+      maxWaves: Int, rows: Long = -1L): Rounds.Run =
+    Rounds.until(alive, maxWaves, Rounds.Unchanged, rows) { (a, _) =>
+      degrees(symE, a).filter(col("d") >= k).select(col("u").as("node"))
+    }
+
+  /** The k-core after at most `waves` waves, the degree filter being
+    * the first, with each survivor's degree WITHIN the survivor set;
+    * `exact` requires the peel to have stabilized.
+    */
+  private def core(edges: DataFrame, k: Int, waves: Int,
+      exact: Boolean): DataFrame = {
+    val symE = sym(edges)
+    val alive = symE.groupBy("u").agg(count(lit(1)).as("d"))
       .filter(col("d") >= k)
       .select(col("u").as("node"))
+    val run = peel(symE, alive, k, waves - 1)
+    require(!exact || run.converged,
+      s"k-core did not stabilize in $waves waves")
+    degrees(symE, run.frame)
+      .select(col("u").as("node"), col("d").as("core_degree"))
+      .lineageCut
+  }
 
-  /** `waves` synchronous peeling waves, then the surviving nodes with
-    * their degree WITHIN the survivor set.
+  /** `waves` synchronous peeling waves (the degree filter is the
+    * first), then the surviving nodes with their degree WITHIN the
+    * survivor set.
     *
     * @return (node, core_degree) for nodes alive after `waves` waves
     */
   def survivors(edges: DataFrame, k: Int, waves: Int): DataFrame = {
     require(waves >= 1, "at least one wave")
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val symE = sym(edges)
-      .repartition(shufflePartitions, col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var alive = symE.groupBy("u").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(col("u").as("node"))
-      for (_ <- 2 to waves)
-        alive = wave(symE, alive, k)
-      val out = symE
-        .join(alive.withColumnRenamed("node", "u"), "u")
-        .join(alive.withColumnRenamed("node", "v"), "v")
-        .groupBy("u").agg(count(lit(1)).as("core_degree"))
-        .select(col("u").as("node"), col("core_degree"))
-        .lineageCut
-      out
-    } finally symE.unpersist(blocking = false)
+    core(edges, k, waves, exact = false)
   }
 
-  /** Convergence twin: peel until a wave removes nothing (checked on
-    * an O(1) count per wave); throws rather than returning an
+  /** Convergence twin: peel until a wave removes nothing (read off
+    * each wave's cut count); throws rather than returning an
     * unconverged core.
     */
   def untilStable(edges: DataFrame, k: Int, maxWaves: Int = 100)
-      : DataFrame = {
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
+      : DataFrame =
+    core(edges, k, maxWaves, exact = true)
+
+  /** Core numbers by PROGRESSIVE peeling: level k starts from level
+    * k−1's survivors (cores are nested) and [[peel]]s them with up to
+    * `maxWaves` waves; levels stop at `maxK` or once a level empties
+    * (every later one is empty too). `exact` requires every level to
+    * stabilize.
+    */
+  private def levels(edges: DataFrame, maxK: Int, maxWaves: Int,
+      exact: Boolean): DataFrame = {
     val symE = sym(edges)
-      .repartition(shufflePartitions, col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var alive = symE.groupBy("u").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(col("u").as("node"))
-        .lineageCut
-      var n = alive.count()
-      var stable = false
-      var w = 1
-      while (!stable && w < maxWaves) {
-        val next = wave(symE, alive, k).lineageCut
-        val m = next.count()
-        stable = m == n
-        alive = next
-        n = m
-        w += 1
-      }
-      require(stable, s"k-core did not stabilize in $maxWaves waves")
-      symE
-        .join(alive.withColumnRenamed("node", "u"), "u")
-        .join(alive.withColumnRenamed("node", "v"), "v")
-        .groupBy("u").agg(count(lit(1)).as("core_degree"))
-        .select(col("u").as("node"), col("core_degree"))
-        .lineageCut
-    } finally symE.unpersist(blocking = false)
+    // Level 1: every node on an edge (degree ≥ 1 by construction).
+    var (alive, n) =
+      Checkpointing.cutCounted(symE.select(col("u").as("node")).distinct())
+    var out = alive.withColumn("core", lit(1L))
+    var k = 2
+    while (k <= maxK && n > 0) {
+      val run = peel(symE, alive, k, maxWaves, n)
+      require(!exact || run.converged,
+        s"core level $k did not stabilize in $maxWaves waves")
+      alive = run.frame
+      n = run.rows
+      if (n > 0) out = out.union(alive.withColumn("core", lit(k.toLong)))
+      k += 1
+    }
+    out.groupBy("node").agg(max("core").as("core"))
   }
 
   /** FULL core decomposition (bounded form): every node's core
@@ -137,8 +154,8 @@ object KCore {
     * the same two alive-joins + partial-agg recount as [[survivors]],
     * and each level's survivor set only shrinks, so total work is
     * bounded by maxK × waves × (join over the current survivor
-    * subgraph). Alive sets are lineage-cut per level — the plan
-    * never nests across levels.
+    * subgraph). Every wave is cut — the plan never nests across
+    * waves or levels.
     *
     * @return (node, core) for every node appearing in an edge;
     *   core ∈ [1, maxK]
@@ -146,84 +163,18 @@ object KCore {
   def decompose(edges: DataFrame, maxK: Int, waves: Int): DataFrame = {
     require(maxK >= 1, "maxK must be >= 1")
     require(waves >= 1, "at least one wave")
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Eager lineage cut, not persist: blocks self-release with the
-    // RDD (CacheHygieneSpec), and the partitioning survives into the
-    // LogicalRDD for every level's alive joins.
-    val symE = sym(edges)
-      .repartition(shufflePartitions, col("u"))
-      .lineageCut
-    // Level 1: every node on an edge (degree ≥ 1 by construction).
-    var alive = symE.select(col("u").as("node")).distinct().lineageCut
-    var out = alive.withColumn("core", lit(1L))
-    var n = alive.count()
-    var k = 2
-    while (k <= maxK && n > 0) {
-      // Cut per WAVE, not per level: the plan otherwise nests two
-      // joins + an aggregate per wave, and a large caller-supplied
-      // `waves` reproduces the deep-plan blowup documented on
-      // LabelPropagation (decomposeUntilStable already cuts per wave).
-      // Early-stop on a stable wave (round-17, guide §2.4): a wave's
-      // survivors are a SUBSET of the alive set it read, so an
-      // unchanged count is an unchanged set and every further wave of
-      // the level is the identity — skipped waves are
-      // result-identical to the bounded contract (each skipped wave
-      // is two joins + an aggregate; the check is one O(1) count over
-      // the wave's already-materialized cut). An empty level also
-      // ends the level loop: cores are nested, every later level is
-      // empty too.
-      var w = 0
-      var stable = false
-      while (w < waves && !stable) {
-        val next = wave(symE, alive, k).lineageCut
-        val m = next.count()
-        stable = m == n
-        alive = next
-        n = m
-        w += 1
-      }
-      if (n > 0) out = out.union(alive.withColumn("core", lit(k.toLong)))
-      k += 1
-    }
-    out.groupBy("node").agg(max("core").as("core"))
+    levels(edges, maxK, waves, exact = false)
   }
 
   /** Convergence twin of [[decompose]]: each level peels until a
-    * wave removes nothing (one O(1) scalar per wave), and the level
-    * loop stops early once a core empties — so the returned core
-    * numbers are EXACT (not wave-bounded) up to `maxK`. Throws if a
-    * level fails to stabilize within `maxWaves`.
+    * wave removes nothing, and the level loop stops early once a core
+    * empties — so the returned core numbers are EXACT (not
+    * wave-bounded) up to `maxK`. Throws if a level fails to stabilize
+    * within `maxWaves`.
     */
   def decomposeUntilStable(edges: DataFrame, maxK: Int,
       maxWaves: Int = 100): DataFrame = {
     require(maxK >= 1, "maxK must be >= 1")
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val symE = sym(edges)
-      .repartition(shufflePartitions, col("u"))
-      .lineageCut
-    var alive = symE.select(col("u").as("node")).distinct().lineageCut
-    var out = alive.withColumn("core", lit(1L))
-    var n = alive.count()
-    var k = 2
-    while (k <= maxK && n > 0) {
-      var stable = false
-      var w = 0
-      while (!stable && w < maxWaves) {
-        val next = wave(symE, alive, k).lineageCut
-        val m = next.count()
-        stable = m == n
-        alive = next
-        n = m
-        w += 1
-      }
-      require(stable, s"core level $k did not stabilize in $maxWaves waves")
-      if (n > 0) out = out.union(alive.withColumn("core", lit(k.toLong)))
-      k += 1
-    }
-    out.groupBy("node").agg(max("core").as("core"))
+    levels(edges, maxK, maxWaves, exact = true)
   }
 }

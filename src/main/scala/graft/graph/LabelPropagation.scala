@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Rounds
 import graft.operators.Checkpointing.CutOps
 
 /** Community detection by synchronous label propagation (LPA) — the
@@ -42,18 +43,25 @@ import graft.operators.Checkpointing.CutOps
   */
 object LabelPropagation {
 
-  /** @param edges directed (src, dst) name pairs; symmetrized and
-    *   deduped internally (votes count each neighbor once)
-    * @param iters fixed synchronous rounds
-    * @return (node, comm): every vertex with its community's label
-    *   name (the name of the vertex whose id the community carries)
+  /** The loop statics: `ids` = (node, id) dense ids by sorted name, and
+    * `es` = the symmetric deduped edges as (src, dst) ids,
+    * src-partitioned; both cut.
     */
-  def communities(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
+  private final class Statics(val ids: DataFrame, val es: DataFrame) {
+    def initial: DataFrame = ids.select(col("id"), col("id").as("label"))
 
+    /** (node, comm) for an (id, label) frame. */
+    def named(labels: DataFrame): DataFrame =
+      labels
+        .join(ids.withColumnRenamed("node", "node_name"), "id")
+        .join(ids.select(col("id").as("label"),
+          col("node").as("comm")), "label")
+        .select(col("node_name").as("node"), col("comm"))
+  }
+
+  private def statics(edges: DataFrame): Statics = {
+    val shufflePartitions =
+      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -70,86 +78,61 @@ object LabelPropagation {
       .select(col("sid").as("src"), col("did").as("dst"))
       .repartition(shufflePartitions, col("src"))
       .lineageCut
+    new Statics(ids, es)
+  }
 
-    val Pack = 2147483648L // 2^31: > any row_number label or count
-    var labels = ids.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to iters) {
-      labels = es.join(labels, es("src") === labels("id"))
-        .groupBy(es("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("id")
-        .agg(max(col("c") * Pack + (lit(Pack) - col("label"))).as("m"))
-        .select(col("id"), (lit(Pack) - pmod(col("m"), lit(Pack)))
-          .as("label"))
-    }
-    labels
-      .join(ids.withColumnRenamed("node", "node_name"), "id")
-      .join(ids.select(col("id").as("label"),
-        col("node").as("comm")), "label")
-      .select(col("node_name").as("node"), col("comm"))
+  private val Pack = 2147483648L // 2^31: > any row_number label or count
+
+  /** One synchronous round: every vertex takes its neighbors' most
+    * frequent label, ties to the smallest.
+    */
+  private def vote(es: DataFrame, labels: DataFrame): DataFrame =
+    es.join(labels, es("src") === labels("id"))
+      .groupBy(es("dst").as("id"), col("label"))
+      .agg(count(lit(1)).as("c"))
+      .groupBy("id")
+      .agg(max(col("c") * Pack + (lit(Pack) - col("label"))).as("m"))
+      .select(col("id"), (lit(Pack) - pmod(col("m"), lit(Pack)))
+        .as("label"))
+
+  /** @param edges directed (src, dst) name pairs; symmetrized and
+    *   deduped internally (votes count each neighbor once)
+    * @param iters fixed synchronous rounds
+    * @return (node, comm): every vertex with its community's label
+    *   name (the name of the vertex whose id the community carries)
+    */
+  def communities(edges: DataFrame, iters: Int): DataFrame = {
+    require(iters >= 0, s"iters must be >= 0, got $iters")
+    val s = statics(edges)
+    s.named(Rounds.fixed(s.initial, iters, iters)((l, _) => vote(s.es, l)))
   }
 
   /** Run synchronous LPA until NO label changes (or `maxIters`) —
     * the convergence twin of [[communities]] (the d9/PageRank
     * pattern: fixed rounds for oracle parity, convergence for real
     * use). Termination is decided by one O(1) driver scalar per
-    * round — the count of vertices whose label moved. Note plain LPA
-    * can OSCILLATE on bipartite-ish structure (2-cycles of label
-    * swaps); `maxIters` is the guard, and the returned round count
-    * hitting it tells the caller convergence was not reached.
+    * round — the count of vertices whose label moved, read off the
+    * round's carried `_prev` label. Note plain LPA can OSCILLATE on
+    * bipartite-ish structure (2-cycles of label swaps); `maxIters` is
+    * the guard, and the returned round count hitting it tells the
+    * caller convergence was not reached.
+    *
+    * Every round is cut, NOT persisted: persist leaves the LOGICAL
+    * plan nesting one round deeper each round — on an oscillating
+    * graph the maxIters-deep plan OOMs just rendering the SQL-event
+    * string. The cut truncates the plan to one round AND self-releases.
     *
     * @return (communities as in [[communities]], rounds run)
     */
   def communitiesUntilStable(edges: DataFrame, maxIters: Int = 50)
       : (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val ids = DenseIds.byKey(
-        sym.select(col("src").as("node")).distinct(), "node")
-      .lineageCut
-    val es = sym
-      .join(ids.withColumnRenamed("node", "src")
-        .withColumnRenamed("id", "sid"), "src")
-      .join(ids.withColumnRenamed("node", "dst")
-        .withColumnRenamed("id", "did"), "dst")
-      .select(col("sid").as("src"), col("did").as("dst"))
-      .repartition(shufflePartitions, col("src"))
-      .lineageCut
-
-    val Pack = 2147483648L
-    // Per-round eager lineage cut, NOT persist (the Sssp.runUntilStable
-    // discipline): persist leaves the LOGICAL plan nesting one round
-    // deeper each round — on an oscillating graph (LPA 2-cycles) the
-    // maxIters-deep plan OOMs just rendering the SQL-event string.
-    // The cut truncates the plan to one round AND self-releases.
-    var labels = ids.select(col("id"), col("id").as("label"))
-      .lineageCut
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0 && rounds < maxIters) {
-      rounds += 1
-      val next = es.join(labels, es("src") === labels("id"))
-        .groupBy(es("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("id")
-        .agg(max(col("c") * Pack + (lit(Pack) - col("label"))).as("m"))
-        .select(col("id"), (lit(Pack) - pmod(col("m"), lit(Pack)))
-          .as("label"))
-        .lineageCut
-      changed = next.join(labels
-          .withColumnRenamed("label", "prev"), "id")
-        .filter(col("label") =!= col("prev")).count()
-      labels = next
+    val s = statics(edges)
+    val run = Rounds.until(s.initial, maxIters,
+        Rounds.Residual(count_if(col("label") =!= col("_prev")), 0)) {
+      (l, _) =>
+        vote(s.es, l).join(l.select(col("id"), col("label").as("_prev")),
+          "id")
     }
-    val out = labels
-      .join(ids.withColumnRenamed("node", "node_name"), "id")
-      .join(ids.select(col("id").as("label"),
-        col("node").as("comm")), "label")
-      .select(col("node_name").as("node"), col("comm"))
-    (out, rounds)
+    (s.named(run.frame.drop("_prev")), run.rounds)
   }
 }

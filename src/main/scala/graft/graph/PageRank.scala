@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Checkpointing
+import graft.operators.{Checkpointing, Rounds}
 import graft.operators.Checkpointing.CutOps
 
 /** Iterative damped PageRank over an arbitrary `edges(src, dst)`
@@ -39,12 +39,13 @@ import graft.operators.Checkpointing.CutOps
   *     every edge ends at a node, so each round is one join and one
   *     aggregate: no union, filter or join with the node set.
   *   - [[fixedRounds]] (`run`, `runWeighted`, `runPersonalized`,
-  *     `runOnPages`) stays lazy, so `.explain` audits and plan pins
-  *     see the rounds, and cuts every [[MaxFusedRounds]] rounds while
-  *     rounds remain; [[eagerRound]] (`residualCurve`,
-  *     `runUntilConverged`) cuts every round and carries the previous
-  *     rank on the node row, so the residual reads off the gathered
-  *     frame.
+  *     `runOnPages`) is [[graft.operators.Rounds.fixed]]: lazy, so
+  *     `.explain` audits and plan pins see the rounds, with a cut
+  *     every [[MaxFusedRounds]] rounds while rounds remain;
+  *     [[eagerRound]] (`residualCurve`, `runUntilConverged`) carries
+  *     the previous rank on the node row, so under
+  *     [[graft.operators.Rounds.until]]'s per-round cut the residual
+  *     reads off the gathered frame.
   *
   * Cache lifecycle — SELF-RELEASING: nothing is persisted. Every
   * static and per-round frame is a lineage cut, whose blocks live in
@@ -192,40 +193,35 @@ object PageRank {
     * must then carry). Every column of `init` besides `node` and
     * `rank` is a per-node column the rounds carry. `dm` reads the
     * rank table a second time, so a lazy plan would double per round;
-    * the conserving round is cut eagerly instead — one small job per
-    * round, the same cadence as the `dm` aggregate itself.
+    * every conserving round is cut instead — one small job per round,
+    * the same cadence as the `dm` aggregate itself.
     */
   private def fixedRounds(s: Statics, init: DataFrame, iterations: Int,
       damping: Double, tele: Column = lit(1.0),
       conserving: Boolean = false): DataFrame = {
     val names = init.columns.toSeq.filterNot(Set("node", "rank"))
     val carry = names.map(col)
-    var ranks = init
-    for (i <- 1 to iterations) {
+    val out = Rounds.fixed(init, iterations,
+        if (conserving) 1 else MaxFusedRounds) { (ranks, _) =>
       val g = gather(s, ranks, names.zip(carry))
-      ranks =
-        if (conserving) {
-          val dm = ranks.filter(!col("_has_out"))
-            .agg(coalesce(sum("rank"), lit(0.0)).as("_dm"))
-          g.crossJoin(broadcast(dm))
-            .select(col("node") +: (lit(1.0 - damping) / s.n + lit(damping) *
-              (col("incoming") + col("_dm") / s.n)).as("rank") +: carry: _*)
-            .lineageCut
-        } else {
-          val next = g.select(col("node") +: (lit(1.0 - damping) * tele +
-            lit(damping) * col("incoming")).as("rank") +: carry: _*)
-          if (i % MaxFusedRounds == 0 && i < iterations) next.lineageCut
-          else next
-        }
+      if (conserving) {
+        val dm = ranks.filter(!col("_has_out"))
+          .agg(coalesce(sum("rank"), lit(0.0)).as("_dm"))
+        g.crossJoin(broadcast(dm))
+          .select(col("node") +: (lit(1.0 - damping) / s.n + lit(damping) *
+            (col("incoming") + col("_dm") / s.n)).as("rank") +: carry: _*)
+      } else g.select(col("node") +: (lit(1.0 - damping) * tele +
+        lit(damping) * col("incoming")).as("rank") +: carry: _*)
     }
-    ranks.select("node", "rank")
+    (if (conserving && iterations > 0) out.lineageCut else out)
+      .select("node", "rank")
   }
 
-  /** One eagerly cut reference round whose node rows carry the
-    * previous rank as `_prev`, so [[Residual]] reads the round's
-    * max-|Δrank| off its own output — no join with the previous ranks.
+  /** One reference round whose node rows carry the previous rank as
+    * `_prev`, so [[MaxDelta]] reads the round's max-|Δrank| off its own
+    * output — no join with the previous ranks.
     *
-    * @return (node, rank, _prev), cut
+    * @return (node, rank, _prev)
     */
   private def eagerRound(s: Statics, ranks: DataFrame,
       damping: Double): DataFrame =
@@ -233,9 +229,8 @@ object PageRank {
       .select(col("node"),
         (lit(1.0 - damping) + lit(damping) * col("incoming")).as("rank"),
         col("_prev"))
-      .lineageCut
 
-  private val Residual = max(abs(col("rank") - col("_prev")))
+  private val MaxDelta = max(abs(col("rank") - col("_prev")))
 
   /** @param edges DataFrame with `src`, `dst` columns (any type).
     * @param saltHotKeys when > 0, the per-iteration contribution
@@ -317,8 +312,9 @@ object PageRank {
     * stop on the residual instead — fewer iterations on
     * fast-converging graphs, guaranteed accuracy on slow ones.
     *
-    * Every round is cut ([[eagerRound]]), so the plan stays one round
-    * deep whatever the round count, and the residual check is ONE
+    * Every round is cut ([[graft.operators.Rounds.until]]), so the
+    * plan stays one round deep whatever the round count, and the
+    * residual check is ONE
     * driver-side scalar per round (`max(abs(Δ))` — same O(1) driver
     * traffic as the phase-1 count handoff).
     *
@@ -334,15 +330,11 @@ object PageRank {
       maxIterations: Int = 100, damping: Double = 0.85,
       seedRanks: Option[DataFrame] = None): (DataFrame, Int) = {
     val s = statics(edges.select("src", "dst").distinct())
-    var ranks = initial(s.nodes.select("node"), s.n, seedRanks)
-    var iters = 0
-    var residual = Double.MaxValue
-    while (residual > tol && iters < maxIterations) {
-      ranks = eagerRound(s, ranks, damping)
-      residual = ranks.agg(Residual).head().getDouble(0)
-      iters += 1
+    val run = Rounds.until(initial(s.nodes.select("node"), s.n, seedRanks),
+        maxIterations, Rounds.Residual(MaxDelta, tol)) { (ranks, _) =>
+      eagerRound(s, ranks, damping)
     }
-    (ranks.select("node", "rank"), iters)
+    (run.frame.select("node", "rank"), run.rounds)
   }
 
   /** Per-iteration CONVERGENCE CURVE: the max-|Δrank| residual after
@@ -352,7 +344,7 @@ object PageRank {
     * applied to the graph family). One row per iteration, residual
     * on the e9 integer grid.
     *
-    * Each round is cut ([[eagerRound]]); its residual is a one-row
+    * Each round ([[eagerRound]]) is cut; its residual is a one-row
     * aggregate over that cut, and all `iterations` of them are
     * unioned into one bounded output.
     */
@@ -362,8 +354,8 @@ object PageRank {
     val s = statics(edges.select("src", "dst").distinct())
     var ranks = initial(s.nodes.select("node"), s.n)
     (1 to iterations).map { i =>
-      ranks = eagerRound(s, ranks, damping)
-      ranks.agg(Residual.as("r"))
+      ranks = eagerRound(s, ranks, damping).lineageCut
+      ranks.agg(MaxDelta.as("r"))
         .select(lit(i.toLong).as("iter"),
           floor(col("r") * 1000000000L + 0.5).cast("long")
             .as("residual_e9"))

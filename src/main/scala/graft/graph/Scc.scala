@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.{Checkpointing, Rounds}
 import graft.operators.Checkpointing.CutOps
 
 /** STRONGLY connected components over a directed edge list — the
@@ -37,7 +37,8 @@ import graft.operators.Checkpointing.CutOps
   * not by node count; the trim step collapses tendril chains.
   *
   * Scale shape: mirrors PageRank/ConnectedComponents — each round's
-  * edge set is hash-partitioned and persisted; propagation moves
+  * edge set is a counted cut, whose row count also decides
+  * termination (no edge left); propagation moves
   * only the O(|V|) label table per hop with partial-aggregated mins;
   * finalized labels are checkpointed id lists. Node ids may be any
   * orderable type (string words here; `min` matches SQL `min`).
@@ -64,31 +65,28 @@ object Scc {
       .union(edges.select(col("src")).union(edges.select(col("dst")))
         .distinct().select(col("src"), col("src").as("dst")))
       .repartition(shufflePartitions, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = withSelf.select(col("src").as("id")).distinct()
-        .withColumn("m", col("id"))
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < maxChunks) {
-        for (_ <- 1 to chunk) {
-          labels = withSelf.join(labels, withSelf("dst") === labels("id"))
-            .select(withSelf("src").as("id"), col("m"))
-            .groupBy("id")
-            .agg(min("m").as("m"))
-        }
-        labels = labels.lineageCut
-        val la = labels.select(col("id").as("src"), col("m").as("ms"))
-        val lb = labels.select(col("id").as("dst"), col("m").as("md"))
-        converged = edges.join(la, "src").join(lb, "dst")
-          .filter(col("ms") > col("md"))
-          .isEmpty
-        rounds += 1
-      }
-      require(converged,
-        s"min-reach did not converge in ${chunk * maxChunks} hops")
-      labels
-    } finally withSelf.unpersist(blocking = false)
+      .lineageCut
+    var labels = withSelf.select(col("src").as("id")).distinct()
+      .withColumn("m", col("id"))
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < maxChunks) {
+      labels = Rounds.fixed(labels, chunk, chunk) { (l, _) =>
+        withSelf.join(l, withSelf("dst") === l("id"))
+          .select(withSelf("src").as("id"), col("m"))
+          .groupBy("id")
+          .agg(min("m").as("m"))
+      }.lineageCut
+      val la = labels.select(col("id").as("src"), col("m").as("ms"))
+      val lb = labels.select(col("id").as("dst"), col("m").as("md"))
+      converged = edges.join(la, "src").join(lb, "dst")
+        .filter(col("ms") > col("md"))
+        .isEmpty
+      rounds += 1
+    }
+    require(converged,
+      s"min-reach did not converge in ${chunk * maxChunks} hops")
+    labels
   }
 
   /** @param edges0 directed edges (src, dst), any orderable id type
@@ -96,70 +94,63 @@ object Scc {
     *   with its strongly connected component's minimum member id
     */
   def run(edges0: DataFrame, maxRounds: Int = 40): DataFrame = {
-    var remaining = edges0
-      .select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val distinct = edges0.select(col("src"), col("dst")).distinct()
+    val (remaining, n) =
+      Checkpointing.cutCounted(distinct.filter(col("src") =!= col("dst")))
     // finalized pieces accumulate as already-checkpointed frames and
     // union ONCE at return — re-checkpointing a growing union every
     // round would re-materialize all prior rounds' output each time
     val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // nodes whose only edges were self-loops still need a result row
-    pieces += edges0
-      .select(col("src"), col("dst")).distinct()
+    pieces += distinct
       .filter(col("src") === col("dst"))
       .select(col("src").as("node"), col("src").as("scc"))
       .join(remaining.select(col("src").as("node"))
           .union(remaining.select(col("dst").as("node"))).distinct(),
         Seq("node"), "left_anti")
       .lineageCut
-    var round = 0
-    var empty = remaining.isEmpty
-    while (!empty && round < maxRounds) {
-      val srcs = remaining.select(col("src").as("node")).distinct()
-      val dsts = remaining.select(col("dst").as("node")).distinct()
-      val nodes = srcs.union(dsts).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // 1. trim: only-src (no in-edges) / only-dst (no out-edges)
-      //    nodes lie on no cycle — singleton SCCs
-      val trimmed = srcs.except(dsts).union(dsts.except(srcs))
-        .select(col("node"), col("node").as("scc"))
-      // 2-3. F/B fixpoints on the remaining graph; F = B finalizes
-      val f = minReach(remaining)
-      val b = minReach(remaining
-        .select(col("dst").as("src"), col("src").as("dst")))
-        .withColumnRenamed("m", "mb")
-      val matched = f.join(b, "id")
-        .filter(col("m") === col("mb"))
-        .select(col("id").as("node"), col("m").as("scc"))
-      val done = trimmed.union(matched)
-        .groupBy("node").agg(min("scc").as("scc"))
-        .lineageCut
-      pieces += done
-      // 4. drop every edge touching a finalized node; nodes isolated
-      //    by the removal finalize as singletons
-      val doneIds = done.select("node")
-      val nextRemaining = remaining
-        .join(doneIds.withColumnRenamed("node", "src"),
-          Seq("src"), "left_anti")
-        .join(doneIds.withColumnRenamed("node", "dst"),
-          Seq("dst"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val survivors = nextRemaining.select(col("src").as("node"))
-        .union(nextRemaining.select(col("dst").as("node"))).distinct()
-      pieces += nodes
-        .join(done.select("node"), Seq("node"), "left_anti")
-        .join(survivors, Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("scc"))
-        .lineageCut
-      empty = nextRemaining.isEmpty
-      remaining.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      remaining = nextRemaining
-      round += 1
+    // Every round finalizes at least SCC(min remaining id) and drops
+    // its edges, so the edge count falls until it reaches zero, where
+    // [[Rounds.Unchanged]] stops; the count is each round's cut's own.
+    val run = Rounds.until(remaining, maxRounds, Rounds.Unchanged, n) {
+      (remaining, _) =>
+        val srcs = remaining.select(col("src").as("node")).distinct()
+        val dsts = remaining.select(col("dst").as("node")).distinct()
+        // 1. trim: only-src (no in-edges) / only-dst (no out-edges)
+        //    nodes lie on no cycle — singleton SCCs
+        val trimmed = srcs.except(dsts).union(dsts.except(srcs))
+          .select(col("node"), col("node").as("scc"))
+        // 2-3. F/B fixpoints on the remaining graph; F = B finalizes
+        val f = minReach(remaining)
+        val b = minReach(remaining
+          .select(col("dst").as("src"), col("src").as("dst")))
+          .withColumnRenamed("m", "mb")
+        val matched = f.join(b, "id")
+          .filter(col("m") === col("mb"))
+          .select(col("id").as("node"), col("m").as("scc"))
+        val done = trimmed.union(matched)
+          .groupBy("node").agg(min("scc").as("scc"))
+          .lineageCut
+        pieces += done
+        // 4. drop every edge touching a finalized node; nodes isolated
+        //    by the removal finalize as singletons
+        val doneIds = done.select("node")
+        val next = remaining
+          .join(doneIds.withColumnRenamed("node", "src"),
+            Seq("src"), "left_anti")
+          .join(doneIds.withColumnRenamed("node", "dst"),
+            Seq("dst"), "left_anti")
+        val survivors = next.select(col("src").as("node"))
+          .union(next.select(col("dst").as("node")))
+        pieces += srcs.union(dsts).distinct()
+          .join(doneIds, Seq("node"), "left_anti")
+          .join(survivors, Seq("node"), "left_anti")
+          .select(col("node"), col("node").as("scc"))
+          .lineageCut
+        next
     }
-    require(empty, s"SCC peeling did not converge in $maxRounds rounds")
-    remaining.unpersist(blocking = false)
+    require(run.rows == 0,
+      s"SCC peeling did not converge in $maxRounds rounds")
     pieces.reduce(_ unionByName _)
   }
 }

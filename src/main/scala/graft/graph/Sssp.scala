@@ -2,8 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Rounds
 import graft.operators.Checkpointing.CutOps
 
 /** Multi-source WEIGHTED shortest paths (Bellman-Ford rounds) — the
@@ -14,16 +14,24 @@ import graft.operators.Checkpointing.CutOps
   * oracle-checks bit-for-bit.
   *
   * Scale shape (the PageRank/Bfs skeleton): edges collapse to their
-  * min-cost parallel edge, hash-partition by `src` ONCE and persist —
+  * min-cost parallel edge, hash-partition by `src` ONCE and are cut —
   * the 100 TB side never re-shuffles; per round only the O(|reached|)
   * distance table moves (join on src + one partial-aggregated min on
-  * the node key — no window, no collect). The distance table is
-  * referenced twice per round (carried forward + relaxed), so each
-  * round eagerly lineage-cuts it — the same ~2^rounds plan-growth
-  * fix as PageRank's double-read branch (PageRank.scala:149-163) and
-  * graphBeamSearch's per-round cut.
+  * the node key — no window, no collect). The bounded round reads the
+  * distance table twice (carried forward + relaxed), so every round is
+  * cut — the same ~2^rounds plan-growth fix as PageRank's double-read
+  * branch and graphBeamSearch's per-round cut.
   */
 object Sssp {
+
+  /** Min-cost parallel edge per (src, dst), src-partitioned and cut. */
+  private def statics(wedges: DataFrame): DataFrame =
+    wedges.groupBy("src", "dst").agg(min("cost").as("cost"))
+      .repartition(col("src"))
+      .lineageCut
+
+  private def seeded(seeds: DataFrame): DataFrame =
+    seeds.select(col("node")).distinct().withColumn("dist", lit(0L))
 
   /** Bounded Bellman-Ford: full relaxation each round.
     *
@@ -38,29 +46,22 @@ object Sssp {
     */
   def run(wedges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = wedges.groupBy("src", "dst").agg(min("cost").as("cost"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-    for (_ <- 1 to rounds) {
+    val e = statics(wedges)
+    Rounds.fixed(seeded(seeds), rounds, cutEvery = 1) { (dist, _) =>
       val relaxed = dist.join(e, dist("node") === e("src"))
         .select(col("dst").as("node"),
           (col("dist") + col("cost")).as("dist"))
-      dist = dist.union(relaxed)
+      dist.union(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
-        .lineageCut
     }
-    e.unpersist()
-    dist
   }
 
   /** Convergence twin (the Bfs.hopDistanceUntilDone contract): run
     * until a round improves NO distance, deciding termination from
-    * one O(1) driver scalar per round — "how many nodes improved?".
-    * Improved nodes form the next frontier, so late rounds relax only
-    * the shrinking active set instead of every reached node.
+    * one O(1) driver scalar per round — "how many nodes improved?",
+    * read off the round's `improved` flags. Improved nodes form the
+    * next frontier, so late rounds relax only the shrinking active
+    * set instead of every reached node.
     *
     * @return (distances, rounds run — the final round is the empty
     *   one that proved the fixpoint)
@@ -68,24 +69,16 @@ object Sssp {
   def runUntilStable(wedges: DataFrame, seeds: DataFrame,
       maxRounds: Int = 1000): (DataFrame, Int) = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val e = wedges.groupBy("src", "dst").agg(min("cost").as("cost"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .withColumn("improved", lit(true))
-      .lineageCut
-    var h = 0
-    var nImproved = dist.count() // seeds count as round 0's frontier
-    while (nImproved > 0 && h < maxRounds) {
-      h += 1
+    val e = statics(wedges)
+    val init = seeded(seeds).withColumn("improved", lit(true))
+    val run = Rounds.until(init, maxRounds,
+        Rounds.Residual(count_if(col("improved")), 0)) { (dist, _) =>
       val frontier = dist.filter(col("improved"))
       val relaxed = frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node"),
           (col("dist") + col("cost")).as("cand"))
         .groupBy("node").agg(min("cand").as("cand"))
-      val next = dist.drop("improved")
+      dist.drop("improved")
         .join(relaxed, Seq("node"), "full_outer")
         .select(col("node"),
           least(coalesce(col("dist"), col("cand")),
@@ -93,11 +86,7 @@ object Sssp {
           (col("dist").isNull ||
             (col("cand").isNotNull && col("cand") < col("dist")))
             .as("improved"))
-        .lineageCut
-      nImproved = next.filter(col("improved")).count()
-      dist = next
     }
-    e.unpersist()
-    (dist.drop("improved"), h)
+    (run.frame.drop("improved"), run.rounds)
   }
 }

@@ -2,9 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.operators.Checkpointing.CutOps
+import graft.operators.{Checkpointing, Rounds}
 
 /** k-truss decomposition over the undirected view of an edge list —
   * the EDGE-centric density primitive completing k-core's node
@@ -20,8 +19,8 @@ import graft.operators.Checkpointing.CutOps
   * number of synchronous peel waves (the oracle-checkable form —
   * waves are idempotent at the fixpoint, so an unrolled SQL mirror
   * with enough rounds states the same result), [[untilStable]] peels
-  * until a wave removes no edge (O(1) count per wave) and throws
-  * rather than returning an unconverged truss.
+  * until a wave removes no edge (read off each wave's cut count) and
+  * throws rather than returning an unconverged truss.
   *
   * Scale shape: each wave re-derives the symmetric adjacency of the
   * SURVIVING edge set and counts each edge's common neighbors with
@@ -53,71 +52,36 @@ object Truss {
       .filter(col("support") >= k - 2)
   }
 
+  /** Up to `maxWaves` synchronous peel waves at level `k` — the ONE
+    * peel loop every public form shares.
+    *
+    * Early-stop on a stable wave (round-17, guide §2.4 — remove
+    * redundant passes): a wave's survivors are a SUBSET of its input,
+    * so an unchanged count means an unchanged set, and every further
+    * wave of the level is the identity — [[Rounds.Unchanged]] stops
+    * there, result-identical to the bounded contract while saving
+    * whole peel passes (each wave is two joins + an aggregate over the
+    * survivor subgraph). The count is the wave's cut's own, so the
+    * check costs no job.
+    *
+    * @param rows `t`'s count when known (then `t` is a cut)
+    */
+  private def peel(t: DataFrame, k: Int, maxWaves: Int,
+      rows: Long = -1L): Rounds.Run =
+    Rounds.until(t, maxWaves, Rounds.Unchanged, rows)(
+      (x, _) => wave(x, k).select("a", "b"))
+
   /** `waves` synchronous peel waves, then the surviving edges with
     * their support within the survivor set.
     *
     * @return (a, b, support) for edges alive after `waves` waves
     */
-  /** `waves` bounded synchronous peel waves at level `k` — the ONE
-    * copy of the bounded loop all public forms share.
-    *
-    * Early-stop on a stable wave (round-17, guide §2.4 — remove
-    * redundant passes): a wave's survivors are a SUBSET of its input,
-    * so an unchanged count means an unchanged set, and every further
-    * wave of the level is the identity — skipping them is
-    * result-identical to the bounded contract while saving whole
-    * peel passes (each wave is two joins + an aggregate over the
-    * survivor subgraph; the stability check is one O(1) count over
-    * the wave's already-materialized cut). `nIn` is the caller's
-    * count of `t0` when it has one (saves the first check's count).
-    *
-    * @return (survivors, their count)
-    */
-  private def peelBounded(t0: DataFrame, k: Int, waves: Int,
-      nIn: Long = -1L): (DataFrame, Long) = {
-    var t = t0
-    var n = nIn
-    var w = 0
-    var stable = false
-    while (w < waves && !stable) {
-      val next = wave(t, k).select("a", "b").lineageCut
-      val m = next.count()
-      stable = m == n
-      t = next
-      n = m
-      w += 1
-    }
-    (t, n)
-  }
-
-  /** Peel at level `k` until a wave removes no edge (one O(1) count
-    * per wave); returns the survivors with their count, throws past
-    * `maxWaves` — the ONE copy of the convergence loop.
-    */
-  private def peelUntilStable(t0: DataFrame, n0: Long, k: Int,
-      maxWaves: Int, label: String): (DataFrame, Long) = {
-    var t = t0
-    var n = n0
-    var stable = false
-    var w = 0
-    while (!stable && w < maxWaves) {
-      val next = wave(t, k).select("a", "b").lineageCut
-      val m = next.count()
-      stable = m == n
-      t = next
-      n = m
-      w += 1
-    }
-    require(stable, s"$label did not stabilize in $maxWaves waves")
-    (t, n)
-  }
-
   def survivors(edges: DataFrame, k: Int, waves: Int): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
     require(waves >= 1, "at least one wave")
-    val (t, _) = peelBounded(und(edges).lineageCut, k, waves)
     // Final support within the stable survivor set.
-    wave(t, k).select(col("a"), col("b"), col("support"))
+    wave(peel(und(edges), k, waves).frame, k)
+      .select(col("a"), col("b"), col("support"))
   }
 
   /** Convergence twin: peel until a wave removes no edge; throws
@@ -126,9 +90,32 @@ object Truss {
   def untilStable(edges: DataFrame, k: Int, maxWaves: Int = 100)
       : DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    val t0 = und(edges).lineageCut
-    val (t, _) = peelUntilStable(t0, t0.count(), k, maxWaves, "k-truss")
-    wave(t, k).select(col("a"), col("b"), col("support"))
+    val run = peel(und(edges), k, maxWaves)
+    require(run.converged, s"k-truss did not stabilize in $maxWaves waves")
+    wave(run.frame, k).select(col("a"), col("b"), col("support"))
+  }
+
+  /** Truss numbers by progressive peeling: level k [[peel]]s level
+    * k−1's survivors with up to `maxWaves` waves; levels stop at
+    * `maxK` or once a level empties (survivors only shrink, so every
+    * later level is empty too). `exact` requires every level to
+    * stabilize.
+    */
+  private def levels(edges: DataFrame, maxK: Int, maxWaves: Int,
+      exact: Boolean): DataFrame = {
+    var (t, n) = Checkpointing.cutCounted(und(edges))
+    var out = t.withColumn("truss", lit(2L))
+    var k = 3
+    while (k <= maxK && n > 0) {
+      val run = peel(t, k, maxWaves, n)
+      require(!exact || run.converged,
+        s"truss level $k did not stabilize in $maxWaves waves")
+      t = run.frame
+      n = run.rows
+      if (n > 0) out = out.union(t.withColumn("truss", lit(k.toLong)))
+      k += 1
+    }
+    out.groupBy("a", "b").agg(max("truss").as("truss"))
   }
 
   /** FULL truss decomposition — per-edge MAX k such that the edge
@@ -152,23 +139,7 @@ object Truss {
   def decompose(edges: DataFrame, maxK: Int, waves: Int): DataFrame = {
     require(maxK >= 2, "maxK must be >= 2")
     require(waves >= 1, "at least one wave")
-    var t = und(edges).lineageCut
-    var out = t.withColumn("truss", lit(2L))
-    var n = t.count()
-    var k = 3
-    while (k <= maxK && n > 0) {
-      // peelBounded early-stops the level's waves at the fixpoint and
-      // hands back the survivor count — which also replaces the old
-      // per-level isEmpty probe (survivors only shrink: once a level
-      // empties, every later level is empty too; result-identical,
-      // wave(empty, k) = empty).
-      val (t2, n2) = peelBounded(t, k, waves, nIn = n)
-      t = t2
-      n = n2
-      if (n > 0) out = out.union(t.withColumn("truss", lit(k.toLong)))
-      k += 1
-    }
-    out.groupBy("a", "b").agg(max("truss").as("truss"))
+    levels(edges, maxK, waves, exact = false)
   }
 
   /** Convergence twin of [[decompose]]: each level peels until a
@@ -178,17 +149,6 @@ object Truss {
   def decomposeUntilStable(edges: DataFrame, maxK: Int,
       maxWaves: Int = 100): DataFrame = {
     require(maxK >= 2, "maxK must be >= 2")
-    var t = und(edges).lineageCut
-    var out = t.withColumn("truss", lit(2L))
-    var n = t.count()
-    var k = 3
-    while (k <= maxK && n > 0) {
-      val (t2, n2) = peelUntilStable(t, n, k, maxWaves, s"truss level $k")
-      t = t2
-      n = n2
-      if (n > 0) out = out.union(t.withColumn("truss", lit(k.toLong)))
-      k += 1
-    }
-    out.groupBy("a", "b").agg(max("truss").as("truss"))
+    levels(edges, maxK, maxWaves, exact = true)
   }
 }

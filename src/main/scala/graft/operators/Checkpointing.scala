@@ -65,7 +65,13 @@ object Checkpointing {
   /** Materialize `df` eagerly and truncate its lineage, in the
     * session-selected mode.
     */
-  def cut(df: DataFrame): DataFrame = {
+  def cut(df: DataFrame): DataFrame = cutCounted(df)._1
+
+  /** [[cut]] plus the cut's row count, which the materializing job
+    * computes anyway: a loop that stops on a row count reads it here
+    * instead of running a `count()` job over the cut.
+    */
+  private[graft] def cutCounted(df: DataFrame): (DataFrame, Long) = {
     val spark = df.sparkSession
     // Bounded at 256: a capture flag left on across a long session
     // must not grow a JVM-global queue without limit (tests clear()
@@ -84,13 +90,11 @@ object Checkpointing {
     // records the FINAL adaptive plan's partitioning/ordering —
     // results bit-identical, downstream Exchanges on the same key
     // disappear (pr_ranks: 62 → one edge shuffle total).
-    if (reliable) {
+    if (reliable)
       require(spark.sparkContext.getCheckpointDir.isDefined,
         s"$ReliableKey=true requires sparkContext.setCheckpointDir " +
           "(an HDFS/object-store path on a cluster)")
-      org.apache.spark.sql.graftbridge.CheckpointBridge
-        .checkpointPreserving(df)
-    } else org.apache.spark.sql.graftbridge.CheckpointBridge
-      .localCheckpointPreserving(df)
+    org.apache.spark.sql.graftbridge.CheckpointBridge
+      .cutPreserving(df, reliable)
   }
 }

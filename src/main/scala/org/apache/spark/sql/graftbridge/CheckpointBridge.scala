@@ -39,14 +39,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 object CheckpointBridge {
 
-  def localCheckpointPreserving(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    cutPreserving(df, reliable = false)
-
-  def checkpointPreserving(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    cutPreserving(df, reliable = true)
-
   /** True when `df`'s optimized plan is a single scan of an already
     * checkpointed RDD, i.e. `df` is a cut (under at most a no-op
     * projection) and re-cutting it would only copy its blocks.
@@ -57,8 +49,11 @@ object CheckpointBridge {
       case _ => false
     }
 
-  private def cutPreserving(df: org.apache.spark.sql.DataFrame,
-      reliable: Boolean): org.apache.spark.sql.DataFrame = {
+  /** The eager cut of `df` with the row count its materializing job
+    * already computed.
+    */
+  def cutPreserving(df: org.apache.spark.sql.DataFrame,
+      reliable: Boolean): (org.apache.spark.sql.DataFrame, Long) = {
     val ds = df.asInstanceOf[Dataset[Row]]
     val spark = ds.sparkSession
     val qe = ds.queryExecution
@@ -67,7 +62,7 @@ object CheckpointBridge {
     // mark the RDD checkpointed, materialize eagerly.
     val internalRdd = physical.execute().map(_.copy())
     if (reliable) internalRdd.checkpoint() else internalRdd.localCheckpoint()
-    internalRdd.count()
+    val rows = internalRdd.count()
 
     // Post-execution the adaptive plan is final — THIS is the
     // partitioning the rows physically landed in.
@@ -105,8 +100,8 @@ object CheckpointBridge {
           (UnknownPartitioning(internalRdd.getNumPartitions),
             Seq.empty[SortOrder])
       }
-    Dataset.ofRows(spark,
+    (Dataset.ofRows(spark,
       LogicalRDD(logical.output, internalRdd, partitioning, ordering,
-        isStreaming = false)(spark, stats, constraints))
+        isStreaming = false)(spark, stats, constraints)), rows)
   }
 }

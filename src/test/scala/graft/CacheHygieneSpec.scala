@@ -252,9 +252,7 @@ class CacheHygieneSpec extends SparkSpec {
       finally walk.close() // Files.walk holds directory handles
     val roster = Set(
       // release-on-return, pinned by checkReleased above
-      "KCore.scala", "Neighborhood.scala", "Scc.scala", "Hits.scala",
-      "ConnectedComponents.scala", "Sssp.scala",
-      "Bfs.scala", "Harmonic.scala", "Walks.scala", "KMeans.scala",
+      "Neighborhood.scala", "Walks.scala", "KMeans.scala",
       "BpeTrain.scala", "Similarity.scala", "Betweenness.scala",
       "UnigramLm.scala", "NavIndexPipeline.scala",
       // documented caller-releases, pinned by checkCallerReleased

@@ -67,6 +67,14 @@ class CheckpointingSpec extends SparkSpec {
       CurationFunnel.audit(docs).orderBy("stage_id")
         .collect().map(_.toString).toSeq)
 
+    // The counted cut's count is its rows' count, in either mode.
+    def counted(): Unit = {
+      val (cutEdges, n) = Checkpointing.cutCounted(edges)
+      assert(n == edges.count() && n == cutEdges.count())
+    }
+    counted()
+    withReliable { counted() }
+
     val local = snapshot()
     val reliable = withReliable { snapshot() }
     assert(local._1 == reliable._1, "PageRank diverged across modes")

@@ -573,11 +573,16 @@ class GraphSpec extends SparkSpec {
       ("z", "c"), ("f", "f")).toDF("src", "dst")
     val seeds = Seq("a", "z").toDF("node")
     val (dist, rounds) = Bfs.hopDistanceUntilDone(edges, seeds)
+    val bounded = Bfs.hopDistance(edges, seeds, maxHops = 10)
     assert(dist.as[(String, Long)].collect().toMap ==
-      Bfs.hopDistance(edges, seeds, maxHops = 10)
-        .as[(String, Long)].collect().toMap)
+      bounded.as[(String, Long)].collect().toMap)
     // e sits 3 hops out; round 4 proves exhaustion.
     assert(rounds == 4)
+    // A hop reads the distance table twice (frontier + carry), so an
+    // uncut chain doubles its plan per hop: 2,047 leaves at 10 hops.
+    // Cut rounds keep the plan one hop deep.
+    val leaves = bounded.queryExecution.logical.collectLeaves().size
+    assert(leaves <= 16, s"10-hop BFS plans $leaves logical leaves")
   }
 
   test("LPA until stable: converges on the two-clique fixture") {
@@ -694,6 +699,22 @@ class GraphSpec extends SparkSpec {
     // degenerate: k larger than any degree -> empty, twin agrees
     assert(KCore.survivors(edges, k = 9, waves = 3).isEmpty)
     assert(KCore.untilStable(edges, k = 9).isEmpty)
+    // A wave reads the alive set twice, so an uncut wave chain doubles
+    // its plan per wave. The largest plan handed to a cut (one line
+    // per plan node) must not grow with the wave count.
+    import graft.operators.Checkpointing
+    def largestCutPlan(waves: Int): Int = {
+      Checkpointing.capturedPlans.clear()
+      spark.conf.set(Checkpointing.CaptureKey, "true")
+      try KCore.survivors(edges, k = 3, waves = waves).collect()
+      finally spark.conf.unset(Checkpointing.CaptureKey)
+      import scala.jdk.CollectionConverters._
+      val plans = Checkpointing.capturedPlans.asScala.toList
+      Checkpointing.capturedPlans.clear()
+      plans.map(_.linesIterator.size).max
+    }
+    assert(largestCutPlan(6) == largestCutPlan(2),
+      "KCore.survivors' cut plans grow with the wave count")
   }
 
   test("core decomposition: core != degree on bridges, twin agrees, cap binds") {
