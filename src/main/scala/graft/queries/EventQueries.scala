@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -15,6 +16,85 @@ import graft.operators.{AsOfJoin, RangeJoinBinned, Sessionize}
   * or window boundary through float rounding.
   */
 object EventQueries {
+
+  /** Each purchase as-of-joined (AsOfJoin, in `direction` and within
+    * `toleranceUs`) to its user's clicks, pre-aggregated to one row
+    * per (user, ts) with the max event_id as `click_id`: the shared
+    * input of the q21/q33/q38/q40 attribution queries.
+    */
+  private def purchaseAsOfClick(s: SparkSession, d: String,
+      direction: String = "backward",
+      toleranceUs: Option[Long] = None): DataFrame = {
+    val ev = Tables.events(s, d)
+    val clicks = ev.filter(col("event_type") === "click")
+      .groupBy("user_id", "ts")
+      .agg(max("event_id").as("click_id"))
+      .select(col("user_id"), col("ts"), col("click_id"),
+        unix_micros(col("ts")).as("click_ts_us"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select("event_id", "user_id", "ts")
+    AsOfJoin(purchases, clicks, "user_id", "ts",
+      Seq("click_id", "click_ts_us"), direction, toleranceUs)
+  }
+
+  /** The oracle twin of [[purchaseAsOfClick]]'s inputs: `clicks`
+    * (user_id, ts, click_id, click_ts_us) and `purch` (event_id,
+    * user_id, ts).
+    */
+  private val clickAsOfCtes: String =
+    """clicks AS (
+      |  SELECT user_id, ts, max(event_id) AS click_id,
+      |    epoch_us(ts) AS click_ts_us
+      |  FROM events WHERE event_type = 'click'
+      |  GROUP BY user_id, ts
+      |),
+      |purch AS (
+      |  SELECT event_id, user_id, ts FROM events
+      |  WHERE event_type = 'purchase'
+      |)""".stripMargin
+
+  /** SCD-2 versions of each user's event_type state (q57, q61): the
+    * events whose type differs from the user's previous one, in
+    * (tsl, event_id) order, each with `valid_to` (the next version's
+    * tsl, null for the current one) and its 1-based `version`.
+    */
+  private def scd2Versions(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("tsl"), col("event_id"))
+    Tables.events(s, d)
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("tsl"), col("event_type"))
+      .withColumn("prev_type", lag("event_type", 1).over(w))
+      .filter(col("prev_type").isNull ||
+        col("prev_type") =!= col("event_type"))
+      .withColumn("valid_to", lead("tsl", 1).over(w))
+      .withColumn("version", row_number().over(w).cast("long"))
+  }
+
+  /** The oracle twin of [[scd2Versions]]: `v` (user_id, event_type,
+    * tsl, valid_to, version).
+    */
+  private val scd2Ctes: String =
+    """ev AS (
+      |  SELECT user_id, event_id, epoch_us(ts) AS tsl, event_type,
+      |    lag(event_type) OVER (
+      |      PARTITION BY user_id ORDER BY tsl, event_id)
+      |      AS prev_type
+      |  FROM events
+      |),
+      |ch AS (
+      |  SELECT user_id, event_id, tsl, event_type
+      |  FROM ev
+      |  WHERE prev_type IS NULL OR prev_type <> event_type
+      |),
+      |v AS (
+      |  SELECT user_id, event_type, tsl,
+      |    lead(tsl) OVER w AS valid_to,
+      |    CAST(row_number() OVER w AS BIGINT) AS version
+      |  FROM ch
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY tsl, event_id)
+      |)""".stripMargin
 
   def all: Seq[Q] = Seq(
 
@@ -190,41 +270,21 @@ object EventQueries {
     // one row per (user, ts) so same-ts payloads are deterministic.
     // Oracle: DuckDB's native ASOF JOIN (same inclusive semantics).
     Q("q21_asof_join",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max("event_id").as("click_id"))
-          .select(col("user_id"), col("ts"), col("click_id"),
-            unix_micros(col("ts")).as("click_ts_us"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        AsOfJoin(purchases, clicks, "user_id", "ts",
-            Seq("click_id", "click_ts_us"))
-          .filter(col("asof_click_id").isNotNull)
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("asof_click_id").as("click_id"),
-            col("asof_click_ts_us").as("click_ts_us"),
-            (unix_micros(col("ts")) - col("asof_click_ts_us")).as("gap_us"))
-          .orderBy("event_id")
-      },
-      Some("""WITH clicks AS (
-             |  SELECT user_id, ts, max(event_id) AS click_id,
-             |    epoch_us(ts) AS click_ts_us
-             |  FROM events WHERE event_type = 'click'
-             |  GROUP BY user_id, ts
-             |),
-             |purch AS (
-             |  SELECT event_id, user_id, ts FROM events
-             |  WHERE event_type = 'purchase'
-             |)
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-             |  c.click_id, c.click_ts_us,
-             |  epoch_us(p.ts) - c.click_ts_us AS gap_us
-             |FROM purch p ASOF JOIN clicks c
-             |  ON p.user_id = c.user_id AND p.ts >= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+      (s, d) => purchaseAsOfClick(s, d)
+        .filter(col("asof_click_id").isNotNull)
+        .select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("asof_click_id").as("click_id"),
+          col("asof_click_ts_us").as("click_ts_us"),
+          (unix_micros(col("ts")) - col("asof_click_ts_us")).as("gap_us"))
+        .orderBy("event_id"),
+      Some(s"""WITH $clickAsOfCtes
+              |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+              |  c.click_id, c.click_ts_us,
+              |  epoch_us(p.ts) - c.click_ts_us AS gap_us
+              |FROM purch p ASOF JOIN clicks c
+              |  ON p.user_id = c.user_id AND p.ts >= c.ts
+              |ORDER BY p.event_id""".stripMargin)),
 
     // Forward as-of: each purchase gets the user's EARLIEST
     // at-or-after click — the "next follow-up event" direction of
@@ -232,41 +292,21 @@ object EventQueries {
     // instead of last-over-preceding; still one shuffle, no pair
     // explosion). Oracle: DuckDB ASOF with the comparison flipped.
     Q("q33_asof_forward",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max("event_id").as("click_id"))
-          .select(col("user_id"), col("ts"), col("click_id"),
-            unix_micros(col("ts")).as("click_ts_us"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        AsOfJoin(purchases, clicks, "user_id", "ts",
-            Seq("click_id", "click_ts_us"), direction = "forward")
-          .filter(col("asof_click_id").isNotNull)
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("asof_click_id").as("click_id"),
-            col("asof_click_ts_us").as("click_ts_us"),
-            (col("asof_click_ts_us") - unix_micros(col("ts"))).as("gap_us"))
-          .orderBy("event_id")
-      },
-      Some("""WITH clicks AS (
-             |  SELECT user_id, ts, max(event_id) AS click_id,
-             |    epoch_us(ts) AS click_ts_us
-             |  FROM events WHERE event_type = 'click'
-             |  GROUP BY user_id, ts
-             |),
-             |purch AS (
-             |  SELECT event_id, user_id, ts FROM events
-             |  WHERE event_type = 'purchase'
-             |)
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-             |  c.click_id, c.click_ts_us,
-             |  c.click_ts_us - epoch_us(p.ts) AS gap_us
-             |FROM purch p ASOF JOIN clicks c
-             |  ON p.user_id = c.user_id AND p.ts <= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+      (s, d) => purchaseAsOfClick(s, d, direction = "forward")
+        .filter(col("asof_click_id").isNotNull)
+        .select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("asof_click_id").as("click_id"),
+          col("asof_click_ts_us").as("click_ts_us"),
+          (col("asof_click_ts_us") - unix_micros(col("ts"))).as("gap_us"))
+        .orderBy("event_id"),
+      Some(s"""WITH $clickAsOfCtes
+              |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+              |  c.click_id, c.click_ts_us,
+              |  c.click_ts_us - epoch_us(p.ts) AS gap_us
+              |FROM purch p ASOF JOIN clicks c
+              |  ON p.user_id = c.user_id AND p.ts <= c.ts
+              |ORDER BY p.event_id""".stripMargin)),
 
     // Bounded-staleness as-of (pandas merge_asof `tolerance`; the
     // ATTRIBUTION WINDOW of click-attribution pipelines): each
@@ -277,42 +317,22 @@ object EventQueries {
     // timestamp: same one-shuffle sort-merge plan. Oracle: DuckDB
     // ASOF LEFT JOIN with the window stated as CASE.
     Q("q38_asof_window",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max("event_id").as("click_id"))
-          .select(col("user_id"), col("ts"), col("click_id"),
-            unix_micros(col("ts")).as("click_ts_us"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        AsOfJoin(purchases, clicks, "user_id", "ts",
-            Seq("click_id", "click_ts_us"),
-            toleranceUs = Some(30L * 60 * 1000000))
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("asof_click_id").as("click_id"),
-            col("asof_click_ts_us").as("click_ts_us"))
-          .orderBy("event_id")
-      },
-      Some("""WITH clicks AS (
-             |  SELECT user_id, ts, max(event_id) AS click_id,
-             |    epoch_us(ts) AS click_ts_us
-             |  FROM events WHERE event_type = 'click'
-             |  GROUP BY user_id, ts
-             |),
-             |purch AS (
-             |  SELECT event_id, user_id, ts FROM events
-             |  WHERE event_type = 'purchase'
-             |)
-             |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-             |  CASE WHEN epoch_us(p.ts) - c.click_ts_us <= 1800000000
-             |       THEN c.click_id END AS click_id,
-             |  CASE WHEN epoch_us(p.ts) - c.click_ts_us <= 1800000000
-             |       THEN c.click_ts_us END AS click_ts_us
-             |FROM purch p ASOF LEFT JOIN clicks c
-             |  ON p.user_id = c.user_id AND p.ts >= c.ts
-             |ORDER BY p.event_id""".stripMargin)),
+      (s, d) => purchaseAsOfClick(s, d,
+          toleranceUs = Some(30L * 60 * 1000000))
+        .select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("asof_click_id").as("click_id"),
+          col("asof_click_ts_us").as("click_ts_us"))
+        .orderBy("event_id"),
+      Some(s"""WITH $clickAsOfCtes
+              |SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+              |  CASE WHEN epoch_us(p.ts) - c.click_ts_us <= 1800000000
+              |       THEN c.click_id END AS click_id,
+              |  CASE WHEN epoch_us(p.ts) - c.click_ts_us <= 1800000000
+              |       THEN c.click_ts_us END AS click_ts_us
+              |FROM purch p ASOF LEFT JOIN clicks c
+              |  ON p.user_id = c.user_id AND p.ts >= c.ts
+              |ORDER BY p.event_id""".stripMargin)),
 
     // Nearest as-of (pandas merge_asof direction='nearest'): each
     // purchase takes its temporally CLOSEST click in either
@@ -323,49 +343,29 @@ object EventQueries {
     // argmin over the per-user pair space (fine for DuckDB at oracle
     // scale; the Spark plan must never materialize those pairs).
     Q("q40_asof_nearest",
-      (s, d) => {
-        val ev = Tables.events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .groupBy("user_id", "ts")
-          .agg(max("event_id").as("click_id"))
-          .select(col("user_id"), col("ts"), col("click_id"),
-            unix_micros(col("ts")).as("click_ts_us"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select("event_id", "user_id", "ts")
-        AsOfJoin(purchases, clicks, "user_id", "ts",
-            Seq("click_id", "click_ts_us"), direction = "nearest")
-          .filter(col("asof_click_id").isNotNull)
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("asof_click_id").as("click_id"),
-            col("asof_click_ts_us").as("click_ts_us"),
-            abs(unix_micros(col("ts")) - col("asof_click_ts_us"))
-              .as("gap_us"))
-          .orderBy("event_id")
-      },
-      Some("""WITH clicks AS (
-             |  SELECT user_id, ts, max(event_id) AS click_id,
-             |    epoch_us(ts) AS click_ts_us
-             |  FROM events WHERE event_type = 'click'
-             |  GROUP BY user_id, ts
-             |),
-             |purch AS (
-             |  SELECT event_id, user_id, ts FROM events
-             |  WHERE event_type = 'purchase'
-             |),
-             |r AS (
-             |  SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-             |    c.click_id, c.click_ts_us,
-             |    abs(epoch_us(p.ts) - c.click_ts_us) AS gap_us,
-             |    row_number() OVER (PARTITION BY p.event_id
-             |      ORDER BY abs(epoch_us(p.ts) - c.click_ts_us),
-             |        CASE WHEN c.ts <= p.ts THEN 0 ELSE 1 END) AS rn
-             |  FROM purch p JOIN clicks c ON c.user_id = p.user_id
-             |)
-             |SELECT event_id, user_id, ts_us, click_id, click_ts_us,
-             |  gap_us
-             |FROM r WHERE rn = 1
-             |ORDER BY event_id""".stripMargin)),
+      (s, d) => purchaseAsOfClick(s, d, direction = "nearest")
+        .filter(col("asof_click_id").isNotNull)
+        .select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("asof_click_id").as("click_id"),
+          col("asof_click_ts_us").as("click_ts_us"),
+          abs(unix_micros(col("ts")) - col("asof_click_ts_us"))
+            .as("gap_us"))
+        .orderBy("event_id"),
+      Some(s"""WITH $clickAsOfCtes,
+              |r AS (
+              |  SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+              |    c.click_id, c.click_ts_us,
+              |    abs(epoch_us(p.ts) - c.click_ts_us) AS gap_us,
+              |    row_number() OVER (PARTITION BY p.event_id
+              |      ORDER BY abs(epoch_us(p.ts) - c.click_ts_us),
+              |        CASE WHEN c.ts <= p.ts THEN 0 ELSE 1 END) AS rn
+              |  FROM purch p JOIN clicks c ON c.user_id = p.user_id
+              |)
+              |SELECT event_id, user_id, ts_us, click_id, click_ts_us,
+              |  gap_us
+              |FROM r WHERE rn = 1
+              |ORDER BY event_id""".stripMargin)),
 
     // Range join (interval containment): error events attributed to
     // the click session window they fall inside. A session WINDOW
@@ -656,46 +656,16 @@ object EventQueries {
     // one lead / one counter. Micros-integral timestamps, ties break
     // on event_id — bit-identical interval edges on both engines.
     Q("q57_scd2",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("tsl"), col("event_id"))
-        val changes = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts")).as("tsl"), col("event_type"))
-          .withColumn("prev_type", lag("event_type", 1).over(w))
-          .filter(col("prev_type").isNull ||
-            col("prev_type") =!= col("event_type"))
-        changes
-          .withColumn("valid_to", lead("tsl", 1).over(w))
-          .withColumn("version", row_number().over(w).cast("long"))
-          .select(col("user_id"), col("version"),
-            col("event_type").as("state"),
-            col("tsl").as("valid_from"), col("valid_to"),
-            col("valid_to").isNull.as("is_current"))
-          .orderBy("user_id", "version")
-      },
-      Some("""WITH ev AS (
-             |  SELECT user_id, event_id, epoch_us(ts) AS tsl, event_type,
-             |    lag(event_type) OVER (
-             |      PARTITION BY user_id ORDER BY tsl, event_id)
-             |      AS prev_type
-             |  FROM events
-             |),
-             |ch AS (
-             |  SELECT user_id, event_id, tsl, event_type
-             |  FROM ev
-             |  WHERE prev_type IS NULL OR prev_type <> event_type
-             |)
-             |SELECT user_id,
-             |  CAST(row_number() OVER w AS BIGINT) AS version,
-             |  event_type AS state,
-             |  tsl AS valid_from,
-             |  lead(tsl) OVER w AS valid_to,
-             |  lead(tsl) OVER w IS NULL AS is_current
-             |FROM ch
-             |WINDOW w AS (PARTITION BY user_id ORDER BY tsl, event_id)
-             |ORDER BY user_id, version""".stripMargin)),
+      (s, d) => scd2Versions(s, d)
+        .select(col("user_id"), col("version"),
+          col("event_type").as("state"),
+          col("tsl").as("valid_from"), col("valid_to"),
+          col("valid_to").isNull.as("is_current"))
+        .orderBy("user_id", "version"),
+      Some(s"""WITH $scd2Ctes
+              |SELECT user_id, version, event_type AS state,
+              |  tsl AS valid_from, valid_to, valid_to IS NULL AS is_current
+              |FROM v ORDER BY user_id, version""".stripMargin)),
 
     // MERGE / CDC-apply (operators.Merge.applyChangelog): apply a
     // changelog to a base snapshot — latest-change-wins per key,
@@ -790,18 +760,6 @@ object EventQueries {
     // full history, no window beyond the build's own.
     Q("q61_time_travel",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id")
-          .orderBy(col("tsl"), col("event_id"))
-        val changes = Tables.events(s, d)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts")).as("tsl"), col("event_type"))
-          .withColumn("prev_type", lag("event_type", 1).over(w))
-          .filter(col("prev_type").isNull ||
-            col("prev_type") =!= col("event_type"))
-        val scd2 = changes
-          .withColumn("valid_to", lead("tsl", 1).over(w))
-          .withColumn("version", row_number().over(w).cast("long"))
         // `div`, never Column `/`: long/long `/` is double division
         // + cast, exact only while min+max < 2^53 — the
         // packSequences discipline (the oracle's `//` is integer).
@@ -809,7 +767,7 @@ object EventQueries {
           .agg((min(unix_micros(col("ts"))) +
             max(unix_micros(col("ts")))).as("s2"))
           .select(expr("s2 div 2").cast("long").as("t"))
-        scd2.crossJoin(broadcast(mid))
+        scd2Versions(s, d).crossJoin(broadcast(mid))
           .filter(col("tsl") <= col("t") &&
             (col("valid_to").isNull || col("valid_to") > col("t")))
           .select(col("user_id"), col("version"),
@@ -817,36 +775,18 @@ object EventQueries {
             col("tsl").as("valid_from"), col("t").as("asof_ts"))
           .orderBy("user_id")
       },
-      Some("""WITH ev AS (
-             |  SELECT user_id, event_id, epoch_us(ts) AS tsl, event_type,
-             |    lag(event_type) OVER (
-             |      PARTITION BY user_id ORDER BY tsl, event_id)
-             |      AS prev_type
-             |  FROM events
-             |),
-             |ch AS (
-             |  SELECT user_id, event_id, tsl, event_type
-             |  FROM ev
-             |  WHERE prev_type IS NULL OR prev_type <> event_type
-             |),
-             |v AS (
-             |  SELECT user_id, event_type, tsl,
-             |    lead(tsl) OVER w AS valid_to,
-             |    CAST(row_number() OVER w AS BIGINT) AS version
-             |  FROM ch
-             |  WINDOW w AS (PARTITION BY user_id ORDER BY tsl, event_id)
-             |),
-             |mid AS (
-             |  SELECT CAST((min(epoch_us(ts)) + max(epoch_us(ts))) // 2
-             |    AS BIGINT) AS t
-             |  FROM events
-             |)
-             |SELECT user_id, version, event_type AS state_asof,
-             |  tsl AS valid_from, (SELECT t FROM mid) AS asof_ts
-             |FROM v
-             |WHERE tsl <= (SELECT t FROM mid)
-             |  AND (valid_to IS NULL OR valid_to > (SELECT t FROM mid))
-             |ORDER BY user_id""".stripMargin)),
+      Some(s"""WITH $scd2Ctes,
+              |mid AS (
+              |  SELECT CAST((min(epoch_us(ts)) + max(epoch_us(ts))) // 2
+              |    AS BIGINT) AS t
+              |  FROM events
+              |)
+              |SELECT user_id, version, event_type AS state_asof,
+              |  tsl AS valid_from, (SELECT t FROM mid) AS asof_ts
+              |FROM v
+              |WHERE tsl <= (SELECT t FROM mid)
+              |  AND (valid_to IS NULL OR valid_to > (SELECT t FROM mid))
+              |ORDER BY user_id""".stripMargin)),
 
     // INTERVAL-UNION coverage per user — the "merge overlapping
     // intervals" staple (machine uptime, user engagement seconds,

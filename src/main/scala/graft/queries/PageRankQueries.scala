@@ -28,10 +28,6 @@ object PageRankQueries {
       |        FROM w WHERE len(w) >= 2)
       |)""".stripMargin
 
-  /** DuckDB CTEs for the full PageRank iteration chain: nodes, degrees
-    * and r0..r{iters} (unrolled — recursive CTEs can't aggregate).
-    * Mirrors graft.graph.PageRank.run's semantics exactly.
-    */
   /** Landmark set for the g10/g23 distance cards — ONE recipe so the
     * eccentricity card provably measures the same landmarks as the
     * harmonic card it pairs with: the first 5 nodes (by name) of the
@@ -47,18 +43,31 @@ object PageRankQueries {
       .orderBy("node").limit(5)
   }
 
-  private def rankCtes(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT n.node,
-         |         CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE) *
-         |           coalesce(sum(p.rank / ed.outdeg), CAST(0 AS DOUBLE)) AS rank
-         |  FROM nodes n
-         |  LEFT JOIN ed ON ed.dst = n.node
-         |  LEFT JOIN r${i - 1} p ON p.node = ed.src
-         |  GROUP BY n.node
-         |)""".stripMargin
-    }.mkString(",\n")
+  /** `und` (a, b): each loop-free word-follow edge once, a < b. */
+  private val undCte: String =
+    """und AS (
+      |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |  FROM e WHERE src <> dst
+      |)""".stripMargin
+
+  /** [[undCte]] plus `sym` (u, v): each undirected edge in both
+    * directions.
+    */
+  private def symCtes(materialized: Boolean = false): String = {
+    val as = if (materialized) "AS MATERIALIZED" else "AS"
+    s"""$undCte,
+       |sym $as (
+       |  SELECT a AS u, b AS v FROM und
+       |  UNION ALL
+       |  SELECT b AS u, a AS v FROM und
+       |)""".stripMargin
+  }
+
+  /** DuckDB CTEs for the full PageRank iteration chain: nodes, degrees
+    * and r0..r{iters} (unrolled — recursive CTEs can't aggregate).
+    * Mirrors graft.graph.PageRank.run's semantics exactly.
+    */
+  private def rankCtes(iters: Int): String =
     s"""$edgeCtes,
        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
        |ed AS (SELECT e.src, e.dst, deg.outdeg FROM e JOIN deg USING (src)),
@@ -68,16 +77,18 @@ object PageRankQueries {
        |         CAST(1.0 AS DOUBLE) / (SELECT count(*) FROM nodes) AS rank
        |  FROM nodes
        |),
-       |$steps""".stripMargin
-  }
+       |${rankSteps("r", "ed", "nodes", iters)}""".stripMargin
 
   /** One unrolled reference-formula iteration block, parameterized on
-    * CTE names — shared by [[warmRankCtes]] and [[deltaRankCtes]].
+    * CTE names — shared by [[rankCtes]], [[hubRankCtes]] (whose
+    * steps are MATERIALIZED), [[warmRankCtes]] and [[deltaRankCtes]].
     */
   private def rankSteps(prefix: String, edTable: String,
-      nodeTable: String, iters: Int): String =
+      nodeTable: String, iters: Int, materialized: Boolean = false)
+      : String =
     (1 to iters).map { i =>
-      s"""$prefix$i AS (
+      val as = if (materialized) "AS MATERIALIZED" else "AS"
+      s"""$prefix$i $as (
          |  SELECT n.node,
          |         CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE) *
          |           coalesce(sum(p.rank / ed.outdeg), CAST(0 AS DOUBLE)) AS rank
@@ -163,18 +174,7 @@ object PageRankQueries {
     * only in layout (two-stage salted sum), which must not change
     * results.
     */
-  private def hubRankCtes(iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS MATERIALIZED (
-         |  SELECT n.node,
-         |         CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE) *
-         |           coalesce(sum(p.rank / ed.outdeg), CAST(0 AS DOUBLE)) AS rank
-         |  FROM nodes n
-         |  LEFT JOIN ed ON ed.dst = n.node
-         |  LEFT JOIN r${i - 1} p ON p.node = ed.src
-         |  GROUP BY n.node
-         |)""".stripMargin
-    }.mkString(",\n")
+  private def hubRankCtes(iters: Int): String =
     s"""$edgeCtes,
        |e2 AS MATERIALIZED (
        |  SELECT src, dst FROM e
@@ -193,8 +193,8 @@ object PageRankQueries {
        |         CAST(1.0 AS DOUBLE) / (SELECT count(*) FROM nodes) AS rank
        |  FROM nodes
        |),
-       |$steps""".stripMargin
-  }
+       |${rankSteps("r", "ed", "nodes", iters, materialized = true)}"""
+      .stripMargin
 
   /** DuckDB CTEs for the WEIGHTED iteration chain (mirrors
     * graft.graph.PageRank.runWeighted: contribution =
@@ -336,15 +336,7 @@ object PageRankQueries {
          |  GROUP BY s.u HAVING count(*) >= $k
          |)""".stripMargin
     }.mkString(",\n")
-    s"""und AS (
-       |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |  FROM e WHERE src <> dst
-       |),
-       |sym AS MATERIALIZED (
-       |  SELECT a AS u, b AS v FROM und
-       |  UNION ALL
-       |  SELECT b AS u, a AS v FROM und
-       |),
+    s"""${symCtes(materialized = true)},
        |a1 AS MATERIALIZED (
        |  SELECT u AS node FROM sym GROUP BY u HAVING count(*) >= $k
        |),
@@ -695,10 +687,7 @@ object PageRankQueries {
         graft.graph.Triangles.globalCount(e)
       },
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |deg AS (
               |  SELECT n, count(*) AS d FROM (
               |    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
@@ -730,10 +719,7 @@ object PageRankQueries {
         graft.graph.Triangles.clusteringCoefficients(e).orderBy("node")
       },
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |deg AS (
               |  SELECT n, count(*) AS d FROM (
               |    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
@@ -1062,15 +1048,7 @@ object PageRankQueries {
           .orderBy("node")
       },
       Some(s"""WITH RECURSIVE $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
-              |sym AS (
-              |  SELECT a AS u, b AS v FROM und
-              |  UNION ALL
-              |  SELECT b AS u, a AS v FROM und
-              |),
+              |${symCtes()},
               |lms AS (
               |  SELECT u AS lm FROM sym GROUP BY u ORDER BY u LIMIT 5
               |),
@@ -1110,15 +1088,7 @@ object PageRankQueries {
           .orderBy("landmark")
       },
       Some(s"""WITH RECURSIVE $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
-              |sym AS (
-              |  SELECT a AS u, b AS v FROM und
-              |  UNION ALL
-              |  SELECT b AS u, a AS v FROM und
-              |),
+              |${symCtes()},
               |lms AS (
               |  SELECT u AS lm FROM sym GROUP BY u ORDER BY u LIMIT 5
               |),
@@ -1258,10 +1228,7 @@ object PageRankQueries {
               .otherwise(lit(null).cast("long")).as("alpha_e6"))
       },
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |deg AS (
               |  SELECT n, count(*) AS deg FROM (
               |    SELECT a AS n FROM und UNION ALL SELECT b FROM und
@@ -1295,10 +1262,7 @@ object PageRankQueries {
         graft.graph.LinkPredict.adamicAdarTopK(e, k = 20)
       },
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |adj AS (
               |  SELECT a AS w, b AS m FROM und
               |  UNION ALL SELECT b, a FROM und
@@ -1340,10 +1304,7 @@ object PageRankQueries {
         graft.graph.LinkPredict.jaccardTopK(e, k = 20)
       },
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |adj AS (
               |  SELECT a AS w, b AS m FROM und
               |  UNION ALL SELECT b, a FROM und
@@ -1615,10 +1576,7 @@ object PageRankQueries {
           graft.graph.LabelPropagation.communities(e, iters = 4))
       },
       Some(s"""WITH ${lpaCtes(4)},
-           |und AS (
-           |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           |  FROM e WHERE src <> dst
-           |),
+           |$undCte,
            |dg AS (
            |  SELECT n, count(*) AS deg FROM (
            |    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
@@ -1727,15 +1685,7 @@ object PageRankQueries {
           waves
         }.mkString(",\n")
         s"""WITH $edgeCtes,
-           |und AS (
-           |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           |  FROM e WHERE src <> dst
-           |),
-           |sym AS MATERIALIZED (
-           |  SELECT a AS u, b AS v FROM und
-           |  UNION ALL
-           |  SELECT b AS u, a AS v FROM und
-           |),
+           |${symCtes(materialized = true)},
            |c1 AS MATERIALIZED (SELECT DISTINCT u AS node FROM sym),
            |$levels,
            |cores AS (
@@ -1815,15 +1765,7 @@ object PageRankQueries {
              |)""".stripMargin
         }.mkString(",\n")
         s"""WITH $edgeCtes,
-           |und AS (
-           |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-           |  FROM e WHERE src <> dst
-           |),
-           |sym AS (
-           |  SELECT a AS u, b AS v FROM und
-           |  UNION ALL
-           |  SELECT b AS u, a AS v FROM und
-           |),
+           |${symCtes()},
            |lms AS (
            |  SELECT u AS lm FROM sym GROUP BY u ORDER BY u LIMIT 5
            |),
@@ -1878,15 +1820,7 @@ object PageRankQueries {
             (count(lit(1)) - 1).as("n_reached_far")))
       },
       Some(s"""WITH RECURSIVE $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
-              |sym AS (
-              |  SELECT a AS u, b AS v FROM und
-              |  UNION ALL
-              |  SELECT b AS u, a AS v FROM und
-              |),
+              |${symCtes()},
               |st AS (SELECT u AS lm FROM sym GROUP BY u
               |       ORDER BY u LIMIT 1),
               |w1(node, dist) AS (
@@ -1990,11 +1924,7 @@ object PageRankQueries {
       (s, d) => graft.graph.Squares.globalCount(
         LinkGraph.wordFollowEdges(Tables.documents(s, d), "text")),
       Some(s"""WITH $edgeCtes,
-              |und AS (
-              |  SELECT DISTINCT least(src, dst) AS a,
-              |    greatest(src, dst) AS b
-              |  FROM e WHERE src <> dst
-              |),
+              |$undCte,
               |adj AS (
               |  SELECT a AS x, b AS u FROM und
               |  UNION ALL
@@ -2198,7 +2128,7 @@ object PageRankQueries {
       s"""SELECT p.id, l.comm FROM ($acc) p
          |JOIN l${lv}r$moveRounds l ON l.id = p.comm""".stripMargin
     }
-    val undCte =
+    val und =
       if (weighted)
         s"""we AS (
            |  SELECT p.s AS src, p.d AS dst,
@@ -2213,13 +2143,9 @@ object PageRankQueries {
            |    CAST(sum(weight) AS BIGINT) AS uw
            |  FROM we WHERE src <> dst GROUP BY 1, 2
            |)""".stripMargin
-      else
-        """und AS (
-          |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |  FROM e WHERE src <> dst
-          |)""".stripMargin
+      else undCte
     s"""$edgeCtes,
-       |$undCte,
+       |$und,
        |ids AS MATERIALIZED (
        |  SELECT node,
        |    CAST(row_number() OVER (ORDER BY node) AS BIGINT) AS id

@@ -519,6 +519,240 @@ object PipelineQueries {
     s"${TextHash.duckDocFingerprint("CAST(vec_id AS VARCHAR)")} " +
       s"* ${Sampling.Mixer} % ${Sampling.MixMod} % ${Sampling.Buckets}"
 
+  /** `e` (vec_id, label, emb): the embeddings as DOUBLE[]; `q`
+    * (query_id, qe): the ten probe queries vec_id < 10 — the upstream
+    * CTEs of the vector oracles.
+    */
+  private val probeCtes: String =
+    """e AS (
+      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings
+      |),
+      |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10)"""
+      .stripMargin
+
+  /** SQ8 codes over `e`, the oracle of Similarity.sq8TopK's
+    * quantizer: `qz` (vec_id, label, q, sq) holds each nonzero
+    * vector's int8 codes floor(x·127 / max|x| + 0.5) and their squared
+    * norm, `pr` (query_id, qq, qsq) the probe queries' codes.
+    */
+  private val sq8Ctes: String =
+    """qz AS (
+      |  SELECT vec_id, label, q,
+      |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS sq
+      |  FROM (
+      |    SELECT vec_id, label,
+      |      list_transform(emb, x -> CAST(floor(
+      |        x * CAST(127 AS DOUBLE)
+      |        / list_max(list_transform(emb, y -> abs(y)))
+      |        + 0.5) AS BIGINT)) AS q
+      |    FROM e
+      |  )
+      |  WHERE list_sum(list_transform(q, x -> x * x)) > 0
+      |),
+      |pr AS (SELECT vec_id AS query_id, q AS qq, sq AS qsq
+      |       FROM qz WHERE vec_id < 10)""".stripMargin
+
+  /** The SQ8 code cosine of candidate `c` (a `qz` row) and probe `p`
+    * (a `pr` row): integer dot over integer norms.
+    */
+  private def sq8Cosine(c: String, p: String): String =
+    s"""CAST(list_sum(list_transform(range(1, 65),
+       |      i -> $c.q[i] * $p.qq[i])) AS DOUBLE)
+       |      / (sqrt(CAST($c.sq AS DOUBLE))
+       |        * sqrt(CAST($p.qsq AS DOUBLE)))""".stripMargin
+
+  /** Binary codes over `e`, the oracle of Similarity.bqTopK: `bq`
+    * (vec_id, hi, lo) packs the sign bits of dims 1-32 and 33-64, `pr`
+    * (query_id, qhi, qlo) holds the probe queries' words.
+    */
+  private val bqCtes: String =
+    """bq AS (
+      |  SELECT vec_id,
+      |    CAST(list_sum(list_transform(range(1, 33),
+      |      i -> CASE WHEN emb[i] > 0
+      |           THEN (CAST(1 AS BIGINT) << (32 - i))
+      |           ELSE 0 END)) AS BIGINT) AS hi,
+      |    CAST(list_sum(list_transform(range(33, 65),
+      |      i -> CASE WHEN emb[i] > 0
+      |           THEN (CAST(1 AS BIGINT) << (64 - i))
+      |           ELSE 0 END)) AS BIGINT) AS lo
+      |  FROM e
+      |),
+      |pr AS (SELECT vec_id AS query_id, hi AS qhi, lo AS qlo
+      |       FROM bq WHERE vec_id < 10)""".stripMargin
+
+  /** Per-label mean vectors, the oracle of Similarity.centroids and
+    * centroidVectors: `c0` (label, dim, c) rounds each dimension's
+    * mean to 6 places, `cent` (label, cvec) lists them.
+    */
+  private val labelCentroidCtes: String =
+    """c0 AS (
+      |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
+      |  FROM (
+      |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
+      |      generate_subscripts(embedding, 1) AS i
+      |    FROM embeddings
+      |  ) GROUP BY label, dim
+      |),
+      |cent AS (
+      |  SELECT label, list(c ORDER BY dim) AS cvec FROM c0 GROUP BY label
+      |)""".stripMargin
+
+  /** [[labelCentroidCtes]] plus `ass` (query_id, qe, label, cvec, rn):
+    * each `q` query's `nprobe` nearest label centroids, ranked `rn` by
+    * (cosine DESC, label) — the routing step of
+    * Similarity.ivfProbeTopK.
+    */
+  private def labelRouteCtes(nprobe: Int): String =
+    s"""$labelCentroidCtes,
+       |ass AS (
+       |  SELECT * FROM (
+       |    SELECT q.query_id, q.qe, cent.label, cent.cvec,
+       |      row_number() OVER (PARTITION BY q.query_id
+       |        ORDER BY ${TextHash.duckCosine("q.qe", "cent.cvec", 64)}
+       |          DESC, cent.label) AS rn
+       |    FROM q, cent
+       |  ) WHERE rn <= $nprobe
+       |)""".stripMargin
+
+  /** The whole oracle of a label-routed IVF probe (e4/e5/e24): top-5
+    * by cosine among the `nprobe` routed cells' members, with
+    * `candPred` (over the candidate row `e`) applied before ranking.
+    */
+  private def ivfProbeSql(nprobe: Int,
+      candPred: Option[String] = None): String =
+    s"""WITH $probeCtes,
+       |${labelRouteCtes(nprobe)},
+       |probe AS (
+       |  SELECT a.query_id, a.label, e.vec_id AS cand_id,
+       |    ${TextHash.duckCosine("a.qe", "e.emb", 64)} AS sim
+       |  FROM ass a JOIN e ON e.label = a.label AND e.vec_id <> a.query_id
+       |  ${candPred.fold("")(p => s"WHERE $p")}
+       |),
+       |r AS (
+       |  SELECT *, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rank
+       |  FROM probe
+       |)
+       |SELECT query_id, label, rank, cand_id, round(sim, 6) AS sim
+       |FROM r WHERE rank <= 5
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Exact top-`k` ground truth, the oracle of
+    * Similarity.bruteForceTopK: `name` (query_id, cand_id) holds each
+    * `queries` row's (query_id, qe) best `k` rows `c` of `e`
+    * (vec_id, emb) by (cosine over the first `dims` entries DESC,
+    * vec_id), among candidates passing `candPred`; `${name}0` holds
+    * the full ranking.
+    */
+  private def exactKnnCtes(k: Int, queries: String = "q",
+      candPred: Option[String] = None, dims: Int = 64,
+      name: String = "exact"): String =
+    s"""${name}0 AS (
+       |  SELECT q.query_id, c.vec_id AS cand_id,
+       |    row_number() OVER (PARTITION BY q.query_id
+       |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", dims)}
+       |        DESC, c.vec_id) AS rank
+       |  FROM $queries q JOIN e c ON c.vec_id <> q.query_id
+       |    ${candPred.fold("")(p => s"AND $p")}
+       |),
+       |$name AS (SELECT query_id, cand_id FROM ${name}0 WHERE rank <= $k)"""
+      .stripMargin
+
+  /** The recall card's oracle tail (the twin of [[recallCard]]):
+    * `hits` counts, per probe query `q`, the `exact` pairs `approx`
+    * (query_id, cand_id) also holds; the final SELECT reads `n_hits`
+    * (0 when none) and `recall_e$digits` = n_hits · ⌊10^digits / k⌋.
+    */
+  private def recallTailSql(approx: String, k: Int,
+      digits: Int = 4): String =
+    s"""hits AS (
+       |  SELECT query_id, count(*) AS h
+       |  FROM exact JOIN $approx USING (query_id, cand_id)
+       |  GROUP BY query_id
+       |)
+       |SELECT q.query_id,
+       |  coalesce(h, 0) AS n_hits,
+       |  coalesce(h, 0) * (1${"0" * digits} // $k) AS recall_e$digits
+       |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
+       |ORDER BY q.query_id""".stripMargin
+
+  /** The recall card: per probe query (`qs`' vec_id), how many of its
+    * exact top-`k` neighbors in `pool` the approximate result `approx`
+    * (query_id, cand_id) also returned, as `n_hits` and as
+    * `recall_e$digits` = n_hits · ⌊10^digits / k⌋. A probe with no
+    * hit reads 0, not a missing row.
+    */
+  private def recallCard(pool: DataFrame, qs: DataFrame, k: Int,
+      approx: DataFrame, digits: Int = 4): DataFrame = {
+    val exact = Similarity.bruteForceTopK(pool, qs, k = k)
+      .select(col("query_id"), col("cand_id"))
+    val hits = exact.join(approx, Seq("query_id", "cand_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("h"))
+    val h = coalesce(col("h"), lit(0L))
+    qs.select(col("vec_id").as("query_id"))
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"), h.as("n_hits"),
+        (h * (math.pow(10, digits).toInt / k)).as(s"recall_e$digits"))
+      .orderBy("query_id")
+  }
+
+  /** `dims` (doc_id, w, h, `extra`…): the planted-image size rule most
+    * codec corpora share, w = 4 + id % 5 and h = 4 + (id·`hMul`) % 5.
+    */
+  private def imageDimsCte(hMul: Int, extra: String*): String =
+    s"""dims AS (
+       |  SELECT doc_id, 4 + doc_id % 5 AS w,
+       |    4 + (doc_id * $hMul) % 5 AS h${extra.map(", " + _).mkString}
+       |  FROM documents
+       |)""".stripMargin
+
+  /** The palette size the m15/m17 corpora plant, by id % 4. */
+  private val PaletteSizeCol =
+    "CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 16 " +
+      "WHEN 2 THEN 4 ELSE 2 END AS psize"
+
+  /** `dims` and `px` (…, y, x, c, v) of the truecolor PNG corpus m7
+    * and m28 decode.
+    */
+  private lazy val pngPixelCtes: String =
+    s"""${imageDimsCte(3)},
+       |px AS (
+       |  SELECT *, (doc_id * 31 + gy.y * 7 + gx.x * 3 + gc.c) % 256 AS v
+       |  ${pixelGridSql()}
+       |)""".stripMargin
+
+  /** The FROM and WHERE of a planted-image sample grid: `from`'s rows
+    * crossed with (y, x, c) for every y < h, x < w (`from`'s columns)
+    * and c < `chans`, on a `side`×`side`×3 grid.
+    */
+  private def pixelGridSql(from: String = "dims", chans: String = "3",
+      side: Int = 8): String =
+    s"""FROM $from,
+       |    (SELECT unnest(range(0, $side)) AS y) gy,
+       |    (SELECT unnest(range(0, $side)) AS x) gx,
+       |    (SELECT unnest(range(0, 3)) AS c) gc
+       |  WHERE gy.y < h AND gx.x < w AND gc.c < $chans""".stripMargin
+
+  /** The decoded-image card over `src`'s samples `v`, one row per doc:
+    * width, height, the `extra` columns, the sample sum `sumName` and
+    * `pixels_md5`, the md5 of the samples as `hex`-digit hex in
+    * (y, x, c) order.
+    */
+  private def pixelCardSql(extra: Seq[String] = Nil,
+      sumName: String = "sum_rgb", hex: Int = 2,
+      src: String = "px"): String = {
+    val cols = extra.map(c => s"\n  $c,").mkString
+    s"""SELECT doc_id, CAST(w AS BIGINT) AS width,
+       |  CAST(h AS BIGINT) AS height,$cols
+       |  CAST(sum(v) AS BIGINT) AS $sumName,
+       |  md5(lower(string_agg(lpad(to_hex(v), $hex, '0'), ''
+       |    ORDER BY y, x, c))) AS pixels_md5
+       |FROM $src GROUP BY ALL
+       |ORDER BY doc_id""".stripMargin
+  }
+
   /** DuckDB CTEs mirroring graft.operators.KMeans: deterministic
     * hash-picked seeds (cell 0..k-1 in (samplingHash, vec_id) order),
     * then `iters` unrolled Lloyd rounds — assignment by
@@ -803,6 +1037,18 @@ object PipelineQueries {
        |$walk,
        |bfinal$sfx AS (SELECT * FROM b$sfx$rounds)""".stripMargin
   }
+
+  /** `w4$sfx` (query_id, cand_id): the four best of the final beam
+    * `bfinal$sfx` by (sim DESC, cand_id) — the walk's recall@4 side.
+    */
+  private def walkTop4Cte(sfx: String = ""): String =
+    s"""w4$sfx AS (
+       |  SELECT query_id, cand_id FROM (
+       |    SELECT query_id, cand_id, row_number() OVER (
+       |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rn
+       |    FROM bfinal$sfx
+       |  ) WHERE rn <= 4
+       |)""".stripMargin
 
   /** Trained-cell probed-kNN CTEs over ONE hierarchy level's member
     * sample (mirrors Similarity.hierarchicalNavGraphTrained's
@@ -1097,20 +1343,23 @@ object PipelineQueries {
        |)""".stripMargin
 
 
-  /** Shared PQ-ADC oracle CTEs (mirrors [[pqAdcScores]] exactly):
-    * per-subspace k-means books, codes, per-query LUTs, and `sc`
-    * (query_id, cand_id, adc) — the scored candidates both the e11
-    * ranking and the e22 recall gate consume.
+  /** PQ coding CTEs (the oracle of [[pqCoded]] and of
+    * [[adcQueryLut]]'s tables): four 8-code k-means books over the
+    * 16-dim sub-vectors `slice(m)` of `src` (`p{m}…`, from
+    * [[kmeansCtes]]), each vector's nearest code per book (`enc`:
+    * vec_id, code_0..3), and the dot tables `lut{m}` (qid, cell, d)
+    * of the query sub-vectors `lutQueries(m)` (qid, emb) against each
+    * book.
     */
-  private lazy val pqScoreCtes: String = {
-    def slice(m: Int) =
-      s"(CAST(embedding AS DOUBLE[]))[${m * 16 + 1}:${m * 16 + 16}]"
-    def dotFold(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        s"list_transform(range(1, 17), i -> $a[i] * $b[i])), " +
-        s"(acc, x) -> acc + x)"
+  private def pqCodeCtes(
+      slice: Int => String = m =>
+        s"(CAST(embedding AS DOUBLE[]))[${m * 16 + 1}:${m * 16 + 16}]",
+      src: String = "embeddings",
+      lutQueries: Int => String = m =>
+        s"(SELECT vec_id AS qid, emb FROM p${m}e WHERE vec_id < 10)")
+      : String = {
     val books = (0 until 4)
-      .map(m => kmeansCtes("8", 2, "TRUE", slice(m), s"p$m", 16))
+      .map(m => kmeansCtes("8", 2, "TRUE", slice(m), s"p$m", 16, src))
       .mkString(",\n")
     val encs = (0 until 4).map { m =>
       s"""enc$m AS MATERIALIZED (
@@ -1124,10 +1373,11 @@ object PipelineQueries {
     }.mkString(",\n")
     val luts = (0 until 4).map { m =>
       s"""lut$m AS MATERIALIZED (
-         |  SELECT q.vec_id AS qid, c.cell,
-         |    ${dotFold("q.emb", "c.cvec")} AS d
-         |  FROM (SELECT vec_id, emb FROM p${m}e WHERE vec_id < 10) q,
-         |       p${m}cent2 c
+         |  SELECT q.qid, c.cell,
+         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
+         |      list_transform(range(1, 17), i -> q.emb[i] * c.cvec[i])),
+         |      (acc, x) -> acc + x) AS d
+         |  FROM ${lutQueries(m)} q, p${m}cent2 c
          |)""".stripMargin
     }.mkString(",\n")
     s"""$books,
@@ -1139,7 +1389,15 @@ object PipelineQueries {
        |  FROM enc0 e0 JOIN enc1 e1 USING (vec_id)
        |       JOIN enc2 e2 USING (vec_id)
        |       JOIN enc3 e3 USING (vec_id)
-       |),
+       |)""".stripMargin
+  }
+
+  /** Shared PQ-ADC oracle CTEs (mirrors [[pqAdcScores]] exactly):
+    * [[pqCodeCtes]] and `sc` (query_id, cand_id, adc) — the scored
+    * candidates both the e11 ranking and the e22 recall gate consume.
+    */
+  private lazy val pqScoreCtes: String =
+    s"""${pqCodeCtes()},
        |sc AS (
        |  SELECT l0.qid AS query_id, v.vec_id AS cand_id,
        |    l0.d + l1.d + l2.d + l3.d AS adc
@@ -1150,7 +1408,33 @@ object PipelineQueries {
        |  JOIN lut3 l3 ON l3.cell = v.code_3 AND l3.qid = l0.qid
        |  WHERE v.vec_id <> l0.qid
        |)""".stripMargin
-  }
+
+  /** The ADC search tail of the label-routed IVF-PQ oracles (e21,
+    * e34): candidates of each query's routed cell (`ass`, from
+    * [[labelRouteCtes]]) scored by the summed `lut{m}` entries of
+    * their `enc` codes, top-5 by (adc DESC, cand_id).
+    */
+  private val ivfAdcTailSql: String =
+    """sc AS (
+      |  SELECT a.query_id, a.label, c2.vec_id AS cand_id,
+      |    l0.d + l1.d + l2.d + l3.d AS adc
+      |  FROM ass a
+      |  JOIN e c2 ON c2.label = a.label AND c2.vec_id <> a.query_id
+      |  JOIN enc v ON v.vec_id = c2.vec_id
+      |  JOIN lut0 l0 ON l0.cell = v.code_0 AND l0.qid = a.query_id
+      |  JOIN lut1 l1 ON l1.cell = v.code_1 AND l1.qid = a.query_id
+      |  JOIN lut2 l2 ON l2.cell = v.code_2 AND l2.qid = a.query_id
+      |  JOIN lut3 l3 ON l3.cell = v.code_3 AND l3.qid = a.query_id
+      |),
+      |r AS (
+      |  SELECT query_id, label, cand_id, adc, row_number() OVER (
+      |    PARTITION BY query_id ORDER BY adc DESC, cand_id) AS rank
+      |  FROM sc
+      |)
+      |SELECT query_id, CAST(label AS BIGINT) AS label,
+      |  CAST(rank AS BIGINT) AS rank, cand_id,
+      |  round(adc, 6) AS adc
+      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   def all: Seq[Q] = Seq(
 
@@ -3352,13 +3636,9 @@ object PipelineQueries {
         .select(col("label"), col("dim").cast("long").as("dim"),
           col("centroid"))
         .orderBy("label", "dim"),
-      Some("""SELECT label, i - 1 AS dim, round(avg(v), 6) AS centroid
-             |FROM (
-             |  SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-             |    generate_subscripts(embedding, 1) AS i
-             |  FROM embeddings
-             |)
-             |GROUP BY label, dim ORDER BY label, dim""".stripMargin)),
+      Some(s"""WITH $labelCentroidCtes
+              |SELECT label, dim, c AS centroid FROM c0
+              |ORDER BY label, dim""".stripMargin)),
 
     // IVF query path: nearest-centroid assignment (nprobe=1) then
     // top-5 within the assigned cluster only — the search shape that
@@ -3371,48 +3651,7 @@ object PipelineQueries {
         .select(col("query_id"), col("label"),
           col("rank").cast("long").as("rank"), col("cand_id"), col("sim"))
         .orderBy("query_id", "rank"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec FROM c0 GROUP BY label
-              |),
-              |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
-              |ass0 AS (
-              |  SELECT q.query_id, q.qe, cent.label,
-              |    ${TextHash.duckCosine("q.qe", "cent.cvec", 64)} AS cs
-              |  FROM q, cent
-              |),
-              |ass AS (
-              |  SELECT query_id, qe, label FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-              |    FROM ass0
-              |  ) WHERE rn = 1
-              |),
-              |probe AS (
-              |  SELECT a.query_id, a.label, e.vec_id AS cand_id,
-              |    ${TextHash.duckCosine("a.qe", "e.emb", 64)} AS sim
-              |  FROM ass a JOIN e ON e.label = a.label AND e.vec_id <> a.query_id
-              |),
-              |r AS (
-              |  SELECT query_id, label, cand_id, sim,
-              |    row_number() OVER (
-              |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rank
-              |  FROM probe
-              |)
-              |SELECT query_id, label, rank, cand_id, round(sim, 6) AS sim
-              |FROM r WHERE rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(ivfProbeSql(nprobe = 1))),
 
     // IVF with nprobe=2: each query probes its TWO nearest cells and
     // ranks top-5 across their union — the recall knob real IVF
@@ -3426,48 +3665,7 @@ object PipelineQueries {
         .select(col("query_id"), col("label"),
           col("rank").cast("long").as("rank"), col("cand_id"), col("sim"))
         .orderBy("query_id", "rank"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec FROM c0 GROUP BY label
-              |),
-              |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
-              |ass0 AS (
-              |  SELECT q.query_id, q.qe, cent.label,
-              |    ${TextHash.duckCosine("q.qe", "cent.cvec", 64)} AS cs
-              |  FROM q, cent
-              |),
-              |ass AS (
-              |  SELECT query_id, qe, label FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-              |    FROM ass0
-              |  ) WHERE rn <= 2
-              |),
-              |probe AS (
-              |  SELECT a.query_id, e.label, e.vec_id AS cand_id,
-              |    ${TextHash.duckCosine("a.qe", "e.emb", 64)} AS sim
-              |  FROM ass a JOIN e ON e.label = a.label AND e.vec_id <> a.query_id
-              |),
-              |r AS (
-              |  SELECT query_id, label, cand_id, sim,
-              |    row_number() OVER (
-              |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rank
-              |  FROM probe
-              |)
-              |SELECT query_id, label, rank, cand_id, round(sim, 6) AS sim
-              |FROM r WHERE rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(ivfProbeSql(nprobe = 2))),
 
     // Recall-vs-nprobe TUNING CURVE from ONE search (the d68 idea
     // applied to the IVF knob): score candidates in the 4
@@ -3526,44 +3724,13 @@ object PipelineQueries {
             (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
           .orderBy("query_id", "nprobe")
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |q AS (SELECT vec_id, emb FROM e WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec
-              |  FROM c0 GROUP BY label
-              |),
-              |ass AS (
-              |  SELECT query_id, qe, label, rn AS cell_rank FROM (
-              |    SELECT q.vec_id AS query_id, q.emb AS qe, cent.label,
-              |      row_number() OVER (PARTITION BY q.vec_id
-              |        ORDER BY ${TextHash.duckCosine("q.emb",
-                      "cent.cvec", 64)} DESC, cent.label) AS rn
-              |    FROM q, cent
-              |  ) WHERE rn <= 4
-              |),
+      Some(s"""WITH $probeCtes,
+              |${exactKnnCtes(5)},
+              |${labelRouteCtes(4)},
               |sc AS (
               |  SELECT a.query_id, e.vec_id AS cand_id,
               |    ${TextHash.duckCosine("a.qe", "e.emb", 64)} AS sim,
-              |    a.cell_rank
+              |    a.rn AS cell_rank
               |  FROM ass a JOIN e ON e.label = a.label
               |    AND e.vec_id <> a.query_id
               |),
@@ -3587,7 +3754,7 @@ object PipelineQueries {
               |  GROUP BY 1, 2
               |),
               |grid AS (
-              |  SELECT q.vec_id AS query_id, gn.n AS nprobe
+              |  SELECT q.query_id, gn.n AS nprobe
               |  FROM q, (SELECT unnest(range(1, 5)) AS n) gn
               |)
               |SELECT g.query_id, CAST(g.nprobe AS BIGINT) AS nprobe,
@@ -4566,22 +4733,13 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 3)
-          .select(col("query_id"), col("cand_id"))
         val routed = Similarity.knnGraphRouted(
             Similarity.trainedCells(emb), "cell",
             k = 3, cprobe = 2, nprobe = 2, coarseIters = 2)
           .filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"),
             col("nbr_id").as("cand_id"))
-        val hits = exact.join(routed, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 333333).as("recall_e6"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 3, routed, digits = 6)
       },
       Some(s"""WITH $trainedKnnCtes,
               |ncr AS (
@@ -4637,24 +4795,8 @@ object PipelineQueries {
               |    FROM p2
               |  ) WHERE rank <= 3
               |),
-              |ex0 AS (
-              |  SELECT q.query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.query_id
-              |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.query_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 3),
-              |hits AS (
-              |  SELECT query_id, count(*) AS h
-              |  FROM exact JOIN w3 USING (query_id, cand_id)
-              |  GROUP BY query_id
-              |)
-              |SELECT q.query_id,
-              |  coalesce(h, 0) AS n_hits,
-              |  coalesce(h, 0) * 333333 AS recall_e6
-              |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
-              |ORDER BY q.query_id""".stripMargin)),
+              |${exactKnnCtes(3)},
+              |${recallTailSql("w3", k = 3, digits = 6)}""".stripMargin)),
 
     // Graph-walk ANN — beam search over the degree-16 probed kNN
     // graph (the HNSW/DiskANN family's search step, batch-shaped):
@@ -4751,8 +4893,6 @@ object PipelineQueries {
         val emb = Tables.embeddings(s, d)
         val pred = col("label") % 2 === 0
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb.filter(pred), qs, k = 4)
-          .select(col("query_id"), col("cand_id"))
         val tc = Similarity.trainedCells(emb)
         val cents = Similarity.centroidRows(tc, "cell")
         val walk = Similarity.graphBeamSearchFiltered(emb, qs,
@@ -4763,47 +4903,14 @@ object PipelineQueries {
             beamWidth = 16, rounds = 4, candidatePred = pred)
           .filter(col("rank") <= 4)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(walk, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2500).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb.filter(pred), qs, k = 4, walk)
       },
       Some(s"""WITH $trainedKnnCtes,
               |${beamWalkCtes(graphK = 16, rounds = 4, beamWidth = 16,
                               candPred = Some("v.label % 2 = 0"))},
-              |exact AS (
-              |  SELECT query_id, cand_id FROM (
-              |    SELECT q.query_id, c.vec_id AS cand_id,
-              |      row_number() OVER (PARTITION BY q.query_id
-              |        ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-              |          DESC, c.vec_id) AS rk
-              |    FROM q JOIN e c
-              |      ON c.vec_id <> q.query_id AND c.label % 2 = 0
-              |  ) WHERE rk <= 4
-              |),
-              |walk4 AS (
-              |  SELECT query_id, cand_id FROM (
-              |    SELECT bfinal.*, row_number() OVER (
-              |      PARTITION BY query_id
-              |      ORDER BY sim DESC, cand_id) AS rn
-              |    FROM bfinal
-              |  ) WHERE rn <= 4
-              |),
-              |h AS (
-              |  SELECT x.query_id, count(*) AS h
-              |  FROM exact x JOIN walk4 w
-              |    ON w.query_id = x.query_id AND w.cand_id = x.cand_id
-              |  GROUP BY x.query_id
-              |)
-              |SELECT q.query_id,
-              |  CAST(coalesce(h.h, 0) AS BIGINT) AS n_hits,
-              |  CAST(coalesce(h.h, 0) * 2500 AS BIGINT) AS recall_e4
-              |FROM q LEFT JOIN h ON h.query_id = q.query_id
-              |ORDER BY q.query_id""".stripMargin)),
+              |${exactKnnCtes(4, candPred = Some("c.label % 2 = 0"))},
+              |${walkTop4Cte()},
+              |${recallTailSql("w4", k = 4)}""".stripMargin)),
 
     // Filtered walk over the NAVIGABLE graph — the production
     // pairing (e41 walks the raw probed-kNN graph; e42 shows what
@@ -4824,8 +4931,6 @@ object PipelineQueries {
         val emb = Tables.embeddings(s, d)
         val pred = col("label") % 2 === 0
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb.filter(pred), qs, k = 4)
-          .select(col("query_id"), col("cand_id"))
         val tc = Similarity.trainedCells(emb)
         val cents = Similarity.centroidRows(tc, "cell")
         val nav = Similarity.navigableGraph(emb,
@@ -4838,14 +4943,7 @@ object PipelineQueries {
             beamWidth = 16, rounds = 4, candidatePred = pred)
           .filter(col("rank") <= 4)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(walk, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2500).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb.filter(pred), qs, k = 4, walk)
       },
       Some {
         s"""WITH $trainedKnnCtes,
@@ -4855,32 +4953,9 @@ object PipelineQueries {
                            graphSql =
                              Some("SELECT vec_id, nbr_id FROM nav"),
                            candPred = Some("v.label % 2 = 0"))},
-           |w4 AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT query_id, cand_id, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rn
-           |    FROM bfinal
-           |  ) WHERE rn <= 4
-           |),
-           |ex0 AS (
-           |  SELECT q.query_id, c.vec_id AS cand_id,
-           |    row_number() OVER (PARTITION BY q.query_id
-           |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-           |        DESC, c.vec_id) AS rank
-           |  FROM q JOIN e c
-           |    ON c.vec_id <> q.query_id AND c.label % 2 = 0
-           |),
-           |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 4),
-           |hits AS (
-           |  SELECT query_id, count(*) AS h
-           |  FROM exact JOIN w4 USING (query_id, cand_id)
-           |  GROUP BY query_id
-           |)
-           |SELECT q.query_id,
-           |  coalesce(h, 0) AS n_hits,
-           |  coalesce(h, 0) * 2500 AS recall_e4
-           |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
-           |ORDER BY q.query_id""".stripMargin
+           |${walkTop4Cte()},
+           |${exactKnnCtes(4, candPred = Some("c.label % 2 = 0"))},
+           |${recallTailSql("w4", k = 4)}""".stripMargin
       }),
 
     // Navigable-graph BUILD (Vamana/NSW construction — the missing
@@ -4924,8 +4999,6 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 4)
-          .select(col("query_id"), col("cand_id"))
         val tc = Similarity.trainedCells(emb)
         val cents = Similarity.centroidRows(tc, "cell")
         val nav = Similarity.navigableGraph(emb,
@@ -4938,14 +5011,7 @@ object PipelineQueries {
             beamWidth = 16, rounds = 4)
           .filter(col("rank") <= 4)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(walk, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2500).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 4, walk)
       },
       Some {
         s"""WITH $trainedKnnCtes,
@@ -4954,31 +5020,9 @@ object PipelineQueries {
            |${beamWalkCtes(graphK = 16, rounds = 4, beamWidth = 16,
                            graphSql =
                              Some("SELECT vec_id, nbr_id FROM nav"))},
-           |w4 AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT query_id, cand_id, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rn
-           |    FROM bfinal
-           |  ) WHERE rn <= 4
-           |),
-           |ex0 AS (
-           |  SELECT q.query_id, c.vec_id AS cand_id,
-           |    row_number() OVER (PARTITION BY q.query_id
-           |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-           |        DESC, c.vec_id) AS rank
-           |  FROM q JOIN e c ON c.vec_id <> q.query_id
-           |),
-           |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 4),
-           |hits AS (
-           |  SELECT query_id, count(*) AS h
-           |  FROM exact JOIN w4 USING (query_id, cand_id)
-           |  GROUP BY query_id
-           |)
-           |SELECT q.query_id,
-           |  coalesce(h, 0) AS n_hits,
-           |  coalesce(h, 0) * 2500 AS recall_e4
-           |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
-           |ORDER BY q.query_id""".stripMargin
+           |${walkTop4Cte()},
+           |${exactKnnCtes(4)},
+           |${recallTailSql("w4", k = 4)}""".stripMargin
       }),
 
     // Navigable-graph structure card — the card family's member for
@@ -5711,28 +5755,8 @@ object PipelineQueries {
       (s, d) => Multimodal.decodePngStats(s,
           Multimodal.pngTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 31 + gy.y * 7 + gx.x * 3 + gc.c) % 256 AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH $pngPixelCtes
+              |${pixelCardSql()}""".stripMargin)),
 
     // REAL BMP decode (multimodal.Bmp): even ids are 24-bit BI_RGB
     // planted in BOTH row orders (ids % 4 == 0 top-down via negative
@@ -5756,90 +5780,69 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeIcoStats(s,
           Multimodal.icoTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "icon_idx"),
-      Some("""WITH icons AS (
-             |  SELECT doc_id, j,
-             |    4 + (doc_id + j) % 5 AS w,
-             |    4 + (doc_id * 3 + j) % 5 AS h,
-             |    CASE WHEN (doc_id + j) % 2 = 0 THEN 1 ELSE 0 END
-             |      AS png
-             |  FROM documents, unnest(range(0, 3)) AS u(j)
-             |  WHERE j < 1 + doc_id % 3
-             |),
-             |px AS (
-             |  SELECT i.doc_id, i.j,
-             |    CASE WHEN i.png = 1
-             |      THEN (i.doc_id * 31 + i.j * 17 + gy.y * 7
-             |            + gx.x * 3 + gc.c) % 256
-             |      ELSE (i.doc_id * 37 + i.j * 19 + gy.y * 5
-             |            + gx.x * 11 + gc.c * 7) % 256
-             |    END AS b
-             |  FROM icons i,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < i.h AND gx.x < i.w
-             |),
-             |sums AS (
-             |  SELECT doc_id, j, CAST(sum(b) AS BIGINT) AS sum_rgb
-             |  FROM px GROUP BY 1, 2
-             |),
-             |mask AS (
-             |  SELECT i.doc_id, i.j, CAST(count(*) FILTER (
-             |      (i.doc_id + i.j * 5 + gy.y * 7 + gx.x * 3) % 3 = 0)
-             |    AS BIGINT) AS mask_bits
-             |  FROM icons i,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx
-             |  WHERE gy.y < i.h AND gx.x < i.w AND i.png = 0
-             |  GROUP BY 1, 2
-             |)
-             |SELECT i.doc_id, CAST(i.j AS BIGINT) AS icon_idx,
-             |  CAST(i.w AS BIGINT) AS width,
-             |  CAST(i.h AS BIGINT) AS height,
-             |  CAST(i.png AS BIGINT) AS is_png,
-             |  CAST(CASE WHEN i.png = 1 THEN 0 ELSE 24 END AS BIGINT)
-             |    AS bit_count,
-             |  s.sum_rgb,
-             |  CAST(coalesce(m.mask_bits, 0) AS BIGINT) AS mask_bits
-             |FROM icons i
-             |JOIN sums s ON s.doc_id = i.doc_id AND s.j = i.j
-             |LEFT JOIN mask m ON m.doc_id = i.doc_id AND m.j = i.j
-             |ORDER BY i.doc_id, icon_idx""".stripMargin)),
+      Some(s"""WITH icons AS (
+              |  SELECT doc_id, j,
+              |    4 + (doc_id + j) % 5 AS w,
+              |    4 + (doc_id * 3 + j) % 5 AS h,
+              |    CASE WHEN (doc_id + j) % 2 = 0 THEN 1 ELSE 0 END
+              |      AS png
+              |  FROM documents, unnest(range(0, 3)) AS u(j)
+              |  WHERE j < 1 + doc_id % 3
+              |),
+              |px AS (
+              |  SELECT i.doc_id, i.j,
+              |    CASE WHEN i.png = 1
+              |      THEN (i.doc_id * 31 + i.j * 17 + gy.y * 7
+              |            + gx.x * 3 + gc.c) % 256
+              |      ELSE (i.doc_id * 37 + i.j * 19 + gy.y * 5
+              |            + gx.x * 11 + gc.c * 7) % 256
+              |    END AS b
+              |  ${pixelGridSql("icons i")}
+              |),
+              |sums AS (
+              |  SELECT doc_id, j, CAST(sum(b) AS BIGINT) AS sum_rgb
+              |  FROM px GROUP BY 1, 2
+              |),
+              |mask AS (
+              |  SELECT i.doc_id, i.j, CAST(count(*) FILTER (
+              |      (i.doc_id + i.j * 5 + gy.y * 7 + gx.x * 3) % 3 = 0)
+              |    AS BIGINT) AS mask_bits
+              |  ${pixelGridSql("icons i", chans = "1")} AND i.png = 0
+              |  GROUP BY 1, 2
+              |)
+              |SELECT i.doc_id, CAST(i.j AS BIGINT) AS icon_idx,
+              |  CAST(i.w AS BIGINT) AS width,
+              |  CAST(i.h AS BIGINT) AS height,
+              |  CAST(i.png AS BIGINT) AS is_png,
+              |  CAST(CASE WHEN i.png = 1 THEN 0 ELSE 24 END AS BIGINT)
+              |    AS bit_count,
+              |  s.sum_rgb,
+              |  CAST(coalesce(m.mask_bits, 0) AS BIGINT) AS mask_bits
+              |FROM icons i
+              |JOIN sums s ON s.doc_id = i.doc_id AND s.j = i.j
+              |LEFT JOIN mask m ON m.doc_id = i.doc_id AND m.j = i.j
+              |ORDER BY i.doc_id, icon_idx""".stripMargin)),
 
     Q("m24_bmp_decode",
       (s, d) => Multimodal.decodeBmpStats(s,
           Multimodal.bmpTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    CASE WHEN doc_id % 2 = 0
-             |      THEN (doc_id * 37 + gy.y * 5 + gx.x * 11 + gc.c * 7)
-             |             % 256
-             |      ELSE (doc_id * 29
-             |            + ((doc_id * 17 + gy.y * 13 + (gx.x // 3) * 9)
-             |               % 16) * 23
-             |            + gc.c * 13) % 256
-             |    END AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(doc_id % 2 AS BIGINT) AS compression,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(3)},
+              |px AS (
+              |  SELECT *,
+              |    CASE WHEN doc_id % 2 = 0
+              |      THEN (doc_id * 37 + gy.y * 5 + gx.x * 11 + gc.c * 7)
+              |             % 256
+              |      ELSE (doc_id * 29
+              |            + ((doc_id * 17 + gy.y * 13 + (gx.x // 3) * 9)
+              |               % 16) * 23
+              |            + gc.c * 13) % 256
+              |    END AS v
+              |  ${pixelGridSql()}
+              |)
+              |${pixelCardSql(
+                  Seq("CAST(doc_id % 2 AS BIGINT) AS compression"))}"""
+        .stripMargin)),
 
     // Tile-grid spatial signature over REAL PNG decode: per-quadrant
     // sample count + RGB sum — the layout-aware near-dup feature
@@ -5851,28 +5854,14 @@ object PipelineQueries {
       (s, d) => Multimodal.tileSignature(s,
           Multimodal.pngTable(s, Tables.documents(s, d)), grid = 2)
         .toDF().orderBy("doc_id", "tile_y", "tile_x"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 31 + gy.y * 7 + gx.x * 3 + gc.c) % 256 AS v
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id,
-             |  CAST(y * 2 // h AS BIGINT) AS tile_y,
-             |  CAST(x * 2 // w AS BIGINT) AS tile_x,
-             |  count(*) AS n_samples,
-             |  CAST(sum(v) AS BIGINT) AS sum_rgb
-             |FROM px GROUP BY 1, 2, 3
-             |ORDER BY doc_id, tile_y, tile_x""".stripMargin)),
+      Some(s"""WITH $pngPixelCtes
+              |SELECT doc_id,
+              |  CAST(y * 2 // h AS BIGINT) AS tile_y,
+              |  CAST(x * 2 // w AS BIGINT) AS tile_x,
+              |  count(*) AS n_samples,
+              |  CAST(sum(v) AS BIGINT) AS sum_rgb
+              |FROM px GROUP BY 1, 2, 3
+              |ORDER BY doc_id, tile_y, tile_x""".stripMargin)),
 
     // REAL netpbm decode (P5/P6): the HEADER-parsing codec — ASCII
     // dims with comment lines at arbitrary token boundaries, the
@@ -5885,35 +5874,21 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeNetpbmStats(s,
           Multimodal.netpbmTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 7) % 5 AS h,
-             |    CASE WHEN doc_id % 2 = 0 THEN 6 ELSE 5 END AS fmt,
-             |    CASE WHEN doc_id % 2 = 1 AND doc_id % 4 = 1
-             |      THEN 1000 ELSE 255 END AS mv,
-             |    CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS ch
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, fmt, w, h, mv, ch,
-             |    gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 41 + gy.y * 19 + gx.x * 7 + gc.c * 5)
-             |      % (mv + 1) AS v
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w AND gc.c < ch
-             |)
-             |SELECT doc_id, CAST(fmt AS BIGINT) AS fmt,
-             |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-             |  CAST(mv AS BIGINT) AS maxval, CAST(ch AS BIGINT) AS channels,
-             |  CAST(sum(v) AS BIGINT) AS sum_px,
-             |  md5(lower(string_agg(lpad(to_hex(v), 4, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, fmt, w, h, mv, ch
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(7,
+                  "CASE WHEN doc_id % 2 = 0 THEN 6 ELSE 5 END AS fmt",
+                  "CASE WHEN doc_id % 2 = 1 AND doc_id % 4 = 1 " +
+                    "THEN 1000 ELSE 255 END AS mv",
+                  "CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS ch")},
+              |px AS (
+              |  SELECT *,
+              |    (doc_id * 41 + gy.y * 19 + gx.x * 7 + gc.c * 5)
+              |      % (mv + 1) AS v
+              |  ${pixelGridSql(chans = "ch")}
+              |)
+              |${pixelCardSql(Seq("CAST(fmt AS BIGINT) AS fmt",
+                  "CAST(mv AS BIGINT) AS maxval",
+                  "CAST(ch AS BIGINT) AS channels"),
+                sumName = "sum_px", hex = 4)}""".stripMargin)),
 
     // Integer-exact coarse spectrum over REAL WAV decode: the DFT
     // bins whose twiddles are all in {0, ±1} (DC, fs/4, fs/2) —
@@ -6063,37 +6038,19 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeTiffStats(s,
           Multimodal.tiffTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h,
-             |    CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS spp,
-             |    1 + doc_id % 3 AS rps
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, spp, rps,
-             |    gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 41 + gy.y * 7 + gx.x * 3 + gc.c * 11) % 256
-             |      AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w AND gc.c < spp
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(spp AS BIGINT) AS samples_per_pixel,
-             |  CAST(CASE WHEN spp = 3 THEN 2
-             |    WHEN doc_id % 4 = 1 THEN 0 ELSE 1 END AS BIGINT)
-             |    AS photometric,
-             |  CAST((h + rps - 1) // rps AS BIGINT) AS n_strips,
-             |  CAST(SUM(b) AS BIGINT) AS sum_px,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h, spp, rps
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(3,
+                  "CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS spp",
+                  "1 + doc_id % 3 AS rps")},
+              |px AS (
+              |  SELECT *,
+              |    (doc_id * 41 + gy.y * 7 + gx.x * 3 + gc.c * 11) % 256 AS v
+              |  ${pixelGridSql(chans = "spp")}
+              |)
+              |${pixelCardSql(Seq("CAST(spp AS BIGINT) AS samples_per_pixel",
+                  "CAST(CASE WHEN spp = 3 THEN 2 WHEN doc_id % 4 = 1 " +
+                    "THEN 0 ELSE 1 END AS BIGINT) AS photometric",
+                  "CAST((h + rps - 1) // rps AS BIGINT) AS n_strips"),
+                sumName = "sum_px")}""".stripMargin)),
 
     // REAL baseline JPEG decode: planted images go through the FULL
     // lossy codec — forward DCT + Annex K quantization + canonical
@@ -6110,28 +6067,19 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeJpegStats(s,
           Multimodal.jpegTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    8 * (2 + doc_id % 3) AS w,
-             |    8 * (2 + (doc_id * 5) % 3) AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x,
-             |    2 * ((doc_id * 29 + (gy.y // 8) * 13
-             |          + (gx.x // 8) * 7) % 128) AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 32)) AS y) gy,
-             |    (SELECT unnest(range(0, 32)) AS x) gx
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_gray,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH dims AS (
+              |  SELECT doc_id,
+              |    8 * (2 + doc_id % 3) AS w,
+              |    8 * (2 + (doc_id * 5) % 3) AS h
+              |  FROM documents
+              |),
+              |px AS (
+              |  SELECT *,
+              |    2 * ((doc_id * 29 + (gy.y // 8) * 13
+              |          + (gx.x // 8) * 7) % 128) AS v
+              |  ${pixelGridSql(chans = "1", side = 32)}
+              |)
+              |${pixelCardSql(sumName = "sum_gray")}""".stripMargin)),
 
     // REAL PALETTE + Adam7-INTERLACED PNG decode: bit depths 8/4/2/1
     // (sub-byte MSB-first unpacking), PLTE expansion, and the
@@ -6146,32 +6094,15 @@ object PipelineQueries {
       (s, d) => Multimodal.decodePngStats(s,
           Multimodal.pngPalTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h,
-             |    CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 16
-             |         WHEN 2 THEN 4 ELSE 2 END AS psize
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 41
-             |     + ((doc_id * 13 + gy.y * 5 + gx.x * 3) % psize) * 37
-             |     + gc.c * 11) % 256 AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(3, PaletteSizeCol)},
+              |px AS (
+              |  SELECT *,
+              |    (doc_id * 41
+              |     + ((doc_id * 13 + gy.y * 5 + gx.x * 3) % psize) * 37
+              |     + gc.c * 11) % 256 AS v
+              |  ${pixelGridSql()}
+              |)
+              |${pixelCardSql()}""".stripMargin)),
 
     // REAL GIF decode: planted images go through the full GIF89a
     // codec — variable-width LZW compression at write time; header
@@ -6185,32 +6116,15 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeGifStats(s,
           Multimodal.gifTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h,
-             |    CASE doc_id % 4 WHEN 0 THEN 16 WHEN 1 THEN 16
-             |         WHEN 2 THEN 4 ELSE 2 END AS psize
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 43
-             |     + ((doc_id * 19 + gy.y * 11 + gx.x * 7) % psize) * 31
-             |     + gc.c * 17) % 256 AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(3, PaletteSizeCol)},
+              |px AS (
+              |  SELECT *,
+              |    (doc_id * 43
+              |     + ((doc_id * 19 + gy.y * 11 + gx.x * 7) % psize) * 31
+              |     + gc.c * 17) % 256 AS v
+              |  ${pixelGridSql()}
+              |)
+              |${pixelCardSql()}""".stripMargin)),
 
     // REAL 16-BIT PNG decode: big-endian 16-bit samples filtered at
     // the 6-byte-per-pixel stride, downsampled to 8-bit RGB by the
@@ -6223,28 +6137,13 @@ object PipelineQueries {
       (s, d) => Multimodal.decodePngStats(s,
           Multimodal.png16Table(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    4 + doc_id % 5 AS w,
-             |    4 + (doc_id * 3) % 5 AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x, gc.c AS c,
-             |    (doc_id * 23 + gy.y * 9 + gx.x * 5 + gc.c * 3) % 256 AS b
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 8)) AS y) gy,
-             |    (SELECT unnest(range(0, 8)) AS x) gx,
-             |    (SELECT unnest(range(0, 3)) AS c) gc
-             |  WHERE gy.y < h AND gx.x < w
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM px GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH ${imageDimsCte(3)},
+              |px AS (
+              |  SELECT *,
+              |    (doc_id * 23 + gy.y * 9 + gx.x * 5 + gc.c * 3) % 256 AS v
+              |  ${pixelGridSql()}
+              |)
+              |${pixelCardSql()}""".stripMargin)),
 
     // REAL baseline COLOR JPEG decode: 3-component YCbCr through the
     // FULL path — interleaved MCU entropy decode (chroma layout
@@ -6263,42 +6162,33 @@ object PipelineQueries {
       (s, d) => Multimodal.decodeJpegRgbStats(s,
           Multimodal.jpegColorTable(s, Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
-      Some("""WITH dims AS (
-             |  SELECT doc_id,
-             |    16 * (1 + doc_id % 3) AS w,
-             |    16 * (1 + (doc_id * 5) % 3) AS h
-             |  FROM documents
-             |),
-             |px AS (
-             |  SELECT doc_id, w, h, gy.y AS y, gx.x AS x,
-             |    2 * ((doc_id * 29 + (gy.y // 16) * 13
-             |          + (gx.x // 16) * 7) % 128) AS yv,
-             |    17 * (((doc_id * 11 + (gy.y // 16) * 5
-             |          + (gx.x // 16) * 3) % 15) - 7) AS cb,
-             |    17 * (((doc_id * 19 + (gy.y // 16) * 7
-             |          + (gx.x // 16) * 5) % 15) - 7) AS cr
-             |  FROM dims,
-             |    (SELECT unnest(range(0, 48)) AS y) gy,
-             |    (SELECT unnest(range(0, 48)) AS x) gx
-             |  WHERE gy.y < h AND gx.x < w
-             |),
-             |rgb AS (
-             |  SELECT doc_id, w, h, y, x, gc.c AS c,
-             |    GREATEST(0, LEAST(255, CAST(floor(
-             |      CASE gc.c
-             |        WHEN 0 THEN yv + 1.402 * cr
-             |        WHEN 1 THEN yv - 0.344136 * cb - 0.714136 * cr
-             |        ELSE yv + 1.772 * cb
-             |      END + 0.5) AS BIGINT))) AS b
-             |  FROM px, (SELECT unnest(range(0, 3)) AS c) gc
-             |)
-             |SELECT doc_id, CAST(w AS BIGINT) AS width,
-             |  CAST(h AS BIGINT) AS height,
-             |  CAST(SUM(b) AS BIGINT) AS sum_rgb,
-             |  md5(lower(string_agg(lpad(to_hex(b), 2, '0'), ''
-             |    ORDER BY y, x, c))) AS pixels_md5
-             |FROM rgb GROUP BY doc_id, w, h
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""WITH dims AS (
+              |  SELECT doc_id,
+              |    16 * (1 + doc_id % 3) AS w,
+              |    16 * (1 + (doc_id * 5) % 3) AS h
+              |  FROM documents
+              |),
+              |px AS (
+              |  SELECT *,
+              |    2 * ((doc_id * 29 + (gy.y // 16) * 13
+              |          + (gx.x // 16) * 7) % 128) AS yv,
+              |    17 * (((doc_id * 11 + (gy.y // 16) * 5
+              |          + (gx.x // 16) * 3) % 15) - 7) AS cb,
+              |    17 * (((doc_id * 19 + (gy.y // 16) * 7
+              |          + (gx.x // 16) * 5) % 15) - 7) AS cr
+              |  ${pixelGridSql(chans = "1", side = 48)}
+              |),
+              |rgb AS (
+              |  SELECT doc_id, w, h, y, x, gc.c AS c,
+              |    GREATEST(0, LEAST(255, CAST(floor(
+              |      CASE gc.c
+              |        WHEN 0 THEN yv + 1.402 * cr
+              |        WHEN 1 THEN yv - 0.344136 * cb - 0.714136 * cr
+              |        ELSE yv + 1.772 * cb
+              |      END + 0.5) AS BIGINT))) AS v
+              |  FROM px, (SELECT unnest(range(0, 3)) AS c) gc
+              |)
+              |${pixelCardSql(src = "rgb")}""".stripMargin)),
 
     // REAL WAV decode: planted clips are full RIFF containers (odd-
     // length LIST chunk exercising the skip-and-pad path, interleaved
@@ -7732,17 +7622,8 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 4)
-          .select(col("query_id"), col("cand_id"))
         val pq = pqNavTop4(s, d).select("query_id", "cand_id")
-        val hits = exact.join(pq, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2500).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 4, pq)
       },
       Some(s"""WITH $trainedKnnCtes,
               |$pqScoreCtes,
@@ -7760,25 +7641,8 @@ object PipelineQueries {
               |    JOIN e v ON v.vec_id = b.cand_id
               |  ) WHERE rn <= 4
               |),
-              |ex0 AS (
-              |  SELECT q.query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.query_id
-              |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.query_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0
-              |          WHERE rank <= 4),
-              |hits AS (
-              |  SELECT query_id, count(*) AS h
-              |  FROM exact JOIN w4 USING (query_id, cand_id)
-              |  GROUP BY query_id
-              |)
-              |SELECT q.query_id,
-              |  coalesce(h, 0) AS n_hits,
-              |  coalesce(h, 0) * 2500 AS recall_e4
-              |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
-              |ORDER BY q.query_id""".stripMargin)),
+              |${exactKnnCtes(4)},
+              |${recallTailSql("w4", k = 4)}""".stripMargin)),
 
     // Rerank-DEPTH tuning curve for the e27 two-stage retriever:
     // recall@4 as a function of how many ADC candidates the exact
@@ -7814,20 +7678,8 @@ object PipelineQueries {
           .orderBy("depth")
       },
       Some(s"""WITH $pqScoreCtes,
-              |ed AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |qx AS (SELECT vec_id, emb FROM ed WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM qx q JOIN ed c ON c.vec_id <> q.vec_id
-              |),
-              |exact4 AS (SELECT query_id, cand_id FROM ex0
-              |           WHERE rank <= 4),
+              |$probeCtes,
+              |${exactKnnCtes(4, name = "exact4")},
               |ar AS (
               |  SELECT query_id, cand_id, row_number() OVER (
               |    PARTITION BY query_id ORDER BY adc DESC, cand_id)
@@ -7906,49 +7758,7 @@ object PipelineQueries {
         .select(col("query_id"), col("label"),
           col("rank").cast("long").as("rank"), col("cand_id"), col("sim"))
         .orderBy("query_id", "rank"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec FROM c0 GROUP BY label
-              |),
-              |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
-              |ass0 AS (
-              |  SELECT q.query_id, q.qe, cent.label,
-              |    ${TextHash.duckCosine("q.qe", "cent.cvec", 64)} AS cs
-              |  FROM q, cent
-              |),
-              |ass AS (
-              |  SELECT query_id, qe, label FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-              |    FROM ass0
-              |  ) WHERE rn <= 2
-              |),
-              |probe AS (
-              |  SELECT a.query_id, a.label, e.vec_id AS cand_id,
-              |    ${TextHash.duckCosine("a.qe", "e.emb", 64)} AS sim
-              |  FROM ass a JOIN e ON e.label = a.label AND e.vec_id <> a.query_id
-              |  WHERE e.vec_id % 3 = 0
-              |),
-              |r AS (
-              |  SELECT query_id, label, cand_id, sim,
-              |    row_number() OVER (
-              |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rank
-              |  FROM probe
-              |)
-              |SELECT query_id, label, rank, cand_id, round(sim, 6) AS sim
-              |FROM r WHERE rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+      Some(ivfProbeSql(nprobe = 2, candPred = Some("e.vec_id % 3 = 0")))),
 
     // PQ-recall EVALUATION (e13/e18's measurement for the PQ axis):
     // per probe, recall@5 of ADC-ranked product-quantization search
@@ -7966,8 +7776,6 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 4)
-          .select(col("query_id"), col("cand_id"))
         val tc = Similarity.trainedCells(emb)
         val cents = Similarity.centroidRows(tc, "cell")
         val walk = Similarity.graphBeamSearch(emb, qs,
@@ -7978,43 +7786,14 @@ object PipelineQueries {
             beamWidth = 16, rounds = 4)
           .filter(col("rank") <= 4)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(walk, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2500).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 4, walk)
       },
       Some {
         s"""WITH $trainedKnnCtes,
            |${beamWalkCtes(graphK = 16, rounds = 4, beamWidth = 16)},
-           |w4 AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT query_id, cand_id, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY sim DESC, cand_id) AS rn
-           |    FROM bfinal
-           |  ) WHERE rn <= 4
-           |),
-           |ex0 AS (
-           |  SELECT q.query_id, c.vec_id AS cand_id,
-           |    row_number() OVER (PARTITION BY q.query_id
-           |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-           |        DESC, c.vec_id) AS rank
-           |  FROM q JOIN e c ON c.vec_id <> q.query_id
-           |),
-           |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 4),
-           |hits AS (
-           |  SELECT query_id, count(*) AS h
-           |  FROM exact JOIN w4 USING (query_id, cand_id)
-           |  GROUP BY query_id
-           |)
-           |SELECT q.query_id,
-           |  coalesce(h, 0) AS n_hits,
-           |  coalesce(h, 0) * 2500 AS recall_e4
-           |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
-           |ORDER BY q.query_id""".stripMargin
+           |${walkTop4Cte()},
+           |${exactKnnCtes(4)},
+           |${recallTailSql("w4", k = 4)}""".stripMargin
       }),
 
     Q("e22_pq_recall",
@@ -8022,37 +7801,17 @@ object PipelineQueries {
         import graft.functions.TopKByScore.top_k_by_score
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
-          .select(col("query_id"), col("cand_id"))
         val pq = pqAdcScores(s, d)
           .groupBy("query_id")
           .agg(top_k_by_score(col("adc"), col("vec_id"), lit(0L), 5)
             .as("tk"))
           .select(col("query_id"), explode(col("tk")).as("t"))
           .select(col("query_id"), col("t.cand_id").as("cand_id"))
-        val hits = exact.join(pq, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 5, pq)
       },
       Some(s"""WITH $pqScoreCtes,
-              |ed AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |qx AS (SELECT vec_id, emb FROM ed WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM qx q JOIN ed c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
+              |$probeCtes,
+              |${exactKnnCtes(5)},
               |pq0 AS (
               |  SELECT query_id, cand_id, row_number() OVER (
               |    PARTITION BY query_id ORDER BY adc DESC, cand_id)
@@ -8060,16 +7819,7 @@ object PipelineQueries {
               |  FROM sc
               |),
               |pq5 AS (SELECT query_id, cand_id FROM pq0 WHERE rank <= 5),
-              |hits AS (
-              |  SELECT query_id, count(*) AS h
-              |  FROM exact JOIN pq5 USING (query_id, cand_id)
-              |  GROUP BY query_id
-              |)
-              |SELECT q.vec_id AS query_id,
-              |  coalesce(h, 0) AS n_hits,
-              |  coalesce(h, 0) * 2000 AS recall_e4
-              |FROM qx q LEFT JOIN hits ON hits.query_id = q.vec_id
-              |ORDER BY query_id""".stripMargin)),
+              |${recallTailSql("pq5", k = 5)}""".stripMargin)),
 
     // IVF + PQ — THE production ANN combination (the composition the
     // e-family builds toward: e4 routes, e11 codes; this does both):
@@ -8138,93 +7888,10 @@ object PipelineQueries {
             round(col("t.sim"), 6).as("adc"))
           .orderBy("query_id", "rank")
       },
-      Some {
-        def slice(m: Int) =
-          s"(CAST(embedding AS DOUBLE[]))[${m * 16 + 1}:${m * 16 + 16}]"
-        def dotFold(a: String, b: String) =
-          s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-            s"list_transform(range(1, 17), i -> $a[i] * $b[i])), " +
-            s"(acc, x) -> acc + x)"
-        val books = (0 until 4)
-          .map(m => kmeansCtes("8", 2, "TRUE", slice(m), s"p$m", 16))
-          .mkString(",\n")
-        val encs = (0 until 4).map { m =>
-          s"""enc$m AS MATERIALIZED (
-             |  SELECT vec_id, cell AS code_$m FROM (
-             |    SELECT v.vec_id, c.cell, row_number() OVER (
-             |      PARTITION BY v.vec_id
-             |      ORDER BY ${TextHash.duckCosine("v.emb", "c.cvec", 16)}
-             |        DESC, c.cell) AS rn
-             |    FROM p${m}e v, p${m}cent2 c) WHERE rn = 1
-             |)""".stripMargin
-        }.mkString(",\n")
-        val luts = (0 until 4).map { m =>
-          s"""lut$m AS MATERIALIZED (
-             |  SELECT q.vec_id AS qid, c.cell,
-             |    ${dotFold("q.emb", "c.cvec")} AS d
-             |  FROM (SELECT vec_id, emb FROM p${m}e WHERE vec_id < 10) q,
-             |       p${m}cent2 c
-             |)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $books,
-           |$encs,
-           |$luts,
-           |ed AS (
-           |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-           |  FROM embeddings
-           |),
-           |c0 AS (
-           |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-           |  FROM (
-           |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-           |      generate_subscripts(embedding, 1) AS i
-           |    FROM embeddings
-           |  ) GROUP BY label, dim
-           |),
-           |cent AS (
-           |  SELECT label, list(c ORDER BY dim) AS cvec
-           |  FROM c0 GROUP BY label
-           |),
-           |ass0 AS (
-           |  SELECT q.vec_id AS query_id, cent.label,
-           |    ${TextHash.duckCosine("q.emb", "cent.cvec", 64)} AS cs
-           |  FROM (SELECT vec_id, emb FROM ed WHERE vec_id < 10) q, cent
-           |),
-           |ass AS (
-           |  SELECT query_id, label FROM (
-           |    SELECT *, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-           |    FROM ass0
-           |  ) WHERE rn = 1
-           |),
-           |enc AS (
-           |  SELECT e0.vec_id, e0.code_0, e1.code_1, e2.code_2,
-           |    e3.code_3
-           |  FROM enc0 e0 JOIN enc1 e1 USING (vec_id)
-           |       JOIN enc2 e2 USING (vec_id)
-           |       JOIN enc3 e3 USING (vec_id)
-           |),
-           |sc AS (
-           |  SELECT a.query_id, a.label, v.vec_id AS cand_id,
-           |    l0.d + l1.d + l2.d + l3.d AS adc
-           |  FROM ass a
-           |  JOIN ed c2 ON c2.label = a.label AND c2.vec_id <> a.query_id
-           |  JOIN enc v ON v.vec_id = c2.vec_id
-           |  JOIN lut0 l0 ON l0.cell = v.code_0 AND l0.qid = a.query_id
-           |  JOIN lut1 l1 ON l1.cell = v.code_1 AND l1.qid = a.query_id
-           |  JOIN lut2 l2 ON l2.cell = v.code_2 AND l2.qid = a.query_id
-           |  JOIN lut3 l3 ON l3.cell = v.code_3 AND l3.qid = a.query_id
-           |),
-           |r AS (
-           |  SELECT query_id, label, cand_id, adc, row_number() OVER (
-           |    PARTITION BY query_id ORDER BY adc DESC, cand_id) AS rank
-           |  FROM sc
-           |)
-           |SELECT query_id, CAST(label AS BIGINT) AS label,
-           |  CAST(rank AS BIGINT) AS rank, cand_id,
-           |  round(adc, 6) AS adc
-           |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-      }),
+      Some(s"""WITH ${pqCodeCtes()},
+              |$probeCtes,
+              |${labelRouteCtes(1)},
+              |$ivfAdcTailSql""".stripMargin)),
 
     // RESIDUAL IVF-PQ — the FAISS-standard refinement e21 omits:
     // quantize v − c(cell(v)) (the residual after the coarse
@@ -8301,102 +7968,23 @@ object PipelineQueries {
       },
       Some {
         def rslice(m: Int) = s"embedding[${m * 16 + 1}:${m * 16 + 16}]"
-        def dotFold(a: String, b: String) =
-          s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-            s"list_transform(range(1, 17), i -> $a[i] * $b[i])), " +
-            s"(acc, x) -> acc + x)"
-        val books = (0 until 4)
-          .map(m => kmeansCtes("8", 2, "TRUE", rslice(m), s"p$m", 16,
-            src = "resid"))
-          .mkString(",\n")
-        val encs = (0 until 4).map { m =>
-          s"""enc$m AS MATERIALIZED (
-             |  SELECT vec_id, cell AS code_$m FROM (
-             |    SELECT v.vec_id, c.cell, row_number() OVER (
-             |      PARTITION BY v.vec_id
-             |      ORDER BY ${TextHash.duckCosine("v.emb", "c.cvec", 16)}
-             |        DESC, c.cell) AS rn
-             |    FROM p${m}e v, p${m}cent2 c) WHERE rn = 1
-             |)""".stripMargin
-        }.mkString(",\n")
-        val luts = (0 until 4).map { m =>
-          s"""lut$m AS MATERIALIZED (
-             |  SELECT q.query_id AS qid, c.cell,
-             |    ${dotFold(s"q.emb[${m * 16 + 1}:${m * 16 + 16}]",
-                  "c.cvec")} AS d
-             |  FROM qres q, p${m}cent2 c
-             |)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ed AS (
-           |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-           |  FROM embeddings
-           |),
-           |c0 AS (
-           |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-           |  FROM (
-           |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-           |      generate_subscripts(embedding, 1) AS i
-           |    FROM embeddings
-           |  ) GROUP BY label, dim
-           |),
-           |cent AS (
-           |  SELECT label, list(c ORDER BY dim) AS cvec
-           |  FROM c0 GROUP BY label
-           |),
+        def qslice(m: Int) = "(SELECT query_id AS qid, " +
+          s"emb[${m * 16 + 1}:${m * 16 + 16}] AS emb FROM qres)"
+        s"""WITH $probeCtes,
+           |${labelRouteCtes(1)},
            |resid AS MATERIALIZED (
            |  SELECT e0.vec_id, e0.label,
            |    list_transform(range(1, 65),
            |      i -> e0.emb[i] - c.cvec[i]) AS embedding
-           |  FROM ed e0 JOIN cent c ON c.label = e0.label
-           |),
-           |ass0 AS (
-           |  SELECT q.vec_id AS query_id, q.emb AS qe, cent.label,
-           |    cent.cvec,
-           |    ${TextHash.duckCosine("q.emb", "cent.cvec", 64)} AS cs
-           |  FROM (SELECT vec_id, emb FROM ed WHERE vec_id < 10) q, cent
-           |),
-           |ass AS (
-           |  SELECT query_id, label, qe, cvec FROM (
-           |    SELECT *, row_number() OVER (
-           |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-           |    FROM ass0
-           |  ) WHERE rn = 1
+           |  FROM e e0 JOIN cent c ON c.label = e0.label
            |),
            |qres AS MATERIALIZED (
            |  SELECT query_id, label,
            |    list_transform(range(1, 65), i -> qe[i] - cvec[i]) AS emb
            |  FROM ass
            |),
-           |$books,
-           |$encs,
-           |$luts,
-           |enc AS (
-           |  SELECT e0.vec_id, e0.code_0, e1.code_1, e2.code_2,
-           |    e3.code_3
-           |  FROM enc0 e0 JOIN enc1 e1 USING (vec_id)
-           |       JOIN enc2 e2 USING (vec_id)
-           |       JOIN enc3 e3 USING (vec_id)
-           |),
-           |sc AS (
-           |  SELECT a.query_id, a.label, c2.vec_id AS cand_id,
-           |    l0.d + l1.d + l2.d + l3.d AS adc
-           |  FROM ass a
-           |  JOIN ed c2 ON c2.label = a.label AND c2.vec_id <> a.query_id
-           |  JOIN enc v ON v.vec_id = c2.vec_id
-           |  JOIN lut0 l0 ON l0.cell = v.code_0 AND l0.qid = a.query_id
-           |  JOIN lut1 l1 ON l1.cell = v.code_1 AND l1.qid = a.query_id
-           |  JOIN lut2 l2 ON l2.cell = v.code_2 AND l2.qid = a.query_id
-           |  JOIN lut3 l3 ON l3.cell = v.code_3 AND l3.qid = a.query_id
-           |),
-           |r AS (
-           |  SELECT query_id, label, cand_id, adc, row_number() OVER (
-           |    PARTITION BY query_id ORDER BY adc DESC, cand_id) AS rank
-           |  FROM sc
-           |)
-           |SELECT query_id, CAST(label AS BIGINT) AS label,
-           |  CAST(rank AS BIGINT) AS rank, cand_id,
-           |  round(adc, 6) AS adc
-           |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+           |${pqCodeCtes(rslice, "resid", qslice)},
+           |$ivfAdcTailSql""".stripMargin
       }),
 
     // Gopher-style composite heuristic rule filter: one bit per rule
@@ -8560,32 +8148,18 @@ object PipelineQueries {
       Some {
         val walks = Seq(4, 8, 16).map { bw =>
           beamWalkCtes(graphK = 16, rounds = 4, beamWidth = bw,
-            sfx = s"w$bw")
+            sfx = s"w$bw") + ",\n" + walkTop4Cte(s"w$bw")
         }.mkString(",\n")
         val rows = Seq(4, 8, 16).map { bw =>
           s"""SELECT CAST($bw AS BIGINT) AS beam_width,
              |  CAST(count(*) AS BIGINT) AS n_hits,
              |  CAST(count(*) * 10000 // 40 AS BIGINT) AS recall_e4
-             |FROM exact x JOIN (
-             |  SELECT query_id, cand_id FROM (
-             |    SELECT query_id, cand_id, row_number() OVER (
-             |      PARTITION BY query_id
-             |      ORDER BY sim DESC, cand_id) AS rn
-             |    FROM bfinalw$bw
-             |  ) WHERE rn <= 4
-             |) w ON w.query_id = x.query_id
-             |   AND w.cand_id = x.cand_id""".stripMargin
+             |FROM exact JOIN w4w$bw USING (query_id, cand_id)"""
+            .stripMargin
         }.mkString("\nUNION ALL\n")
         s"""WITH $trainedKnnCtes,
            |$walks,
-           |ex0 AS (
-           |  SELECT q.query_id, c.vec_id AS cand_id,
-           |    row_number() OVER (PARTITION BY q.query_id
-           |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-           |        DESC, c.vec_id) AS rank
-           |  FROM qw4 q JOIN e c ON c.vec_id <> q.query_id
-           |),
-           |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 4)
+           |${exactKnnCtes(4, queries = "qw4")}
            |$rows
            |ORDER BY beam_width""".stripMargin
       }),
@@ -8600,75 +8174,16 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
-          .select(col("query_id"), col("cand_id"))
         val ivf = Similarity.ivfProbeTopK(emb, qs, "label", k = 5)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(ivf, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 5, ivf)
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |q AS (SELECT vec_id, emb FROM e WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec
-              |  FROM c0 GROUP BY label
-              |),
-              |ass0 AS (
-              |  SELECT q.vec_id AS query_id, q.emb AS qe, cent.label,
-              |    ${TextHash.duckCosine("q.emb", "cent.cvec", 64)} AS cs
-              |  FROM q, cent
-              |),
-              |ass AS (
-              |  SELECT query_id, qe, label FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-              |    FROM ass0
-              |  ) WHERE rn = 1
-              |),
-              |iv0 AS (
-              |  SELECT a.query_id, e.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY a.query_id
-              |      ORDER BY ${TextHash.duckCosine("a.qe", "e.emb", 64)}
-              |        DESC, e.vec_id) AS rank
-              |  FROM ass a JOIN e ON e.label = a.label
-              |    AND e.vec_id <> a.query_id
-              |),
-              |ivf AS (SELECT query_id, cand_id FROM iv0 WHERE rank <= 5),
-              |h AS (
-              |  SELECT exact.query_id, count(*) AS n_hits
-              |  FROM exact JOIN ivf USING (query_id, cand_id)
-              |  GROUP BY 1
-              |)
-              |SELECT q.vec_id AS query_id,
-              |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-              |  CAST(coalesce(h.n_hits, 0) * 2000 AS BIGINT) AS recall_e4
-              |FROM q LEFT JOIN h ON h.query_id = q.vec_id
-              |ORDER BY query_id""".stripMargin)),
+      Some(s"""WITH $probeCtes,
+              |${exactKnnCtes(5)},
+              |${labelRouteCtes(1)},
+              |${exactKnnCtes(5, queries = "ass",
+                  candPred = Some("c.label = q.label"), name = "ivf")},
+              |${recallTailSql("ivf", k = 5)}""".stripMargin)),
 
     // Temperature-sampled mixture weights (the multilingual /
     // multi-source rebalancing rule: w_i ∝ p_i^α with α = 0.3 —
@@ -9329,46 +8844,24 @@ object PipelineQueries {
         .select(col("query_id"), col("rank"), col("cand_id"),
           floor(col("sim") * 1000000 + 0.5).cast("long").as("sim_e6"))
         .orderBy("query_id", "rank"),
-      Some("""WITH e AS (
-             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             |  FROM embeddings
-             |),
-             |qt AS (
-             |  SELECT vec_id,
-             |    list_transform(emb, x -> CAST(floor(
-             |      x * CAST(127 AS DOUBLE)
-             |      / list_max(list_transform(emb, y -> abs(y)))
-             |      + 0.5) AS BIGINT)) AS q
-             |  FROM e
-             |),
-             |qn AS (
-             |  SELECT vec_id, q,
-             |    list_sum(list_transform(q, x -> x * x)) AS sq
-             |  FROM qt
-             |),
-             |qz AS (SELECT vec_id, q, CAST(sq AS BIGINT) AS sq
-             |       FROM qn WHERE sq > 0),
-             |pr AS (SELECT vec_id AS query_id, q AS qq, sq AS qsq
-             |       FROM qz WHERE vec_id < 10),
-             |scored AS (
-             |  SELECT pr.query_id, c.vec_id AS cand_id,
-             |    CAST(list_sum(list_transform(range(1, 65),
-             |      i -> c.q[i] * pr.qq[i])) AS DOUBLE)
-             |      / (sqrt(CAST(c.sq AS DOUBLE))
-             |        * sqrt(CAST(pr.qsq AS DOUBLE))) AS sim
-             |  FROM pr JOIN qz c ON c.vec_id <> pr.query_id
-             |),
-             |r AS (
-             |  SELECT query_id, cand_id, sim,
-             |    row_number() OVER (
-             |      PARTITION BY query_id ORDER BY sim DESC, cand_id)
-             |      AS rank
-             |  FROM scored
-             |)
-             |SELECT query_id, rank, cand_id,
-             |  CAST(floor(sim * 1000000 + 0.5) AS BIGINT) AS sim_e6
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(s"""WITH $probeCtes,
+              |$sq8Ctes,
+              |scored AS (
+              |  SELECT pr.query_id, c.vec_id AS cand_id,
+              |    ${sq8Cosine("c", "pr")} AS sim
+              |  FROM pr JOIN qz c ON c.vec_id <> pr.query_id
+              |),
+              |r AS (
+              |  SELECT query_id, cand_id, sim,
+              |    row_number() OVER (
+              |      PARTITION BY query_id ORDER BY sim DESC, cand_id)
+              |      AS rank
+              |  FROM scored
+              |)
+              |SELECT query_id, rank, cand_id,
+              |  CAST(floor(sim * 1000000 + 0.5) AS BIGINT) AS sim_e6
+              |FROM r WHERE rank <= 5
+              |ORDER BY query_id, rank""".stripMargin)),
 
     // The CURATION FUNNEL — the engine's individually-verified
     // curation stages COMPOSED as one pipeline, reporting the
@@ -9571,62 +9064,14 @@ object PipelineQueries {
           Tables.embeddings(s, d).filter(col("vec_id") < 10),
           "label", k = 5)
         .orderBy("query_id", "rank"),
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |qz AS (
-              |  SELECT vec_id, label, q,
-              |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT)
-              |      AS sq
-              |  FROM (
-              |    SELECT vec_id, label,
-              |      list_transform(emb, x -> CAST(floor(
-              |        x * CAST(127 AS DOUBLE)
-              |        / list_max(list_transform(emb, y -> abs(y)))
-              |        + 0.5) AS BIGINT)) AS q
-              |    FROM e
-              |  )
-              |  WHERE list_sum(list_transform(q, x -> x * x)) > 0
-              |),
-              |c0 AS (
-              |  SELECT label, i - 1 AS dim, round(avg(v), 6) AS c
-              |  FROM (
-              |    SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-              |      generate_subscripts(embedding, 1) AS i
-              |    FROM embeddings
-              |  ) GROUP BY label, dim
-              |),
-              |cent AS (
-              |  SELECT label, list(c ORDER BY dim) AS cvec
-              |  FROM c0 GROUP BY label
-              |),
-              |q AS (SELECT vec_id AS query_id, emb AS qe FROM e
-              |      WHERE vec_id < 10),
-              |ass0 AS (
-              |  SELECT q.query_id, cent.label,
-              |    ${TextHash.duckCosine("q.qe", "cent.cvec", 64)} AS cs
-              |  FROM q, cent
-              |),
-              |ass AS (
-              |  SELECT query_id, label FROM (
-              |    SELECT *, row_number() OVER (
-              |      PARTITION BY query_id ORDER BY cs DESC, label) AS rn
-              |    FROM ass0
-              |  ) WHERE rn = 1
-              |),
-              |pq AS (
-              |  SELECT vec_id AS query_id, q AS qq, sq AS qsq
-              |  FROM qz WHERE vec_id < 10
-              |),
+      Some(s"""WITH $probeCtes,
+              |$sq8Ctes,
+              |${labelRouteCtes(1)},
               |probe AS (
               |  SELECT a.query_id, a.label, c.vec_id AS cand_id,
-              |    CAST(list_sum(list_transform(range(1, 65),
-              |      i -> c.q[i] * p2.qq[i])) AS DOUBLE)
-              |      / (sqrt(CAST(c.sq AS DOUBLE))
-              |        * sqrt(CAST(p2.qsq AS DOUBLE))) AS sim
+              |    ${sq8Cosine("c", "p2")} AS sim
               |  FROM ass a
-              |  JOIN pq p2 ON p2.query_id = a.query_id
+              |  JOIN pr p2 ON p2.query_id = a.query_id
               |  JOIN qz c ON c.label = a.label
               |   AND c.vec_id <> a.query_id
               |),
@@ -9653,69 +9098,22 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
-          .select(col("query_id"), col("cand_id"))
         val sq = Similarity.sq8TopK(emb, qs, k = 5)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(sq, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 5, sq)
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |q AS (SELECT vec_id, emb FROM e WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
-              |qz AS (
-              |  SELECT vec_id, q,
-              |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT)
-              |      AS sq
-              |  FROM (
-              |    SELECT vec_id,
-              |      list_transform(emb, x -> CAST(floor(
-              |        x * CAST(127 AS DOUBLE)
-              |        / list_max(list_transform(emb, y -> abs(y)))
-              |        + 0.5) AS BIGINT)) AS q
-              |    FROM e
-              |  )
-              |  WHERE list_sum(list_transform(q, x -> x * x)) > 0
-              |),
-              |pr AS (SELECT vec_id AS query_id, q AS qq, sq AS qsq
-              |       FROM qz WHERE vec_id < 10),
+      Some(s"""WITH $probeCtes,
+              |${exactKnnCtes(5)},
+              |$sq8Ctes,
               |sc0 AS (
               |  SELECT pr.query_id, c.vec_id AS cand_id,
               |    row_number() OVER (PARTITION BY pr.query_id ORDER BY
-              |      CAST(list_sum(list_transform(range(1, 65),
-              |        i -> c.q[i] * pr.qq[i])) AS DOUBLE)
-              |        / (sqrt(CAST(c.sq AS DOUBLE))
-              |          * sqrt(CAST(pr.qsq AS DOUBLE))) DESC,
+              |      ${sq8Cosine("c", "pr")} DESC,
               |      c.vec_id) AS rank
               |  FROM pr JOIN qz c ON c.vec_id <> pr.query_id
               |),
               |sq8 AS (SELECT query_id, cand_id FROM sc0 WHERE rank <= 5),
-              |hits AS (
-              |  SELECT query_id, count(*) AS h
-              |  FROM exact JOIN sq8 USING (query_id, cand_id)
-              |  GROUP BY query_id
-              |)
-              |SELECT q.vec_id AS query_id,
-              |  coalesce(h, 0) AS n_hits,
-              |  coalesce(h, 0) * 2000 AS recall_e4
-              |FROM q LEFT JOIN hits ON hits.query_id = q.vec_id
-              |ORDER BY query_id""".stripMargin)),
+              |${recallTailSql("sq8", k = 5)}""".stripMargin)),
 
     // BINARY-QUANTIZATION ANN — the 1-bit compression axis closing
     // the family (e11 PQ sub-vector codes, e16 SQ8 8-bit scalars,
@@ -9733,40 +9131,24 @@ object PipelineQueries {
           Tables.embeddings(s, d),
           Tables.embeddings(s, d).filter(col("vec_id") < 10), k = 5)
         .orderBy("query_id", "rank"),
-      Some("""WITH e AS (
-             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-             |  FROM embeddings
-             |),
-             |bq AS (
-             |  SELECT vec_id,
-             |    CAST(list_sum(list_transform(range(1, 33),
-             |      i -> CASE WHEN emb[i] > 0
-             |           THEN (CAST(1 AS BIGINT) << (32 - i))
-             |           ELSE 0 END)) AS BIGINT) AS hi,
-             |    CAST(list_sum(list_transform(range(33, 65),
-             |      i -> CASE WHEN emb[i] > 0
-             |           THEN (CAST(1 AS BIGINT) << (64 - i))
-             |           ELSE 0 END)) AS BIGINT) AS lo
-             |  FROM e
-             |),
-             |pr AS (SELECT vec_id AS query_id, hi AS qhi, lo AS qlo
-             |       FROM bq WHERE vec_id < 10),
-             |scored AS (
-             |  SELECT pr.query_id, c.vec_id AS cand_id,
-             |    64 - bit_count(xor(c.hi, pr.qhi))
-             |       - bit_count(xor(c.lo, pr.qlo)) AS agree
-             |  FROM pr JOIN bq c ON c.vec_id <> pr.query_id
-             |),
-             |r AS (
-             |  SELECT query_id, cand_id, agree,
-             |    row_number() OVER (
-             |      PARTITION BY query_id ORDER BY agree DESC, cand_id)
-             |      AS rank
-             |  FROM scored
-             |)
-             |SELECT query_id, rank, cand_id, CAST(agree AS BIGINT) AS agree
-             |FROM r WHERE rank <= 5
-             |ORDER BY query_id, rank""".stripMargin)),
+      Some(s"""WITH $probeCtes,
+              |$bqCtes,
+              |scored AS (
+              |  SELECT pr.query_id, c.vec_id AS cand_id,
+              |    64 - bit_count(xor(c.hi, pr.qhi))
+              |       - bit_count(xor(c.lo, pr.qlo)) AS agree
+              |  FROM pr JOIN bq c ON c.vec_id <> pr.query_id
+              |),
+              |r AS (
+              |  SELECT query_id, cand_id, agree,
+              |    row_number() OVER (
+              |      PARTITION BY query_id ORDER BY agree DESC, cand_id)
+              |      AS rank
+              |  FROM scored
+              |)
+              |SELECT query_id, rank, cand_id, CAST(agree AS BIGINT) AS agree
+              |FROM r WHERE rank <= 5
+              |ORDER BY query_id, rank""".stripMargin)),
 
     // Recall gate for the binary-quantization axis (the e13/e18/e22/
     // e26 pattern — every approximate path ships with its
@@ -9779,46 +9161,13 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
-          .select(col("query_id"), col("cand_id"))
         val bq = Similarity.bqTopK(emb, qs, k = 5)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(bq, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 5, bq)
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |q AS (SELECT vec_id, emb FROM e WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
-              |bq AS (
-              |  SELECT vec_id,
-              |    CAST(list_sum(list_transform(range(1, 33),
-              |      i -> CASE WHEN emb[i] > 0
-              |           THEN (CAST(1 AS BIGINT) << (32 - i))
-              |           ELSE 0 END)) AS BIGINT) AS hi,
-              |    CAST(list_sum(list_transform(range(33, 65),
-              |      i -> CASE WHEN emb[i] > 0
-              |           THEN (CAST(1 AS BIGINT) << (64 - i))
-              |           ELSE 0 END)) AS BIGINT) AS lo
-              |  FROM e
-              |),
-              |pr AS (SELECT vec_id AS query_id, hi AS qhi, lo AS qlo
-              |       FROM bq WHERE vec_id < 10),
+      Some(s"""WITH $probeCtes,
+              |${exactKnnCtes(5)},
+              |$bqCtes,
               |bq0 AS (
               |  SELECT pr.query_id, c.vec_id AS cand_id,
               |    row_number() OVER (PARTITION BY pr.query_id
@@ -9828,16 +9177,7 @@ object PipelineQueries {
               |  FROM pr JOIN bq c ON c.vec_id <> pr.query_id
               |),
               |bqk AS (SELECT query_id, cand_id FROM bq0 WHERE rank <= 5),
-              |hits AS (
-              |  SELECT query_id, count(*) AS h
-              |  FROM exact JOIN bqk USING (query_id, cand_id)
-              |  GROUP BY query_id
-              |)
-              |SELECT q.vec_id AS query_id,
-              |  coalesce(h, 0) AS n_hits,
-              |  coalesce(h, 0) * 2000 AS recall_e4
-              |FROM q LEFT JOIN hits ON hits.query_id = q.vec_id
-              |ORDER BY query_id""".stripMargin)),
+              |${recallTailSql("bqk", k = 5)}""".stripMargin)),
 
     // MMR DIVERSITY re-ranking (Carbonell & Goldstein 1998) — the
     // retrieval step after top-k when near-duplicate hits waste the
@@ -9939,53 +9279,17 @@ object PipelineQueries {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
-        val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
-          .select(col("query_id"), col("cand_id"))
         val half = emb.select(col("vec_id"),
           expr("slice(embedding, 1, 32)").as("embedding"))
         val approx = Similarity
           .bruteForceTopK(half, half.filter(col("vec_id") < 10), k = 5)
           .select(col("query_id"), col("cand_id"))
-        val hits = exact.join(approx, Seq("query_id", "cand_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("h"))
-        qs.select(col("vec_id").as("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(col("query_id"),
-            coalesce(col("h"), lit(0L)).as("n_hits"),
-            (coalesce(col("h"), lit(0L)) * 2000).as("recall_e4"))
-          .orderBy("query_id")
+        recallCard(emb, qs, k = 5, approx)
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-              |  FROM embeddings
-              |),
-              |q AS (SELECT vec_id, emb FROM e WHERE vec_id < 10),
-              |ex0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 64)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |exact AS (SELECT query_id, cand_id FROM ex0 WHERE rank <= 5),
-              |px0 AS (
-              |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-              |    row_number() OVER (PARTITION BY q.vec_id
-              |      ORDER BY ${TextHash.duckCosine("q.emb", "c.emb", 32)}
-              |        DESC, c.vec_id) AS rank
-              |  FROM q JOIN e c ON c.vec_id <> q.vec_id
-              |),
-              |approx AS (SELECT query_id, cand_id FROM px0 WHERE rank <= 5),
-              |h AS (
-              |  SELECT exact.query_id, count(*) AS n_hits
-              |  FROM exact JOIN approx USING (query_id, cand_id)
-              |  GROUP BY 1
-              |)
-              |SELECT q.vec_id AS query_id,
-              |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-              |  CAST(coalesce(h.n_hits, 0) * 2000 AS BIGINT) AS recall_e4
-              |FROM q LEFT JOIN h ON h.query_id = q.vec_id
-              |ORDER BY query_id""".stripMargin)),
+      Some(s"""WITH $probeCtes,
+              |${exactKnnCtes(5)},
+              |${exactKnnCtes(5, dims = 32, name = "approx")},
+              |${recallTailSql("approx", k = 5)}""".stripMargin)),
 
     // Per-channel PCM autocorrelation at lags 1/2/4 over REAL WAV
     // decode — the pitch/periodicity feature family (m11 gave
@@ -10525,15 +9829,10 @@ object PipelineQueries {
           s"$top,\n$mids,\n$bottom"
         }
         def top4hits(sfx: String, as: String): String =
-          s"""$as AS (
-             |  SELECT count(*) AS h FROM (
-             |    SELECT query_id, cand_id FROM (
-             |      SELECT query_id, cand_id, row_number() OVER (
-             |        PARTITION BY query_id
-             |        ORDER BY sim DESC, cand_id) AS rn
-             |      FROM bfinal$sfx
-             |    ) WHERE rn <= 4
-             |  ) w JOIN exact USING (query_id, cand_id)
+          s"""${walkTop4Cte(sfx)},
+             |$as AS (
+             |  SELECT count(*) AS h
+             |  FROM w4$sfx JOIN exact USING (query_id, cand_id)
              |)""".stripMargin
         s"""WITH $trainedKnnCtes,
            |${navGraphCtes(graphK = 16, alpha100 = 120,
@@ -10548,15 +9847,7 @@ object PipelineQueries {
                sfx = "fb", entSql = Some(ent1))},
            |${chain("ha", uw = 2, bw = 8, r0 = 2)},
            |${chain("hb", uw = 4, bw = 16, r0 = 3)},
-           |ex0 AS (
-           |  SELECT q.query_id, c.vec_id AS cand_id,
-           |    row_number() OVER (PARTITION BY q.query_id
-           |      ORDER BY ${TextHash.duckCosine("q.qe", "c.emb", 64)}
-           |        DESC, c.vec_id) AS rank
-           |  FROM qfa q JOIN e c ON c.vec_id <> q.query_id
-           |),
-           |exact AS (SELECT query_id, cand_id FROM ex0
-           |          WHERE rank <= 4),
+           |${exactKnnCtes(4, queries = "qfa")},
            |${top4hits("fa", "hfa")},
            |${top4hits("fb", "hfb")},
            |${top4hits("ha0", "hha")},

@@ -14,6 +14,21 @@ class OperatorsSpec extends SparkSpec {
 
   private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
 
+  test("query registry: 281 distinct names, every oracle non-blank") {
+    // SparkEntry.queries and oracleSql are toMaps over `blocks`: a
+    // duplicated name would silently shadow another query and its
+    // oracle, dropping one from Verify with no failure.
+    val names = SparkEntry.blocks.map(_.name)
+    val dups = names.groupBy(identity).collect {
+      case (n, xs) if xs.size > 1 => n
+    }
+    assert(dups.isEmpty, s"duplicated query names: $dups")
+    assert(names.size == 281, s"expected 281 queries, got ${names.size}")
+    val blank = SparkEntry.blocks
+      .filterNot(_.oracle.exists(_.trim.nonEmpty)).map(_.name)
+    assert(blank.isEmpty, s"missing or blank oracle SQL: $blank")
+  }
+
   test("embed_simhash: scale-invariant; negation complements the bits") {
     // Power-of-two components: no ±1-weighted dot can be exactly 0,
     // so sign bits are well-defined and -v must complement all 64.

@@ -606,7 +606,9 @@ class PlanShapeSpec extends SparkSpec {
     // the cached relation every round gathers from — wherever the
     // predicate text appears in a captured round plan it is the
     // InMemoryRelation's stored build plan, so ineligible vectors
-    // never materialize into the gathered relation at all.
+    // never materialize into the gathered relation at all. The loop
+    // over the round plans below also pins WHERE it sits: below the
+    // ranking window and the gather join, never above them.
     val eligible = plans.filter(p => p.contains("% 2) = 0"))
     assert(eligible.nonEmpty,
       s"no captured plan carries the eligibility predicate; " +
@@ -625,6 +627,14 @@ class PlanShapeSpec extends SparkSpec {
       assert(wIdx >= 0 && jIdx > wIdx,
         s"round plan lost the gather join below the ranking window " +
           s"(window@$wIdx join@$jIdx)\n$p")
+      // The predicate sits only BELOW the ranking window and the
+      // gather join: a tree string prints a node before its children,
+      // so its first occurrence must follow both. A predicate applied
+      // to the ranked beam instead prints above the window.
+      val pIdx = p.indexOf("% 2) = 0")
+      assert(pIdx > jIdx,
+        s"eligibility predicate not below the ranking window and " +
+          s"gather join (pred@$pIdx window@$wIdx join@$jIdx)\n$p")
       assert(p.contains("InMemoryRelation"),
         s"round plan no longer gathers from the shared eligible-" +
           s"corpus cache\n$p")
