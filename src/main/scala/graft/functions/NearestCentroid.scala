@@ -44,6 +44,9 @@ case class NearestCentroidCell(
   require(cells.length == cvecs.length && cells.nonEmpty,
     "nearest_centroid needs a non-empty (cell, cvec) table")
 
+  override protected def stringArgs: Iterator[Any] =
+    productIterator.map(NearestCentroidKernels.shown)
+
   override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -116,6 +119,9 @@ case class NearestCellsProbed(
   require(cells.length == cvecs.length && cells.nonEmpty,
     "nearest_cells needs a non-empty (cell, cvec) table")
   require(nprobe >= 1, s"nearest_cells needs nprobe >= 1, got $nprobe")
+
+  override protected def stringArgs: Iterator[Any] =
+    productIterator.map(NearestCentroidKernels.shown)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -196,6 +202,9 @@ case class NearestCellsRouted(
   require(cprobe >= 1 && nprobe >= 1,
     s"nearest_cells_routed needs cprobe/nprobe >= 1, got $cprobe/$nprobe")
 
+  override protected def stringArgs: Iterator[Any] =
+    productIterator.map(NearestCentroidKernels.shown)
+
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -240,6 +249,23 @@ case class NearestCellsRouted(
 }
 
 object NearestCentroidKernels {
+
+  /** A plan-string form of a kernel argument: a codebook table prints
+    * as its shape and a content digest (`long[16]#3f2a01bc`), since an
+    * array's own `toString` is a per-JVM identity hash; anything else
+    * prints as itself.
+    */
+  private[functions] def shown(arg: Any): Any = arg match {
+    case a: Array[Long] =>
+      f"long[${a.length}]#${java.util.Arrays.hashCode(a)}%08x"
+    case a: Array[Int] =>
+      f"int[${a.length}]#${java.util.Arrays.hashCode(a)}%08x"
+    case m: Array[Array[Double]] =>
+      val dims = m.headOption.fold(0)(_.length)
+      val h = java.util.Arrays.deepHashCode(m.asInstanceOf[Array[AnyRef]])
+      f"double[${m.length}][$dims]#$h%08x"
+    case other => other
+  }
 
   /** Spark SQL's double comparison: NaN greater than everything,
     * NaN == NaN, and -0.0 == 0.0 (`==` fires before the NaN checks)

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Checkpointing.CutOps
 
@@ -29,11 +28,10 @@ import graft.operators.Checkpointing.CutOps
   * defined-semantics discipline).
   *
   * Scale shape (the Harmonic.landmarkDistances skeleton): one
-  * symmetric-edge shuffle persisted for the sweep and released on
-  * return; forward = one frontier join + (lm, node) partial
-  * aggregate per hop, carry O(|L|·V) cut per round; DAG edges = two
-  * co-partitioned id joins; backward = one join + partial aggregate
-  * per hop level. Nothing corpus-wide, no window over nodes.
+  * symmetric-edge shuffle, cut once for the sweep; forward = one
+  * frontier join + (lm, node) partial aggregate per hop, carry
+  * O(|L|·V) cut per round; DAG edges = two co-partitioned id joins;
+  * backward = one join + partial aggregate per hop level. Nothing corpus-wide, no window over nodes.
   */
 object Betweenness {
 
@@ -48,70 +46,64 @@ object Betweenness {
   def landmarkStress(edges: DataFrame, landmarks: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val und = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     val e = und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Forward: level-synchronized BFS with shortest-path counts —
-      // σ(v at hop h) = Σ over dist-(h−1) predecessors' σ.
-      var known = landmarks.select(col("node").as("lm")).distinct()
-        .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"),
-          lit(1L).as("sigma"))
+      .lineageCut
+    // Forward: level-synchronized BFS with shortest-path counts —
+    // σ(v at hop h) = Σ over dist-(h−1) predecessors' σ.
+    var known = landmarks.select(col("node").as("lm")).distinct()
+      .select(col("lm"), col("lm").as("node"), lit(0L).as("dist"),
+        lit(1L).as("sigma"))
+      .lineageCut
+    var frontier = known
+    for (h <- 1 to maxHops) {
+      val reached = frontier
+        .join(e, frontier("node") === e("u"))
+        .groupBy(col("lm"), col("v").as("node"))
+        .agg(sum("sigma").as("sigma"))
+      val newf = reached
+        .join(known.select("lm", "node"), Seq("lm", "node"),
+          "left_anti")
+        .select(col("lm"), col("node"), lit(h.toLong).as("dist"),
+          col("sigma"))
         .lineageCut
-      var frontier = known
-      for (h <- 1 to maxHops) {
-        val reached = frontier
-          .join(e, frontier("node") === e("u"))
-          .groupBy(col("lm"), col("v").as("node"))
-          .agg(sum("sigma").as("sigma"))
-        val newf = reached
-          .join(known.select("lm", "node"), Seq("lm", "node"),
-            "left_anti")
-          .select(col("lm"), col("node"), lit(h.toLong).as("dist"),
-            col("sigma"))
-          .lineageCut
-        known = known.unionByName(newf).lineageCut
-        frontier = newf
-      }
-      // Shortest-path DAG edges per landmark tree.
-      val dag = known.select(col("lm"), col("node").as("du"),
-          col("dist").as("ddu"))
-        .join(e, col("du") === e("u"))
-        .join(known.select(col("lm"), col("node").as("dv"),
-          col("dist").as("ddv")), Seq("lm"))
-        .filter(col("dv") === col("v") && col("ddv") === col("ddu") + 1)
-        .select(col("lm"), col("du"), col("dv"))
+      known = known.unionByName(newf).lineageCut
+      frontier = newf
+    }
+    // Shortest-path DAG edges per landmark tree.
+    val dag = known.select(col("lm"), col("node").as("du"),
+        col("dist").as("ddu"))
+      .join(e, col("du") === e("u"))
+      .join(known.select(col("lm"), col("node").as("dv"),
+        col("dist").as("ddv")), Seq("lm"))
+      .filter(col("dv") === col("v") && col("ddv") === col("ddu") + 1)
+      .select(col("lm"), col("du"), col("dv"))
+      .lineageCut
+    // Backward Brandes sweep, division-free: paths(v) =
+    // Σ_{succ w} (1 + paths(w)), level by level.
+    var p = known.filter(col("dist") === maxHops)
+      .select(col("lm"), col("node"), lit(0L).as("p"))
+      .lineageCut
+    var acc = p
+    for (h <- (maxHops - 1) to 0 by -1) {
+      val dagP = dag
+        .join(p.select(col("lm"), col("node").as("dv"),
+          col("p")), Seq("lm", "dv"))
+        .select(col("lm"), col("du"), col("p"))
+      val level = known.filter(col("dist") === h)
+        .join(dagP.withColumnRenamed("du", "node"),
+          Seq("lm", "node"), "left")
+        .groupBy("lm", "node")
+        .agg(coalesce(sum(lit(1L) + col("p")), lit(0L)).as("p"))
         .lineageCut
-      // Backward Brandes sweep, division-free: paths(v) =
-      // Σ_{succ w} (1 + paths(w)), level by level.
-      var p = known.filter(col("dist") === maxHops)
-        .select(col("lm"), col("node"), lit(0L).as("p"))
-        .lineageCut
-      var acc = p
-      for (h <- (maxHops - 1) to 0 by -1) {
-        val dagP = dag
-          .join(p.select(col("lm"), col("node").as("dv"),
-            col("p")), Seq("lm", "dv"))
-          .select(col("lm"), col("du"), col("p"))
-        val level = known.filter(col("dist") === h)
-          .join(dagP.withColumnRenamed("du", "node"),
-            Seq("lm", "node"), "left")
-          .groupBy("lm", "node")
-          .agg(coalesce(sum(lit(1L) + col("p")), lit(0L)).as("p"))
-          .lineageCut
-        acc = acc.unionByName(level)
-        p = level
-      }
-      known.filter(col("dist") > 0)
-        .join(acc, Seq("lm", "node"))
-        .select(col("node"), (col("sigma") * col("p")).as("t"))
-        .groupBy("node").agg(sum("t").as("stress"))
-    } finally e.unpersist(blocking = false)
+      acc = acc.unionByName(level)
+      p = level
+    }
+    known.filter(col("dist") > 0)
+      .join(acc, Seq("lm", "node"))
+      .select(col("node"), (col("sigma") * col("p")).as("t"))
+      .groupBy("node").agg(sum("t").as("stress"))
   }
 }

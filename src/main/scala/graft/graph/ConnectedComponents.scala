@@ -33,39 +33,29 @@ object ConnectedComponents {
     * @return (id, label): every vertex appearing in `pairs`, labeled
     *   with its component's minimum vertex id (given enough rounds)
     */
-  def minLabel(pairs: DataFrame, iters: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Symmetric edges PLUS a self-loop per vertex: with self-loops,
-    // "min over self and neighbors" is ONE join + groupBy per round —
-    // the label table is referenced exactly once per round, keeping
-    // the unrolled plan linear in `iters`. (The union-with-own-label
-    // formulation references labels twice per round: a 2^iters
-    // logical-plan blowup, the Spark-side analog of the inlined-CTE
-    // explosion the SQL oracle needed MATERIALIZED for.)
-    val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-    val edges = sym
-      .union(sym.select(col("src")).distinct()
-        .select(col("src"), col("src").as("dst")))
-      .repartition(shufflePartitions, col("src"))
-      .lineageCut
+  def minLabel(pairs: DataFrame, iters: Int): DataFrame =
+    propagate(pairs, iters).select("id", "label")
 
-    val init = edges.select(col("src").as("id"))
-      .distinct()
+  /** [[minLabel]]'s cut label table, plus each vertex's label before
+    * the last hop as `_prev` (absent when `iters` is 0).
+    */
+  private def propagate(pairs: DataFrame, iters: Int): DataFrame = {
+    // Symmetric edges plus a self-loop per vertex, cut once: each
+    // round is ONE join + partial-min groupBy that reads the label
+    // table once, so the unrolled plan stays linear in `iters`. The
+    // join's streamed side is the cut src partitioning; only the
+    // O(|V|) labels shuffle to it.
+    val edges = Edges.selfLooped(
+      pairs.select(col("a").as("src"), col("b").as("dst"))
+        .union(pairs.select(col("b").as("src"), col("a").as("dst"))),
+      "src")
+    val init = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-    // Labels flow along edges (self-loops carry each vertex's own
-    // label); min is a partial aggregate. The join's streamed side is
-    // the cut edge partitioning; labels (the small side) shuffle to
-    // it. The final cut materializes the O(|V|) label table ONCE, so
-    // every downstream action — and dupGroups' convergence check plus
-    // its final output — reads stored blocks instead of re-running
-    // `iters` join rounds.
+    // The final cut materializes the O(|V|) label table ONCE, so
+    // every downstream action (dupGroups' convergence check and its
+    // output) reads stored blocks instead of re-running the rounds.
     Rounds.fixed(init, iters, iters) { (labels, _) =>
-      edges.join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"))
-        .groupBy("id")
-        .agg(min("label").as("label"))
+      Edges.minLabelHop(edges, labels)
     }.lineageCut
   }
 
@@ -73,30 +63,28 @@ object ConnectedComponents {
     * the pair graph, keeping the minimum doc id of each group.
     *
     * `iters` rounds of min-label propagation converge only when every
-    * component's min-eccentricity is ≤ `iters` — true for real LSH
-    * dup graphs (star-shaped copies of a common source) but silently
-    * wrong for adversarially deep graphs (a chain of hops longer than
-    * `iters`). So the result is CHECKED: min-label is at a fixpoint
-    * iff both endpoints of every input pair carry the same label (one
-    * O(|pairs|) scalar over the already-materialized label table). If
-    * any edge still disagrees, fall through to [[starContract]],
-    * whose round count is O(log n) regardless of diameter — callers
-    * always get fully-consolidated groups.
+    * component's min-eccentricity is below `iters` — true for real
+    * LSH dup graphs (star-shaped copies of a common source) but
+    * silently wrong for adversarially deep graphs (a chain of hops
+    * longer than `iters`). So the result is CHECKED: propagation is
+    * monotone, so a last hop that moved no label means a fixpoint
+    * (one O(|V|) scalar over the cut label table). Otherwise fall
+    * through to [[starContract]], whose round count is O(log n)
+    * regardless of diameter — callers always get fully-consolidated
+    * groups. A fixpoint that lands exactly on hop `iters` also falls
+    * through, to the same groups.
     */
   def dupGroups(pairs: DataFrame, iters: Int = 8): DataFrame = {
     // The pair list is typically the OUTPUT of an expensive candidate
-    // pipeline (LSH bucket join + exact verify); it is read up to
-    // three times here (edge build, convergence check, fallback), so
-    // it is cut once. Everything downstream materializes eagerly
-    // (labels via minLabel's cut, star rounds via theirs), so the
-    // returned plan reads only checkpointed blocks.
+    // pipeline (LSH bucket join + exact verify); it is read twice
+    // here (edge build, fallback), so it is cut once. Everything
+    // downstream materializes eagerly (labels via propagate's cut,
+    // star rounds via theirs), so the returned plan reads only
+    // checkpointed blocks.
     val p = Checkpointing.cutOnce(pairs)
-    val labels = minLabel(p, iters)
-    val la = labels.select(col("id").as("a"), col("label").as("la"))
-    val lb = labels.select(col("id").as("b"), col("label").as("lb"))
-    val converged = p.join(la, "a").join(lb, "b")
-      .filter(col("la") =!= col("lb"))
-      .isEmpty
+    val labels = propagate(p, iters)
+    val converged =
+      iters > 0 && labels.agg(Edges.moved).head().getLong(0) == 0
     val resolved = if (converged) labels else starContract(p)
     resolved
       .select(col("id").as("doc_id"), col("label").as("group_id"),
@@ -116,10 +104,10 @@ object ConnectedComponents {
     * small-star re-points each node's smaller neighbors (and the node
     * itself) at their minimum — both pure join + partial-agg steps on
     * the edge list. The loop stops when the edge set reaches a
-    * fixpoint (every component a star centered on its minimum),
-    * detected by one (count, hash-sum) scalar per round — the same
-    * O(1) driver traffic as `PageRank.runUntilConverged`'s residual.
-    * Each round's edge set is cut, so lineage stays one round deep.
+    * fixpoint (every component a star centered on its minimum): a
+    * round whose cut holds exactly the previous round's edges
+    * ([[Rounds.SameRows]]). Each round's edge set is cut, so lineage
+    * stays one round deep.
     *
     * @param pairs undirected edges as (a, b) — both long ids
     * @return (id, label) — component minimum per vertex, identical to
@@ -128,31 +116,16 @@ object ConnectedComponents {
     *   dropped here, where minLabel would emit it self-labeled)
     */
   def starContract(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    // (count, xor-of-hashes): order-insensitive, ANSI-overflow-free
-    // (a sum of 64-bit hashes overflows under ANSI arithmetic), and
-    // xor-cancellation needs duplicate rows, which distinct() rules
-    // out. A collision would only end the loop one round early with
-    // probability ~2^-64.
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    // Eager localCheckpoint per round, not persist: one round reads
-    // the previous edge set many times (sym, both join sides), so an
-    // un-truncated logical plan grows ~8× per round — the checkpoint
-    // makes each round's output a LEAF (and materializes its blocks),
-    // keeping every plan one round deep.
-    var edges = pairs
-      .select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .lineageCut
-    var prev = (-1L, 0L)
-    var cur = checksum(edges)
-    var rounds = 0
-    while (cur != prev && rounds < maxRounds) {
+    // Every round's edge set is distinct, so [[Rounds.SameRows]] (equal
+    // count, empty `except`) detects the fixpoint exactly. Each round
+    // is cut: it reads the previous edge set many times (sym, both
+    // join sides), so an uncut plan would grow ~8× per round.
+    val run = Rounds.until(
+      pairs.select(col("a").cast("long").as("u"),
+          col("b").cast("long").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct(),
+      maxRounds, Rounds.SameRows) { (edges, _) =>
       // Large-star: m(u) = min(Γ(u) ∪ {u}); emit (v, m(u)) for every
       // neighbor v > u. Output edges are (node, smaller-target), so
       // they arrive pre-oriented for the small-star step.
@@ -169,26 +142,22 @@ object ConnectedComponents {
       // smaller neighbors; re-point every lo neighbor and hi itself
       // at m. Self-edges (the m member) drop out.
       val mSmall = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(mSmall, "u")
+      large.join(mSmall, "u")
         .select(col("v").as("n"), col("m"))
         .union(mSmall.select(col("u").as("n"), col("m")))
         .filter(col("n") =!= col("m"))
         .select(col("n").as("u"), col("m").as("v"))
         .distinct()
-        .lineageCut
-      edges = small
-      prev = cur
-      cur = checksum(small)
-      rounds += 1
     }
     // A partially-contracted edge set would hand back SPLIT labels
     // with no signal — fail loudly instead. The default cap of 50
     // O(log n) rounds covers any graph that fits on hardware (2^50
     // nodes); hitting it means the input, not the cap, is the bug.
-    if (cur != prev) throw new IllegalStateException(
+    if (!run.converged) throw new IllegalStateException(
       s"starContract: no edge fixpoint after $maxRounds rounds — " +
         "components would be silently split; raise maxRounds")
     // Fixpoint: every edge is (member, componentMin).
+    val edges = run.frame
     edges.select(col("u").as("id"), col("v").as("label"))
       .union(edges.select(col("v").as("id"), col("v").as("label")))
       .groupBy("id").agg(min("label").as("label"))

@@ -85,11 +85,7 @@ object GraphStats {
     *   fixed-pointed at 10⁸
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .lineageCut
+    val und = Edges.undirected(edges).lineageCut
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))

@@ -61,11 +61,7 @@ object Harmonic {
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val und = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     val e = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src"))

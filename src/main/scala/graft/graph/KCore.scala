@@ -38,12 +38,7 @@ object KCore {
     * chain (round-16 optimization — one execution, not two).
     */
   private def sym(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .lineageCut
+    val und = Edges.undirected(edges).lineageCut
     val shufflePartitions =
       edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     und.select(col("a").as("u"), col("b").as("v"))

@@ -34,10 +34,7 @@ object LinkPredict {
     */
   def adamicAdarTopK(edges: DataFrame, k: Int,
       maxMiddleDegree: Option[Long] = None): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     val adj = und.select(col("a").as("w"), col("b").as("m"))
       .union(und.select(col("b").as("w"), col("a").as("m")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("d"))
@@ -73,10 +70,7 @@ object LinkPredict {
     */
   def jaccardTopK(edges: DataFrame, k: Int,
       maxMiddleDegree: Option[Long] = None): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     val adj = und.select(col("a").as("w"), col("b").as("m"))
       .union(und.select(col("b").as("w"), col("a").as("m")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("d"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Rounds
 import graft.operators.Checkpointing.CutOps
 
 /** Community detection by bounded, deterministic Louvain — the
@@ -51,11 +52,7 @@ object Louvain {
     */
   def communities(edges: DataFrame, levels: Int, moveRounds: Int)
       : DataFrame =
-    run(edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .withColumn("w", lit(1L)), levels, moveRounds)
+    run(Edges.undirected(edges).withColumn("w", lit(1L)), levels, moveRounds)
 
   /** WEIGHTED Louvain: same bounded deterministic algorithm over a
     * (src, dst, weight) multigraph — parallel/reverse edges merge by
@@ -98,11 +95,8 @@ object Louvain {
     */
   def communitiesRefined(edges: DataFrame, levels: Int,
       moveRounds: Int): DataFrame =
-    run(edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .withColumn("w", lit(1L)), levels, moveRounds, refine = true)
+    run(Edges.undirected(edges).withColumn("w", lit(1L)), levels,
+      moveRounds, refine = true)
 
   /** [[communitiesRefined]] over a weighted multigraph — the
     * [[communitiesWeighted]] twin.
@@ -174,8 +168,11 @@ object Louvain {
           .select(col("b").as("n"), col("w")))
         .groupBy("n").agg(sum("w").as("k"))
         .lineageCut
-      var labels = deg.select(col("n").as("id"), col("n").as("comm"))
-      for (r <- 1 to moveRounds) {
+      // Every move round reads the labels several times, so each is
+      // cut (the last one below).
+      val labels = Rounds.fixed(
+          deg.select(col("n").as("id"), col("n").as("comm")), moveRounds,
+          cutEvery = 1) { (labels, r) =>
         // Node→community incident weights under the current labels
         // (self-loops excluded: they follow the node and cancel in
         // the argmax).
@@ -228,14 +225,13 @@ object Louvain {
             (lit(k) - pmod(col("p"), lit(k))).as("bc"),
             (expr(s"(p - (p % ${k}L)) div ${k}L") - lit(off)).as("bs"),
             col("ss"))
-        labels = labels
+        labels
           .join(best, labels("id") === best("n"))
           .select(col("id"),
             when(pmod(col("id"), lit(2L)) === lit((r % 2).toLong) &&
                 col("bs") > col("ss"), col("bc"))
               .otherwise(col("comm")).as("comm"))
-          .lineageCut
-      }
+      }.lineageCut
       assign =
         if (level == 1) labels
         else assign.join(labels.select(col("id").as("comm"),

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.KmvSketch.kmv_sketch
 import graft.functions.TextHashExprs.string_poly_hash
@@ -28,7 +27,7 @@ import graft.operators.Sampling
   * definition.
   *
   * Scale shape: edges (plus self-loops) hash-partitioned by `dst`
-  * ONCE and persisted; each round explodes the O(|V|·k) sketch table
+  * ONCE and cut; each round explodes the O(|V|·k) sketch table
   * along them and re-aggregates with the mergeable `kmv_sketch`
   * (bounded O(k) state under ObjectHashAggregate, map-side partial
   * merges) — t rounds total, the edge set never re-shuffles, and no
@@ -45,43 +44,36 @@ object Neighborhood {
     */
   def kmvBalls(edges0: DataFrame, hops: Int, k: Int): DataFrame = {
     require(hops >= 0 && k >= 2, "need hops >= 0 and k >= 2")
-    val spark = edges0.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edges = edges0.select(col("src"), col("dst")).distinct()
-    val nodes = edges.select(col("src")).union(edges.select(col("dst")))
-      .distinct().select(col("src").as("node"))
-    val withSelf = edges
-      .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(shufflePartitions, col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the d27 estimator, on the ascending k-smallest-distinct array
-      def est(sketch: org.apache.spark.sql.Column) =
-        when(size(sketch) < k, size(sketch).cast("long"))
-          .otherwise(floor(lit((k - 1).toDouble) * Sampling.MixMod /
-            element_at(sketch, k) + 0.5).cast("long"))
-      var sk = nodes.select(col("node"),
-          array(string_poly_hash(col("node")) * Sampling.Mixer %
-            Sampling.MixMod).as("sketch"))
+    // edges plus self-loops, dst-partitioned and cut: every round
+    // joins the sketch table on dst
+    val withSelf = Edges.selfLooped(
+      edges0.select(col("src"), col("dst")).distinct(), "dst")
+    // the d27 estimator, on the ascending k-smallest-distinct array
+    def est(sketch: org.apache.spark.sql.Column) =
+      when(size(sketch) < k, size(sketch).cast("long"))
+        .otherwise(floor(lit((k - 1).toDouble) * Sampling.MixMod /
+          element_at(sketch, k) + 0.5).cast("long"))
+    var sk = withSelf.select(col("src").as("node")).distinct()
+      .select(col("node"),
+        array(string_poly_hash(col("node")) * Sampling.Mixer %
+          Sampling.MixMod).as("sketch"))
+      .lineageCut
+    val out = scala.collection.mutable.ArrayBuffer(
+      sk.select(col("node"), lit(0L).as("hop"),
+        est(col("sketch")).as("est_ball")))
+    for (t <- 1 to hops) {
+      // ball(u, t) = {u} ∪ ⋃_{u→v} ball(v, t−1): the self-loop
+      // carries u's own sketch, successors contribute theirs; the
+      // min-k union is ONE partial-aggregated exchange
+      sk = withSelf.join(sk, withSelf("dst") === sk("node"))
+        .select(withSelf("src").as("node"),
+          explode(col("sketch")).as("h"))
+        .groupBy("node")
+        .agg(kmv_sketch(col("h"), k).as("sketch"))
         .lineageCut
-      val out = scala.collection.mutable.ArrayBuffer(
-        sk.select(col("node"), lit(0L).as("hop"),
-          est(col("sketch")).as("est_ball")))
-      for (t <- 1 to hops) {
-        // ball(u, t) = {u} ∪ ⋃_{u→v} ball(v, t−1): the self-loop
-        // carries u's own sketch, successors contribute theirs; the
-        // min-k union is ONE partial-aggregated exchange
-        sk = withSelf.join(sk, withSelf("dst") === sk("node"))
-          .select(withSelf("src").as("node"),
-            explode(col("sketch")).as("h"))
-          .groupBy("node")
-          .agg(kmv_sketch(col("h"), k).as("sketch"))
-          .lineageCut
-        out += sk.select(col("node"), lit(t.toLong).as("hop"),
-          est(col("sketch")).as("est_ball"))
-      }
-      out.reduce(_ unionByName _)
-    } finally withSelf.unpersist(blocking = false)
+      out += sk.select(col("node"), lit(t.toLong).as("hop"),
+        est(col("sketch")).as("est_ball"))
+    }
+    out.reduce(_ unionByName _)
   }
 }

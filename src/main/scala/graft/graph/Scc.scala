@@ -21,7 +21,8 @@ import graft.operators.Checkpointing.CutOps
   *      crawl graph) without any propagation.
   *   2. F(u) = min id in u's FORWARD closure (incl. u), B(u) = the
   *      same over the REVERSED edges — two min-label fixpoints, each
-  *      a convergence-checked propagation loop.
+  *      a convergence-checked propagation loop (F hops over the
+  *      reversed edges, B over the edges as given).
   *   3. F(u) = B(u) = m means m is reachable from u AND reaches u,
   *      so u ∈ SCC(m); conversely every member of SCC(m) shares
   *      F = B = m when m is the minimum over the SCC's reach — so
@@ -38,55 +39,35 @@ import graft.operators.Checkpointing.CutOps
   *
   * Scale shape: mirrors PageRank/ConnectedComponents — each round's
   * edge set is a counted cut, whose row count also decides
-  * termination (no edge left); propagation moves
-  * only the O(|V|) label table per hop with partial-aggregated mins;
-  * finalized labels are checkpointed id lists. Node ids may be any
+  * termination (no edge left); propagation moves only the O(|V|)
+  * label table per hop with partial-aggregated mins, and a chunk's
+  * convergence check is one scalar over its cut label table (no edge
+  * scan); finalized labels are checkpointed id lists. Node ids may be any
   * orderable type (string words here; `min` matches SQL `min`).
   */
 object Scc {
 
-  /** Min id over the closure along `edges` (src → reaches dst),
-    * computed as a convergence-CHECKED min-label fixpoint: chunks of
-    * `chunk` propagation hops, then one edge-consistency scan (at a
-    * fixpoint no edge has label(src) > label(dst)); throws rather
-    * than returning an unconverged closure.
+  /** Each node's min id over the nodes that reach it along `edges`
+    * (itself included), a convergence-CHECKED min-label fixpoint:
+    * chunks of `chunk` lazy hops, each chunk cut, until a chunk's last
+    * hop moved no label (propagation is monotone, so that is the
+    * fixpoint); throws rather than returning an unconverged closure.
     *
-    * @return (id, m) for every node appearing in `edges`
+    * @return (id, label, _prev) for every node appearing in `edges`
     */
   private def minReach(edges: DataFrame, chunk: Int = 8,
       maxChunks: Int = 16): DataFrame = {
-    val spark = edges.sparkSession
-    val shufflePartitions =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // self-loops make "min over self and successors" one join per hop
-    // (the ConnectedComponents idiom — the label table is referenced
-    // once per round, keeping the plan linear in hop count)
-    val withSelf = edges
-      .union(edges.select(col("src")).union(edges.select(col("dst")))
-        .distinct().select(col("src"), col("src").as("dst")))
-      .repartition(shufflePartitions, col("src"))
-      .lineageCut
-    var labels = withSelf.select(col("src").as("id")).distinct()
-      .withColumn("m", col("id"))
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxChunks) {
-      labels = Rounds.fixed(labels, chunk, chunk) { (l, _) =>
-        withSelf.join(l, withSelf("dst") === l("id"))
-          .select(withSelf("src").as("id"), col("m"))
-          .groupBy("id")
-          .agg(min("m").as("m"))
-      }.lineageCut
-      val la = labels.select(col("id").as("src"), col("m").as("ms"))
-      val lb = labels.select(col("id").as("dst"), col("m").as("md"))
-      converged = edges.join(la, "src").join(lb, "dst")
-        .filter(col("ms") > col("md"))
-        .isEmpty
-      rounds += 1
+    val looped = Edges.selfLooped(edges, "src")
+    val init = looped.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
+    val run = Rounds.until(init, maxChunks,
+        Rounds.Residual(Edges.moved, 0)) { (labels, _) =>
+      Rounds.fixed(labels, chunk, chunk)((l, _) =>
+        Edges.minLabelHop(looped, l))
     }
-    require(converged,
+    require(run.converged,
       s"min-reach did not converge in ${chunk * maxChunks} hops")
-    labels
+    run.frame
   }
 
   /** @param edges0 directed edges (src, dst), any orderable id type
@@ -121,13 +102,12 @@ object Scc {
         val trimmed = srcs.except(dsts).union(dsts.except(srcs))
           .select(col("node"), col("node").as("scc"))
         // 2-3. F/B fixpoints on the remaining graph; F = B finalizes
-        val f = minReach(remaining)
-        val b = minReach(remaining
+        val f = minReach(remaining
           .select(col("dst").as("src"), col("src").as("dst")))
-          .withColumnRenamed("m", "mb")
+        val b = minReach(remaining).select(col("id"), col("label").as("mb"))
         val matched = f.join(b, "id")
-          .filter(col("m") === col("mb"))
-          .select(col("id").as("node"), col("m").as("scc"))
+          .filter(col("label") === col("mb"))
+          .select(col("id").as("node"), col("label").as("scc"))
         val done = trimmed.union(matched)
           .groupBy("node").agg(min("scc").as("scc"))
           .lineageCut

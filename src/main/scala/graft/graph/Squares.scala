@@ -38,11 +38,7 @@ object Squares {
     * @return one row: (n_squares)
     */
   def globalCount(edges: DataFrame): DataFrame = {
-    val und = edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     // Symmetric adjacency with the (degree, id) rank on both ends;

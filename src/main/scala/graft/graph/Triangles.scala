@@ -33,12 +33,7 @@ object Triangles {
     * undirected degree table (n, d)).
     */
   private def closedWedges(edges: DataFrame): (DataFrame, DataFrame) = {
-    // Canonical undirected edge set.
-    val und = edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = Edges.undirected(edges)
     // Undirected degrees.
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))

@@ -31,14 +31,6 @@ import graft.operators.{Checkpointing, Rounds}
   */
 object Truss {
 
-  /** Canonical undirected loop-free edges (a < b). */
-  private def und(edges: DataFrame): DataFrame =
-    edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-
   /** One synchronous wave: per-edge support within `t`, keep
     * support ≥ k−2. Edges with NO common neighbor vanish from the
     * inner wedge join — i.e. support 0 — and drop for any k ≥ 3.
@@ -80,7 +72,7 @@ object Truss {
     require(k >= 3, "k-truss needs k >= 3")
     require(waves >= 1, "at least one wave")
     // Final support within the stable survivor set.
-    wave(peel(und(edges), k, waves).frame, k)
+    wave(peel(Edges.undirected(edges), k, waves).frame, k)
       .select(col("a"), col("b"), col("support"))
   }
 
@@ -90,7 +82,7 @@ object Truss {
   def untilStable(edges: DataFrame, k: Int, maxWaves: Int = 100)
       : DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    val run = peel(und(edges), k, maxWaves)
+    val run = peel(Edges.undirected(edges), k, maxWaves)
     require(run.converged, s"k-truss did not stabilize in $maxWaves waves")
     wave(run.frame, k).select(col("a"), col("b"), col("support"))
   }
@@ -103,7 +95,7 @@ object Truss {
     */
   private def levels(edges: DataFrame, maxK: Int, maxWaves: Int,
       exact: Boolean): DataFrame = {
-    var (t, n) = Checkpointing.cutCounted(und(edges))
+    var (t, n) = Checkpointing.cutCounted(Edges.undirected(edges))
     var out = t.withColumn("truss", lit(2L))
     var k = 3
     while (k <= maxK && n > 0) {

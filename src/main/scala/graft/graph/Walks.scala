@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextHashExprs.string_poly_hash
 import graft.operators.Checkpointing.CutOps
@@ -19,7 +18,7 @@ import graft.operators.Checkpointing.CutOps
   * pick (the polynomial hash varies per node, the +t term per step).
   *
   * Scale shape: the indexed adjacency (per-src neighbor ranks) and
-  * out-degrees build once and persist partitioned by `src`; each hop
+  * out-degrees build once and are cut partitioned by `src`; each hop
   * joins only the O(|walks|) frontier against them on the SAME src
   * key (no re-shuffle of the big side — the idx pick is a filter
   * inside the co-partitioned join, local to the node's partition),
@@ -47,29 +46,22 @@ object Walks {
     val deg = adj.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val a = adj.join(deg, "src")
       .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      var frontier = seeds.select(col("node")).distinct()
-        .select(col("node").as("walk_id"), lit(0L).as("step"), col("node"))
+      .lineageCut
+    var frontier = seeds.select(col("node")).distinct()
+      .select(col("node").as("walk_id"), lit(0L).as("step"), col("node"))
+      .lineageCut
+    var out = frontier
+    for (st <- 1 to steps) {
+      val nxt = frontier.join(a, frontier("node") === a("src"))
+        .filter(col("idx") ===
+          (string_poly_hash(col("node")) * 31 + st) % col("outdeg"))
+        .select(col("walk_id"), lit(st.toLong).as("step"),
+          col("dst").as("node"))
         .lineageCut
-      var out = frontier
-      for (st <- 1 to steps) {
-        val nxt = frontier.join(a, frontier("node") === a("src"))
-          .filter(col("idx") ===
-            (string_poly_hash(col("node")) * 31 + st) % col("outdeg"))
-          .select(col("walk_id"), lit(st.toLong).as("step"),
-            col("dst").as("node"))
-          .lineageCut
-        out = out.union(nxt)
-        frontier = nxt
-      }
-      out
-      // Every frontier branch is eagerly cut, so nothing in `out`'s
-      // lineage still reads the cached adjacency — release it in
-      // finally (the KCore.survivors discipline: a failed mid-walk
-      // cut must not leak the cache either).
-    } finally a.unpersist(blocking = false)
+      out = out.union(nxt)
+      frontier = nxt
+    }
+    out
   }
 
   /** Skip-gram (center, context) pair extraction over a walk corpus

@@ -167,19 +167,16 @@ object KMeans {
     */
   private[graft] def trainCached(corpus: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    var cent = seeds(corpus, k)
-    for (_ <- 1 to iters) {
-      val a = assignedWithEmb(corpus, cent)
-      cent = Similarity.centroidVectors(
-          a.select(col("cell").as("label"), col("embedding")), "label")
-        .select(col("label").as("cell"), col("cvec"))
-    }
     // Training is inherently an action-driven loop, so run it HERE:
     // the eager localCheckpoint materializes the k-row centroid table
     // once (every later action reads k stored rows instead of
     // re-running `iters` Lloyd rounds) and lets the corpus cache be
     // released now instead of leaking into the caller's session.
-    cent.lineageCut
+    Rounds.fixed(seeds(corpus, k), iters, iters) { (cent, _) =>
+      Similarity.centroidVectors(assignedWithEmb(corpus, cent)
+          .select(col("cell").as("label"), col("embedding")), "label")
+        .select(col("label").as("cell"), col("cvec"))
+    }.lineageCut
   }
 
   /** k-means++-style FARTHEST-POINT seeding — the init-quality half

@@ -15,8 +15,10 @@ import graft.operators.Checkpointing.CutOps
   *     (`cutEvery = 1`); a step that reads it once passes `n` and keeps
   *     one lazy plan.
   *   - [[until]] cuts every round with [[Checkpointing.cutCounted]] and
-  *     stops on a [[Stop]] policy, reading one driver scalar a round at
-  *     most (none for [[Unchanged]], whose count the cut already ran).
+  *     stops on one of three [[Stop]] policies: [[Unchanged]] (no job
+  *     beyond the cut, whose count it reads), [[Residual]] (one
+  *     driver scalar a round) and [[SameRows]] (one `except` job, run
+  *     only in rounds whose count repeats).
   */
 object Rounds {
 
@@ -38,6 +40,14 @@ object Rounds {
     */
   final case class Residual(agg: Column, tol: Double) extends Stop
 
+  /** Stop once a round's frame holds exactly the previous round's rows:
+    * equal counts (the cuts' own) and `next.except(prev)` empty. Exact
+    * for duplicate-free frames, and unlike [[Unchanged]] it keeps going
+    * while a step moves rows at a constant count. The `except` job
+    * runs only in rounds whose count repeats.
+    */
+  case object SameRows extends Stop
+
   /** @param frame the last round's cut (`init` when no round ran)
     * @param rows `frame`'s row count (-1 when no round ran and the
     *   policy counted nothing)
@@ -56,12 +66,13 @@ object Rounds {
     *
     * @param initRows `init`'s row count when the caller already has it
     *   (then `init` must already be a cut); otherwise [[Unchanged]]
-    *   cuts `init` to count it.
+    *   and [[SameRows]] cut `init` to count it.
     */
   def until(init: DataFrame, maxRounds: Int, stop: Stop,
       initRows: Long = -1L)(step: (DataFrame, Int) => DataFrame): Run = {
+    val counted = stop == Unchanged || stop == SameRows
     var (cur, rows) =
-      if (stop == Unchanged && initRows < 0) Checkpointing.cutCounted(init)
+      if (counted && initRows < 0) Checkpointing.cutCounted(init)
       else (init, initRows)
     var converged = stop == Unchanged && rows == 0
     var round = 0
@@ -70,6 +81,7 @@ object Rounds {
       val (next, n) = Checkpointing.cutCounted(step(cur, round))
       converged = stop match {
         case Unchanged => n == rows || n == 0
+        case SameRows => n == rows && next.except(cur).isEmpty
         case Residual(agg, tol) =>
           val r = next.agg(agg).head().get(0)
           (if (r == null) 0.0 else r.asInstanceOf[Number].doubleValue) <= tol

@@ -627,9 +627,10 @@ object Similarity {
     * of a hardwired round count. Each new beam is the top-`beamWidth`
     * of a candidate pool that includes the previous beam, so the
     * per-query kept set improves monotonically in the (sim DESC,
-    * cand_id) order and a fixed point always exists; stability is ONE
-    * O(queries × beamWidth) anti-join scalar per round (new \ old
-    * empty ⇒ new = old, since the new set can never shrink). Throws
+    * cand_id) order and a fixed point always exists; stability is a
+    * round whose cut beam holds exactly the previous beam's rows
+    * ([[Rounds.SameRows]]: equal counts, then one O(queries ×
+    * beamWidth) `except`). Throws
     * if `maxRounds` passes without stabilizing — callers never get a
     * silently-truncated walk.
     */
@@ -688,25 +689,27 @@ object Similarity {
         if (entriesPerQuery) entries.select("query_id", "cand_id")
         else q.select(col("query_id"))
           .crossJoin(entries.select(col("cand_id")))
-      var beam = score(seed
-        .filter(col("cand_id") =!= col("query_id"))).lineageCut
-      var stable = false
-      var r = 0
-      while (r < maxRounds && !stable) {
-        r += 1
-        val expanded = beam.select("query_id", "cand_id")
+      val seedBeam = score(seed.filter(col("cand_id") =!= col("query_id")))
+      // One round: the beam plus its out-neighbors, rescored, best
+      // `beamWidth` kept. It reads the beam twice, so every round is
+      // cut.
+      def hop(beam: DataFrame, r: Int): DataFrame =
+        score(beam.select("query_id", "cand_id")
           .union(broadcast(beam).join(g, beam("cand_id") === g("vec_id"))
             .select(col("query_id"), col("nbr_id").as("cand_id")))
           .filter(col("cand_id") =!= col("query_id"))
-          .distinct()
-        val next = score(expanded).lineageCut
-        if (untilStable)
-          stable = next
-            .join(beam, Seq("query_id", "cand_id"), "left_anti").isEmpty
-        beam = next
-      }
-      require(!untilStable || stable,
-        s"beam walk did not stabilize in $maxRounds rounds")
+          .distinct())
+      // Each new beam is the top `beamWidth` of a pool holding the old
+      // one, so it never shrinks: the walk is stable once a round
+      // returns exactly the previous round's rows.
+      val beam =
+        if (untilStable) {
+          val run = Rounds.until(seedBeam, maxRounds, Rounds.SameRows)(hop)
+          require(run.converged,
+            s"beam walk did not stabilize in $maxRounds rounds")
+          run.frame
+        } else Checkpointing.cutOnce(
+          Rounds.fixed(seedBeam.lineageCut, maxRounds, cutEvery = 1)(hop))
       // The final ranking stays lazy OVER THE CUT BEAM: its plan is
       // one window on a checkpoint scan (bounded depth however many
       // rounds ran — PlanShapeSpec pins this), and it never re-reads

@@ -674,15 +674,15 @@ object PipelineQueries {
        |)
        |SELECT q.query_id,
        |  coalesce(h, 0) AS n_hits,
-       |  coalesce(h, 0) * (1${"0" * digits} // $k) AS recall_e$digits
+       |  (coalesce(h, 0) * 1${"0" * digits}) // $k AS recall_e$digits
        |FROM q LEFT JOIN hits ON hits.query_id = q.query_id
        |ORDER BY q.query_id""".stripMargin
 
   /** The recall card: per probe query (`qs`' vec_id), how many of its
     * exact top-`k` neighbors in `pool` the approximate result `approx`
     * (query_id, cand_id) also returned, as `n_hits` and as
-    * `recall_e$digits` = n_hits · ⌊10^digits / k⌋. A probe with no
-    * hit reads 0, not a missing row.
+    * `recall_e$digits` = ⌊n_hits · 10^digits / k⌋, so full recall reads
+    * exactly 10^digits. A probe with no hit reads 0, not a missing row.
     */
   private def recallCard(pool: DataFrame, qs: DataFrame, k: Int,
       approx: DataFrame, digits: Int = 4): DataFrame = {
@@ -690,11 +690,11 @@ object PipelineQueries {
       .select(col("query_id"), col("cand_id"))
     val hits = exact.join(approx, Seq("query_id", "cand_id"))
       .groupBy("query_id").agg(count(lit(1)).as("h"))
-    val h = coalesce(col("h"), lit(0L))
+    val h = "coalesce(h, 0L)"
     qs.select(col("vec_id").as("query_id"))
       .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), h.as("n_hits"),
-        (h * (math.pow(10, digits).toInt / k)).as(s"recall_e$digits"))
+      .select(col("query_id"), expr(h).as("n_hits"),
+        expr(s"$h * 1${"0" * digits} div $k").as(s"recall_e$digits"))
       .orderBy("query_id")
   }
 

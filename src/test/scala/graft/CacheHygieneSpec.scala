@@ -252,8 +252,7 @@ class CacheHygieneSpec extends SparkSpec {
       finally walk.close() // Files.walk holds directory handles
     val roster = Set(
       // release-on-return, pinned by checkReleased above
-      "Neighborhood.scala", "Walks.scala", "KMeans.scala",
-      "BpeTrain.scala", "Similarity.scala", "Betweenness.scala",
+      "KMeans.scala", "BpeTrain.scala", "Similarity.scala",
       "UnigramLm.scala", "NavIndexPipeline.scala",
       // documented caller-releases, pinned by checkCallerReleased
       "Dedup.scala",

@@ -82,6 +82,25 @@ class CheckpointingSpec extends SparkSpec {
     assert(local._3 == reliable._3, "funnel audit diverged across modes")
   }
 
+  test("Rounds.SameRows keeps going while a step moves rows at a constant count") {
+    import spark.implicits._
+    import graft.operators.Rounds
+    val init = spark.range(5).toDF("x")
+    // Rounds 1-3 shift every row by one: the count stays 5 but the
+    // rows change. From round 4 on the step returns its input.
+    def step(df: org.apache.spark.sql.DataFrame, r: Int) =
+      df.select((col("x") + lit(if (r <= 3) 1L else 0L)).as("x"))
+    val run = Rounds.until(init, 10, Rounds.SameRows)(step)
+    assert(run.converged && run.rounds == 4 && run.rows == 5,
+      s"stopped after ${run.rounds} rounds, converged = ${run.converged}")
+    assert(run.frame.as[Long].collect().sorted.toSeq == (3L to 7L))
+    // The count-only stop ends after round 1, with the rows still moving.
+    assert(Rounds.until(init, 10, Rounds.Unchanged)(step).rounds == 1)
+    // Capped before the repeat: no convergence claimed.
+    val capped = Rounds.until(init, 3, Rounds.SameRows)(step)
+    assert(!capped.converged && capped.rounds == 3)
+  }
+
   test("cache lifecycle: self-releasing loops leave the registry empty; lazy results release after clearCache") {
     val sess = spark.newSession()
     val cm = sess.sharedState.cacheManager

@@ -1163,6 +1163,34 @@ class OperatorsSpec extends SparkSpec {
     assert(gotTie == Seq(4L, 8L, 2L, 6L))
   }
 
+  test("nearest-centroid kernels print their tables by content, not identity") {
+    import graft.functions.NearestCentroidCell._
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    // Every call builds fresh, equal arrays: the printed expressions
+    // (what a formatted plan shows) must be equal too, and must not
+    // carry a JVM identity hash such as `[J@…` or `[[D@…`. The child
+    // is a fixed bound reference (an unresolved column prints its
+    // call-site origin).
+    val child = org.apache.spark.sql.catalyst.expressions.BoundReference(
+      0, org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType), nullable = true)
+    def shown(): Seq[String] = {
+      val coarse = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
+      val fine = Seq((2L, Array(1.0, 0.0)), (6L, Array(0.0, 1.0)))
+      Seq(nearest_centroid(col("e"), fine),
+        nearest_cells(col("e"), fine, 2),
+        nearest_cells_routed(col("e"), coarse, fine,
+          Map(2L -> 0L, 6L -> 1L), cprobe = 1, nprobe = 2))
+        .map(c => ColumnBridge.expression(c).withNewChildren(Seq(child))
+          .toString)
+    }
+    val (a, b) = (shown(), shown())
+    assert(a == b)
+    assert(a.forall(s => !s.contains("@")), a.mkString("\n"))
+    assert(a.head.contains("long[2]#") && a.head.contains("double[2][2]#"),
+      a.head)
+  }
+
   test("knnGraphRouted degenerates to knnGraphProbed under one coarse group") {
     // With every fine cell in a single selected coarse group the
     // two-level route scores exactly the full fine table — the
