@@ -443,36 +443,12 @@ object Gif {
           if (fw <= 0 || fh <= 0 ||
               left + fw > canvasW || top + fh > canvasH) return None
           val interlaced = (ipacked & 0x40) != 0
-          var table = gct
-          if ((ipacked & 0x80) != 0) {
-            val n = 3 * (1 << ((ipacked & 0x07) + 1))
-            if (off + n > p.length) return None
-            table = java.util.Arrays.copyOfRange(p, off, off + n)
-            off += n
-          }
-          if (table == null) return None
-          if (off >= p.length) return None
-          val minCodeSize = u(off)
-          off += 1
-          if (minCodeSize < 2 || minCodeSize > 8) return None
-          val lzw = new java.io.ByteArrayOutputStream()
-          var done = false
-          while (!done) {
-            if (off >= p.length) return None
-            val n = u(off)
-            off += 1
-            if (n == 0) done = true
-            else {
-              if (off + n > p.length) return None
-              lzw.write(p, off, n)
-              off += n
+          val (table, indices, next) =
+            imageData(p, off, ipacked, gct, fw * fh) match {
+              case Some(d) => d
+              case None => return None
             }
-          }
-          val indices = lzwDecode(lzw.toByteArray, minCodeSize,
-            fw * fh) match {
-            case Some(ix) => ix
-            case None => return None
-          }
+          off = next
           val nColors = table.length / 3
           // disposal 3 needs the pre-frame canvas to restore
           val before =
@@ -581,6 +557,43 @@ object Gif {
     if (width <= 0 || height <= 0 ||
         width.toLong * height > 64L * 1024 * 1024) return None
     val interlaced = (ipacked & 0x40) != 0
+    val (table, indices, _) =
+      imageData(p, off, ipacked, gct, width * height) match {
+        case Some(d) => d
+        case None => return None
+      }
+    // palette expansion (+ optional interlace scatter)
+    val nColors = table.length / 3
+    val rgb = new Array[Byte](width * height * 3)
+    val rows = rowOrder(height, interlaced)
+    var r = 0
+    while (r < height) {
+      val y = rows(r)
+      var x = 0
+      while (x < width) {
+        val ix = indices(r * width + x) & 0xFF
+        if (ix >= nColors) return None
+        System.arraycopy(table, ix * 3, rgb, (y * width + x) * 3, 3)
+        x += 1
+      }
+      r += 1
+    }
+    Some(Decoded(width, height, rgb))
+  }
+
+  /** The image data that follows a descriptor at `start` (whose
+    * packed byte is `ipacked`): the local color table, overriding
+    * `gct`; the LZW minimum code size (2..8); the data sub-blocks,
+    * reassembled and decoded to exactly `nPixels` indices. Returns
+    * (color table, indices, offset past the block terminator), or
+    * None when the table is missing or anything is truncated or
+    * malformed.
+    */
+  private def imageData(p: Array[Byte], start: Int, ipacked: Int,
+      gct: Array[Byte], nPixels: Int)
+      : Option[(Array[Byte], Array[Byte], Int)] = {
+    def u(j: Int): Int = p(j) & 0xFF
+    var off = start
     var table = gct
     if ((ipacked & 0x80) != 0) { // local color table overrides
       val n = 3 * (1 << ((ipacked & 0x07) + 1))
@@ -607,28 +620,8 @@ object Gif {
         off += n
       }
     }
-    val indices = lzwDecode(lzw.toByteArray, minCodeSize,
-      width * height) match {
-      case Some(ix) => ix
-      case None => return None
-    }
-    // palette expansion (+ optional interlace scatter)
-    val nColors = table.length / 3
-    val rgb = new Array[Byte](width * height * 3)
-    val rows = rowOrder(height, interlaced)
-    var r = 0
-    while (r < height) {
-      val y = rows(r)
-      var x = 0
-      while (x < width) {
-        val ix = indices(r * width + x) & 0xFF
-        if (ix >= nColors) return None
-        System.arraycopy(table, ix * 3, rgb, (y * width + x) * 3, 3)
-        x += 1
-      }
-      r += 1
-    }
-    Some(Decoded(width, height, rgb))
+    lzwDecode(lzw.toByteArray, minCodeSize, nPixels)
+      .map(ix => (table, ix, off))
   }
 
   /** GIF-variant LZW decompression to exactly `expected` indices. */

@@ -1,24 +1,30 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: media as opaque `binary` payloads with
-  * typed metadata, processed per-partition in batches.
+/** Multimodal-column plumbing: media as `binary` payloads with typed
+  * metadata (`MediaRow`), decoded per partition by the real codecs
+  * beside this file (PNG, GIF, JPEG, BMP, ICO, TIFF, netpbm, WAV,
+  * MP3, EXIF).
   *
-  * The Spark-side shape is real and tested — binary column + metadata
-  * struct, a typed `Dataset[MediaRow]`, `mapPartitions` batch
-  * processing with an iterator (never materializing a partition), and
-  * a fixed-width feature-vector output schema. The DECODE step is a
-  * deterministic stand-in (this container has no image/audio codecs):
-  * a 16-bin byte histogram normalized by payload length, which is the
-  * exact plumbing contract a real `decode → feature-extract` UDF
-  * would slot into.
-  *
-  * At 100 TB the payload column dominates I/O: the plan projects only
-  * (id, meta.n_bytes, payload), partition sizing comes from
-  * `spark.sql.files.maxPartitionBytes`, and nothing here shuffles —
-  * feature extraction is embarrassingly parallel over row batches.
+  * Every function goes through one of two seams, both of which take
+  * their encoders from the input frame's own session, so one
+  * definition serves batch and streaming frames alike:
+  *   - `plant` turns `doc_id`s into a deterministic `MediaRow`
+  *     table (the planted corpora whose pixels or samples the
+  *     oracles recompute from formulas, without a decoder);
+  *   - `perPayload` runs one closure per payload over an iterator
+  *     (never materializing a partition) and flattens what it
+  *     returns — zero rows for an undecodable payload, which is
+  *     dropped row-local, one or more rows for a decoded one.
+  * Both are map-side only: at 100 TB the payload column dominates
+  * I/O, partition sizing comes from `spark.sql.files.maxPartitionBytes`,
+  * and nothing here shuffles. The byte-window `sampleFrames`, stride
+  * `resize` and histogram `extractFeatures` are stand-ins for
+  * payloads without a codec.
   */
 object Multimodal {
 
@@ -52,6 +58,33 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, format: String, n_bytes: Long,
       feature: Array[Double])
 
+  /** One `MediaRow` per `doc_id` of `docs`, its payload planted from
+    * the id.
+    */
+  private def plant(docs: DataFrame, format: Long => String)(
+      payload: Long => Array[Byte]): DataFrame = {
+    val session = docs.sparkSession
+    import session.implicits._
+    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
+      ids.map { id =>
+        val p = payload(id)
+        MediaRow(id, format(id), p.length.toLong, p)
+      }
+    }.toDF()
+  }
+
+  private def plant(docs: DataFrame, format: String)(
+      payload: Long => Array[Byte]): DataFrame =
+    plant(docs, (_: Long) => format)(payload)
+
+  /** `f` over every payload of `media`, flattened. */
+  private def perPayload[T <: Product : TypeTag](media: DataFrame)(
+      f: MediaRow => IterableOnce[T]): Dataset[T] = {
+    val session = media.sparkSession
+    import session.implicits._
+    media.as[MediaRow].mapPartitions(_.flatMap(f))
+  }
+
   /** Fabricate a deterministic media table from `documents`: the
     * UTF-8 bytes of `text` stand in for an encoded media payload,
     * with typed metadata columns.
@@ -71,21 +104,16 @@ object Multimodal {
     * the one-row-to-many explode are the actual plumbing a frame
     * sampler needs). Frames of empty payloads are empty.
     */
-  def sampleFrames(spark: SparkSession, media: DataFrame, nFrames: Int)
-      : Dataset[Frame] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val len = r.payload.length
-        val w = math.max(1, len / nFrames)
-        (0 until nFrames).iterator.map { i =>
-          val from = math.min(i * w, len)
-          val until = if (i == nFrames - 1) len else math.min(from + w, len)
-          Frame(r.doc_id, i, java.util.Arrays.copyOfRange(r.payload, from, until))
-        }
+  def sampleFrames(media: DataFrame, nFrames: Int): Dataset[Frame] =
+    perPayload(media) { r =>
+      val len = r.payload.length
+      val w = math.max(1, len / nFrames)
+      (0 until nFrames).iterator.map { i =>
+        val from = math.min(i * w, len)
+        val until = if (i == nFrames - 1) len else math.min(from + w, len)
+        Frame(r.doc_id, i, java.util.Arrays.copyOfRange(r.payload, from, until))
       }
     }
-  }
 
   case class Thumb(doc_id: Long, idx: Int, byte_val: Int)
 
@@ -97,19 +125,14 @@ object Multimodal {
     * size, which is what makes a downstream feature store's row
     * width predictable.
     */
-  def resize(spark: SparkSession, media: DataFrame, width: Int)
-      : Dataset[Thumb] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val n = r.payload.length
-        if (n == 0) Iterator.empty
-        else (0 until width).iterator.map { i =>
-          Thumb(r.doc_id, i, r.payload((i.toLong * n / width).toInt) & 0xFF)
-        }
+  def resize(media: DataFrame, width: Int): Dataset[Thumb] =
+    perPayload(media) { r =>
+      val n = r.payload.length
+      if (n == 0) Iterator.empty
+      else (0 until width).iterator.map { i =>
+        Thumb(r.doc_id, i, r.payload((i.toLong * n / width).toInt) & 0xFF)
       }
     }
-  }
 
   /** Plant REAL PNGs (encoded by [[Png.encode]] with the real zlib
     * Deflater, rotating through all five scanline filter types, IDAT
@@ -119,34 +142,28 @@ object Multimodal {
     * can recompute the expected pixels WITHOUT a decoder and pin the
     * decoded bytes exactly.
     */
-  def pngTable(spark: SparkSession, docs: DataFrame,
-      seedOf: Long => Long = identity): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { docId =>
-        val id = seedOf(docId)
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 3) % 5).toInt
-        val rgb = new Array[Byte](w * h * 3)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            var c = 0
-            while (c < 3) {
-              rgb((y * w + x) * 3 + c) =
-                ((id * 31 + y * 7 + x * 3 + c) % 256).toByte
-              c += 1
-            }
-            x += 1
+  def pngTable(docs: DataFrame, seedOf: Long => Long = identity): DataFrame =
+    plant(docs, "image/png") { docId =>
+      val id = seedOf(docId)
+      val w = (4 + id % 5).toInt
+      val h = (4 + (id * 3) % 5).toInt
+      val rgb = new Array[Byte](w * h * 3)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          var c = 0
+          while (c < 3) {
+            rgb((y * w + x) * 3 + c) =
+              ((id * 31 + y * 7 + x * 3 + c) % 256).toByte
+            c += 1
           }
-          y += 1
+          x += 1
         }
-        val payload = Png.encode(w, h, rgb, y => y % 5)
-        MediaRow(docId, "image/png", payload.length.toLong, payload)
+        y += 1
       }
-    }.toDF()
-  }
+      Png.encode(w, h, rgb, y => y % 5)
+    }
 
   /** Plant REAL PALETTE PNGs ([[Png.encodePalette]]): bit depth
     * rotates 8/4/2/1 by doc_id, odd ids Adam7-INTERLACED, scanline
@@ -158,30 +175,25 @@ object Multimodal {
     * min(16, 2^depth), palette[j][c] = (id·41 + j·37 + c·11) % 256,
     * index(y, x) = (id·13 + y·5 + x·3) % size.
     */
-  def pngPalTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        // floorMod: % preserves sign, which would index Array(8,4,2,1)
-        // negatively if an id source ever goes negative (xxhash64 seeds).
-        val w = (4 + Math.floorMod(id, 5)).toInt
-        val h = (4 + Math.floorMod(id * 3, 5)).toInt
-        val depth = Array(8, 4, 2, 1)(Math.floorMod(id, 4).toInt)
-        val psize = math.min(16, 1 << depth)
-        val palette = new Array[Byte](psize * 3)
-        for (j <- 0 until psize; c <- 0 until 3)
-          palette(j * 3 + c) =
-            Math.floorMod(id * 41 + j * 37 + c * 11, 256).toByte
-        val indices = Array.tabulate(w * h) { i =>
-          val y = i / w; val x = i % w
-          Math.floorMod(id * 13 + y * 5 + x * 3, psize).toInt
-        }
-        val payload = Png.encodePalette(w, h, depth, palette, indices,
-          interlaced = Math.floorMod(id, 2) == 1, y => y % 5)
-        MediaRow(id, "image/png", payload.length.toLong, payload)
+  def pngPalTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/png") { id =>
+      // floorMod: % preserves sign, which would index Array(8,4,2,1)
+      // negatively if an id source ever goes negative (xxhash64 seeds).
+      val w = (4 + Math.floorMod(id, 5)).toInt
+      val h = (4 + Math.floorMod(id * 3, 5)).toInt
+      val depth = Array(8, 4, 2, 1)(Math.floorMod(id, 4).toInt)
+      val psize = math.min(16, 1 << depth)
+      val palette = new Array[Byte](psize * 3)
+      for (j <- 0 until psize; c <- 0 until 3)
+        palette(j * 3 + c) =
+          Math.floorMod(id * 41 + j * 37 + c * 11, 256).toByte
+      val indices = Array.tabulate(w * h) { i =>
+        val y = i / w; val x = i % w
+        Math.floorMod(id * 13 + y * 5 + x * 3, psize).toInt
       }
-    }.toDF()
-  }
+      Png.encodePalette(w, h, depth, palette, indices,
+        interlaced = Math.floorMod(id, 2) == 1, y => y % 5)
+    }
 
   /** Plant REAL 16-BIT truecolor PNGs ([[Png.encodeRaw16]]): each
     * sample is a big-endian 16-bit value whose HIGH byte is the
@@ -192,23 +204,18 @@ object Multimodal {
     * hi(y, x, c) = (id·23 + y·9 + x·5 + c·3) % 256,
     * lo(y, x, c) = (id·7 + y·11 + x·13 + c) % 256.
     */
-  def png16Table(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 3) % 5).toInt
-        val data = Array.tabulate(w * h * 3) { i =>
-          val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
-          val hi = ((id * 23 + y * 9 + x * 5 + c * 3) % 256).toInt
-          val lo = ((id * 7 + y * 11 + x * 13 + c) % 256).toInt
-          (hi << 8) | lo
-        }
-        val payload = Png.encodeRaw16(w, h, 2, data, y => y % 5)
-        MediaRow(id, "image/png", payload.length.toLong, payload)
+  def png16Table(docs: DataFrame): DataFrame =
+    plant(docs, "image/png") { id =>
+      val w = (4 + id % 5).toInt
+      val h = (4 + (id * 3) % 5).toInt
+      val data = Array.tabulate(w * h * 3) { i =>
+        val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
+        val hi = ((id * 23 + y * 9 + x * 5 + c * 3) % 256).toInt
+        val lo = ((id * 7 + y * 11 + x * 13 + c) % 256).toInt
+        (hi << 8) | lo
       }
-    }.toDF()
-  }
+      Png.encodeRaw16(w, h, 2, data, y => y % 5)
+    }
 
   /** Plant REAL BMPs ([[Bmp]]): even doc_ids 24-bit BI_RGB (ids
     * divisible by 4 stored TOP-DOWN via negative biHeight, the rest
@@ -220,34 +227,28 @@ object Multimodal {
     * RLE8 palette[j][c] = (id·29 + j·23 + c·13) % 256 with
     * index(y,x) = (id·17 + y·13 + (x div 3)·9) % 16.
     */
-  def bmpTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 3) % 5).toInt
-        val payload =
-          if (id % 2 == 0) {
-            val rgb = Array.tabulate(w * h * 3) { i =>
-              val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
-              ((id * 37 + y * 5 + x * 11 + c * 7) % 256).toByte
-            }
-            Bmp.encode24(w, h, rgb, topDown = id % 4 == 0)
-          } else {
-            val palette = Array.tabulate(16 * 3) { i =>
-              val j = i / 3; val c = i % 3
-              ((id * 29 + j * 23 + c * 13) % 256).toByte
-            }
-            val indices = Array.tabulate(w * h) { i =>
-              val y = i / w; val x = i % w
-              ((id * 17 + y * 13 + (x / 3) * 9) % 16).toInt
-            }
-            Bmp.encodeRle8(w, h, palette, indices)
-          }
-        MediaRow(id, "image/bmp", payload.length.toLong, payload)
+  def bmpTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/bmp") { id =>
+      val w = (4 + id % 5).toInt
+      val h = (4 + (id * 3) % 5).toInt
+      if (id % 2 == 0) {
+        val rgb = Array.tabulate(w * h * 3) { i =>
+          val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
+          ((id * 37 + y * 5 + x * 11 + c * 7) % 256).toByte
+        }
+        Bmp.encode24(w, h, rgb, topDown = id % 4 == 0)
+      } else {
+        val palette = Array.tabulate(16 * 3) { i =>
+          val j = i / 3; val c = i % 3
+          ((id * 29 + j * 23 + c * 13) % 256).toByte
+        }
+        val indices = Array.tabulate(w * h) { i =>
+          val y = i / w; val x = i % w
+          ((id * 17 + y * 13 + (x / 3) * 9) % 16).toInt
+        }
+        Bmp.encodeRle8(w, h, palette, indices)
       }
-    }.toDF()
-  }
+    }
 
   case class BmpStats(doc_id: Long, width: Long, height: Long,
       compression: Long, sum_rgb: Long, pixels_md5: String)
@@ -257,19 +258,14 @@ object Multimodal {
     * to oracle-checkable per-image stats; `pixels_md5` binds every
     * decoded byte. Undecodable payloads are dropped. Map-side only.
     */
-  def decodeBmpStats(spark: SparkSession, media: DataFrame)
-      : Dataset[BmpStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Bmp.decode(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.rgb)
-          BmpStats(r.doc_id, d.width.toLong, d.height.toLong,
-            d.compression.toLong, sum, hex)
-        }
+  def decodeBmpStats(media: DataFrame): Dataset[BmpStats] =
+    perPayload(media) { r =>
+      Bmp.decode(r.payload).map { d =>
+        val (hex, sum) = pixelDigest(d.rgb)
+        BmpStats(r.doc_id, d.width.toLong, d.height.toLong,
+          d.compression.toLong, sum, hex)
       }
     }
-  }
 
   /** Plant REAL ICO containers ([[Ico.encode]]): 1 + id%3 icons per
     * doc; icon j is a PNG entry when (id + j) even (REAL [[Png]]
@@ -281,37 +277,32 @@ object Multimodal {
     *   DIB rgb(y,x,c)  = (id·37 + j·19 + y·5 + x·11 + c·7) % 256
     *   DIB mask(y,x)   = (id + j·5 + y·7 + x·3) % 3 == 0
     */
-  def icoTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val n = (1 + id % 3).toInt
-        val entries: Seq[Ico.Entry] = (0 until n).map { j =>
-          val w = (4 + (id + j) % 5).toInt
-          val h = (4 + (id * 3 + j) % 5).toInt
-          if ((id + j) % 2 == 0) {
-            val rgb = Array.tabulate(w * h * 3) { i =>
-              val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
-              ((id * 31 + j * 17 + y * 7 + x * 3 + c) % 256).toByte
-            }
-            Ico.PngEntry(Png.encode(w, h, rgb, y => y % 5))
-          } else {
-            val rgb = Array.tabulate(w * h * 3) { i =>
-              val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
-              ((id * 37 + j * 19 + y * 5 + x * 11 + c * 7) % 256).toByte
-            }
-            val mask = Array.tabulate(w * h) { i =>
-              val x = i % w; val y = i / w
-              (id + j * 5 + y * 7 + x * 3) % 3 == 0
-            }
-            Ico.DibEntry(w, h, rgb, mask)
+  def icoTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/x-icon") { id =>
+      val n = (1 + id % 3).toInt
+      val entries: Seq[Ico.Entry] = (0 until n).map { j =>
+        val w = (4 + (id + j) % 5).toInt
+        val h = (4 + (id * 3 + j) % 5).toInt
+        if ((id + j) % 2 == 0) {
+          val rgb = Array.tabulate(w * h * 3) { i =>
+            val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
+            ((id * 31 + j * 17 + y * 7 + x * 3 + c) % 256).toByte
           }
+          Ico.PngEntry(Png.encode(w, h, rgb, y => y % 5))
+        } else {
+          val rgb = Array.tabulate(w * h * 3) { i =>
+            val c = i % 3; val x = (i / 3) % w; val y = i / 3 / w
+            ((id * 37 + j * 19 + y * 5 + x * 11 + c * 7) % 256).toByte
+          }
+          val mask = Array.tabulate(w * h) { i =>
+            val x = i % w; val y = i / w
+            (id + j * 5 + y * 7 + x * 3) % 3 == 0
+          }
+          Ico.DibEntry(w, h, rgb, mask)
         }
-        val payload = Ico.encode(entries)
-        MediaRow(id, "image/x-icon", payload.length.toLong, payload)
       }
-    }.toDF()
-  }
+      Ico.encode(entries)
+    }
 
   case class IcoStats(doc_id: Long, icon_idx: Long, width: Long,
       height: Long, is_png: Long, bit_count: Long, sum_rgb: Long,
@@ -323,19 +314,14 @@ object Multimodal {
     * [[Png]] decoder) reduced to per-icon oracle-checkable stats.
     * Undecodable containers/entries drop. Map-side only.
     */
-  def decodeIcoStats(spark: SparkSession, media: DataFrame)
-      : Dataset[IcoStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Ico.parse(r.payload).toSeq.flatten.map { m =>
-          IcoStats(r.doc_id, m.idx.toLong, m.width.toLong,
-            m.height.toLong, if (m.isPng) 1L else 0L, m.bitCount.toLong,
-            m.sumRgb, m.maskBits)
-        }
+  def decodeIcoStats(media: DataFrame): Dataset[IcoStats] =
+    perPayload(media) { r =>
+      Ico.parse(r.payload).toSeq.flatten.map { m =>
+        IcoStats(r.doc_id, m.idx.toLong, m.width.toLong,
+          m.height.toLong, if (m.isPng) 1L else 0L, m.bitCount.toLong,
+          m.sumRgb, m.maskBits)
       }
     }
-  }
 
   case class TileStats(doc_id: Long, tile_y: Long, tile_x: Long,
       n_samples: Long, sum_rgb: Long)
@@ -347,33 +333,29 @@ object Multimodal {
     * the integer bucket (y·g)/h so any width/height splits without
     * floats. Map-side: decode and fold per image, emit g² rows.
     */
-  def tileSignature(spark: SparkSession, media: DataFrame, grid: Int)
-      : Dataset[TileStats] = {
-    import spark.implicits._
+  def tileSignature(media: DataFrame, grid: Int): Dataset[TileStats] = {
     require(grid >= 1 && grid <= 16, "grid out of range")
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Png.decode(r.payload).toSeq.flatMap { d =>
-          val n = new Array[Long](grid * grid)
-          val s = new Array[Long](grid * grid)
-          var y = 0
-          while (y < d.height) {
-            val ty = y * grid / d.height
-            var x = 0
-            while (x < d.width) {
-              val t = ty * grid + x * grid / d.width
-              val p = (y * d.width + x) * 3
-              n(t) += 3
-              s(t) += (d.rgb(p) & 0xFF) + (d.rgb(p + 1) & 0xFF) +
-                (d.rgb(p + 2) & 0xFF)
-              x += 1
-            }
-            y += 1
+    perPayload(media) { r =>
+      Png.decode(r.payload).toSeq.flatMap { d =>
+        val n = new Array[Long](grid * grid)
+        val s = new Array[Long](grid * grid)
+        var y = 0
+        while (y < d.height) {
+          val ty = y * grid / d.height
+          var x = 0
+          while (x < d.width) {
+            val t = ty * grid + x * grid / d.width
+            val p = (y * d.width + x) * 3
+            n(t) += 3
+            s(t) += (d.rgb(p) & 0xFF) + (d.rgb(p + 1) & 0xFF) +
+              (d.rgb(p + 2) & 0xFF)
+            x += 1
           }
-          (0 until grid * grid).filter(n(_) > 0).map { t =>
-            TileStats(r.doc_id, (t / grid).toLong, (t % grid).toLong,
-              n(t), s(t))
-          }
+          y += 1
+        }
+        (0 until grid * grid).filter(n(_) > 0).map { t =>
+          TileStats(r.doc_id, (t / grid).toLong, (t % grid).toLong,
+            n(t), s(t))
         }
       }
     }
@@ -385,28 +367,22 @@ object Multimodal {
     * tokenizer's comment handling is exercised on real rows. Formula
     * samples so the decode oracle can restate the generator.
     */
-  def netpbmTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 7) % 5).toInt
-        val magic = if (id % 2 == 0) 6 else 5
-        val maxval = if (magic == 5 && id % 4 == 1) 1000 else 255
-        val ch = if (magic == 6) 3 else 1
-        val samples = Array.tabulate(w * h * ch) { i =>
-          val c = i % ch; val x = (i / ch) % w; val y = i / ch / w
-          ((id * 41 + y * 19 + x * 7 + c * 5) % (maxval + 1)).toInt
-        }
-        val comment = if (id % 3 == 0) "planted netpbm" else ""
-        val payload = Netpbm.encode(magic, w, h, maxval, samples, comment)
-        MediaRow(id,
-          if (magic == 6) "image/x-portable-pixmap"
-          else "image/x-portable-graymap",
-          payload.length.toLong, payload)
+  def netpbmTable(docs: DataFrame): DataFrame =
+    plant(docs, (id: Long) =>
+      if (id % 2 == 0) "image/x-portable-pixmap"
+      else "image/x-portable-graymap") { id =>
+      val w = (4 + id % 5).toInt
+      val h = (4 + (id * 7) % 5).toInt
+      val magic = if (id % 2 == 0) 6 else 5
+      val maxval = if (magic == 5 && id % 4 == 1) 1000 else 255
+      val ch = if (magic == 6) 3 else 1
+      val samples = Array.tabulate(w * h * ch) { i =>
+        val c = i % ch; val x = (i / ch) % w; val y = i / ch / w
+        ((id * 41 + y * 19 + x * 7 + c * 5) % (maxval + 1)).toInt
       }
-    }.toDF()
-  }
+      val comment = if (id % 3 == 0) "planted netpbm" else ""
+      Netpbm.encode(magic, w, h, maxval, samples, comment)
+    }
 
   case class NetpbmStats(doc_id: Long, fmt: Long, width: Long,
       height: Long, maxval: Long, channels: Long, sum_px: Long,
@@ -418,53 +394,50 @@ object Multimodal {
     * stats; `pixels_md5` (4-hex per sample, interleaved order) binds
     * every decoded value. Undecodable payloads drop. Map-side only.
     */
-  def decodeNetpbmStats(spark: SparkSession, media: DataFrame)
-      : Dataset[NetpbmStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Netpbm.decode(r.payload).map { d =>
-          var sum = 0L
-          val sb = new java.lang.StringBuilder(d.samples.length * 4)
-          var i = 0
-          while (i < d.samples.length) {
-            val v = d.samples(i)
-            sum += v
-            sb.append(Character.forDigit((v >> 12) & 15, 16))
-              .append(Character.forDigit((v >> 8) & 15, 16))
-              .append(Character.forDigit((v >> 4) & 15, 16))
-              .append(Character.forDigit(v & 15, 16))
-            i += 1
-          }
-          NetpbmStats(r.doc_id, d.magic.toLong, d.width.toLong,
-            d.height.toLong, d.maxval.toLong, d.channels.toLong, sum,
-            md5Ascii(sb.toString))
+  def decodeNetpbmStats(media: DataFrame): Dataset[NetpbmStats] =
+    perPayload(media) { r =>
+      Netpbm.decode(r.payload).map { d =>
+        var sum = 0L
+        val sb = new java.lang.StringBuilder(d.samples.length * 4)
+        var i = 0
+        while (i < d.samples.length) {
+          val v = d.samples(i)
+          sum += v
+          sb.append(Character.forDigit((v >> 12) & 15, 16))
+            .append(Character.forDigit((v >> 8) & 15, 16))
+            .append(Character.forDigit((v >> 4) & 15, 16))
+            .append(Character.forDigit(v & 15, 16))
+          i += 1
         }
+        NetpbmStats(r.doc_id, d.magic.toLong, d.width.toLong,
+          d.height.toLong, d.maxval.toLong, d.channels.toLong, sum,
+          md5Ascii(sb.toString))
       }
     }
-  }
 
-  case class PngStats(doc_id: Long, width: Long, height: Long,
+  case class PixelStats(doc_id: Long, width: Long, height: Long,
       sum_rgb: Long, pixels_md5: String)
 
-  /** REAL decode ([[Png.decode]]: chunk walk + CRC32 verify + zlib
-    * inflate + all five unfilters) reduced to oracle-checkable
-    * per-image stats; `pixels_md5` (over the lowercase hex of the
-    * decoded RGB bytes) binds every byte of the reconstruction.
-    * Undecodable payloads are dropped.
+  /** A REAL RGB decode, as (width, height, rgb), reduced to
+    * oracle-checkable per-image stats; `pixels_md5` (over the
+    * lowercase hex of the decoded RGB bytes) binds every byte of the
+    * reconstruction. Undecodable payloads are dropped.
     */
-  def decodePngStats(spark: SparkSession, media: DataFrame)
-      : Dataset[PngStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Png.decode(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.rgb)
-          PngStats(r.doc_id, d.width.toLong, d.height.toLong, sum, hex)
-        }
+  private def pixelStats(media: DataFrame)(
+      decode: Array[Byte] => Option[(Int, Int, Array[Byte])])
+      : Dataset[PixelStats] =
+    perPayload(media) { r =>
+      decode(r.payload).map { case (w, h, rgb) =>
+        val (hex, sum) = pixelDigest(rgb)
+        PixelStats(r.doc_id, w.toLong, h.toLong, sum, hex)
       }
     }
-  }
+
+  /** `pixelStats` over [[Png.decode]]: chunk walk + CRC32 verify +
+    * zlib inflate + all five unfilters.
+    */
+  def decodePngStats(media: DataFrame): Dataset[PixelStats] =
+    pixelStats(media)(Png.decode(_).map(d => (d.width, d.height, d.rgb)))
 
   /** Plant REAL GIF89a images ([[Gif.encode]]): global color table
     * depth rotates 8/4/2/1 by doc_id, odd ids INTERLACED — the
@@ -477,54 +450,33 @@ object Multimodal {
     * palette[j][c] = (id·43 + j·31 + c·17) % 256,
     * index(y, x) = (id·19 + y·11 + x·7) % size.
     */
-  def gifTable(spark: SparkSession, docs: DataFrame,
-      seedOf: Long => Long = identity): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { docId =>
-        val id = seedOf(docId)
-        // floorMod throughout: seedOf may map through a 64-bit hash,
-        // and Scala % preserves sign — a negative seed would index the
-        // depth array out of bounds and feed Gif.encode bad indices.
-        val w = (4 + Math.floorMod(id, 5)).toInt
-        val h = (4 + Math.floorMod(id * 3, 5)).toInt
-        val depth = Array(8, 4, 2, 1)(Math.floorMod(id, 4).toInt)
-        val psize = math.min(16, 1 << depth)
-        val palette = Array.tabulate(3 << depth) { i =>
-          val j = i / 3; val c = i % 3
-          Math.floorMod(id * 43 + j * 31 + c * 17, 256).toByte
-        }
-        val indices = Array.tabulate(w * h) { i =>
-          val y = i / w; val x = i % w
-          Math.floorMod(id * 19 + y * 11 + x * 7, psize).toByte
-        }
-        val payload = Gif.encode(w, h, depth, palette, indices,
-          interlaced = Math.floorMod(id, 2) == 1)
-        MediaRow(docId, "image/gif", payload.length.toLong, payload)
+  def gifTable(docs: DataFrame, seedOf: Long => Long = identity): DataFrame =
+    plant(docs, "image/gif") { docId =>
+      val id = seedOf(docId)
+      // floorMod throughout: seedOf may map through a 64-bit hash,
+      // and Scala % preserves sign — a negative seed would index the
+      // depth array out of bounds and feed Gif.encode bad indices.
+      val w = (4 + Math.floorMod(id, 5)).toInt
+      val h = (4 + Math.floorMod(id * 3, 5)).toInt
+      val depth = Array(8, 4, 2, 1)(Math.floorMod(id, 4).toInt)
+      val psize = math.min(16, 1 << depth)
+      val palette = Array.tabulate(3 << depth) { i =>
+        val j = i / 3; val c = i % 3
+        Math.floorMod(id * 43 + j * 31 + c * 17, 256).toByte
       }
-    }.toDF()
-  }
-
-  case class GifStats(doc_id: Long, width: Long, height: Long,
-      sum_rgb: Long, pixels_md5: String)
-
-  /** REAL decode ([[Gif.decode]]: sub-block reassembly, LZW,
-    * palette expansion, de-interlace) reduced to oracle-checkable
-    * per-image stats; `pixels_md5` (lowercase hex of the decoded RGB
-    * bytes) binds every pixel. Undecodable payloads are dropped.
-    */
-  def decodeGifStats(spark: SparkSession, media: DataFrame)
-      : Dataset[GifStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decode(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.rgb)
-          GifStats(r.doc_id, d.width.toLong, d.height.toLong, sum, hex)
-        }
+      val indices = Array.tabulate(w * h) { i =>
+        val y = i / w; val x = i % w
+        Math.floorMod(id * 19 + y * 11 + x * 7, psize).toByte
       }
+      Gif.encode(w, h, depth, palette, indices,
+        interlaced = Math.floorMod(id, 2) == 1)
     }
-  }
+
+  /** `pixelStats` over [[Gif.decode]]: sub-block reassembly, LZW,
+    * palette expansion, de-interlace.
+    */
+  def decodeGifStats(media: DataFrame): Dataset[PixelStats] =
+    pixelStats(media)(Gif.decode(_).map(d => (d.width, d.height, d.rgb)))
 
   /** Plant REAL ANIMATED GIF89a images ([[Gif.encodeAnimated]]):
     * per doc a 2-4 frame animation whose decode exercises the full
@@ -545,49 +497,44 @@ object Multimodal {
     *     transparent T_k = (id + 5k) % 16,
     *     disposal 2 (restore bg) for odd k, 1 (leave) for even k.
     */
-  def gifAnimTable(spark: SparkSession, docs: DataFrame,
-      seedOf: Long => Long = identity): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { docId =>
-        val id = seedOf(docId)
-        val w = (8 + Math.floorMod(id, 5)).toInt
-        val h = (8 + Math.floorMod(id * 3, 5)).toInt
-        val depth = 4
-        val psize = 1 << depth
-        val palette = Array.tabulate(3 * psize) { i =>
-          val j = i / 3; val c = i % 3
-          Math.floorMod(id * 47 + j * 29 + c * 13, 256).toByte
-        }
-        val nf = (2 + Math.floorMod(id, 3)).toInt
-        // per-frame GCE delay (centiseconds): 2 + (id + 3k) % 7 — the
-        // m20 metadata oracle reads these without decoding pixels
-        val base = Gif.FrameSpec(0, 0, w, h,
-          Array.tabulate(w * h) { i =>
-            val y = i / w; val x = i % w
-            Math.floorMod(id * 19 + y * 11 + x * 7, psize).toByte
-          },
-          disposal = 1, transparent = -1,
-          delayCs = (2 + Math.floorMod(id, 7)).toInt,
-          interlaced = Math.floorMod(id, 2) == 1)
-        val rest = (1 until nf).map { k =>
-          val left = Math.floorMod(id + 3 * k, w - 3).toInt
-          val top = Math.floorMod(id * 5 + 7 * k, h - 3).toInt
-          Gif.FrameSpec(left, top, 4, 4,
-            Array.tabulate(16) { i =>
-              val v = i / 4; val u = i % 4
-              Math.floorMod(id * 3 + k * 23 + v * 5 + u * 9, psize).toByte
-            },
-            disposal = if (k % 2 == 1) 2 else 1,
-            transparent = Math.floorMod(id + 5 * k, psize).toInt,
-            delayCs = (2 + Math.floorMod(id + 3 * k, 7)).toInt)
-        }
-        val payload = Gif.encodeAnimated(w, h, depth, palette,
-          base +: rest)
-        MediaRow(docId, "image/gif", payload.length.toLong, payload)
+  def gifAnimTable(docs: DataFrame,
+      seedOf: Long => Long = identity): DataFrame =
+    plant(docs, "image/gif") { docId =>
+      val id = seedOf(docId)
+      val w = (8 + Math.floorMod(id, 5)).toInt
+      val h = (8 + Math.floorMod(id * 3, 5)).toInt
+      val depth = 4
+      val psize = 1 << depth
+      val palette = Array.tabulate(3 * psize) { i =>
+        val j = i / 3; val c = i % 3
+        Math.floorMod(id * 47 + j * 29 + c * 13, 256).toByte
       }
-    }.toDF()
-  }
+      val nf = (2 + Math.floorMod(id, 3)).toInt
+      // per-frame GCE delay (centiseconds): 2 + (id + 3k) % 7 — the
+      // m20 metadata oracle reads these without decoding pixels
+      val base = Gif.FrameSpec(0, 0, w, h,
+        Array.tabulate(w * h) { i =>
+          val y = i / w; val x = i % w
+          Math.floorMod(id * 19 + y * 11 + x * 7, psize).toByte
+        },
+        disposal = 1, transparent = -1,
+        delayCs = (2 + Math.floorMod(id, 7)).toInt,
+        interlaced = Math.floorMod(id, 2) == 1)
+      val rest = (1 until nf).map { k =>
+        val left = Math.floorMod(id + 3 * k, w - 3).toInt
+        val top = Math.floorMod(id * 5 + 7 * k, h - 3).toInt
+        Gif.FrameSpec(left, top, 4, 4,
+          Array.tabulate(16) { i =>
+            val v = i / 4; val u = i % 4
+            Math.floorMod(id * 3 + k * 23 + v * 5 + u * 9, psize).toByte
+          },
+          disposal = if (k % 2 == 1) 2 else 1,
+          transparent = Math.floorMod(id + 5 * k, psize).toInt,
+          delayCs = (2 + Math.floorMod(id + 3 * k, 7)).toInt)
+      }
+      Gif.encodeAnimated(w, h, depth, palette,
+        base +: rest)
+    }
 
   case class GifFrameStats(doc_id: Long, frame_idx: Long, width: Long,
       height: Long, sum_rgb: Long, pixels_md5: String)
@@ -597,21 +544,16 @@ object Multimodal {
     * oracle-checkable per-frame stats; `pixels_md5` binds every
     * canvas byte after each frame. Undecodable payloads are dropped.
     */
-  def decodeGifFrameStats(spark: SparkSession, media: DataFrame)
-      : Dataset[GifFrameStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
-          fs.iterator.zipWithIndex.map { case (d, i) =>
-            val (hex, sum) = pixelDigest(d.rgb)
-            GifFrameStats(r.doc_id, i.toLong, d.width.toLong,
-              d.height.toLong, sum, hex)
-          }
+  def decodeGifFrameStats(media: DataFrame): Dataset[GifFrameStats] =
+    perPayload(media) { r =>
+      Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
+        fs.iterator.zipWithIndex.map { case (d, i) =>
+          val (hex, sum) = pixelDigest(d.rgb)
+          GifFrameStats(r.doc_id, i.toLong, d.width.toLong,
+            d.height.toLong, sum, hex)
         }
       }
     }
-  }
 
   case class AnimMetaRow(doc_id: Long, width: Long, height: Long,
       n_frames: Long, total_delay_cs: Long, looped: Boolean)
@@ -621,18 +563,13 @@ object Multimodal {
     * inflated): the 100 TB cataloguing pass that must not pay the
     * decode. Unparseable payloads are dropped.
     */
-  def gifAnimMeta(spark: SparkSession, media: DataFrame)
-      : Dataset[AnimMetaRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.animMeta(r.payload).map { m =>
-          AnimMetaRow(r.doc_id, m.width.toLong, m.height.toLong,
-            m.nFrames.toLong, m.totalDelayCs.toLong, m.looped)
-        }
+  def gifAnimMeta(media: DataFrame): Dataset[AnimMetaRow] =
+    perPayload(media) { r =>
+      Gif.animMeta(r.payload).map { m =>
+        AnimMetaRow(r.doc_id, m.width.toLong, m.height.toLong,
+          m.nFrames.toLong, m.totalDelayCs.toLong, m.looped)
       }
     }
-  }
 
   case class FrameSampleStats(doc_id: Long, sample_idx: Long,
       frame_idx: Long, sum_rgb: Long, pixels_md5: String)
@@ -645,22 +582,18 @@ object Multimodal {
     * for payloads with a real decoder. Same scale shape as every
     * decode step: map-side only, one row per (payload, sample).
     */
-  def sampleGifFrames(spark: SparkSession, media: DataFrame,
-      nSamples: Int): Dataset[FrameSampleStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
-          val nf = fs.length
-          (0 until nSamples).iterator.map { i =>
-            val f = i * nf / nSamples
-            val (hex, sum) = pixelDigest(fs(f).rgb)
-            FrameSampleStats(r.doc_id, i.toLong, f.toLong, sum, hex)
-          }
+  def sampleGifFrames(media: DataFrame,
+      nSamples: Int): Dataset[FrameSampleStats] =
+    perPayload(media) { r =>
+      Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
+        val nf = fs.length
+        (0 until nSamples).iterator.map { i =>
+          val f = i * nf / nSamples
+          val (hex, sum) = pixelDigest(fs(f).rgb)
+          FrameSampleStats(r.doc_id, i.toLong, f.toLong, sum, hex)
         }
       }
     }
-  }
 
   case class AnimSigRow(doc_id: Long, n_frames: Long, anim_sig: String)
 
@@ -672,19 +605,14 @@ object Multimodal {
     * near-identical re-encodes collapse, reordered or re-timed cuts
     * do not. Map-side only; undecodable payloads drop.
     */
-  def animDHash(spark: SparkSession, media: DataFrame)
-      : Dataset[AnimSigRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decodeFrames(r.payload).map { fs =>
-          val joined = fs.iterator
-            .map(f => dhashHex(f.width, f.height, f.rgb)).mkString
-          AnimSigRow(r.doc_id, fs.length.toLong, md5Ascii(joined))
-        }
+  def animDHash(media: DataFrame): Dataset[AnimSigRow] =
+    perPayload(media) { r =>
+      Gif.decodeFrames(r.payload).map { fs =>
+        val joined = fs.iterator
+          .map(f => dhashHex(f.width, f.height, f.rgb)).mkString
+        AnimSigRow(r.doc_id, fs.length.toLong, md5Ascii(joined))
       }
     }
-  }
 
   case class ShotCutRow(doc_id: Long, frame_idx: Long, diff_total: Long,
       changed_px: Long, is_cut: Boolean)
@@ -702,38 +630,34 @@ object Multimodal {
     * canvas pass per frame pair, state = two frames; undecodable
     * payloads drop row-local.
     */
-  def shotCuts(spark: SparkSession, media: DataFrame,
-      threshMilli: Long = 200L): Dataset[ShotCutRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
-          fs.iterator.zipWithIndex.drop(1).map { case (f, i) =>
-            val prev = fs(i - 1)
-            val n = f.width * f.height
-            var diff = 0L
-            var changed = 0L
-            var px = 0
-            while (px < n) {
-              var c = 0
-              var any = false
-              while (c < 3) {
-                val d = (f.rgb(px * 3 + c) & 0xff) -
-                  (prev.rgb(px * 3 + c) & 0xff)
-                diff += math.abs(d)
-                if (d != 0) any = true
-                c += 1
-              }
-              if (any) changed += 1
-              px += 1
+  def shotCuts(media: DataFrame,
+      threshMilli: Long = 200L): Dataset[ShotCutRow] =
+    perPayload(media) { r =>
+      Gif.decodeFrames(r.payload).iterator.flatMap { fs =>
+        fs.iterator.zipWithIndex.drop(1).map { case (f, i) =>
+          val prev = fs(i - 1)
+          val n = f.width * f.height
+          var diff = 0L
+          var changed = 0L
+          var px = 0
+          while (px < n) {
+            var c = 0
+            var any = false
+            while (c < 3) {
+              val d = (f.rgb(px * 3 + c) & 0xff) -
+                (prev.rgb(px * 3 + c) & 0xff)
+              diff += math.abs(d)
+              if (d != 0) any = true
+              c += 1
             }
-            ShotCutRow(r.doc_id, i.toLong, diff, changed,
-              changed * 1000L >= threshMilli * n)
+            if (any) changed += 1
+            px += 1
           }
+          ShotCutRow(r.doc_id, i.toLong, diff, changed,
+            changed * 1000L >= threshMilli * n)
         }
       }
     }
-  }
 
   case class ResampleStats(doc_id: Long, sr_in: Long, n_in: Long,
       n_out: Long, sum_scaled: Long, vals_md5: String)
@@ -751,41 +675,37 @@ object Multimodal {
     * joined signed decimals in order) binds every output sample.
     * Map-side only; undecodable payloads drop.
     */
-  def resampleWav(spark: SparkSession, media: DataFrame,
-      targetRate: Int = 16000): Dataset[ResampleStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).map { d =>
-          val ch = d.channels
-          val nf = d.samples.length / ch
-          val mono = Array.tabulate(nf) { i =>
-            var s = 0L
-            var c = 0
-            while (c < ch) { s += d.samples(i * ch + c); c += 1 }
-            s / ch // truncating mean (SQL integer-division semantics)
-          }
-          val nOut = (nf.toLong * targetRate / d.sampleRate).toInt
-          val sb = new java.lang.StringBuilder
-          var sum = 0L
-          var j = 0
-          while (j < nOut) {
-            val pn = j.toLong * d.sampleRate
-            val p = (pn / targetRate).toInt
-            val rem = pn % targetRate
-            val p1 = math.min(p + 1, nf - 1)
-            val y = mono(p) * (targetRate - rem) + mono(p1) * rem
-            sum += y
-            if (j > 0) sb.append(',')
-            sb.append(y)
-            j += 1
-          }
-          ResampleStats(r.doc_id, d.sampleRate.toLong, nf.toLong,
-            nOut.toLong, sum, md5Ascii(sb.toString))
+  def resampleWav(media: DataFrame,
+      targetRate: Int = 16000): Dataset[ResampleStats] =
+    perPayload(media) { r =>
+      Wav.decode(r.payload).map { d =>
+        val ch = d.channels
+        val nf = d.samples.length / ch
+        val mono = Array.tabulate(nf) { i =>
+          var s = 0L
+          var c = 0
+          while (c < ch) { s += d.samples(i * ch + c); c += 1 }
+          s / ch // truncating mean (SQL integer-division semantics)
         }
+        val nOut = (nf.toLong * targetRate / d.sampleRate).toInt
+        val sb = new java.lang.StringBuilder
+        var sum = 0L
+        var j = 0
+        while (j < nOut) {
+          val pn = j.toLong * d.sampleRate
+          val p = (pn / targetRate).toInt
+          val rem = pn % targetRate
+          val p1 = math.min(p + 1, nf - 1)
+          val y = mono(p) * (targetRate - rem) + mono(p1) * rem
+          sum += y
+          if (j > 0) sb.append(',')
+          sb.append(y)
+          j += 1
+        }
+        ResampleStats(r.doc_id, d.sampleRate.toLong, nf.toLong,
+          nOut.toLong, sum, md5Ascii(sb.toString))
       }
     }
-  }
 
   case class VadSegment(doc_id: Long, seg: Long, start_j: Long,
       end_j: Long, n_samples: Long, sum_abs: Long)
@@ -804,54 +724,51 @@ object Multimodal {
     * deterministic sort; docs that never cross the threshold simply
     * have no rows, exactly like the oracle.
     */
-  def vadSegments(spark: SparkSession, media: DataFrame,
+  def vadSegments(media: DataFrame,
       targetRate: Int = 16000, threshold: Long = 8192,
       minRun: Int = 4): Dataset[VadSegment] = {
-    import spark.implicits._
     val thr = threshold * targetRate
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).toSeq.flatMap { d =>
-          val ch = d.channels
-          val nf = d.samples.length / ch
-          val mono = Array.tabulate(nf) { i =>
-            var s = 0L
-            var c = 0
-            while (c < ch) { s += d.samples(i * ch + c); c += 1 }
-            s / ch // truncating mean (SQL integer-division semantics)
-          }
-          val nOut = (nf.toLong * targetRate / d.sampleRate).toInt
-          val segs = scala.collection.mutable.ArrayBuffer[VadSegment]()
-          var seg = 0L
-          var runStart = -1
-          var runSum = 0L
-          var j = 0
-          def close(endExclusive: Int): Unit = {
-            if (runStart >= 0 && endExclusive - runStart >= minRun) {
-              seg += 1
-              segs += VadSegment(r.doc_id, seg, runStart.toLong,
-                (endExclusive - 1).toLong,
-                (endExclusive - runStart).toLong, runSum)
-            }
-            runStart = -1
-            runSum = 0L
-          }
-          while (j < nOut) {
-            val pn = j.toLong * d.sampleRate
-            val p = (pn / targetRate).toInt
-            val rem = pn % targetRate
-            val p1 = math.min(p + 1, nf - 1)
-            val y = mono(p) * (targetRate - rem) + mono(p1) * rem
-            val a = math.abs(y)
-            if (a >= thr) {
-              if (runStart < 0) runStart = j
-              runSum += a
-            } else close(j)
-            j += 1
-          }
-          close(nOut)
-          segs
+    perPayload(media) { r =>
+      Wav.decode(r.payload).toSeq.flatMap { d =>
+        val ch = d.channels
+        val nf = d.samples.length / ch
+        val mono = Array.tabulate(nf) { i =>
+          var s = 0L
+          var c = 0
+          while (c < ch) { s += d.samples(i * ch + c); c += 1 }
+          s / ch // truncating mean (SQL integer-division semantics)
         }
+        val nOut = (nf.toLong * targetRate / d.sampleRate).toInt
+        val segs = scala.collection.mutable.ArrayBuffer[VadSegment]()
+        var seg = 0L
+        var runStart = -1
+        var runSum = 0L
+        var j = 0
+        def close(endExclusive: Int): Unit = {
+          if (runStart >= 0 && endExclusive - runStart >= minRun) {
+            seg += 1
+            segs += VadSegment(r.doc_id, seg, runStart.toLong,
+              (endExclusive - 1).toLong,
+              (endExclusive - runStart).toLong, runSum)
+          }
+          runStart = -1
+          runSum = 0L
+        }
+        while (j < nOut) {
+          val pn = j.toLong * d.sampleRate
+          val p = (pn / targetRate).toInt
+          val rem = pn % targetRate
+          val p1 = math.min(p + 1, nf - 1)
+          val y = mono(p) * (targetRate - rem) + mono(p1) * rem
+          val a = math.abs(y)
+          if (a >= thr) {
+            if (runStart < 0) runStart = j
+            runSum += a
+          } else close(j)
+          j += 1
+        }
+        close(nOut)
+        segs
       }
     }
   }
@@ -866,28 +783,23 @@ object Multimodal {
     * so the lossy codec is EXACT on this corpus and the oracle can
     * recompute every pixel WITHOUT a decoder.
     */
-  def jpegTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (8 * (2 + id % 3)).toInt
-        val h = (8 * (2 + (id * 5) % 3)).toInt
-        val gray = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            gray(y * w + x) =
-              (2 * ((id * 29 + (y / 8) * 13 + (x / 8) * 7) % 128)).toByte
-            x += 1
-          }
-          y += 1
+  def jpegTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/jpeg") { id =>
+      val w = (8 * (2 + id % 3)).toInt
+      val h = (8 * (2 + (id * 5) % 3)).toInt
+      val gray = new Array[Byte](w * h)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          gray(y * w + x) =
+            (2 * ((id * 29 + (y / 8) * 13 + (x / 8) * 7) % 128)).toByte
+          x += 1
         }
-        val payload = Jpeg.encode(w, h, gray)
-        MediaRow(id, "image/jpeg", payload.length.toLong, payload)
+        y += 1
       }
-    }.toDF()
-  }
+      Jpeg.encode(w, h, gray)
+    }
 
   case class JpegStats(doc_id: Long, width: Long, height: Long,
       sum_gray: Long, pixels_md5: String)
@@ -898,18 +810,13 @@ object Multimodal {
     * the lowercase hex of the decoded gray bytes) binds every pixel
     * of the reconstruction. Undecodable payloads are dropped.
     */
-  def decodeJpegStats(spark: SparkSession, media: DataFrame)
-      : Dataset[JpegStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Jpeg.decode(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.gray)
-          JpegStats(r.doc_id, d.width.toLong, d.height.toLong, sum, hex)
-        }
+  def decodeJpegStats(media: DataFrame): Dataset[JpegStats] =
+    perPayload(media) { r =>
+      Jpeg.decode(r.payload).map { d =>
+        val (hex, sum) = pixelDigest(d.gray)
+        JpegStats(r.doc_id, d.width.toLong, d.height.toLong, sum, hex)
       }
     }
-  }
 
   /** Plant REAL WAV clips (encoded by [[Wav.encode]]: RIFF container,
     * odd-length LIST chunk exercising skip-and-pad, interleaved
@@ -919,29 +826,24 @@ object Multimodal {
     * ((id·131 + i·37 + c·17 + 13) % 65536) − 32768 — so the oracle
     * recomputes the expected samples WITHOUT a decoder.
     */
-  def wavTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val sr = (8000 + (id % 4) * 4000).toInt
-        val ch = (1 + id % 2).toInt
-        val nf = (32 + (id * 7) % 33).toInt
-        val samples = new Array[Short](nf * ch)
-        var i = 0
-        while (i < nf) {
-          var c = 0
-          while (c < ch) {
-            samples(i * ch + c) =
-              (((id * 131 + i * 37 + c * 17 + 13) % 65536) - 32768).toShort
-            c += 1
-          }
-          i += 1
+  def wavTable(docs: DataFrame): DataFrame =
+    plant(docs, "audio/wav") { id =>
+      val sr = (8000 + (id % 4) * 4000).toInt
+      val ch = (1 + id % 2).toInt
+      val nf = (32 + (id * 7) % 33).toInt
+      val samples = new Array[Short](nf * ch)
+      var i = 0
+      while (i < nf) {
+        var c = 0
+        while (c < ch) {
+          samples(i * ch + c) =
+            (((id * 131 + i * 37 + c * 17 + 13) % 65536) - 32768).toShort
+          c += 1
         }
-        val payload = Wav.encode(sr, ch, samples)
-        MediaRow(id, "audio/wav", payload.length.toLong, payload)
+        i += 1
       }
-    }.toDF()
-  }
+      Wav.encode(sr, ch, samples)
+    }
 
   case class WavStats(doc_id: Long, sample_rate: Long, channels: Long,
       n_samples: Long, sum_val: Long, peak: Long, samples_md5: String)
@@ -952,43 +854,29 @@ object Multimodal {
     * interleaved order) binds every decoded sample exactly.
     * Undecodable payloads are dropped.
     */
-  def decodeWavStats(spark: SparkSession, media: DataFrame)
-      : Dataset[WavStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).map { d =>
-          var sum = 0L
-          var peak = 0L
-          val sb = new java.lang.StringBuilder(d.samples.length * 7)
-          var i = 0
-          while (i < d.samples.length) {
-            val v = d.samples(i).toLong
-            sum += v
-            val a = math.abs(v)
-            if (a > peak) peak = a
-            if (i > 0) sb.append(',')
-            sb.append(v)
-            i += 1
-          }
-          WavStats(r.doc_id, d.sampleRate.toLong, d.channels.toLong,
-            d.samples.length.toLong, sum, peak, md5Ascii(sb.toString))
+  def decodeWavStats(media: DataFrame): Dataset[WavStats] =
+    perPayload(media) { r =>
+      Wav.decode(r.payload).map { d =>
+        var sum = 0L
+        var peak = 0L
+        val sb = new java.lang.StringBuilder(d.samples.length * 7)
+        var i = 0
+        while (i < d.samples.length) {
+          val v = d.samples(i).toLong
+          sum += v
+          val a = math.abs(v)
+          if (a > peak) peak = a
+          if (i > 0) sb.append(',')
+          sb.append(v)
+          i += 1
         }
+        WavStats(r.doc_id, d.sampleRate.toLong, d.channels.toLong,
+          d.samples.length.toLong, sum, peak, md5Ascii(sb.toString))
       }
     }
-  }
 
   case class DHashRow(doc_id: Long, dhash_hex: String)
 
-  /** Difference hash over REAL decoded pixels ([[Png.decode]]): the
-    * perceptual-hash pass of an image dedup pipeline, on actual
-    * reconstructed RGB — not payload bytes. Grayscale by integer
-    * (r+g+b)/3, nearest-neighbor sample to a 9×8 grid (the dHash
-    * resize, exact integer stride arithmetic so the oracle can
-    * mirror it), then 64 bits of left-vs-right comparisons packed as
-    * 16 hex chars (8 row bytes — a string, so no sign-bit overflow
-    * games with BIGINT). Undecodable payloads are dropped.
-    */
   /** 8x8 horizontal-gradient dHash over a decoded RGB buffer —
     * shared by the PNG (m10) and GIF (m18) perceptual-dedup paths:
     * 9 nearest-neighbor column samples per row band, one bit per
@@ -1019,31 +907,30 @@ object Multimodal {
     sb.toString
   }
 
-  def pngDHash(spark: SparkSession, media: DataFrame)
-      : Dataset[DHashRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Png.decode(r.payload).map(d =>
-          DHashRow(r.doc_id, dhashHex(d.width, d.height, d.rgb)))
-      }
+  /** Difference hash over REAL decoded pixels ([[Png.decode]]): the
+    * perceptual-hash pass of an image dedup pipeline, on actual
+    * reconstructed RGB — not payload bytes. Grayscale by integer
+    * (r+g+b)/3, nearest-neighbor sample to a 9×8 grid (the dHash
+    * resize, exact integer stride arithmetic so the oracle can
+    * mirror it), then 64 bits of left-vs-right comparisons packed as
+    * 16 hex chars (8 row bytes — a string, so no sign-bit overflow
+    * games with BIGINT). Undecodable payloads are dropped.
+    */
+  def pngDHash(media: DataFrame): Dataset[DHashRow] =
+    perPayload(media) { r =>
+      Png.decode(r.payload).map(d =>
+        DHashRow(r.doc_id, dhashHex(d.width, d.height, d.rgb)))
     }
-  }
 
   /** dHash over REAL GIF decode — the m10 perceptual dedup with the
     * m17 codec in front (palette expansion + de-interlace feed the
     * same gradient hash). Undecodable payloads drop.
     */
-  def gifDHash(spark: SparkSession, media: DataFrame)
-      : Dataset[DHashRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Gif.decode(r.payload).map(d =>
-          DHashRow(r.doc_id, dhashHex(d.width, d.height, d.rgb)))
-      }
+  def gifDHash(media: DataFrame): Dataset[DHashRow] =
+    perPayload(media) { r =>
+      Gif.decode(r.payload).map(d =>
+        DHashRow(r.doc_id, dhashHex(d.width, d.height, d.rgb)))
     }
-  }
 
   case class ThumbPixel(doc_id: Long, idx: Long, r: Long, g: Long,
       b: Long)
@@ -1056,25 +943,20 @@ object Multimodal {
     * regardless of input size (what makes a feature store's row
     * width predictable). Undecodable payloads are dropped.
     */
-  def pngThumbnail(spark: SparkSession, media: DataFrame, side: Int)
-      : Dataset[ThumbPixel] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Png.decode(r.payload).iterator.flatMap { d =>
-          val w = d.width; val h = d.height
-          (0 until side * side).iterator.map { idx =>
-            val ty = idx / side; val tx = idx % side
-            val base = ((ty * h / side) * w + (tx * w / side)) * 3
-            ThumbPixel(r.doc_id, idx.toLong,
-              (d.rgb(base) & 0xFF).toLong,
-              (d.rgb(base + 1) & 0xFF).toLong,
-              (d.rgb(base + 2) & 0xFF).toLong)
-          }
+  def pngThumbnail(media: DataFrame, side: Int): Dataset[ThumbPixel] =
+    perPayload(media) { r =>
+      Png.decode(r.payload).iterator.flatMap { d =>
+        val w = d.width; val h = d.height
+        (0 until side * side).iterator.map { idx =>
+          val ty = idx / side; val tx = idx % side
+          val base = ((ty * h / side) * w + (tx * w / side)) * 3
+          ThumbPixel(r.doc_id, idx.toLong,
+            (d.rgb(base) & 0xFF).toLong,
+            (d.rgb(base + 1) & 0xFF).toLong,
+            (d.rgb(base + 2) & 0xFF).toLong)
         }
       }
     }
-  }
 
   case class AudioFeatures(doc_id: Long, n_samples: Long, sum_sq: Long,
       zero_cross: Long, dc_sum: Long)
@@ -1087,33 +969,28 @@ object Multimodal {
     * offset sum. All exact integers, so cross-engine parity is
     * arithmetic, not floating-point luck.
     */
-  def audioFeatures(spark: SparkSession, media: DataFrame)
-      : Dataset[AudioFeatures] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).map { d =>
-          val ch = d.channels
-          val n = d.samples.length
-          var sumSq = 0L
-          var dc = 0L
-          var zc = 0L
-          var i = 0
-          while (i < n) {
-            val v = d.samples(i).toLong
-            sumSq += v * v
-            dc += v
-            if (i >= ch) {
-              val prev = d.samples(i - ch).toLong // same channel, prior frame
-              if ((v >= 0) != (prev >= 0)) zc += 1
-            }
-            i += 1
+  def audioFeatures(media: DataFrame): Dataset[AudioFeatures] =
+    perPayload(media) { r =>
+      Wav.decode(r.payload).map { d =>
+        val ch = d.channels
+        val n = d.samples.length
+        var sumSq = 0L
+        var dc = 0L
+        var zc = 0L
+        var i = 0
+        while (i < n) {
+          val v = d.samples(i).toLong
+          sumSq += v * v
+          dc += v
+          if (i >= ch) {
+            val prev = d.samples(i - ch).toLong // same channel, prior frame
+            if ((v >= 0) != (prev >= 0)) zc += 1
           }
-          AudioFeatures(r.doc_id, n.toLong, sumSq, zc, dc)
+          i += 1
         }
+        AudioFeatures(r.doc_id, n.toLong, sumSq, zc, dc)
       }
     }
-  }
 
   case class AudioAutocorr(doc_id: Long, channel: Long, lag: Long,
       ac: Long, sum_sq: Long)
@@ -1129,30 +1006,25 @@ object Multimodal {
     * decode-and-fold shape as [[audioFeatures]]; undecodable
     * payloads drop.
     */
-  def audioAutocorr(spark: SparkSession, media: DataFrame,
-      lags: Seq[Int]): Dataset[AudioAutocorr] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).toSeq.flatMap { d =>
-          val ch = d.channels
-          val nf = d.samples.length / ch
-          (0 until ch).flatMap { c =>
-            val v = Array.tabulate(nf)(i => d.samples(i * ch + c).toLong)
-            var ss = 0L
-            var i = 0
-            while (i < nf) { ss += v(i) * v(i); i += 1 }
-            lags.map { l =>
-              var a = 0L
-              var j = 0
-              while (j + l < nf) { a += v(j) * v(j + l); j += 1 }
-              AudioAutocorr(r.doc_id, c.toLong, l.toLong, a, ss)
-            }
+  def audioAutocorr(media: DataFrame, lags: Seq[Int]): Dataset[AudioAutocorr] =
+    perPayload(media) { r =>
+      Wav.decode(r.payload).toSeq.flatMap { d =>
+        val ch = d.channels
+        val nf = d.samples.length / ch
+        (0 until ch).flatMap { c =>
+          val v = Array.tabulate(nf)(i => d.samples(i * ch + c).toLong)
+          var ss = 0L
+          var i = 0
+          while (i < nf) { ss += v(i) * v(i); i += 1 }
+          lags.map { l =>
+            var a = 0L
+            var j = 0
+            while (j + l < nf) { a += v(j) * v(j + l); j += 1 }
+            AudioAutocorr(r.doc_id, c.toLong, l.toLong, a, ss)
           }
         }
       }
     }
-  }
 
   case class AudioBands(doc_id: Long, channel: Long, dc: Long,
       p_fs4: Long, p_fs2: Long, energy: Long)
@@ -1169,38 +1041,33 @@ object Multimodal {
     * spectrum a curation featurizer thresholds on. Map-side decode
     * only; one deterministic sort.
     */
-  def audioBands(spark: SparkSession, media: DataFrame)
-      : Dataset[AudioBands] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).toSeq.flatMap { d =>
-          val ch = d.channels
-          val nf = d.samples.length / ch
-          (0 until ch).map { c =>
-            var dc = 0L; var re4 = 0L; var im4 = 0L
-            var alt = 0L; var energy = 0L
-            var i = 0
-            while (i < nf) {
-              val v = d.samples(i * ch + c).toLong
-              dc += v
-              energy += v * v
-              (i % 4: @annotation.switch) match {
-                case 0 => re4 += v
-                case 1 => im4 += v
-                case 2 => re4 -= v
-                case 3 => im4 -= v
-              }
-              alt += (if (i % 2 == 0) v else -v)
-              i += 1
+  def audioBands(media: DataFrame): Dataset[AudioBands] =
+    perPayload(media) { r =>
+      Wav.decode(r.payload).toSeq.flatMap { d =>
+        val ch = d.channels
+        val nf = d.samples.length / ch
+        (0 until ch).map { c =>
+          var dc = 0L; var re4 = 0L; var im4 = 0L
+          var alt = 0L; var energy = 0L
+          var i = 0
+          while (i < nf) {
+            val v = d.samples(i * ch + c).toLong
+            dc += v
+            energy += v * v
+            (i % 4: @annotation.switch) match {
+              case 0 => re4 += v
+              case 1 => im4 += v
+              case 2 => re4 -= v
+              case 3 => im4 -= v
             }
-            AudioBands(r.doc_id, c.toLong, dc,
-              re4 * re4 + im4 * im4, alt * alt, energy)
+            alt += (if (i % 2 == 0) v else -v)
+            i += 1
           }
+          AudioBands(r.doc_id, c.toLong, dc,
+            re4 * re4 + im4 * im4, alt * alt, energy)
         }
       }
     }
-  }
 
   case class OnsetRow(doc_id: Long, channel: Long, frame_idx: Long,
       energy: Long, is_onset: Boolean)
@@ -1215,31 +1082,27 @@ object Multimodal {
     * Map-side decode-and-fold; lag state lives inside the row's own
     * scan, so the one definition serves append-mode streams too.
     */
-  def audioOnsets(spark: SparkSession, media: DataFrame,
-      frame: Int = 16): Dataset[OnsetRow] = {
-    import spark.implicits._
+  def audioOnsets(media: DataFrame, frame: Int = 16): Dataset[OnsetRow] = {
     require(frame >= 1, "frame must be positive")
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Wav.decode(r.payload).toSeq.flatMap { d =>
-          val ch = d.channels
-          val nf = d.samples.length / ch
-          val nFrames = (nf + frame - 1) / frame
-          (0 until ch).flatMap { c =>
-            var prev = 0L
-            (0 until nFrames).map { f =>
-              var energy = 0L
-              var i = f * frame
-              val end = math.min((f + 1) * frame, nf)
-              while (i < end) {
-                val v = d.samples(i * ch + c).toLong
-                energy += v * v
-                i += 1
-              }
-              val onset = f > 0 && energy * 2 > prev * 3
-              prev = energy
-              OnsetRow(r.doc_id, c.toLong, f.toLong, energy, onset)
+    perPayload(media) { r =>
+      Wav.decode(r.payload).toSeq.flatMap { d =>
+        val ch = d.channels
+        val nf = d.samples.length / ch
+        val nFrames = (nf + frame - 1) / frame
+        (0 until ch).flatMap { c =>
+          var prev = 0L
+          (0 until nFrames).map { f =>
+            var energy = 0L
+            var i = f * frame
+            val end = math.min((f + 1) * frame, nf)
+            while (i < end) {
+              val v = d.samples(i * ch + c).toLong
+              energy += v * v
+              i += 1
             }
+            val onset = f > 0 && energy * 2 > prev * 3
+            prev = energy
+            OnsetRow(r.doc_id, c.toLong, f.toLong, energy, onset)
           }
         }
       }
@@ -1257,44 +1120,34 @@ object Multimodal {
     * offset-indirected ASCII storage paths, and all field values
     * are id formulas so the parse oracle restates them.
     */
-  def exifTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val jpeg = Jpeg.encode(16, 8,
-          Array.tabulate(128)(i => ((id * 7 + i * 3) % 256).toByte))
-        val dt = f"${2000 + id % 20}%04d:${1 + id % 12}%02d:" +
-          f"${1 + id % 28}%02d ${id % 24}%02d:${id % 60}%02d:" +
-          f"${id * 7 % 60}%02d"
-        val make =
-          if (id % 5 == 0) "c" + (id % 10) else "cam" + (id % 100)
-        val meta = Exif.Meta(
-          byteOrder = if (id % 2 == 0) "II" else "MM",
-          orientation = (1 + id % 8).toInt,
-          width = 100 + id % 50, height = 50 + id % 30,
-          dateTime = dt, make = make)
-        val payload = Exif.encodeInto(jpeg, meta)
-        MediaRow(id, "image/jpeg", payload.length.toLong, payload)
-      }
-    }.toDF()
-  }
+  def exifTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/jpeg") { id =>
+      val jpeg = Jpeg.encode(16, 8,
+        Array.tabulate(128)(i => ((id * 7 + i * 3) % 256).toByte))
+      val dt = f"${2000 + id % 20}%04d:${1 + id % 12}%02d:" +
+        f"${1 + id % 28}%02d ${id % 24}%02d:${id % 60}%02d:" +
+        f"${id * 7 % 60}%02d"
+      val make =
+        if (id % 5 == 0) "c" + (id % 10) else "cam" + (id % 100)
+      val meta = Exif.Meta(
+        byteOrder = if (id % 2 == 0) "II" else "MM",
+        orientation = (1 + id % 8).toInt,
+        width = 100 + id % 50, height = 50 + id % 30,
+        dateTime = dt, make = make)
+      Exif.encodeInto(jpeg, meta)
+    }
 
   /** REAL EXIF parse ([[Exif.parse]]: JPEG marker walk → APP1 →
     * endian-aware TIFF IFD machine with inline vs offset values)
     * per media row; unparseable payloads drop. Map-side only.
     */
-  def parseExifMeta(spark: SparkSession, media: DataFrame)
-      : Dataset[ExifRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Exif.parse(r.payload).map { m =>
-          ExifRow(r.doc_id, m.byteOrder, m.orientation.toLong,
-            m.width, m.height, m.dateTime, m.make)
-        }
+  def parseExifMeta(media: DataFrame): Dataset[ExifRow] =
+    perPayload(media) { r =>
+      Exif.parse(r.payload).map { m =>
+        ExifRow(r.doc_id, m.byteOrder, m.orientation.toLong,
+          m.width, m.height, m.dateTime, m.make)
       }
     }
-  }
 
   case class TiffStats(doc_id: Long, width: Long, height: Long,
       samples_per_pixel: Long, photometric: Long, n_strips: Long,
@@ -1307,44 +1160,34 @@ object Multimodal {
     * short final strip. Pixels are id formulas so the decode oracle
     * restates them.
     */
-  def tiffTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (4 + id % 5).toInt
-        val h = (4 + (id * 3) % 5).toInt
-        val spp = if (id % 2 == 0) 3 else 1
-        val photometric = if (spp == 3) 2 else if (id % 4 == 1) 0 else 1
-        val px = Array.tabulate(w * h * spp) { i =>
-          val c = i % spp; val x = (i / spp) % w; val y = i / spp / w
-          ((id * 41 + y * 7 + x * 3 + c * 11) % 256).toByte
-        }
-        val payload = Tiff.encode(w, h, spp, photometric, px,
-          little = id % 3 == 0, rowsPerStrip = (1 + id % 3).toInt)
-        MediaRow(id, "image/tiff", payload.length.toLong, payload)
+  def tiffTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/tiff") { id =>
+      val w = (4 + id % 5).toInt
+      val h = (4 + (id * 3) % 5).toInt
+      val spp = if (id % 2 == 0) 3 else 1
+      val photometric = if (spp == 3) 2 else if (id % 4 == 1) 0 else 1
+      val px = Array.tabulate(w * h * spp) { i =>
+        val c = i % spp; val x = (i / spp) % w; val y = i / spp / w
+        ((id * 41 + y * 7 + x * 3 + c * 11) % 256).toByte
       }
-    }.toDF()
-  }
+      Tiff.encode(w, h, spp, photometric, px,
+        little = id % 3 == 0, rowsPerStrip = (1 + id % 3).toInt)
+    }
 
   /** REAL TIFF decode ([[Tiff.parse]]: endian-aware IFD walk with
     * array-valued entries, strip reassembly) reduced to per-image
     * stats; `pixels_md5` binds every decoded sample. Undecodable
     * payloads drop row-local. Map-side only.
     */
-  def decodeTiffStats(spark: SparkSession, media: DataFrame)
-      : Dataset[TiffStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Tiff.parse(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.pixels)
-          TiffStats(r.doc_id, d.width.toLong, d.height.toLong,
-            d.samplesPerPixel.toLong, d.photometric.toLong,
-            d.nStrips.toLong, sum, hex)
-        }
+  def decodeTiffStats(media: DataFrame): Dataset[TiffStats] =
+    perPayload(media) { r =>
+      Tiff.parse(r.payload).map { d =>
+        val (hex, sum) = pixelDigest(d.pixels)
+        TiffStats(r.doc_id, d.width.toLong, d.height.toLong,
+          d.samplesPerPixel.toLong, d.photometric.toLong,
+          d.nStrips.toLong, sum, hex)
       }
     }
-  }
 
   case class Mp3Row(doc_id: Long, title: String, artist: String,
       tlen_ms: Long, bitrate_kbps: Long, sample_rate: Long,
@@ -1358,39 +1201,29 @@ object Multimodal {
     * parse oracle restates them; bitrate and samplerate sweep their
     * table entries across ids.
     */
-  def mp3Table(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val meta = Mp3.Meta(
-          title = "t" + (id % 100),
-          artist = if (id % 3 == 0) "va" else "a" + (id % 50),
-          tlenMs = 1000L * (30 + id % 300),
-          bitrateKbps = Array(128, 192, 256, 320)((id % 4).toInt),
-          sampleRate = Array(44100, 48000, 32000)((id % 3).toInt),
-          nFrames = (3 + id % 5).toInt)
-        val payload = Mp3.encode(meta)
-        MediaRow(id, "audio/mpeg", payload.length.toLong, payload)
-      }
-    }.toDF()
-  }
+  def mp3Table(docs: DataFrame): DataFrame =
+    plant(docs, "audio/mpeg") { id =>
+      val meta = Mp3.Meta(
+        title = "t" + (id % 100),
+        artist = if (id % 3 == 0) "va" else "a" + (id % 50),
+        tlenMs = 1000L * (30 + id % 300),
+        bitrateKbps = Array(128, 192, 256, 320)((id % 4).toInt),
+        sampleRate = Array(44100, 48000, 32000)((id % 3).toInt),
+        nFrames = (3 + id % 5).toInt)
+      Mp3.encode(meta)
+    }
 
   /** REAL ID3v2.3 + MPEG frame-header parse ([[Mp3.parse]]) per
     * media row; unparseable payloads drop row-local. Map-side only —
     * the catalogue pass rides the scan that reads the payload.
     */
-  def parseMp3Meta(spark: SparkSession, media: DataFrame)
-      : Dataset[Mp3Row] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Mp3.parse(r.payload).map { m =>
-          Mp3Row(r.doc_id, m.title, m.artist, m.tlenMs,
-            m.bitrateKbps.toLong, m.sampleRate.toLong, m.nFrames.toLong)
-        }
+  def parseMp3Meta(media: DataFrame): Dataset[Mp3Row] =
+    perPayload(media) { r =>
+      Mp3.parse(r.payload).map { m =>
+        Mp3Row(r.doc_id, m.title, m.artist, m.tlenMs,
+          m.bitrateKbps.toLong, m.sampleRate.toLong, m.nFrames.toLong)
       }
     }
-  }
 
   case class ImageHeader(doc_id: Long, format: String, width: Long,
       height: Long, bit_depth: Long, n_components: Long)
@@ -1447,17 +1280,12 @@ object Multimodal {
     * big-endian length field, standalone markers by 2 — until a
     * SOF0/1/2 frame header. Unparseable payloads are dropped.
     */
-  def parseImageHeaders(spark: SparkSession, media: DataFrame)
-      : Dataset[ImageHeader] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        parseImageHeader(r.payload).map { case (fmt, w, h, d, n) =>
-          ImageHeader(r.doc_id, fmt, w, h, d, n)
-        }
+  def parseImageHeaders(media: DataFrame): Dataset[ImageHeader] =
+    perPayload(media) { r =>
+      parseImageHeader(r.payload).map { case (fmt, w, h, d, n) =>
+        ImageHeader(r.doc_id, fmt, w, h, d, n)
       }
     }
-  }
 
   /** (format, width, height, bit_depth, n_components), or None. */
   def parseImageHeader(p: Array[Byte])
@@ -1495,24 +1323,19 @@ object Multimodal {
     * per-partition over an iterator — the batch shape (not
     * one-object-at-a-time glue) a vectorized decoder needs.
     */
-  def extractFeatures(spark: SparkSession, media: DataFrame)
-      : Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val hist = new Array[Double](HistogramBins)
-        var i = 0
-        while (i < r.payload.length) {
-          hist((r.payload(i) & 0xFF) / (256 / HistogramBins)) += 1.0
-          i += 1
-        }
-        val n = math.max(1, r.payload.length).toDouble
-        var b = 0
-        while (b < HistogramBins) { hist(b) /= n; b += 1 }
-        MediaFeatures(r.doc_id, r.format, r.n_bytes, hist)
+  def extractFeatures(media: DataFrame): Dataset[MediaFeatures] =
+    perPayload(media) { r =>
+      val hist = new Array[Double](HistogramBins)
+      var i = 0
+      while (i < r.payload.length) {
+        hist((r.payload(i) & 0xFF) / (256 / HistogramBins)) += 1.0
+        i += 1
       }
+      val n = math.max(1, r.payload.length).toDouble
+      var b = 0
+      while (b < HistogramBins) { hist(b) /= n; b += 1 }
+      Iterator.single(MediaFeatures(r.doc_id, r.format, r.n_bytes, hist))
     }
-  }
 
   /** Plant REAL baseline COLOR JPEGs ([[Jpeg.encodeColor]]): YCbCr
     * planes constant per 16×16 MCU region, the chroma layout rotating
@@ -1530,60 +1353,39 @@ object Multimodal {
     *   Cb = 128 + 17·(((id·11 + my·5 + mx·3) % 15) − 7)
     *   Cr = 128 + 17·(((id·19 + my·7 + mx·5) % 15) − 7)
     */
-  def jpegColorTable(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val w = (16 * (1 + id % 3)).toInt
-        val h = (16 * (1 + (id * 5) % 3)).toInt
-        val yP = new Array[Byte](w * h)
-        val cbP = new Array[Byte](w * h)
-        val crP = new Array[Byte](w * h)
-        var y = 0
-        while (y < h) {
-          val my = y / 16
-          var x = 0
-          while (x < w) {
-            val mx = x / 16
-            yP(y * w + x) = (2 * ((id * 29 + my * 13 + mx * 7) % 128)).toByte
-            cbP(y * w + x) =
-              (128 + 17 * (((id * 11 + my * 5 + mx * 3) % 15) - 7)).toByte
-            crP(y * w + x) =
-              (128 + 17 * (((id * 19 + my * 7 + mx * 5) % 15) - 7)).toByte
-            x += 1
-          }
-          y += 1
+  def jpegColorTable(docs: DataFrame): DataFrame =
+    plant(docs, "image/jpeg") { id =>
+      val w = (16 * (1 + id % 3)).toInt
+      val h = (16 * (1 + (id * 5) % 3)).toInt
+      val yP = new Array[Byte](w * h)
+      val cbP = new Array[Byte](w * h)
+      val crP = new Array[Byte](w * h)
+      var y = 0
+      while (y < h) {
+        val my = y / 16
+        var x = 0
+        while (x < w) {
+          val mx = x / 16
+          yP(y * w + x) = (2 * ((id * 29 + my * 13 + mx * 7) % 128)).toByte
+          cbP(y * w + x) =
+            (128 + 17 * (((id * 11 + my * 5 + mx * 3) % 15) - 7)).toByte
+          crP(y * w + x) =
+            (128 + 17 * (((id * 19 + my * 7 + mx * 5) % 15) - 7)).toByte
+          x += 1
         }
-        val payload = Jpeg.encodeColor(w, h, yP, cbP, crP,
-          subsample = Array(Jpeg.Sub420, Jpeg.Sub444,
-            Jpeg.Sub422)((id % 3).toInt),
-          restartInterval = if (id % 3 == 0) 2 else 0)
-        MediaRow(id, "image/jpeg", payload.length.toLong, payload)
+        y += 1
       }
-    }.toDF()
-  }
+      Jpeg.encodeColor(w, h, yP, cbP, crP,
+        subsample = Array(Jpeg.Sub420, Jpeg.Sub444,
+          Jpeg.Sub422)((id % 3).toInt),
+        restartInterval = if (id % 3 == 0) 2 else 0)
+    }
 
-  case class JpegRgbStats(doc_id: Long, width: Long, height: Long,
-      sum_rgb: Long, pixels_md5: String)
-
-  /** REAL color decode ([[Jpeg.decodeRgb]]: multi-component marker
+  /** `pixelStats` over [[Jpeg.decodeRgb]]: multi-component marker
     * walk, interleaved MCU entropy decode with RSTn resync, per-
     * component dequant + IDCT, nearest-neighbor chroma upsampling,
-    * JFIF YCbCr→RGB) reduced to oracle-checkable per-image stats;
-    * `pixels_md5` (over the lowercase hex of the decoded RGB bytes)
-    * binds every byte of the reconstruction. Undecodable payloads
-    * are dropped.
+    * JFIF YCbCr→RGB.
     */
-  def decodeJpegRgbStats(spark: SparkSession, media: DataFrame)
-      : Dataset[JpegRgbStats] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        Jpeg.decodeRgb(r.payload).map { d =>
-          val (hex, sum) = pixelDigest(d.rgb)
-          JpegRgbStats(r.doc_id, d.width.toLong, d.height.toLong, sum, hex)
-        }
-      }
-    }
-  }
+  def decodeJpegRgbStats(media: DataFrame): Dataset[PixelStats] =
+    pixelStats(media)(Jpeg.decodeRgb(_).map(d => (d.width, d.height, d.rgb)))
 }

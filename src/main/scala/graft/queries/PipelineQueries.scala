@@ -5366,7 +5366,7 @@ object PipelineQueries {
     Q("m1_multimodal_stub",
       (s, d) => {
         val media = Multimodal.mediaTable(Tables.documents(s, d))
-        Multimodal.extractFeatures(s, media).toDF()
+        Multimodal.extractFeatures(media).toDF()
           .select(col("doc_id"), col("format"), col("n_bytes"),
             posexplode(col("feature")).as(Seq("bin", "value")))
           .select(col("doc_id"), col("format"), col("n_bytes"),
@@ -5413,7 +5413,7 @@ object PipelineQueries {
         val rekeyed = docs.filter(col("doc_id") % 10 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
         val media = Multimodal.mediaTable(docs.union(rekeyed))
-        Multimodal.extractFeatures(s, media).toDF()
+        Multimodal.extractFeatures(media).toDF()
           .select(col("doc_id"), concat_ws(",", expr(
             "transform(feature, v -> cast(cast(floor(v * 1000000 + 0.5)" +
               " as bigint) as string))")).as("phash"))
@@ -5472,7 +5472,7 @@ object PipelineQueries {
     Q("m5_media_sim",
       (s, d) => {
         val media = Multimodal.mediaTable(Tables.documents(s, d))
-        val feats = Multimodal.extractFeatures(s, media).toDF()
+        val feats = Multimodal.extractFeatures(media).toDF()
           .select(col("doc_id").as("cand_id"),
             col("feature").as("cand_emb"))
         val q = feats.filter(col("cand_id") < 10)
@@ -5548,8 +5548,8 @@ object PipelineQueries {
     // map-side decode, no shuffle but the deterministic sort.
     Q("m2_frame_sample",
       (s, d) => {
-        val media = Multimodal.gifAnimTable(s, Tables.documents(s, d))
-        Multimodal.sampleGifFrames(s, media, nSamples = 4).toDF()
+        val media = Multimodal.gifAnimTable(Tables.documents(s, d))
+        Multimodal.sampleGifFrames(media, nSamples = 4).toDF()
           .orderBy("doc_id", "sample_idx")
       },
       Some(s"""WITH ${gifAnimFrameCtes()}
@@ -5567,8 +5567,8 @@ object PipelineQueries {
     // planted per-frame GCE delays (2 + (id+3k) % 7 centiseconds),
     // and the NETSCAPE loop flag from the planting formulas.
     Q("m20_anim_meta",
-      (s, d) => Multimodal.gifAnimMeta(s,
-          Multimodal.gifAnimTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.gifAnimMeta(
+          Multimodal.gifAnimTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""WITH dims AS (
              |  SELECT doc_id,
@@ -5604,8 +5604,8 @@ object PipelineQueries {
     // signature, broadcast count-back (the m10 shape).
     Q("m22_anim_dedup",
       (s, d) => {
-        val sigs = Multimodal.animDHash(s,
-          Multimodal.gifAnimTable(s, Tables.documents(s, d), _ % 53))
+        val sigs = Multimodal.animDHash(
+          Multimodal.gifAnimTable(Tables.documents(s, d), _ % 53))
           .toDF()
         val counts = sigs.groupBy("anim_sig")
           .agg(count(lit(1)).as("n_same"))
@@ -5677,8 +5677,8 @@ object PipelineQueries {
     // the only exchange is the ORDER BY. Oracle: the shared
     // composited-pixel CTEs self-joined one frame back.
     Q("m26_shot_cuts",
-      (s, d) => Multimodal.shotCuts(s,
-          Multimodal.gifAnimTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.shotCuts(
+          Multimodal.gifAnimTable(Tables.documents(s, d)))
         .toDF()
         .orderBy("doc_id", "frame_idx"),
       Some(s"""WITH ${gifAnimFrameCtes()},
@@ -5704,8 +5704,8 @@ object PipelineQueries {
     // visible in the digests (a decoder that skips compositing or
     // disposal diverges on frames ≥ 1). Same map-side scale shape.
     Q("m19_gif_frames",
-      (s, d) => Multimodal.decodeGifFrameStats(s,
-          Multimodal.gifAnimTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeGifFrameStats(
+          Multimodal.gifAnimTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "frame_idx"),
       Some(s"""WITH ${gifAnimFrameCtes()}
               |SELECT doc_id, frame_idx, width, height, sum_rgb,
@@ -5720,7 +5720,7 @@ object PipelineQueries {
     Q("m3_resize",
       (s, d) => {
         val media = Multimodal.mediaTable(Tables.documents(s, d))
-        Multimodal.resize(s, media, width = 8).toDF()
+        Multimodal.resize(media, width = 8).toDF()
           .select(col("doc_id"), col("idx").cast("long").as("idx"),
             col("byte_val").cast("long").as("byte_val"))
           .orderBy("doc_id", "idx")
@@ -5752,8 +5752,8 @@ object PipelineQueries {
     // or any unfilter is wrong, the hash diverges. Scale shape:
     // map-side decode, no shuffle but the deterministic sort.
     Q("m7_png_decode",
-      (s, d) => Multimodal.decodePngStats(s,
-          Multimodal.pngTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodePngStats(
+          Multimodal.pngTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH $pngPixelCtes
               |${pixelCardSql()}""".stripMargin)),
@@ -5777,8 +5777,8 @@ object PipelineQueries {
     // mask-bit counts per icon with NO decoder (the m7/m24 contract).
     // Scale: map-side container walk, no shuffle but the sort.
     Q("m33_ico_meta",
-      (s, d) => Multimodal.decodeIcoStats(s,
-          Multimodal.icoTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeIcoStats(
+          Multimodal.icoTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "icon_idx"),
       Some(s"""WITH icons AS (
               |  SELECT doc_id, j,
@@ -5824,8 +5824,8 @@ object PipelineQueries {
               |ORDER BY i.doc_id, icon_idx""".stripMargin)),
 
     Q("m24_bmp_decode",
-      (s, d) => Multimodal.decodeBmpStats(s,
-          Multimodal.bmpTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeBmpStats(
+          Multimodal.bmpTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(3)},
               |px AS (
@@ -5851,8 +5851,8 @@ object PipelineQueries {
     // recomputes the planted pixels and the same (y·2)/h integer
     // bucketing (nonneg operands, so DuckDB // truncation == floor).
     Q("m28_image_tiles",
-      (s, d) => Multimodal.tileSignature(s,
-          Multimodal.pngTable(s, Tables.documents(s, d)), grid = 2)
+      (s, d) => Multimodal.tileSignature(
+          Multimodal.pngTable(Tables.documents(s, d)), grid = 2)
         .toDF().orderBy("doc_id", "tile_y", "tile_x"),
       Some(s"""WITH $pngPixelCtes
               |SELECT doc_id,
@@ -5871,8 +5871,8 @@ object PipelineQueries {
     // uncompressed: every decoded sample equals the planted value.
     // Same map-side decode-and-fold shape as m24.
     Q("m27_netpbm_decode",
-      (s, d) => Multimodal.decodeNetpbmStats(s,
-          Multimodal.netpbmTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeNetpbmStats(
+          Multimodal.netpbmTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(7,
                   "CASE WHEN doc_id % 2 = 0 THEN 6 ELSE 5 END AS fmt",
@@ -5897,8 +5897,8 @@ object PipelineQueries {
     // DFT bin's trig rounds differently per libm; these bins have
     // none). Same map-side decode-and-fold as m11/m13.
     Q("m25_audio_bands",
-      (s, d) => Multimodal.audioBands(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.audioBands(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "channel"),
       Some("""WITH dims AS (
              |  SELECT doc_id, 1 + doc_id % 2 AS ch,
@@ -5940,8 +5940,8 @@ object PipelineQueries {
     // oracle restates the m25 sample formula, frames it with the
     // same integer division, and lags the energy per (doc, channel).
     Q("m29_audio_onsets",
-      (s, d) => Multimodal.audioOnsets(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.audioOnsets(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "channel", "frame_idx"),
       Some("""WITH dims AS (
              |  SELECT doc_id, 1 + doc_id % 2 AS ch,
@@ -5981,8 +5981,8 @@ object PipelineQueries {
     // are real Jpeg.encode streams with the APP1 spliced after SOI,
     // so the walker must skip genuine segments. Formula oracle.
     Q("m30_exif",
-      (s, d) => Multimodal.parseExifMeta(s,
-          Multimodal.exifTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.parseExifMeta(
+          Multimodal.exifTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""SELECT doc_id,
              |  CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END
@@ -6012,8 +6012,8 @@ object PipelineQueries {
     // scan, corrupt objects drop row-local. The oracle restates the
     // planted id formulas.
     Q("m31_mp3_meta",
-      (s, d) => Multimodal.parseMp3Meta(s,
-          Multimodal.mp3Table(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.parseMp3Meta(
+          Multimodal.mp3Table(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""SELECT doc_id,
              |  't' || CAST(doc_id % 100 AS VARCHAR) AS title,
@@ -6035,8 +6035,8 @@ object PipelineQueries {
     // photometric reported not applied so the md5 binds the file's
     // raw samples. Map-side decode; corrupt payloads drop row-local.
     Q("m32_tiff_decode",
-      (s, d) => Multimodal.decodeTiffStats(s,
-          Multimodal.tiffTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeTiffStats(
+          Multimodal.tiffTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(3,
                   "CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS spp",
@@ -6064,8 +6064,8 @@ object PipelineQueries {
     // pins every decoded pixel by md5 WITHOUT a decoder. Scale
     // shape: map-side decode, no shuffle but the deterministic sort.
     Q("m9_jpeg_decode",
-      (s, d) => Multimodal.decodeJpegStats(s,
-          Multimodal.jpegTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeJpegStats(
+          Multimodal.jpegTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH dims AS (
               |  SELECT doc_id,
@@ -6091,8 +6091,8 @@ object PipelineQueries {
     // unfilter, or palette lookup is wrong, the hash diverges.
     // Scale shape: map-side decode, no shuffle but the sort.
     Q("m15_png_palette",
-      (s, d) => Multimodal.decodePngStats(s,
-          Multimodal.pngPalTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodePngStats(
+          Multimodal.pngPalTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(3, PaletteSizeCol)},
               |px AS (
@@ -6113,8 +6113,8 @@ object PipelineQueries {
     // oracle pins the decoded bytes md5-exactly WITHOUT a decoder.
     // Scale shape: map-side decode, no shuffle but the sort.
     Q("m17_gif_decode",
-      (s, d) => Multimodal.decodeGifStats(s,
-          Multimodal.gifTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeGifStats(
+          Multimodal.gifTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(3, PaletteSizeCol)},
               |px AS (
@@ -6134,8 +6134,8 @@ object PipelineQueries {
     // recomputes only the high-byte formula. Scale shape: map-side
     // decode, no shuffle but the deterministic sort.
     Q("m16_png16",
-      (s, d) => Multimodal.decodePngStats(s,
-          Multimodal.png16Table(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodePngStats(
+          Multimodal.png16Table(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH ${imageDimsCte(3)},
               |px AS (
@@ -6159,8 +6159,8 @@ object PipelineQueries {
     // same floor(x+0.5) rounding, same clamp. Scale shape: map-side
     // decode, no shuffle but the deterministic sort.
     Q("m14_jpeg_color",
-      (s, d) => Multimodal.decodeJpegRgbStats(s,
-          Multimodal.jpegColorTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeJpegRgbStats(
+          Multimodal.jpegColorTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some(s"""WITH dims AS (
               |  SELECT doc_id,
@@ -6199,8 +6199,8 @@ object PipelineQueries {
     // pins the decoded stream md5-exactly WITHOUT a decoder. Scale
     // shape: map-side decode, no shuffle but the deterministic sort.
     Q("m8_wav_decode",
-      (s, d) => Multimodal.decodeWavStats(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.decodeWavStats(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""WITH p AS (
              |  SELECT doc_id,
@@ -6237,8 +6237,8 @@ object PipelineQueries {
     // interpolation joins from the planting formulas without a
     // decoder. Map-side only; no shuffle but the deterministic sort.
     Q("m21_audio_resample",
-      (s, d) => Multimodal.resampleWav(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.resampleWav(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""WITH p AS (
              |  SELECT doc_id,
@@ -6294,8 +6294,8 @@ object PipelineQueries {
     // gaps-and-islands — no decoder. Map-side decode + linear scan
     // (state = one open run per doc); no shuffle but the sort.
     Q("m23_vad_segments",
-      (s, d) => Multimodal.vadSegments(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.vadSegments(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id", "seg"),
       Some("""WITH p AS (
              |  SELECT doc_id,
@@ -6367,8 +6367,8 @@ object PipelineQueries {
     // broadcasts the group-count side back.
     Q("m10_image_dhash",
       (s, d) => {
-        val hashes = Multimodal.pngDHash(s,
-          Multimodal.pngTable(s, Tables.documents(s, d), _ % 97)).toDF()
+        val hashes = Multimodal.pngDHash(
+          Multimodal.pngTable(Tables.documents(s, d), _ % 97)).toDF()
         val counts = hashes.groupBy("dhash_hex")
           .agg(count(lit(1)).as("n_same"))
         hashes.join(broadcast(counts), "dhash_hex")
@@ -6419,8 +6419,8 @@ object PipelineQueries {
     // broadcast back) and the sort.
     Q("m18_gif_dhash",
       (s, d) => {
-        val hashes = Multimodal.gifDHash(s,
-          Multimodal.gifTable(s, Tables.documents(s, d), _ % 97)).toDF()
+        val hashes = Multimodal.gifDHash(
+          Multimodal.gifTable(Tables.documents(s, d), _ % 97)).toDF()
         val counts = hashes.groupBy("dhash_hex")
           .agg(count(lit(1)).as("n_same"))
         hashes.join(broadcast(counts), "dhash_hex")
@@ -6473,8 +6473,8 @@ object PipelineQueries {
     // Scale shape: map-side decode+resample, fixed 16-row output
     // per image, no shuffle but the deterministic sort.
     Q("m12_thumbnail",
-      (s, d) => Multimodal.pngThumbnail(s,
-          Multimodal.pngTable(s, Tables.documents(s, d)), 4)
+      (s, d) => Multimodal.pngThumbnail(
+          Multimodal.pngTable(Tables.documents(s, d)), 4)
         .toDF().orderBy("doc_id", "idx"),
       Some("""WITH dims AS (
              |  SELECT doc_id, 4 + doc_id % 5 AS w,
@@ -6502,8 +6502,8 @@ object PipelineQueries {
     // integers. Scale shape: map-side decode+fold, no shuffle but
     // the deterministic sort.
     Q("m11_audio_features",
-      (s, d) => Multimodal.audioFeatures(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)))
+      (s, d) => Multimodal.audioFeatures(
+          Multimodal.wavTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""WITH p AS (
              |  SELECT doc_id,
@@ -6545,7 +6545,7 @@ object PipelineQueries {
     // shape: map-side only (parse is per-row byte arithmetic, no
     // shuffle but the deterministic sort).
     Q("m6_image_headers",
-      (s, d) => Multimodal.parseImageHeaders(s,
+      (s, d) => Multimodal.parseImageHeaders(
           Multimodal.imageTable(Tables.documents(s, d)))
         .toDF().orderBy("doc_id"),
       Some("""WITH img AS (
@@ -9301,8 +9301,8 @@ object PipelineQueries {
     // Scale: same map-side decode-and-fold as m11, one ORDER BY
     // exchange.
     Q("m13_audio_autocorr",
-      (s, d) => Multimodal.audioAutocorr(s,
-          Multimodal.wavTable(s, Tables.documents(s, d)),
+      (s, d) => Multimodal.audioAutocorr(
+          Multimodal.wavTable(Tables.documents(s, d)),
           lags = Seq(1, 2, 4))
         .toDF().orderBy("doc_id", "channel", "lag"),
       Some("""WITH p AS (

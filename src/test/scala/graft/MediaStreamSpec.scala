@@ -30,15 +30,15 @@ class MediaStreamSpec extends SparkSpec {
   test("parity: streaming PNG decode equals the batch m7 stats plan") {
     val rows = (1L to 6L).map(png)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodePngStats(spark, stream.toDF())
+    val q = Multimodal.decodePngStats(stream.toDF())
       .writeStream.format("memory").queryName("png_t")
       .outputMode("append").start()
     try {
       stream.addData(rows: _*)
       q.processAllAvailable()
-      val got = spark.table("png_t").as[Multimodal.PngStats]
+      val got = spark.table("png_t").as[Multimodal.PixelStats]
         .collect().toSet
-      val want = Multimodal.decodePngStats(spark, rows.toDF())
+      val want = Multimodal.decodePngStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()
@@ -47,7 +47,7 @@ class MediaStreamSpec extends SparkSpec {
   test("parity: streaming dHash equals the batch hash on decoded pixels") {
     val rows = Seq(png(1), png(2), png(1).copy(doc_id = 9)) // 9 dups 1
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.pngDHash(spark, stream.toDF())
+    val q = Multimodal.pngDHash(stream.toDF())
       .writeStream.format("memory").queryName("dhash_t")
       .outputMode("append").start()
     try {
@@ -55,7 +55,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("dhash_t").as[Multimodal.DHashRow]
         .collect().toSet
-      val want = Multimodal.pngDHash(spark, rows.toDF()).collect().toSet
+      val want = Multimodal.pngDHash(rows.toDF()).collect().toSet
       assert(got == want)
       // identical pixels → identical hash across distinct doc_ids
       val byId = got.map(r => r.doc_id -> r.dhash_hex).toMap
@@ -66,7 +66,7 @@ class MediaStreamSpec extends SparkSpec {
   test("parity: streaming audio features equal the batch m11 fold") {
     val rows = (1L to 5L).map(wav)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.audioFeatures(spark, stream.toDF())
+    val q = Multimodal.audioFeatures(stream.toDF())
       .writeStream.format("memory").queryName("audio_t")
       .outputMode("append").start()
     try {
@@ -74,7 +74,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("audio_t").as[Multimodal.AudioFeatures]
         .collect().toSet
-      val want = Multimodal.audioFeatures(spark, rows.toDF())
+      val want = Multimodal.audioFeatures(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 5)
     } finally q.stop()
@@ -96,15 +96,15 @@ class MediaStreamSpec extends SparkSpec {
       Multimodal.MediaRow(id, "image/jpeg", p.length.toLong, p)
     }
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodeJpegRgbStats(spark, stream.toDF())
+    val q = Multimodal.decodeJpegRgbStats(stream.toDF())
       .writeStream.format("memory").queryName("jpegc_t")
       .outputMode("append").start()
     try {
       stream.addData(rows: _*)
       q.processAllAvailable()
-      val got = spark.table("jpegc_t").as[Multimodal.JpegRgbStats]
+      val got = spark.table("jpegc_t").as[Multimodal.PixelStats]
         .collect().toSet
-      val want = Multimodal.decodeJpegRgbStats(spark, rows.toDF())
+      val want = Multimodal.decodeJpegRgbStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()
@@ -121,15 +121,15 @@ class MediaStreamSpec extends SparkSpec {
       Multimodal.MediaRow(id, "image/png", p.length.toLong, p)
     }
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodePngStats(spark, stream.toDF())
+    val q = Multimodal.decodePngStats(stream.toDF())
       .writeStream.format("memory").queryName("pngpal_t")
       .outputMode("append").start()
     try {
       stream.addData(rows: _*)
       q.processAllAvailable()
-      val got = spark.table("pngpal_t").as[Multimodal.PngStats]
+      val got = spark.table("pngpal_t").as[Multimodal.PixelStats]
         .collect().toSet
-      val want = Multimodal.decodePngStats(spark, rows.toDF())
+      val want = Multimodal.decodePngStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()
@@ -154,7 +154,7 @@ class MediaStreamSpec extends SparkSpec {
     }
     val rows = (1L to 5L).map(anim)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodeGifFrameStats(spark, stream.toDF())
+    val q = Multimodal.decodeGifFrameStats(stream.toDF())
       .writeStream.format("memory").queryName("gif_frames_t")
       .outputMode("append").start()
     try {
@@ -162,7 +162,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("gif_frames_t")
         .as[Multimodal.GifFrameStats].collect().toSet
-      val want = Multimodal.decodeGifFrameStats(spark, rows.toDF())
+      val want = Multimodal.decodeGifFrameStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 10) // 5 payloads × 2 frames
     } finally q.stop()
@@ -171,7 +171,7 @@ class MediaStreamSpec extends SparkSpec {
   test("parity: streaming audio resample equals the batch m21 plan") {
     val rows = (1L to 6L).map(wav)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.resampleWav(spark, stream.toDF())
+    val q = Multimodal.resampleWav(stream.toDF())
       .writeStream.format("memory").queryName("resample_t")
       .outputMode("append").start()
     try {
@@ -179,7 +179,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("resample_t")
         .as[Multimodal.ResampleStats].collect().toSet
-      val want = Multimodal.resampleWav(spark, rows.toDF())
+      val want = Multimodal.resampleWav(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()
@@ -191,7 +191,7 @@ class MediaStreamSpec extends SparkSpec {
     // scan, so append-mode streaming needs no state store.
     val rows = (1L to 6L).map(wav)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.vadSegments(spark, stream.toDF())
+    val q = Multimodal.vadSegments(stream.toDF())
       .writeStream.format("memory").queryName("vad_t")
       .outputMode("append").start()
     try {
@@ -199,7 +199,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("vad_t")
         .as[Multimodal.VadSegment].collect().toSet
-      val want = Multimodal.vadSegments(spark, rows.toDF())
+      val want = Multimodal.vadSegments(rows.toDF())
         .collect().toSet
       assert(got == want && got.nonEmpty)
     } finally q.stop()
@@ -224,7 +224,7 @@ class MediaStreamSpec extends SparkSpec {
     }
     val rows = (1L to 4L).map(gif)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.shotCuts(spark, stream.toDF())
+    val q = Multimodal.shotCuts(stream.toDF())
       .writeStream.format("memory").queryName("cuts_t")
       .outputMode("append").start()
     try {
@@ -232,7 +232,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("cuts_t")
         .as[Multimodal.ShotCutRow].collect().toSet
-      val want = Multimodal.shotCuts(spark, rows.toDF()).collect().toSet
+      val want = Multimodal.shotCuts(rows.toDF()).collect().toSet
       assert(got == want && got.size == 8)
       // the 4×4 repaint crosses the 20% threshold, the 1-px one never
       assert(got.filter(_.frame_idx == 1L).forall(_.is_cut))
@@ -256,7 +256,7 @@ class MediaStreamSpec extends SparkSpec {
     }
     val rows = (1L to 8L).map(pbm)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodeNetpbmStats(spark, stream.toDF())
+    val q = Multimodal.decodeNetpbmStats(stream.toDF())
       .writeStream.format("memory").queryName("pbm_t")
       .outputMode("append").start()
     try {
@@ -264,7 +264,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("pbm_t")
         .as[Multimodal.NetpbmStats].collect().toSet
-      val want = Multimodal.decodeNetpbmStats(spark, rows.toDF())
+      val want = Multimodal.decodeNetpbmStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 8)
       // the 16-bit path is represented in the streamed batch
@@ -275,7 +275,7 @@ class MediaStreamSpec extends SparkSpec {
   test("parity: streaming tile signature equals the batch m28 plan") {
     val rows = (1L to 6L).map(png)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.tileSignature(spark, stream.toDF(), grid = 2)
+    val q = Multimodal.tileSignature(stream.toDF(), grid = 2)
       .writeStream.format("memory").queryName("tiles_t")
       .outputMode("append").start()
     try {
@@ -283,7 +283,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("tiles_t")
         .as[Multimodal.TileStats].collect().toSet
-      val want = Multimodal.tileSignature(spark, rows.toDF(), grid = 2)
+      val want = Multimodal.tileSignature(rows.toDF(), grid = 2)
         .collect().toSet
       assert(got == want && got.size == 24)
     } finally q.stop()
@@ -294,14 +294,14 @@ class MediaStreamSpec extends SparkSpec {
       3L, Array[Byte](1, 2, 3))
     val rows = Seq(png(1), bad)
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodePngStats(spark, stream.toDF())
+    val q = Multimodal.decodePngStats(stream.toDF())
       .writeStream.format("memory").queryName("bad_t")
       .outputMode("append").start()
     try {
       stream.addData(rows: _*)
       q.processAllAvailable()
       assert(spark.table("bad_t").count() == 1)
-      assert(Multimodal.decodePngStats(spark, rows.toDF()).count() == 1)
+      assert(Multimodal.decodePngStats(rows.toDF()).count() == 1)
     } finally q.stop()
   }
 
@@ -316,7 +316,7 @@ class MediaStreamSpec extends SparkSpec {
     } :+ Multimodal.MediaRow(99L, "audio/mpeg", 4L,
       Array[Byte](0, 1, 2, 3)) // corrupt: drops row-local, both engines
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.parseMp3Meta(spark, stream.toDF())
+    val q = Multimodal.parseMp3Meta(stream.toDF())
       .writeStream.format("memory").queryName("mp3_t")
       .outputMode("append").start()
     try {
@@ -324,7 +324,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("mp3_t").as[Multimodal.Mp3Row]
         .collect().toSet
-      val want = Multimodal.parseMp3Meta(spark, rows.toDF())
+      val want = Multimodal.parseMp3Meta(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()
@@ -342,7 +342,7 @@ class MediaStreamSpec extends SparkSpec {
       Multimodal.MediaRow(id, "image/tiff", p.length.toLong, p)
     }
     val stream = MemoryStream[Multimodal.MediaRow](spark)
-    val q = Multimodal.decodeTiffStats(spark, stream.toDF())
+    val q = Multimodal.decodeTiffStats(stream.toDF())
       .writeStream.format("memory").queryName("tiff_t")
       .outputMode("append").start()
     try {
@@ -350,7 +350,7 @@ class MediaStreamSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("tiff_t").as[Multimodal.TiffStats]
         .collect().toSet
-      val want = Multimodal.decodeTiffStats(spark, rows.toDF())
+      val want = Multimodal.decodeTiffStats(rows.toDF())
         .collect().toSet
       assert(got == want && got.size == 6)
     } finally q.stop()

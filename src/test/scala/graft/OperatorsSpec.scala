@@ -1499,7 +1499,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("multimodal frame sampling covers the payload exactly") {
     val docs = Seq((1L, "abcdefghij")).toDF("doc_id", "text") // 10 bytes
-    val frames = Multimodal.sampleFrames(spark,
+    val frames = Multimodal.sampleFrames(
       Multimodal.mediaTable(docs), nFrames = 4).collect().sortBy(_.frame_idx)
     assert(frames.length == 4)
     // windows of 2 bytes, last frame takes the remainder
@@ -1509,7 +1509,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("multimodal resize: fixed-width nearest-neighbor byte stride") {
     val docs = Seq((1L, "abcdefghijkl"), (2L, "")).toDF("doc_id", "text")
-    val got = Multimodal.resize(spark, Multimodal.mediaTable(docs), width = 8)
+    val got = Multimodal.resize(Multimodal.mediaTable(docs), width = 8)
       .collect().sortBy(_.idx)
     // 12 bytes -> positions floor(i*12/8) = 0,1,3,4,6,7,9,10
     assert(got.map(_.doc_id).distinct.toSeq == Seq(1L)) // empty emits none
@@ -1518,7 +1518,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("multimodal stub: histogram normalized over payload bytes") {
     val docs = Seq((1L, "aaaa")).toDF("doc_id", "text")
-    val feats = Multimodal.extractFeatures(spark, Multimodal.mediaTable(docs))
+    val feats = Multimodal.extractFeatures(Multimodal.mediaTable(docs))
       .collect()
     assert(feats.length == 1)
     val f = feats(0)
@@ -1852,7 +1852,7 @@ class OperatorsSpec extends SparkSpec {
     val media = Seq(
       Multimodal.MediaRow(9L, "image/gif", payload.length.toLong, payload))
       .toDF()
-    val got = Multimodal.shotCuts(spark, media).collect()
+    val got = Multimodal.shotCuts(media).collect()
       .map(r => r.frame_idx -> r).toMap
     assert(got.size == 2)
     assert(got(1L).changed_px == 16L && got(1L).is_cut)

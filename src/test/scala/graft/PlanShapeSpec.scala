@@ -201,11 +201,19 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("media decode family and HTML extraction stay map-side") {
-    // Real decode (m7 PNG, m8 WAV, m9 JPEG) and the d31 strip chain
-    // are embarrassingly parallel scans: exactly one exchange (the
-    // deterministic ORDER BY), never a decode-side shuffle.
+    // Real decode (m7 PNG, m8 WAV, m9 JPEG, and every other query
+    // that plants a corpus, decodes it per payload and sorts; m14-m16
+    // and m23-m26 are pinned in "decode queries stay map-side") and
+    // the d31 strip chain are embarrassingly parallel scans: exactly
+    // one exchange (the deterministic ORDER BY), never a decode-side
+    // shuffle.
     for (q <- Seq("m7_png_decode", "m8_wav_decode", "m9_jpeg_decode",
-        "m11_audio_features", "d31_html_extract")) {
+        "m11_audio_features", "m2_frame_sample", "m12_thumbnail",
+        "m13_audio_autocorr", "m17_gif_decode", "m19_gif_frames",
+        "m20_anim_meta", "m21_audio_resample", "m27_netpbm_decode",
+        "m28_image_tiles", "m29_audio_onsets", "m30_exif",
+        "m31_mp3_meta", "m32_tiff_decode", "m33_ico_meta",
+        "d31_html_extract")) {
       val p = plan(q)
       val exchanges = "Exchange (?:range|hash|Single)".r.findAllIn(p).size
       assert(exchanges == 1,
