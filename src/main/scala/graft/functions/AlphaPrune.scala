@@ -12,12 +12,14 @@ import org.apache.spark.sql.types._
 /** Compiled greedy RobustPrune (the Vamana α-prune) — the nav-build
   * family's per-node kernel, replacing the interpreted higher-order
   * `aggregate(cands, …, (acc, c) -> if(… not exists(acc, b -> …)))`
-  * expression that NavProfile measured as the single largest stage
-  * increment of the e28 build (~2× the scored-candidate stage): per
+  * expression that was the single largest stage increment of the
+  * e28 build in OPTIMIZATION_r16.md's stage profile (~2× the
+  * scored-candidate stage): per
   * node the HOF dispatched maxCandidates × |kept| interpreted lambda
   * steps, each running a 64-step interpreted `zip_with`+`aggregate`
   * dot product — ~10× interpreter overhead per arithmetic op (the
-  * KMeansProfile measurement that motivated [[NearestCentroidCell]]).
+  * 0.41 vs 0.045 µs per row·cell recorded in SURVEY.md, which
+  * motivated [[NearestCentroidCell]]).
   *
   * Semantics are EXACTLY the HOF chain it replaces (the DuckDB
   * oracle's unrolled prune steps pin them):

@@ -8,6 +8,63 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
+/** The scaffolding the three nearest-centroid kernels share: each
+  * takes one `array<float|double>` embedding, bakes its bounded
+  * codebook tables into codegen as reference objects, prints them as
+  * shape plus digest, and calls one static method of
+  * [[NearestCentroidKernels]] with `(embedding, isFloat, args…)`.
+  *
+  * THE routing rule of the ANN family lives in these kernels: a
+  * vector probes its top cells by (cosine DESC, cell ASC), compared
+  * with Spark SQL's double semantics (NaN greatest, -0.0 == 0.0) —
+  * the order the DuckDB oracle's `ORDER BY cosine DESC, cell`
+  * states. The cosine is bit-identical to [[CosineSimilarity]] for
+  * equal-length vectors: the dot and both squared norms accumulate
+  * left-to-right exactly as it does, and the score is
+  * `dot / (sqrt(nx) * sqrt(ny))`.
+  */
+private[functions] sealed trait CentroidKernel extends UnaryExpression {
+
+  /** The SQL-facing name, for type-check messages. */
+  protected def fnName: String
+
+  /** The static kernel method in [[NearestCentroidKernels]]. */
+  protected def method: String
+
+  /** The kernel's arguments after `(embedding, isFloat)`: tables ride
+    * as reference objects, scalars as literals.
+    */
+  protected def kernelArgs: Seq[Any]
+
+  protected def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override protected def stringArgs: Iterator[Any] =
+    productIterator.map(NearestCentroidKernels.shown)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$fnName expects array<float|double>, got ${other.catalogString}")
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = kernelArgs.map {
+      case a: Array[Long] => ctx.addReferenceObj("cells", a, "long[]")
+      case a: Array[Int] => ctx.addReferenceObj("idx", a, "int[]")
+      case a: Array[Double] => ctx.addReferenceObj("norms", a, "double[]")
+      case a: Array[Array[Double]] => ctx.addReferenceObj("vecs", a, "double[][]")
+      case scalar => scalar.toString
+    }
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.NearestCentroidKernels.$method(" +
+        (Seq(a, isFloat.toString) ++ args).mkString(", ") + ");")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    makeCopy(Array[AnyRef](c) ++ productIterator.drop(1).map(_.asInstanceOf[AnyRef]))
+}
+
 /** Compiled nearest-centroid assignment: the k-means / IVF hot step
   * (`argmax_cell cosine(row, centroid_cell)`) as ONE native Catalyst
   * expression over the row's embedding, with the bounded k×dims
@@ -17,145 +74,79 @@ import org.apache.spark.sql.types._
   *
   * Why a kernel (the TextHashExprs treatment, measured before
   * building): the previous `aggregate()` fold dispatched k
-  * interpreted lambda steps per row — profiled at ~0.41 µs per
-  * row·cell at k=256 on sf0.1×20 (KMeansProfile), ~10× the cost of
-  * the cosine arithmetic itself, i.e. HOF dispatch dominated. The
-  * kernel reads the embedding ONCE into a primitive array, reuses
+  * interpreted lambda steps per row — 0.41 µs per row·cell at k=256
+  * on sf0.1×20 against 0.045 µs for this kernel (SURVEY.md), ~10× the
+  * cost of the cosine arithmetic itself, i.e. HOF dispatch dominated.
+  * The kernel reads the embedding ONCE into a primitive array, reuses
   * the row norm across all k cells (the fold recomputed it k times),
   * and runs k tight primitive dot loops inside whole-stage codegen.
+  * It returns a plain `Long`, so k-means assignment allocates no
+  * result array per row.
   *
-  * Result parity is bit-exact with the fold it replaces: the dot and
-  * both squared norms accumulate left-to-right exactly as
-  * [[CosineSimilarity]] does (same IEEE op sequence; interleaving
-  * independent accumulators does not change each one's order), the
-  * score is `dot / (sqrt(nx) * sqrt(ny))` with the same
-  * multiply-then-divide shape, centroid norms are precomputed (same
-  * value, computed once), and the strictly-greater argmax over cells
-  * in ascending cell order keeps the earliest cell on ties — the
-  * (cos DESC, cell ASC) row_number order the oracle states. The
-  * comparison uses Spark SQL's double semantics (NaN greatest,
-  * -0.0 == 0.0), not raw Java `>`.
+  * The strictly-greater argmax over cells in ascending cell order
+  * keeps the earliest cell on ties — the routing rule's first cell
+  * (see [[CentroidKernel]]), for the sites that ASSIGN each vector one
+  * cell (k-means, PQ codes, index build and append) rather than probe.
   */
 case class NearestCentroidCell(
     child: Expression,
     cells: Array[Long],
-    cvecs: Array[Array[Double]]) extends UnaryExpression {
+    cvecs: Array[Array[Double]]) extends CentroidKernel {
 
   require(cells.length == cvecs.length && cells.nonEmpty,
     "nearest_centroid needs a non-empty (cell, cvec) table")
 
-  override protected def stringArgs: Iterator[Any] =
-    productIterator.map(NearestCentroidKernels.shown)
-
+  protected def fnName: String = "nearest_centroid"
+  protected def method: String = "nearest"
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid expects array<float|double>, got ${other.catalogString}")
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  /** sqrt of each centroid's squared norm, accumulated left-to-right
-    * — the exact value CosineSimilarity's per-pair loop produces.
-    */
-  @transient private lazy val sqrtNorms: Array[Double] =
-    cvecs.map { v =>
-      var ny = 0.0; var i = 0
-      while (i < v.length) { ny += v(i) * v(i); i += 1 }
-      math.sqrt(ny)
-    }
+  @transient private lazy val sqrtNorms = NearestCentroidKernels.sqrtNorms(cvecs)
+  protected def kernelArgs: Seq[Any] = Seq(cells, cvecs, sqrtNorms)
 
   override def nullSafeEval(a: Any): Any =
     NearestCentroidKernels.nearest(
       a.asInstanceOf[ArrayData], isFloat, cells, cvecs, sqrtNorms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cellsRef = ctx.addReferenceObj("cells", cells, "long[]")
-    val mRef = ctx.addReferenceObj("cvecs", cvecs, "double[][]")
-    val nRef = ctx.addReferenceObj("sqrtNorms", sqrtNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.NearestCentroidKernels.nearest(" +
-        s"$a, $isFloat, $cellsRef, $mRef, $nRef);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 /** Compiled top-`nprobe` cell routing — the multi-probe counterpart
-  * of [[NearestCentroidCell]] and the scale fix for the walk-family
-  * build substrate's routing stage: `knnGraphProbed` previously
-  * scored every vector against ALL nlist centroids through an
-  * interpreted `transform` lambda and a full `array_sort` over nlist
-  * structs — with nlist ∝ n (the trainedCells rule) that stage was
-  * the measured super-linear term of the whole nav-build family
-  * (e28/e41/e46/e49 at 15–25× per 10× data at sf1→sf10; the lambda
-  * dispatch + per-row struct-array allocation carry a ~10× constant
-  * over the cosine arithmetic, per KMeansProfile). This kernel reads
+  * of [[NearestCentroidCell]], and the one routing path of every ANN
+  * probe site, one-probe sites included (IVF probes, probed kNN
+  * graphs, nav-graph attach, the on-disk index search). It replaced an interpreted
+  * `transform` lambda plus a full `array_sort` over nlist structs per
+  * row: with nlist ∝ n (the trainedCells rule) that stage was the
+  * measured super-linear term of the whole nav-build family (e28/e41/
+  * e46/e49 at 15–25× per 10× data at sf1→sf10; the lambda dispatch
+  * and per-row struct-array allocation carry the ~10× constant over
+  * the cosine arithmetic recorded in SURVEY.md). This kernel reads
   * the embedding ONCE, reuses the row norm across all cells, keeps a
   * bounded nprobe-slot insertion list instead of sorting nlist
   * structs, and runs entirely inside whole-stage codegen.
   *
-  * Semantics: the top-`nprobe` cells by (cosine DESC, cell ASC) — the
-  * probe order `ivfProbeTopK`'s row_number and the DuckDB oracle's
-  * `ORDER BY cosine DESC, cell` state. Comparison is Spark SQL double
-  * semantics via the same `gtSparkSql` as [[NearestCentroidCell]]
-  * (NaN greatest, NaN==NaN, -0.0==0.0) — note this matches the
-  * oracle MORE faithfully than the `array_sort` formulation it
-  * replaces (a struct sort ranks a NaN cosine last instead of
-  * first; zero-norm vectors are the only way to hit that corner).
-  * Fewer cells than `nprobe` returns them all, exactly like
-  * `slice(array_sort(..), 1, nprobe)` did.
+  * Semantics: the top-`nprobe` cells by (cosine DESC, cell ASC) (see
+  * [[CentroidKernel]]). A struct sort would rank a NaN cosine last
+  * instead of first; zero-norm vectors are the only way to hit that
+  * corner. Fewer cells than `nprobe` returns them all.
   */
 case class NearestCellsProbed(
     child: Expression,
     cells: Array[Long],
     cvecs: Array[Array[Double]],
-    nprobe: Int) extends UnaryExpression {
+    nprobe: Int) extends CentroidKernel {
 
   require(cells.length == cvecs.length && cells.nonEmpty,
     "nearest_cells needs a non-empty (cell, cvec) table")
   require(nprobe >= 1, s"nearest_cells needs nprobe >= 1, got $nprobe")
 
-  override protected def stringArgs: Iterator[Any] =
-    productIterator.map(NearestCentroidKernels.shown)
-
+  protected def fnName: String = "nearest_cells"
+  protected def method: String = "nearestK"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_cells expects array<float|double>, got ${other.catalogString}")
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  @transient private lazy val sqrtNorms: Array[Double] =
-    cvecs.map { v =>
-      var ny = 0.0; var i = 0
-      while (i < v.length) { ny += v(i) * v(i); i += 1 }
-      math.sqrt(ny)
-    }
+  @transient private lazy val sqrtNorms = NearestCentroidKernels.sqrtNorms(cvecs)
+  protected def kernelArgs: Seq[Any] = Seq(cells, cvecs, sqrtNorms, nprobe)
 
   override def nullSafeEval(a: Any): Any =
     NearestCentroidKernels.nearestK(
       a.asInstanceOf[ArrayData], isFloat, cells, cvecs, sqrtNorms, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cellsRef = ctx.addReferenceObj("cells", cells, "long[]")
-    val mRef = ctx.addReferenceObj("cvecs", cvecs, "double[][]")
-    val nRef = ctx.addReferenceObj("sqrtNorms", sqrtNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.NearestCentroidKernels.nearestK(" +
-        s"$a, $isFloat, $cellsRef, $mRef, $nRef, $nprobe);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 /** Compiled TWO-LEVEL cell routing — the sf100+ scale path for the
@@ -175,8 +166,7 @@ case class NearestCellsProbed(
   * global fine tie-break, which is why the fine pass iterates the
   * globally cell-ascending fine table under a selected-group mask
   * (the mask test is branch-cheap; only selected entries pay the
-  * dot product). All comparisons are the same `gtSparkSql` as the
-  * flat kernels.
+  * dot product). Both passes are the flat kernels' insertion pass.
   *
   * `fineCoarseIdx(i)` is the coarse POSITION (index into
   * `coarseCells`) owning fine entry i; fine arrays are sorted by
@@ -190,7 +180,7 @@ case class NearestCellsRouted(
     fineVecs: Array[Array[Double]],
     fineCoarseIdx: Array[Int],
     cprobe: Int,
-    nprobe: Int) extends UnaryExpression {
+    nprobe: Int) extends CentroidKernel {
 
   require(coarseCells.length == coarseVecs.length && coarseCells.nonEmpty,
     "nearest_cells_routed needs a non-empty coarse table")
@@ -202,50 +192,21 @@ case class NearestCellsRouted(
   require(cprobe >= 1 && nprobe >= 1,
     s"nearest_cells_routed needs cprobe/nprobe >= 1, got $cprobe/$nprobe")
 
-  override protected def stringArgs: Iterator[Any] =
-    productIterator.map(NearestCentroidKernels.shown)
-
+  protected def fnName: String = "nearest_cells_routed"
+  protected def method: String = "routed"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"nearest_cells_routed expects array<float|double>, got ${other.catalogString}")
-  }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private def norms(m: Array[Array[Double]]): Array[Double] =
-    m.map { v =>
-      var ny = 0.0; var i = 0
-      while (i < v.length) { ny += v(i) * v(i); i += 1 }
-      math.sqrt(ny)
-    }
-
-  @transient private lazy val coarseNorms: Array[Double] = norms(coarseVecs)
-  @transient private lazy val fineNorms: Array[Double] = norms(fineVecs)
+  @transient private lazy val coarseNorms =
+    NearestCentroidKernels.sqrtNorms(coarseVecs)
+  @transient private lazy val fineNorms =
+    NearestCentroidKernels.sqrtNorms(fineVecs)
+  protected def kernelArgs: Seq[Any] = Seq(coarseVecs, coarseNorms,
+    fineCells, fineVecs, fineNorms, fineCoarseIdx, cprobe, nprobe)
 
   override def nullSafeEval(a: Any): Any =
     NearestCentroidKernels.routed(a.asInstanceOf[ArrayData], isFloat,
       coarseVecs, coarseNorms, fineCells, fineVecs, fineNorms,
       fineCoarseIdx, cprobe, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cvRef = ctx.addReferenceObj("coarseVecs", coarseVecs, "double[][]")
-    val cnRef = ctx.addReferenceObj("coarseNorms", coarseNorms, "double[]")
-    val fcRef = ctx.addReferenceObj("fineCells", fineCells, "long[]")
-    val fvRef = ctx.addReferenceObj("fineVecs", fineVecs, "double[][]")
-    val fnRef = ctx.addReferenceObj("fineNorms", fineNorms, "double[]")
-    val fiRef = ctx.addReferenceObj("fineCoarseIdx", fineCoarseIdx, "int[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.NearestCentroidKernels.routed(" +
-        s"$a, $isFloat, $cvRef, $cnRef, $fcRef, $fvRef, $fnRef, $fiRef, " +
-        s"$cprobe, $nprobe);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
 }
 
 object NearestCentroidKernels {
@@ -267,6 +228,41 @@ object NearestCentroidKernels {
     case other => other
   }
 
+  /** sqrt of each centroid's squared norm, accumulated left-to-right
+    * — the exact value CosineSimilarity's per-pair loop produces.
+    */
+  private[functions] def sqrtNorms(m: Array[Array[Double]]): Array[Double] =
+    m.map(v => math.sqrt(sumSq(v)))
+
+  private def sumSq(x: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < x.length) { s += x(i) * x(i); i += 1 }
+    s
+  }
+
+  /** The row's embedding as a primitive double array, read once. */
+  private def read(emb: ArrayData, floatElems: Boolean): Array[Double] = {
+    val x = new Array[Double](emb.numElements())
+    var i = 0
+    while (i < x.length) {
+      x(i) = if (floatElems) emb.getFloat(i).toDouble else emb.getDouble(i)
+      i += 1
+    }
+    x
+  }
+
+  /** CosineSimilarity's value for the row `x` (norm `sx`) against a
+    * centroid `cv` (norm `sn`).
+    */
+  private def cos(x: Array[Double], sx: Double, cv: Array[Double],
+      sn: Double): Double = {
+    val d = math.min(x.length, cv.length)
+    var dot = 0.0
+    var j = 0
+    while (j < d) { dot += x(j) * cv(j); j += 1 }
+    dot / (sx * sn)
+  }
+
   /** Spark SQL's double comparison: NaN greater than everything,
     * NaN == NaN, and -0.0 == 0.0 (`==` fires before the NaN checks)
     * — mirrors Utils.nanSafeCompareDoubles so the argmax can't
@@ -279,154 +275,105 @@ object NearestCentroidKernels {
     else if (java.lang.Double.isNaN(y)) false
     else x > y
 
+  /** The bounded insertion pass: fills (`ks`, `ki`) with the top
+    * `ks.length` positions of `vecs` by (cosine DESC, position ASC),
+    * skipping position i when `selected` is given and
+    * `selected(owner(i))` is false. Insertion is strictly-greater
+    * only over an ascending walk, so an equal score never displaces
+    * an earlier position. Returns how many slots were filled.
+    */
+  private def topPositions(x: Array[Double], sx: Double,
+      vecs: Array[Array[Double]], norms: Array[Double],
+      ks: Array[Double], ki: Array[Int],
+      selected: Array[Boolean], owner: Array[Int]): Int = {
+    val m = ks.length
+    var filled = 0
+    var c = 0
+    while (c < vecs.length) {
+      if (selected == null || selected(owner(c))) {
+        val s = cos(x, sx, vecs(c), norms(c))
+        var p = 0
+        while (p < filled && !gtSparkSql(s, ks(p))) p += 1
+        if (p < m) {
+          var t = math.min(filled, m - 1)
+          while (t > p) { ks(t) = ks(t - 1); ki(t) = ki(t - 1); t -= 1 }
+          ks(p) = s; ki(p) = c
+          if (filled < m) filled += 1
+        }
+      }
+      c += 1
+    }
+    filled
+  }
+
+  /** The cells at the first `n` kept positions, as the result array. */
+  private def cellsAt(cells: Array[Long], ki: Array[Int], n: Int): ArrayData = {
+    val out = new Array[Long](n)
+    var i = 0
+    while (i < n) { out(i) = cells(ki(i)); i += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
   /** Argmax cell by cosine, ties to the earliest (lowest) cell —
     * cells MUST arrive sorted ascending.
     */
   def nearest(emb: ArrayData, floatElems: Boolean, cells: Array[Long],
       cvecs: Array[Array[Double]], sqrtNorms: Array[Double]): Long = {
-    val n = emb.numElements()
-    val x = new Array[Double](n)
-    var nx = 0.0
-    var i = 0
-    while (i < n) {
-      val v = if (floatElems) emb.getFloat(i).toDouble else emb.getDouble(i)
-      x(i) = v; nx += v * v
-      i += 1
-    }
-    val sx = math.sqrt(nx)
+    val x = read(emb, floatElems)
+    val sx = math.sqrt(sumSq(x))
     var best = -2.0 // cosine >= -1 > -2: the fold's seed, always replaced
     var bestCell = -1L
     var c = 0
     while (c < cvecs.length) {
-      val cv = cvecs(c)
-      val d = math.min(n, cv.length)
-      var dot = 0.0
-      var j = 0
-      while (j < d) { dot += x(j) * cv(j); j += 1 }
-      val cs = dot / (sx * sqrtNorms(c))
+      val cs = cos(x, sx, cvecs(c), sqrtNorms(c))
       if (gtSparkSql(cs, best)) { best = cs; bestCell = cells(c) }
       c += 1
     }
     bestCell
   }
 
-  /** Top-`nprobe` cells by (cosine DESC, cell ASC) as a bounded
-    * insertion list — cells MUST arrive sorted ascending, so an
-    * equal-score candidate never displaces an earlier (lower) cell.
-    * Returns min(nprobe, #cells) entries in probe order.
+  /** Top-`nprobe` cells by (cosine DESC, cell ASC) — cells MUST arrive
+    * sorted ascending. Returns min(nprobe, #cells) entries in probe
+    * order.
     */
   def nearestK(emb: ArrayData, floatElems: Boolean, cells: Array[Long],
       cvecs: Array[Array[Double]], sqrtNorms: Array[Double],
       nprobe: Int): ArrayData = {
-    val n = emb.numElements()
-    val x = new Array[Double](n)
-    var nx = 0.0
-    var i = 0
-    while (i < n) {
-      val v = if (floatElems) emb.getFloat(i).toDouble else emb.getDouble(i)
-      x(i) = v; nx += v * v
-      i += 1
-    }
-    val sx = math.sqrt(nx)
+    val x = read(emb, floatElems)
     val m = math.min(nprobe, cvecs.length)
     val ks = new Array[Double](m)
-    val kc = new Array[Long](m)
-    var filled = 0
-    var c = 0
-    while (c < cvecs.length) {
-      val cv = cvecs(c)
-      val d = math.min(n, cv.length)
-      var dot = 0.0
-      var j = 0
-      while (j < d) { dot += x(j) * cv(j); j += 1 }
-      val cs = dot / (sx * sqrtNorms(c))
-      // Insertion point: strictly-greater only, so ties land AFTER
-      // the earlier (lower) cell — the (cos DESC, cell ASC) order.
-      var p = 0
-      while (p < filled && !gtSparkSql(cs, ks(p))) p += 1
-      if (p < m) {
-        var t = math.min(filled, m - 1)
-        while (t > p) { ks(t) = ks(t - 1); kc(t) = kc(t - 1); t -= 1 }
-        ks(p) = cs; kc(p) = cells(c)
-        if (filled < m) filled += 1
-      }
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(kc, filled))
+    val ki = new Array[Int](m)
+    val n = topPositions(x, math.sqrt(sumSq(x)), cvecs, sqrtNorms, ks, ki,
+      null, null)
+    cellsAt(cells, ki, n)
   }
 
-  /** Two-level routing (see [[NearestCellsRouted]]): coarse
-    * top-`cprobe` insertion pass, then a masked fine pass in global
-    * fine-cell-ascending order — both with the (cos DESC, id ASC)
-    * tie rule `gtSparkSql` encodes by strict-greater insertion over
-    * an ascending iteration.
+  /** Two-level routing (see [[NearestCellsRouted]]): a coarse
+    * top-`cprobe` insertion pass, then the same pass over the fine
+    * table in global fine-cell-ascending order, masked to the
+    * selected coarse groups.
     */
   def routed(emb: ArrayData, floatElems: Boolean,
       coarseVecs: Array[Array[Double]], coarseNorms: Array[Double],
       fineCells: Array[Long], fineVecs: Array[Array[Double]],
       fineNorms: Array[Double], fineCoarseIdx: Array[Int],
       cprobe: Int, nprobe: Int): ArrayData = {
-    val n = emb.numElements()
-    val x = new Array[Double](n)
-    var nx = 0.0
-    var i = 0
-    while (i < n) {
-      val v = if (floatElems) emb.getFloat(i).toDouble else emb.getDouble(i)
-      x(i) = v; nx += v * v
-      i += 1
-    }
-    val sx = math.sqrt(nx)
-    def cos(cv: Array[Double], sn: Double): Double = {
-      val d = math.min(n, cv.length)
-      var dot = 0.0
-      var j = 0
-      while (j < d) { dot += x(j) * cv(j); j += 1 }
-      dot / (sx * sn)
-    }
-    // Coarse pass: top-cprobe coarse POSITIONS.
+    val x = read(emb, floatElems)
+    val sx = math.sqrt(sumSq(x))
     val mc = math.min(cprobe, coarseVecs.length)
     val cs = new Array[Double](mc)
     val ci = new Array[Int](mc)
-    var cFilled = 0
-    var c = 0
-    while (c < coarseVecs.length) {
-      val s = cos(coarseVecs(c), coarseNorms(c))
-      var p = 0
-      while (p < cFilled && !gtSparkSql(s, cs(p))) p += 1
-      if (p < mc) {
-        var t = math.min(cFilled, mc - 1)
-        while (t > p) { cs(t) = cs(t - 1); ci(t) = ci(t - 1); t -= 1 }
-        cs(p) = s; ci(p) = c
-        if (cFilled < mc) cFilled += 1
-      }
-      c += 1
-    }
+    val cFilled = topPositions(x, sx, coarseVecs, coarseNorms, cs, ci,
+      null, null)
     val selected = new Array[Boolean](coarseVecs.length)
     var q = 0
     while (q < cFilled) { selected(ci(q)) = true; q += 1 }
-    // Fine pass: globally cell-ascending, masked to selected groups.
     val mf = math.min(nprobe, fineCells.length)
     val fs = new Array[Double](mf)
-    val fc = new Array[Long](mf)
-    var fFilled = 0
-    var f = 0
-    while (f < fineCells.length) {
-      if (selected(fineCoarseIdx(f))) {
-        val s = cos(fineVecs(f), fineNorms(f))
-        var p = 0
-        while (p < fFilled && !gtSparkSql(s, fs(p))) p += 1
-        if (p < mf) {
-          var t = math.min(fFilled, mf - 1)
-          while (t > p) { fs(t) = fs(t - 1); fc(t) = fc(t - 1); t -= 1 }
-          fs(p) = s; fc(p) = fineCells(f)
-          if (fFilled < mf) fFilled += 1
-        }
-      }
-      f += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(fc, fFilled))
+    val fi = new Array[Int](mf)
+    val fFilled = topPositions(x, sx, fineVecs, fineNorms, fs, fi,
+      selected, fineCoarseIdx)
+    cellsAt(fineCells, fi, fFilled)
   }
 }
 

@@ -15,8 +15,13 @@ import graft.operators.Checkpointing.CutOps
   * instead of ground-truth cluster labels.
   *
   * Composition of two operators that already existed: assignment is
-  * the nearest-centroid rule of [[Similarity.ivfProbeTopK]], the
-  * update is [[Similarity.centroidVectors]]'s per-cell mean. Seeds
+  * the ANN family's one routing rule with a single probe (the
+  * nearest centroid by (cosine DESC, cell ASC), computed by the
+  * argmax twin of the compiled kernel every IVF probe routes through
+  * in [[Similarity.probeRows]]), the update
+  * is [[Similarity.centroidVectors]]'s per-cell mean, and each
+  * round's centroids reach the kernel through the family's one
+  * driver-side handoff, [[Similarity.codebook]]. Seeds
   * are [[Sampling]]'s deterministic hash picks, so training is
   * reproducible across runs, engines, and partitionings, and the
   * whole loop is oracle-checkable with fixed iteration counts.
@@ -80,11 +85,8 @@ object KMeans {
     */
   private def assignedWithEmb(corpus: DataFrame,
       centroids: DataFrame): DataFrame = {
-    val cents = centroids.select(col("cell").cast("long"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    corpus.withColumn("cell",
-      nearest_centroid(col("embedding"), cents.toSeq))
+    corpus.withColumn("cell", nearest_centroid(col("embedding"),
+      Similarity.codebook(centroids.select("cell", "cvec"))))
   }
 
   /** (vec_id, cell): each vector's nearest centroid by cosine. */
@@ -119,16 +121,14 @@ object KMeans {
     import spark.implicits._
     val corpus = emb.select("vec_id", "embedding")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    def collectCents(df: DataFrame): Array[(Long, Array[Double])] =
-      df.select(col("cell").cast("long"), col("cvec")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
+    def collectCents(df: DataFrame): Seq[(Long, Array[Double])] =
+      Similarity.codebook(df.select("cell", "cvec")).sortBy(_._1)
     var cents = collectCents(seeds(corpus, k))
     var moved = Double.MaxValue
     var it = 0
     while (moved > tol && it < maxIters) {
       val assigned = corpus.withColumn("cell",
-        nearest_centroid(col("embedding"), cents.toSeq))
+        nearest_centroid(col("embedding"), cents))
       val next = collectCents(Similarity.centroidVectors(
           assigned.select(col("cell").as("label"), col("embedding")),
           "label")

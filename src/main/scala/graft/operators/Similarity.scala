@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.functions.CosineSimilarity.cosine_sim
+import graft.functions.NearestCentroidCell.{nearest_cells, nearest_cells_routed, nearest_centroid}
 import graft.functions.TextHashExprs.{embed_simhash, embed_simhash2}
 import graft.functions.TopKByScore.top_k_by_score
 
@@ -23,6 +25,16 @@ import graft.functions.TopKByScore.top_k_by_score
   *   - [[centroids]]: the IVF training step — per-cluster mean
   *     vector via posexplode + (label, dim) aggregation, shuffling
   *     one (row, dim) pair per element with map-side partial sums.
+  *
+  * One routing rule: every site that sends a vector to cells (IVF
+  * probes, the probed and routed kNN graphs, nav-graph attach, the
+  * on-disk index) collects its bounded (cell, centroid) table once
+  * through [[codebook]] and routes through the compiled
+  * nearest-cells kernels ([[probeRows]]): the top-`nprobe` cells by
+  * (cosine DESC, cell ASC), the oracle's order. The kNN graphs share
+  * one body ([[knnOver]]) and differ only in which cells a vector
+  * probes; the nav-graph paths share the candidate bound
+  * ([[topCandidates]]), the α-prune and the fwd/back link rows.
   */
 object Similarity {
 
@@ -243,9 +255,45 @@ object Similarity {
     */
   def centroidRows(emb: DataFrame,
       labelCol: String): Seq[(Long, Array[Double])] =
-    centroidVectors(emb, labelCol)
-      .select(col("label").cast("long"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    codebook(centroidVectors(emb, labelCol)
+      .select(col("label").as(labelCol), col("cvec")))
+
+  /** The family's one driver-side codebook handoff: a bounded
+    * two-column (id, vector) table collected as (id as long,
+    * vector as doubles) pairs — centroid tables, PQ books and query
+    * rows alike. A null id fails naming its column (a kernel cell
+    * must be a number).
+    */
+  private[graft] def codebook(table: DataFrame): Seq[(Long, Array[Double])] = {
+    val Array(id, vec) = table.columns
+    table.select(col(id).cast("long"), col(vec).cast("array<double>"))
+      .collect().map { r =>
+        require(!r.isNullAt(0), s"codebook: null `$id` in the (id, vector) table")
+        (r.getLong(0), r.getSeq[Double](1).toArray)
+      }.toSeq
+  }
+
+  /** The ANN family's one cell-routing rule: `frame` with one row per
+    * cell its `emb` vector probes — the top `nprobe` by
+    * (cosine DESC, cell ASC) from the compiled
+    * [[graft.functions.NearestCellsProbed]] kernel — in column `as`,
+    * cast back to the label type. A null vector probes no cell. An
+    * empty codebook probes nothing: the result is `frame`'s shape
+    * with no rows.
+    */
+  private[graft] def probeRows(frame: DataFrame, emb: String,
+      cents: Seq[(Long, Array[Double])], nprobe: Int, labelType: DataType,
+      as: String = "label"): DataFrame =
+    if (cents.isEmpty) frame.withColumn(as, lit(null).cast(labelType)).limit(0)
+    else routeRows(frame, nearest_cells(col(emb), cents, nprobe), labelType, as)
+
+  /** `frame` once per cell of the kernel array `cells`, the cell cast
+    * back to `labelType` in column `as`.
+    */
+  private def routeRows(frame: DataFrame, cells: Column, labelType: DataType,
+      as: String = "label"): DataFrame =
+    frame.withColumn("_pc", explode(cells))
+      .select(frame.columns.map(col) :+ col("_pc").cast(labelType).as(as): _*)
 
   /** Bulk kNN-graph construction: top-k cosine neighbors for EVERY
     * vector, restricted to its own cluster (IVF cell) — the operator
@@ -256,12 +304,19 @@ object Similarity {
     * cells), then the bounded-heap [[top_k_by_score]] partial
     * aggregate per source vector — never a corpus-wide window sort.
     */
-  def knnGraph(emb: DataFrame, labelCol: String, k: Int): DataFrame = {
-    val a = emb.select(col(labelCol).as("label"), col("vec_id"),
-      col("embedding").as("ea"))
-    val b = emb.select(col(labelCol).as("label"),
-      col("vec_id").as("nbr_id"), col("embedding").as("eb"))
-    a.join(b, Seq("label"))
+  def knnGraph(emb: DataFrame, labelCol: String, k: Int): DataFrame =
+    knnOver(emb.select(col(labelCol).as("label"), col("vec_id"),
+      col("embedding").as("ea")), emb, labelCol, k)
+
+  /** The one kNN-graph body: `probes` (vec_id, ea, label) — each
+    * vector once per cell it searches — equi-joined on the cell with
+    * the corpus, self pairs dropped, scored by the codegen'd cosine
+    * and ranked by the bounded-heap [[top_k_by_score]].
+    */
+  private def knnOver(probes: DataFrame, emb: DataFrame, labelCol: String,
+      k: Int): DataFrame =
+    probes.join(emb.select(col(labelCol).as("label"),
+        col("vec_id").as("nbr_id"), col("embedding").as("eb")), Seq("label"))
       .filter(col("vec_id") =!= col("nbr_id"))
       .withColumn("sim", cosine_sim(col("ea"), col("eb")))
       .groupBy("vec_id")
@@ -269,7 +324,19 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("tk")).as(Seq("pos", "s")))
       .select(col("vec_id"), (col("pos") + 1).as("rank"),
         col("s.cand_id").as("nbr_id"), round(col("s.sim"), 6).as("sim"))
-  }
+
+  /** [[knnOver]] with each vector probing the cells the kernel column
+    * `cells(embedding)` lists. An empty codebook `cents` (an empty
+    * corpus) short-outs to the empty (vec_id, rank, nbr_id, sim)
+    * frame instead of building a kernel.
+    */
+  private def knnRouted(emb: DataFrame, labelCol: String, k: Int,
+      cents: Seq[(Long, Array[Double])])(cells: Column => Column): DataFrame =
+    if (cents.isEmpty)
+      emb.select(col("vec_id"), lit(1).as("rank"),
+        col("vec_id").as("nbr_id"), lit(0.0).as("sim")).limit(0)
+    else knnOver(routeRows(emb.select(col("vec_id"), col("embedding").as("ea")),
+      cells(col("ea")), emb.schema(labelCol).dataType), emb, labelCol, k)
 
   /** Multi-probe bulk kNN graph: like [[knnGraph]], but each vector
     * searches its `nprobe` nearest CELLS (by centroid cosine) instead
@@ -292,7 +359,7 @@ object Similarity {
     * structs per row) was the nav-build family's measured super-linear
     * term at sf1→sf10 — nlist ∝ n under [[trainedCells]] makes routing
     * O(n·nlist·dims), and the lambda/struct-sort constant (~10× the
-    * cosine arithmetic, KMeansProfile) turned that into 15–25× per
+    * cosine arithmetic, recorded in SURVEY.md) turned that into 15–25× per
     * decade; the kernel removes the constant and the per-row sort
     * allocation (bounded nprobe-slot insertion instead).
     * The candidate join then shuffles nprobe probe rows per vector
@@ -305,33 +372,8 @@ object Similarity {
   def knnGraphProbed(emb: DataFrame, labelCol: String, k: Int,
       nprobe: Int = 2,
       sharedCents: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    import graft.functions.NearestCentroidCell.nearest_cells
     val cents = sharedCents.getOrElse(centroidRows(emb, labelCol))
-    if (cents.isEmpty)
-      // Empty corpus: the old broadcast formulation produced zero
-      // probe rows; the kernel requires a non-empty table, so short
-      // out with the same (vec_id, rank, nbr_id, sim) empty shape.
-      return emb.select(col("vec_id"), lit(1).as("rank"),
-        col("vec_id").as("nbr_id"), lit(0.0).as("sim")).limit(0)
-    val labelType = emb.schema(labelCol).dataType
-    // Probe order (cos DESC, cell ASC) — the same order the previous
-    // (-cos, label) array_sort stated and ivfProbeTopK's row_number
-    // states; the kernel's gtSparkSql comparison matches the DuckDB
-    // oracle's ORDER BY on the NaN corner too (see NearestCentroid).
-    val probes = emb
-      .select(col("vec_id"), col("embedding").as("ea"))
-      .withColumn("_pc", explode(nearest_cells(col("ea"), cents, nprobe)))
-      .select(col("vec_id"), col("ea"), col("_pc").cast(labelType).as("label"))
-    val cand = emb.select(col(labelCol).as("label"),
-      col("vec_id").as("nbr_id"), col("embedding").as("eb"))
-    probes.join(cand, Seq("label"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("sim", cosine_sim(col("ea"), col("eb")))
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("sim"), col("nbr_id"), lit(0L), k).as("tk"))
-      .select(col("vec_id"), posexplode(col("tk")).as(Seq("pos", "s")))
-      .select(col("vec_id"), (col("pos") + 1).as("rank"),
-        col("s.cand_id").as("nbr_id"), round(col("s.sim"), 6).as("sim"))
+    knnRouted(emb, labelCol, k, cents)(nearest_cells(_, cents, nprobe))
   }
 
   /** TRAINED-cell substrate for the bulk kNN / graph-ANN build
@@ -406,56 +448,36 @@ object Similarity {
     */
   def knnGraphRouted(emb: DataFrame, labelCol: String, k: Int,
       cprobe: Int = 2, nprobe: Int = 2, coarseIters: Int = 2): DataFrame = {
-    import graft.functions.NearestCentroidCell.nearest_cells_routed
     val spark = emb.sparkSession
     import spark.implicits._
-    val fine = centroidVectors(emb, labelCol)
-      .select(col("label").cast("long"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    if (fine.isEmpty)
-      return emb.select(col("vec_id"), lit(1).as("rank"),
-        col("vec_id").as("nbr_id"), lit(0.0).as("sim")).limit(0)
-    // Coarse k-means over the fine-centroid table (vec_id = fine
-    // cell): deterministic hash seeds + fixed rounds, so the oracle
-    // replays it with the shared kmeansCtes mirror.
-    val ncoarse = math.max(1,
-      math.ceil(math.sqrt(2.0 * fine.length)).toInt)
-    val mcDF = fine.map { case (c, v) => (c, v.toSeq) }
-      .toDF("vec_id", "embedding")
-    val coarseDF = KMeans.train(mcDF, ncoarse, coarseIters)
-    val coarse = coarseDF
-      .select(col("cell").cast("long"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val owner = KMeans.assign(mcDF, coarseDF)
-      .select(col("vec_id"), col("cell").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val labelType = emb.schema(labelCol).dataType
-    val probes = emb
-      .select(col("vec_id"), col("embedding").as("ea"))
-      .withColumn("_pc", explode(nearest_cells_routed(col("ea"), coarse,
-        fine, owner, cprobe, nprobe)))
-      .select(col("vec_id"), col("ea"), col("_pc").cast(labelType).as("label"))
-    val cand = emb.select(col(labelCol).as("label"),
-      col("vec_id").as("nbr_id"), col("embedding").as("eb"))
-    probes.join(cand, Seq("label"))
-      .filter(col("vec_id") =!= col("nbr_id"))
-      .withColumn("sim", cosine_sim(col("ea"), col("eb")))
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("sim"), col("nbr_id"), lit(0L), k).as("tk"))
-      .select(col("vec_id"), posexplode(col("tk")).as(Seq("pos", "s")))
-      .select(col("vec_id"), (col("pos") + 1).as("rank"),
-        col("s.cand_id").as("nbr_id"), round(col("s.sim"), 6).as("sim"))
+    val fine = centroidRows(emb, labelCol)
+    knnRouted(emb, labelCol, k, fine) { ea =>
+      // Coarse k-means over the fine-centroid table (vec_id = fine
+      // cell): deterministic hash seeds + fixed rounds, so the oracle
+      // replays it with the shared kmeansCtes mirror.
+      val ncoarse = math.max(1,
+        math.ceil(math.sqrt(2.0 * fine.length)).toInt)
+      val mcDF = fine.map { case (c, v) => (c, v.toSeq) }
+        .toDF("vec_id", "embedding")
+      val coarseDF = KMeans.train(mcDF, ncoarse, coarseIters)
+      val owner = KMeans.assign(mcDF, coarseDF)
+        .select(col("vec_id"), col("cell").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      nearest_cells_routed(ea, codebook(coarseDF), fine, owner, cprobe,
+        nprobe)
+    }
   }
 
   /** IVF query path: assign each query to its `nprobe` nearest
     * centroids, then brute-force top-k over the UNION of those cells
-    * only. Two broadcasts (centroid table, then assigned queries) —
-    * the corpus never shuffles; scoring touches the probed cells'
-    * partition slices per query instead of the full corpus.
+    * only. The bounded centroid table is collected once
+    * ([[centroidRows]]) and each query routes map-side through the
+    * nearest-cells kernel ([[probeRows]]); the routed queries
+    * broadcast — the corpus never shuffles, and scoring touches the
+    * probed cells' partition slices per query instead of the full
+    * corpus.
     *
-    * The assignment window is over query × nlist rows (nlist is the
-    * bounded cell count — never corpus-sized), so it is scale-safe;
-    * the candidate ranking is the bounded-heap [[top_k_by_score]]
+    * The candidate ranking is the bounded-heap [[top_k_by_score]]
     * partial aggregate, not a corpus-wide window sort. Each corpus
     * vector lives in exactly one cell, so probed candidate sets are
     * disjoint and rank spans cells without dedup.
@@ -475,16 +497,9 @@ object Similarity {
       k: Int, nprobe: Int = 1,
       candidatePred: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
-    val cent = centroidVectors(emb, labelCol)
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("query_emb"))
-    val wAssign = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("label"))
-    val assigned = q.join(broadcast(cent))
-      .withColumn("csim", cosine_sim(col("query_emb"), col("cvec")))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("query_emb"), col("label"))
+    val assigned = probeRows(queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("query_emb")), "query_emb",
+      centroidRows(emb, labelCol), nprobe, emb.schema(labelCol).dataType)
     val cand = candidatePred.foldLeft(emb)(_ filter _)
       .select(col(labelCol).as("label"),
         col("vec_id").as("cand_id"), col("embedding").as("cand_emb"))
@@ -769,11 +784,7 @@ object Similarity {
   def navigableGraph(emb: DataFrame, knn: DataFrame,
       alpha100: Long = 120, maxDegree: Int = 16,
       maxCandidates: Int = 32): DataFrame = {
-    require(alpha100 >= 100,
-      s"alpha100 is a ×100 fixed-point α ≥ 1, got $alpha100")
-    require(maxDegree >= 1 && maxCandidates >= maxDegree,
-      s"need 1 <= maxDegree <= maxCandidates, " +
-        s"got $maxDegree/$maxCandidates")
+    requirePrune(alpha100, maxDegree, maxCandidates)
     import graft.operators.Checkpointing.CutOps
     // Two independent eager cuts, run concurrently (Par, guide §2.6):
     // - the symmetrize union references `knn` TWICE and nothing
@@ -795,17 +806,45 @@ object Similarity {
       .join(en.select(col("vec_id"), col("e").as("ea")), "vec_id")
       .join(en.select(col("vec_id").as("nbr_id"), col("e").as("eb")),
         "nbr_id")
-      .withColumn("se",
-        floor(cosine_sim(col("ea"), col("eb")) * 1000000 + 0.5)
-          .cast("long"))
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("se").cast("double"), col("nbr_id"),
-        lit(0L), maxCandidates).as("tk"))
-      .select(col("vec_id"), explode(col("tk")).as("t"))
+      .withColumn("se", cosE6(col("ea"), col("eb")).cast("long"))
+    alphaPrune(candRows(topCandidates(sel, col("se"), maxCandidates)), en,
+      alpha100, maxDegree)
+  }
+
+  /** The α/degree bounds every prune path checks. */
+  private def requirePrune(alpha100: Long, maxDegree: Int,
+      maxCandidates: Int): Unit = {
+    require(alpha100 >= 100,
+      s"alpha100 is a ×100 fixed-point α ≥ 1, got $alpha100")
+    require(maxDegree >= 1 && maxCandidates >= maxDegree,
+      s"need 1 <= maxDegree <= maxCandidates, " +
+        s"got $maxDegree/$maxCandidates")
+  }
+
+  /** A cosine on the e6 integer grid, floor(cos·10⁶ + 0.5) (uncast). */
+  private def cosE6(a: Column, b: Column): Column =
+    floor(cosine_sim(a, b) * 1000000 + 0.5)
+
+  /** The nav-graph candidate bound: per vec_id, the top `maxCand`
+    * (nbr_id, se) of `scored` by (`se` DESC, nbr_id) — the
+    * bounded-heap truncation the build, attach, compaction and
+    * delete paths all run before [[alphaPrune]], so a hub's unbounded
+    * in-degree never becomes aggregation state.
+    * @return (vec_id, tk): the kept (cand_id, sim) structs in
+    *   (se DESC, nbr_id) order, `sim` the score as a double
+    */
+  private def topCandidates(scored: DataFrame, se: Column,
+      maxCand: Int): DataFrame =
+    scored.groupBy("vec_id").agg(top_k_by_score(se.cast("double"),
+      col("nbr_id"), lit(0L), maxCand).as("tk"))
+
+  /** A [[topCandidates]] heap as one (vec_id, nbr_id, se) row per
+    * kept candidate — the [[alphaPrune]] input.
+    */
+  private def candRows(tk: DataFrame): DataFrame =
+    tk.select(col("vec_id"), explode(col("tk")).as("t"))
       .select(col("vec_id"), col("t.cand_id").as("nbr_id"),
         col("t.sim").cast("long").as("se"))
-    alphaPrune(sel, en, alpha100, maxDegree)
-  }
 
   /** Double vectors + precomputed norms — the in-lambda prune cosine
     * is dot/(nrm_b·nrm_c) with the same left-to-right folds as the
@@ -835,8 +874,8 @@ object Similarity {
     // (sort + prune in one tight primitive loop): the previous
     // interpreted `array_sort` + `aggregate`/`exists`/`zip_with` HOF
     // chain dispatched maxCandidates × |kept| × dims interpreted
-    // lambda steps per node — NavProfile measured it as the largest
-    // single stage increment of the e28 build. Same results on the
+    // lambda steps per node — the largest single stage increment of
+    // the e28 build in OPTIMIZATION_r16.md's profile. Same results on the
     // same e6 integer grid (the kernel doc pins the op-order parity);
     // the collect_list struct also drops the `ns` sort key the kernel
     // no longer needs — fewer bytes through the per-node exchange.
@@ -878,49 +917,41 @@ object Similarity {
     */
   def navigableAttach(embBase: DataFrame, embDelta: DataFrame,
       labelCol: String, alpha100: Long = 120, maxDegree: Int = 16,
-      maxCandidates: Int = 32, nprobe: Int = 2): DataFrame = {
-    val sel = probedSel(embBase, embDelta, labelCol, maxCandidates,
-      nprobe).select("vec_id", "nbr_id", "se")
-    val fwd = alphaPrune(sel, withNorms(embBase), alpha100, maxDegree)
+      maxCandidates: Int = 32, nprobe: Int = 2): DataFrame =
+    linkRows(alphaPrune(probedSel(embBase, embDelta, labelCol,
+        maxCandidates, nprobe).select("vec_id", "nbr_id", "se"),
+      withNorms(embBase), alpha100, maxDegree))
+
+  /** An attach's kept edges (vec_id, rank, nbr_id, sim_e6) as 'fwd'
+    * rows, plus each edge's reverse as a 'back' row (rank null) — the
+    * backlink that keeps the new node reachable.
+    */
+  private def linkRows(fwd: DataFrame): DataFrame =
     fwd.select(col("vec_id"), lit("fwd").as("kind"), col("rank"),
         col("nbr_id"), col("sim_e6"))
       .union(fwd.select(col("nbr_id").as("vec_id"),
         lit("back").as("kind"), lit(null).cast("long").as("rank"),
         col("vec_id").as("nbr_id"), col("sim_e6")))
-  }
 
   /** The delta→base probed-candidate step shared by the flat and
     * hierarchical attach paths: route each delta vector to its
-    * `nprobe` nearest base cells map-side (broadcast centroid array
-    * — zero corpus shuffle), score in-cell base candidates on the e6
-    * grid, heap-truncate to `maxCand` per delta vector.
+    * `nprobe` nearest base cells ([[probeRows]] — zero corpus
+    * shuffle), score in-cell base candidates on the e6 grid,
+    * heap-truncate to `maxCand` per delta vector.
     * @return (vec_id, pos 0-based in (se DESC, nbr_id) order,
     *   nbr_id, se)
     */
   private def probedSel(embBase: DataFrame, embDelta: DataFrame,
       labelCol: String, maxCand: Int, nprobe: Int): DataFrame = {
-    val centArr = centroidVectors(embBase, labelCol)
-      .agg(array_sort(collect_list(struct(col("label"), col("cvec"))))
-        .as("cents"))
-    // (-cos, label) sorts as (cos DESC, label ASC) — knnGraphProbed's
-    // exact routing; negation is IEEE-exact so ties can't diverge.
-    val probes = embDelta
-      .select(col("vec_id"), col("embedding").as("ea"))
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id"), col("ea"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct((-cosine_sim(col("ea"), c.getField("cvec"))).as("neg"),
-            c.getField("label").as("label")))), 1, nprobe)).as("p"))
-      .select(col("vec_id"), col("ea"), col("p.label").as("label"))
+    val probes = probeRows(
+      embDelta.select(col("vec_id"), col("embedding").as("ea")), "ea",
+      centroidRows(embBase, labelCol), nprobe,
+      embBase.schema(labelCol).dataType)
     val cand = embBase.select(col(labelCol).as("label"),
       col("vec_id").as("nbr_id"), col("embedding").as("eb"))
-    probes.join(cand, Seq("label"))
-      .withColumn("se",
-        floor(cosine_sim(col("ea"), col("eb")) * 1000000 + 0.5)
-          .cast("long"))
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("se").cast("double"), col("nbr_id"),
-        lit(0L), maxCand).as("tk"))
+    topCandidates(probes.join(cand, Seq("label"))
+        .withColumn("se", cosE6(col("ea"), col("eb")).cast("long")),
+      col("se"), maxCand)
       .select(col("vec_id"), posexplode(col("tk")).as(Seq("pos", "t")))
       .select(col("vec_id"), col("pos"),
         col("t.cand_id").as("nbr_id"), col("t.sim").cast("long").as("se"))
@@ -1038,11 +1069,7 @@ object Similarity {
   def navCompact(emb: DataFrame, built: DataFrame, att: DataFrame,
       alpha100: Long = 120, maxDegree: Int = 16,
       maxCandidates: Int = 32): DataFrame = {
-    require(alpha100 >= 100,
-      s"alpha100 is a ×100 fixed-point α ≥ 1, got $alpha100")
-    require(maxDegree >= 1 && maxCandidates >= maxDegree,
-      s"need 1 <= maxDegree <= maxCandidates, " +
-        s"got $maxDegree/$maxCandidates")
+    requirePrune(alpha100, maxDegree, maxCandidates)
     import graft.operators.Checkpointing.CutOps
     // Both inputs are consumed by several branches below — cut once
     // so the (already-executed-shaped) build/attach plans don't
@@ -1070,13 +1097,9 @@ object Similarity {
       .select("vec_id")
     // Overflow class: bounded heap to maxCandidates (the build's
     // candidate bound), then the shared RobustPrune core.
-    val overCand = merged.join(overNodes, Seq("vec_id"), "left_semi")
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("sim_e6").cast("double"), col("nbr_id"),
-        lit(0L), maxCandidates).as("tk"))
-      .select(col("vec_id"), explode(col("tk")).as("t"))
-      .select(col("vec_id"), col("t.cand_id").as("nbr_id"),
-        col("t.sim").cast("long").as("se"))
+    val overCand = candRows(topCandidates(
+      merged.join(overNodes, Seq("vec_id"), "left_semi"), col("sim_e6"),
+      maxCandidates))
     val repruned = alphaPrune(overCand, withNorms(emb), alpha100,
       maxDegree)
     // Within-cap appended class: same edges, refreshed ranks.
@@ -1123,11 +1146,7 @@ object Similarity {
   def navDelete(emb: DataFrame, built: DataFrame, deleted: DataFrame,
       alpha100: Long = 120, maxDegree: Int = 16,
       maxCandidates: Int = 32): DataFrame = {
-    require(alpha100 >= 100,
-      s"alpha100 is a ×100 fixed-point α ≥ 1, got $alpha100")
-    require(maxDegree >= 1 && maxCandidates >= maxDegree,
-      s"need 1 <= maxDegree <= maxCandidates, " +
-        s"got $maxDegree/$maxCandidates")
+    requirePrune(alpha100, maxDegree, maxCandidates)
     import graft.operators.Checkpointing.CutOps
     // Three independent eager cuts (built graph, tombstones, corpus
     // norms) — run concurrently (Par, guide §2.6) instead of
@@ -1179,16 +1198,10 @@ object Similarity {
             col("vec_id"), lit(", nbr_id="), col("nbr_id"),
             lit(") - the embedding input must cover every "),
             lit("surviving graph node"))))
-          .otherwise(
-            floor(cosine_sim(col("ea"), col("eb")) * 1000000 + 0.5))
+          .otherwise(cosE6(col("ea"), col("eb")))
           .cast("long"))
-      .groupBy("vec_id")
-      .agg(top_k_by_score(col("se").cast("double"), col("nbr_id"),
-        lit(0L), maxCandidates).as("tk"))
-      .select(col("vec_id"), explode(col("tk")).as("t"))
-      .select(col("vec_id"), col("t.cand_id").as("nbr_id"),
-        col("t.sim").cast("long").as("se"))
-    val repruned = alphaPrune(scored, en, alpha100, maxDegree)
+    val repruned = alphaPrune(candRows(topCandidates(scored, col("se"),
+      maxCandidates)), en, alpha100, maxDegree)
     alive.join(aff, Seq("vec_id"), "left_anti")
       .union(repruned.select(col("vec_id"), col("rank"), col("nbr_id"),
         col("sim_e6")))
@@ -1225,27 +1238,36 @@ object Similarity {
   def hierarchicalAttach(embBase: DataFrame, embDelta: DataFrame,
       labelCol: String, maxLevel: Int, alpha100: Long = 120,
       maxDegree: Int = 16, maxCandidates: Int = 32, nprobe: Int = 2,
-      kUpper: Int = 8): DataFrame = {
+      kUpper: Int = 8): DataFrame =
+    hierAttach(embBase, embDelta, maxLevel, alpha100, maxDegree,
+      maxCandidates, nprobe, kUpper, labelCol)(identity)
+
+  /** The per-level body of both hierarchical attaches: level 0 is the
+    * flat [[navigableAttach]] against the whole base, level l ≥ 1 the
+    * probed top-`kUpper` of the level's delta members against its base
+    * members as link rows. `cells` gives the base members their
+    * `labelCol` cells; the levels run concurrently
+    * ([[Par.inParallel]], guide §2.6 — each may train cells) and union
+    * in level order. maxConcurrent = 3: each in-flight level's
+    * trainedCells holds its own corpus-sized cache.
+    */
+  private def hierAttach(embBase: DataFrame, embDelta: DataFrame,
+      maxLevel: Int, alpha100: Long, maxDegree: Int, maxCandidates: Int,
+      nprobe: Int, kUpper: Int, labelCol: String)(
+      cells: DataFrame => DataFrame): DataFrame = {
     require(maxLevel >= 1, s"maxLevel must be >= 1, got $maxLevel")
     val lvl = hierLevel(maxLevel)
-    val base0 = navigableAttach(embBase, embDelta, labelCol, alpha100,
-        maxDegree, maxCandidates, nprobe)
-      .select(lit(0L).as("level"), col("vec_id"), col("kind"),
-        col("rank"), col("nbr_id"), col("sim_e6"))
-    (1 to maxLevel).foldLeft(base0) { (acc, l) =>
-      val fwd = probedSel(embBase.filter(lvl >= l),
-          embDelta.filter(lvl >= l), labelCol, kUpper, nprobe)
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("nbr_id"), col("se").as("sim_e6"))
-      acc
-        .unionByName(fwd.select(lit(l.toLong).as("level"),
-          col("vec_id"), lit("fwd").as("kind"), col("rank"),
-          col("nbr_id"), col("sim_e6")))
-        .unionByName(fwd.select(lit(l.toLong).as("level"),
-          col("nbr_id").as("vec_id"), lit("back").as("kind"),
-          lit(null).cast("long").as("rank"),
-          col("vec_id").as("nbr_id"), col("sim_e6")))
-    }
+    def leveled(l: Int, rows: DataFrame) =
+      rows.select(lit(l.toLong).as("level") +: rows.columns.map(col): _*)
+    val builds: Seq[() => DataFrame] =
+      (() => leveled(0, navigableAttach(cells(embBase), embDelta, labelCol,
+        alpha100, maxDegree, maxCandidates, nprobe))) +:
+      (1 to maxLevel).map(l => () => leveled(l, linkRows(
+        probedSel(cells(embBase.filter(lvl >= l)), embDelta.filter(lvl >= l),
+            labelCol, kUpper, nprobe)
+          .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
+            col("nbr_id"), col("se").as("sim_e6")))))
+    Par.inParallel(builds, maxConcurrent = 3).reduce(_.unionByName(_))
   }
 
   /** Deterministic geometric LEVEL assignment for the hierarchical
@@ -1289,18 +1311,33 @@ object Similarity {
     */
   def hierarchicalNavGraph(emb: DataFrame, labelCol: String,
       maxLevel: Int, k0: Int = 16, kUpper: Int = 8,
-      nprobe: Int = 2): DataFrame = {
+      nprobe: Int = 2): DataFrame =
+    hierBuild(emb, maxLevel, k0, kUpper, nprobe, labelCol)(identity)
+
+  /** The per-level body of both hierarchical builds: level 0 is
+    * [[navigableGraph]] over the probed kNN graph of the whole corpus,
+    * level l ≥ 1 the probed kNN graph of the level's members. `cells`
+    * gives a member set its `labelCol` cells. Levels are independent
+    * builds whose construction may be ACTION-driven (trainedCells runs
+    * count + Lloyd collects), so they run concurrently
+    * ([[Par.inParallel]], guide §2.6 job overlap) and union in level
+    * order; maxConcurrent = 3 bounds the in-flight levels' caches.
+    */
+  private def hierBuild(emb: DataFrame, maxLevel: Int, k0: Int, kUpper: Int,
+      nprobe: Int, labelCol: String)(cells: DataFrame => DataFrame)
+      : DataFrame = {
     val lvl = hierLevel(maxLevel)
-    val base = navigableGraph(emb,
-        knnGraphProbed(emb, labelCol, k0, nprobe)
-          .select(col("vec_id"), col("nbr_id")))
-      .select(lit(0L).as("level"), col("vec_id"), col("nbr_id"))
-    (1 to maxLevel).foldLeft(base) { (acc, l) =>
-      acc.unionByName(
-        knnGraphProbed(emb.filter(lvl >= l), labelCol, kUpper, nprobe)
+    def knn(members: DataFrame, k: Int) =
+      knnGraphProbed(cells(members), labelCol, k, nprobe)
+    val builds: Seq[() => DataFrame] =
+      (() => navigableGraph(emb,
+          knn(emb, k0).select(col("vec_id"), col("nbr_id")))
+        .select(lit(0L).as("level"), col("vec_id"), col("nbr_id"))) +:
+      (1 to maxLevel).map(l => () =>
+        knn(emb.filter(lvl >= l), kUpper)
           .select(lit(l.toLong).as("level"), col("vec_id"),
             col("nbr_id")))
-    }
+    Par.inParallel(builds, maxConcurrent = 3).reduce(_.unionByName(_))
   }
 
   /** [[hierarchicalNavGraph]] on the TRAINED-cell substrate — the
@@ -1318,33 +1355,9 @@ object Similarity {
     */
   def hierarchicalNavGraphTrained(emb: DataFrame, maxLevel: Int,
       k0: Int = 16, kUpper: Int = 8, nprobe: Int = 2,
-      perCell: Int = 250, iters: Int = 3): DataFrame = {
-    val lvl = hierLevel(maxLevel)
-    // Levels are independent builds whose construction is ACTION-
-    // driven (each trainedCells runs count + Lloyd collects) — build
-    // them concurrently ([[Par.inParallel]], guide §2.6 job overlap)
-    // instead of serializing 5 × ~6 driver-blocking jobs; the union
-    // order (level 0 first, then 1..maxLevel) and every level's rows
-    // are identical to the sequential fold this replaces.
-    val builds: Seq[() => DataFrame] =
-      (() => navigableGraph(emb,
-          knnGraphProbed(trainedCells(emb, perCell, iters), "cell", k0,
-            nprobe)
-            .select(col("vec_id"), col("nbr_id")))
-        .select(lit(0L).as("level"), col("vec_id"), col("nbr_id"))) +:
-      (1 to maxLevel).map(l => () =>
-        knnGraphProbed(
-          trainedCells(emb.filter(lvl >= l), perCell, iters), "cell",
-          kUpper, nprobe)
-          .select(lit(l.toLong).as("level"), col("vec_id"),
-            col("nbr_id")))
-    // maxConcurrent = 3: each level's trainedCells persists its own
-    // corpus-sized projection, so peak executor storage is the sum of
-    // the IN-FLIGHT levels' caches (the sequential fold held one) —
-    // 3 bounds that multiplier while still overlapping each Lloyd
-    // loop's driver-blocking collects with the next level's tasks.
-    Par.inParallel(builds, maxConcurrent = 3).reduce(_.unionByName(_))
-  }
+      perCell: Int = 250, iters: Int = 3): DataFrame =
+    hierBuild(emb, maxLevel, k0, kUpper, nprobe, "cell")(
+      trainedCells(_, perCell, iters))
 
   /** [[hierarchicalAttach]] on the TRAINED-cell substrate (the e48
     * production form): the flat level-0 attach routes over cells
@@ -1358,35 +1371,9 @@ object Similarity {
       embDelta: DataFrame, maxLevel: Int, alpha100: Long = 120,
       maxDegree: Int = 16, maxCandidates: Int = 32, nprobe: Int = 2,
       kUpper: Int = 8, perCell: Int = 250, iters: Int = 3)
-      : DataFrame = {
-    require(maxLevel >= 1, s"maxLevel must be >= 1, got $maxLevel")
-    val lvl = hierLevel(maxLevel)
-    // Per-level trains are independent action-driven builds — run
-    // them concurrently (the [[hierarchicalNavGraphTrained]]
-    // rationale); union order and rows match the sequential fold.
-    val builds: Seq[() => DataFrame] =
-      (() => navigableAttach(trainedCells(embBase, perCell, iters),
-          embDelta, "cell", alpha100, maxDegree, maxCandidates, nprobe)
-        .select(lit(0L).as("level"), col("vec_id"), col("kind"),
-          col("rank"), col("nbr_id"), col("sim_e6"))) +:
-      (1 to maxLevel).map(l => () => {
-        val fwd = probedSel(
-            trainedCells(embBase.filter(lvl >= l), perCell, iters),
-            embDelta.filter(lvl >= l), "cell", kUpper, nprobe)
-          .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-            col("nbr_id"), col("se").as("sim_e6"))
-        fwd.select(lit(l.toLong).as("level"),
-            col("vec_id"), lit("fwd").as("kind"), col("rank"),
-            col("nbr_id"), col("sim_e6"))
-          .unionByName(fwd.select(lit(l.toLong).as("level"),
-            col("nbr_id").as("vec_id"), lit("back").as("kind"),
-            lit(null).cast("long").as("rank"),
-            col("vec_id").as("nbr_id"), col("sim_e6")))
-      })
-    // maxConcurrent = 3 — the hierarchicalNavGraphTrained cache-sum
-    // rationale.
-    Par.inParallel(builds, maxConcurrent = 3).reduce(_.unionByName(_))
-  }
+      : DataFrame =
+    hierAttach(embBase, embDelta, maxLevel, alpha100, maxDegree,
+      maxCandidates, nprobe, kUpper, "cell")(trainedCells(_, perCell, iters))
 
   /** HIERARCHICAL beam search — the descent half of the HNSW story:
     * walk the TOP level from the caller's entry points with a small
@@ -1461,29 +1448,21 @@ object Similarity {
     * (centroid table broadcast — the corpus never shuffles), and the
     * in-cell scan scores INT8 codes ([[sq8Quantize]]'s 65-byte rows,
     * the reason the whole corpus index fits in memory) with e16's
-    * integer-exact rule. The cell-assignment window ranks only the
-    * bounded centroid table, and ranking is the bounded-heap
-    * aggregate — never a corpus-wide window.
+    * integer-exact rule. Each query routes through the
+    * nearest-cells kernel ([[probeRows]] with one probe) in the
+    * same map-side pass that quantizes it, and ranking is the
+    * bounded-heap aggregate — never a window.
     *
     * @return (query_id, label, rank, cand_id, sim_e6)
     */
   def ivfSq8TopK(emb: DataFrame, queries: DataFrame, labelCol: String,
       k: Int): DataFrame = {
-    val cent = centroidVectors(emb, labelCol)
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding"))
-    val qcodes = sq8Quantize(queries.select(col("vec_id"), col("embedding")))
+    val assigned = sq8Quantize(probeRows(
+        queries.select(col("vec_id"), col("embedding")), "embedding",
+        centroidRows(emb, labelCol), 1, emb.schema(labelCol).dataType))
       .filter(col("sq") > 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
+      .select(col("vec_id").as("query_id"), col("label"), col("q").as("qq"),
         col("sq").as("qsq"))
-    val wAssign = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("label"))
-    val assigned = q.join(broadcast(cent))
-      .withColumn("csim", cosine_sim(col("embedding"), col("cvec")))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("label"))
-      .join(qcodes, "query_id")
     val cand = sq8Quantize(emb.select(col("vec_id"),
         col(labelCol).as("label"), col("embedding")))
       .filter(col("sq") > 0)
@@ -1660,6 +1639,33 @@ object Similarity {
       .withColumn("lo", expr(half(33)))
       .drop("embedding")
   }
+
+  /** PRODUCT-quantization codebooks over the `vec` column of
+    * (vec_id, vec, …): subspace m covers dims [m·subDims,
+    * (m+1)·subDims) and gets its own 8-cell [[KMeans.train]] book
+    * (2 Lloyd iterations). The M trains are independent action-driven
+    * loops, so they run concurrently ([[Par.inParallel]], guide §2.6);
+    * each is deterministic, so the books equal the sequential form's.
+    */
+  private[graft] def pqBooks(vectors: DataFrame, vec: String, m: Int,
+      subDims: Int): IndexedSeq[Seq[(Long, Array[Double])]] =
+    Par.inParallel((0 until m).map(i => () => codebook(KMeans.train(
+      vectors.select(col("vec_id"), pqSub(vec, i, subDims).as("embedding")),
+      k = 8, iters = 2)))).toIndexedSeq
+
+  /** PQ encode: `vectors` plus one `code_m` per book — the nearest
+    * cell of subspace m through the compiled nearest-centroid kernel,
+    * map-side and stateless, so batch and append-mode streams share it
+    * (graft.streaming.AnnStream.pqEncode); other columns pass through.
+    */
+  private[graft] def pqQuantize(vectors: DataFrame, vec: String,
+      books: Seq[Seq[(Long, Array[Double])]], subDims: Int): DataFrame =
+    books.zipWithIndex.foldLeft(vectors) { case (df, (book, m)) =>
+      df.withColumn(s"code_$m", nearest_centroid(pqSub(vec, m, subDims), book))
+    }
+
+  private def pqSub(vec: String, m: Int, subDims: Int): Column =
+    expr(s"slice($vec, ${m * subDims + 1}, $subDims)")
 
   /** Exhaustive HAMMING search over the packed sign codes — the
     * candidate-generation pass a binary-quantized index serves:

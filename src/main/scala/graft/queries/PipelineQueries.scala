@@ -1180,7 +1180,7 @@ object PipelineQueries {
     * grow with the probe batch.
     */
   private def adcQueryLut(s: SparkSession,
-      qRows: Array[(Long, Array[Double])],
+      qRows: Seq[(Long, Array[Double])],
       books: IndexedSeq[Seq[(Long, Array[Double])]],
       subDims: Int): (DataFrame, Long) = {
     import s.implicits._
@@ -1220,26 +1220,10 @@ object PipelineQueries {
     */
   private def pqCoded(s: SparkSession, d: String)
       : (DataFrame, IndexedSeq[Seq[(Long, Array[Double])]]) = {
-    import graft.functions.NearestCentroidCell.nearest_centroid
     val emb = Tables.embeddings(s, d).select(col("vec_id"),
       expr("transform(embedding, v -> cast(v as double))").as("e"))
-    def sub(m: Int) = expr(s"slice(e, ${m * PqSubDims + 1}, $PqSubDims)")
-    // The four subspace codebook trains are independent action-driven
-    // Lloyd loops — run them concurrently (Par.inParallel, guide §2.6
-    // job overlap) instead of ~16 serialized driver-blocking jobs;
-    // each train is deterministic, so the books are identical to the
-    // sequential form's.
-    val books: IndexedSeq[Seq[(Long, Array[Double])]] =
-      graft.operators.Par.inParallel((0 until PqM).map(m => () =>
-        KMeans.train(emb.select(col("vec_id"),
-            sub(m).as("embedding")), k = 8, iters = 2)
-          .select(col("cell").cast("long"), col("cvec")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      )).toIndexedSeq
-    val coded = (0 until PqM).foldLeft(emb) { (df, m) =>
-      df.withColumn(s"code_$m", nearest_centroid(sub(m), books(m)))
-    }
-    (coded, books)
+    val books = Similarity.pqBooks(emb, "e", PqM, PqSubDims)
+    (Similarity.pqQuantize(emb, "e", books, PqSubDims), books)
   }
 
   private def pqAdcScores(s: SparkSession, d: String): DataFrame = {
@@ -1247,10 +1231,8 @@ object PipelineQueries {
     // ADC lookup table, driver-built over the 10 probe queries with
     // the engine's left-to-right fold (bounded: queries × M × k
     // scalars — the centroid-handoff class, never corpus).
-    val qRows = coded.filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("e")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val (qlut, stride) = adcQueryLut(s, qRows, books, PqSubDims)
+    val (qlut, stride) = adcQueryLut(s, Similarity.codebook(
+      coded.filter(col("vec_id") < 10).select("vec_id", "e")), books, PqSubDims)
     def l(m: Int) = element_at(col("lut"),
       lit(m * stride) + col(s"code_$m"))
     coded.join(broadcast(qlut), col("vec_id") =!= col("query_id"))
@@ -3680,24 +3662,22 @@ object PipelineQueries {
     Q("e36_nprobe_curve",
       (s, d) => {
         import graft.functions.CosineSimilarity.cosine_sim
+        import graft.functions.NearestCentroidCell.nearest_cells
         import graft.functions.TopKByScore.top_k_by_score
-        import org.apache.spark.sql.expressions.Window
         val emb = Tables.embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 10)
         val exact = Similarity.bruteForceTopK(emb, qs, k = 5)
           .select(col("query_id"), col("cand_id"))
-        val cent = Similarity.centroidVectors(emb, "label")
-        val wAssign = Window.partitionBy("query_id")
-          .orderBy(col("csim").desc, col("label"))
+        // Each query's 4 nearest cells in probe order: the kernel's
+        // array position is the cell's rank.
         val assigned = qs
           .select(col("vec_id").as("query_id"),
-            col("embedding").as("query_emb"))
-          .join(broadcast(cent))
-          .withColumn("csim", cosine_sim(col("query_emb"), col("cvec")))
-          .withColumn("cell_rank", row_number().over(wAssign))
-          .filter(col("cell_rank") <= 4)
-          .select(col("query_id"), col("query_emb"), col("label"),
-            col("cell_rank"))
+            col("embedding").as("query_emb"),
+            posexplode(nearest_cells(col("embedding"),
+              Similarity.centroidRows(emb, "label"), 4)).as(Seq("pos", "pc")))
+          .select(col("query_id"), col("query_emb"),
+            col("pc").cast(emb.schema("label").dataType).as("label"),
+            (col("pos") + 1).as("cell_rank"))
         val cand = emb.select(col("label"), col("vec_id").as("cand_id"),
           col("embedding").as("cand_emb"))
         val top = cand.join(broadcast(assigned),
@@ -5182,10 +5162,8 @@ object PipelineQueries {
           expr("transform(embedding, v -> cast(v as double))")
             .as("embedding"))
         val seeds = KMeans.seedsPlusPlus(emb, k = 6)
-        val books = seeds
-          .select((col("step") - 1).cast("long").as("cell"), col("cvec"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+        val books = Similarity.codebook(seeds
+          .select((col("step") - 1).as("cell"), col("cvec")))
         val counts = emb.withColumn("cell",
             nearest_centroid(col("embedding"), books))
           .groupBy("cell").agg(count(lit(1)).as("n_assigned"))
@@ -7833,44 +7811,23 @@ object PipelineQueries {
     // is M bytes of codes, and scan cost is cell-local.
     Q("e21_ivf_pq",
       (s, d) => {
-        import graft.functions.CosineSimilarity.cosine_sim
-        import graft.functions.NearestCentroidCell.nearest_centroid
         import graft.functions.TopKByScore.top_k_by_score
-        import org.apache.spark.sql.expressions.Window
-        val M = 4
-        val subDims = 16
-        val emb = Tables.embeddings(s, d).select(col("vec_id"),
-          col("label"),
+        val embRaw = Tables.embeddings(s, d)
+        val emb = embRaw.select(col("vec_id"), col("label"),
           expr("transform(embedding, v -> cast(v as double))").as("e"))
-        def sub(m: Int) = expr(s"slice(e, ${m * subDims + 1}, $subDims)")
-        val books: IndexedSeq[Seq[(Long, Array[Double])]] =
-          (0 until M).map { m =>
-            KMeans.train(emb.select(col("vec_id"),
-                sub(m).as("embedding")), k = 8, iters = 2)
-              .select(col("cell").cast("long"), col("cvec")).collect()
-              .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-          }
-        val qRows = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id"), col("e")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        val books = Similarity.pqBooks(emb, "e", PqM, PqSubDims)
+        val qs = emb.filter(col("vec_id") < 10)
         // LUT as broadcast-side DATA, not a plan literal (the
         // adcQueryLut rationale), joined onto the routed query rows.
-        val (qlut, stride) = adcQueryLut(s, qRows, books, subDims)
-        val coded = (0 until M).foldLeft(emb) { (df, m) =>
-          df.withColumn(s"code_$m", nearest_centroid(sub(m), books(m)))
-        }
+        val (qlut, stride) = adcQueryLut(s,
+          Similarity.codebook(qs.select("vec_id", "e")), books, PqSubDims)
+        val coded = Similarity.pqQuantize(emb, "e", books, PqSubDims)
         // coarse routing: nearest label centroid, nprobe = 1
-        val cent = Similarity.centroidVectors(
-          Tables.embeddings(s, d), "label")
-        val wAssign = Window.partitionBy("query_id")
-          .orderBy(col("csim").desc, col("label"))
-        val assigned = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("e").as("qe"))
-          .join(broadcast(cent))
-          .withColumn("csim", cosine_sim(col("qe"), col("cvec")))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
-          .select(col("query_id"), col("label"))
+        val assigned = Similarity.probeRows(
+            qs.select(col("vec_id").as("query_id"), col("e")), "e",
+            Similarity.centroidRows(embRaw, "label"), 1,
+            embRaw.schema("label").dataType)
+          .select("query_id", "label")
           .join(qlut, "query_id")
         def l(m: Int) = element_at(col("lut"),
           lit(m * stride) + col(s"code_$m"))
@@ -7908,46 +7865,36 @@ object PipelineQueries {
     // residual map-side.
     Q("e34_residual_pq",
       (s, d) => {
-        import graft.functions.CosineSimilarity.cosine_sim
-        import graft.functions.NearestCentroidCell.nearest_centroid
         import graft.functions.TopKByScore.top_k_by_score
-        import org.apache.spark.sql.expressions.Window
-        val M = 4
-        val subDims = 16
+        import s.implicits._
         val embRaw = Tables.embeddings(s, d)
+        val labelType = embRaw.schema("label").dataType
         val emb = embRaw.select(col("vec_id"), col("label"),
           expr("transform(embedding, v -> cast(v as double))").as("e"))
-        val cent = Similarity.centroidVectors(embRaw, "label")
+        // The label centroids once, as the driver-side codebook the
+        // query routing needs; residuals and routed queries join it
+        // back as a small local table.
+        val cents = Similarity.centroidRows(embRaw, "label")
+        val cent = cents.map { case (l, v) => (l, v.toSeq) }
+          .toDF("label", "cvec")
+          .select(col("label").cast(labelType).as("label"), col("cvec"))
         val resid = emb.join(broadcast(cent), emb("label") === cent("label"))
           .select(col("vec_id"), emb("label"),
             expr("zip_with(e, cvec, (a, b) -> a - b)").as("r"))
-        def sub(m: Int) = expr(s"slice(r, ${m * subDims + 1}, $subDims)")
-        val books: IndexedSeq[Seq[(Long, Array[Double])]] =
-          (0 until M).map { m =>
-            KMeans.train(resid.select(col("vec_id"),
-                sub(m).as("embedding")), k = 8, iters = 2)
-              .select(col("cell").cast("long"), col("cvec")).collect()
-              .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-          }
-        val coded = (0 until M).foldLeft(resid) { (df, m) =>
-          df.withColumn(s"code_$m", nearest_centroid(sub(m), books(m)))
-        }
+        val books = Similarity.pqBooks(resid, "r", PqM, PqSubDims)
+        val coded = Similarity.pqQuantize(resid, "r", books, PqSubDims)
         // Route each query to its nearest coarse centroid, then take
         // the residual vs the ROUTED centroid (not the query's own
         // label) — the cell whose residual space the search runs in.
-        val wAssign = Window.partitionBy("query_id")
-          .orderBy(col("csim").desc, col("label"))
-        val qAssigned = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("e").as("qe"))
-          .join(broadcast(cent))
-          .withColumn("csim", cosine_sim(col("qe"), col("cvec")))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
+        val qAssigned = Similarity.probeRows(emb.filter(col("vec_id") < 10)
+            .select(col("vec_id").as("query_id"), col("e").as("qe")), "qe",
+            cents, 1, labelType)
+          .join(broadcast(cent), "label")
           .select(col("query_id"), col("label"),
             expr("zip_with(qe, cvec, (a, b) -> a - b)").as("qr"))
-        val qRows = qAssigned.select(col("query_id"), col("qr")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val (qlut, stride) = adcQueryLut(s, qRows, books, subDims)
+        val (qlut, stride) = adcQueryLut(s,
+          Similarity.codebook(qAssigned.select("query_id", "qr")), books,
+          PqSubDims)
         val assigned = qAssigned.select("query_id", "label")
           .join(qlut, "query_id")
         def l(m: Int) = element_at(col("lut"),

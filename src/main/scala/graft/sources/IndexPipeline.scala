@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-import graft.functions.CosineSimilarity.cosine_sim
 import graft.functions.NearestCentroidCell.nearest_centroid
 import graft.functions.TopKByScore.top_k_by_score
 import graft.operators.{KMeans, Similarity}
@@ -22,34 +22,51 @@ import graft.operators.{KMeans, Similarity}
   * directories — [[search]] pins this as partition pruning
   * (`PartitionFilters` on `cell`), the file-level analog of "the
   * corpus never shuffles". Build is one training run + one map-side
-  * encode pass; search is centroid routing (bounded driver handoff,
-  * the e7 class) + a pruned scan + the bounded-heap top-k.
+  * encode pass; search is centroid routing + a pruned scan + the
+  * bounded-heap top-k.
+  *
+  * Every step routes by the ANN family's one rule: the stored
+  * centroids come back through [[Similarity.codebook]] (the bounded
+  * driver handoff, the e7 class), build and append assign each vector
+  * its nearest cell with the compiled nearest-centroid kernel, and
+  * search sends each query to its top-`nprobe` cells by
+  * (cosine DESC, cell ASC) through [[Similarity.probeRows]].
   */
 object IndexPipeline {
 
   /** Train + encode + write. Returns the learned cell count. */
   def build(spark: SparkSession, embeddings: DataFrame, indexDir: String,
       k: Int = 8, iters: Int = 3): Int = {
-    // KMeans' centroid handoff requires double vectors; parquet
-    // embeddings arrive as float (the e7 cast precedent).
-    val embD = embeddings.select(col("vec_id"),
-      expr("transform(embedding, v -> cast(v as double))")
-        .as("embedding"))
+    val embD = doubles(embeddings)
     val cent = KMeans.train(embD, k, iters)
     cent.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/centroids")
     val cents = collectCentroids(spark, indexDir)
-    val codes = Similarity.sq8Quantize(
-        embD.select(col("vec_id"), col("embedding"),
-          nearest_centroid(col("embedding"), cents).as("cell")))
-      .filter(col("sq") > 0)
-    codes
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cell")
-      .parquet(s"$indexDir/codes")
+    writeCodes(codes(embD, cents), indexDir, SaveMode.Overwrite)
     cents.length
   }
+
+  /** (vec_id, embedding as double[]) — KMeans' centroid handoff
+    * requires double vectors; parquet embeddings arrive as float (the
+    * e7 cast precedent).
+    */
+  private def doubles(vectors: DataFrame): DataFrame =
+    vectors.select(col("vec_id"),
+      expr("transform(embedding, v -> cast(v as double))").as("embedding"))
+
+  /** Each vector's SQ8 code row under its nearest stored cell; zero
+    * vectors drop.
+    */
+  private def codes(embD: DataFrame,
+      cents: Seq[(Long, Array[Double])]): DataFrame =
+    Similarity.sq8Quantize(embD.withColumn("cell",
+        nearest_centroid(col("embedding"), cents)))
+      .filter(col("sq") > 0)
+
+  private def writeCodes(codes: DataFrame, indexDir: String,
+      mode: SaveMode): Unit =
+    codes.repartition(col("cell"))
+      .sortWithinPartitions(col("cell"), col("vec_id"))
+      .write.mode(mode).partitionBy("cell").parquet(s"$indexDir/codes")
 
   /** Incremental MAINTENANCE: encode new vectors against the
     * EXISTING centroids (no retrain — the standard IVF maintenance
@@ -61,21 +78,9 @@ object IndexPipeline {
     */
   def append(spark: SparkSession, indexDir: String,
       vectors: DataFrame): Long = {
-    val cents = collectCentroids(spark, indexDir)
-    val embD = vectors.select(col("vec_id"),
-      expr("transform(embedding, v -> cast(v as double))")
-        .as("embedding"))
-    val codes = Similarity.sq8Quantize(
-        embD.select(col("vec_id"), col("embedding"),
-          nearest_centroid(col("embedding"), cents).as("cell")))
-      .filter(col("sq") > 0)
-    val n = codes.count()
-    codes
-      .repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cell")
-      .parquet(s"$indexDir/codes")
+    val rows = codes(doubles(vectors), collectCentroids(spark, indexDir))
+    val n = rows.count()
+    writeCodes(rows, indexDir, SaveMode.Append)
     n
   }
 
@@ -102,16 +107,13 @@ object IndexPipeline {
   /** k-row centroid handoff (bounded, the e7/KMeans class). */
   private def collectCentroids(spark: SparkSession,
       indexDir: String): Seq[(Long, Array[Double])] =
-    spark.read.parquet(s"$indexDir/centroids")
-      .select(col("cell").cast("long"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    Similarity.codebook(
+      spark.read.parquet(s"$indexDir/centroids").select("cell", "cvec"))
 
   /** Serve a query batch against the built index: route each query
-    * to its `nprobe` nearest centroids MAP-SIDE — one broadcast row
-    * holding the sorted k-centroid array, an `array_sort` over the
-    * nlist scored cells per query (the e9/knnGraphProbed routing
-    * operator; bounded by k, never corpus rows, no window exchange) —
+    * to its `nprobe` nearest centroids MAP-SIDE through the compiled
+    * nearest-cells kernel (the knnGraphProbed routing; bounded by k,
+    * never corpus rows, no exchange) —
     * scan ONLY the assigned cells' code directories (static partition
     * pruning from the bounded probe-cell set), score int8, rank via
     * the bounded heap. nprobe > 1 closes the cell-boundary recall
@@ -132,27 +134,9 @@ object IndexPipeline {
   def search(spark: SparkSession, indexDir: String, queries: DataFrame,
       topK: Int, nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cents = collectCentroids(spark, indexDir)
-    val centArr = spark.createDataFrame(
-        cents.map { case (c, v) => (c, v.toSeq) })
-      .toDF("cell", "cvec")
-      .agg(array_sort(collect_list(struct(col("cell"), col("cvec"))))
-        .as("cents"))
-    val qIn = queries.select(col("vec_id").as("query_id"),
-      col("embedding"))
-    // (-cos, cell) sorts as (cos DESC, cell ASC) — the probe order
-    // the previous window routing stated; negation is exact in IEEE
-    // doubles, so tie behavior cannot diverge.
-    val assigned = qIn
-      .select(col("query_id"),
-        expr("transform(embedding, v -> cast(v as double))").as("emb"))
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("emb"),
-        explode(slice(array_sort(transform(col("cents"), c =>
-          struct((-cosine_sim(col("emb"), c.getField("cvec"))).as("neg"),
-            c.getField("cell").as("cell")))), 1, nprobe)).as("p"))
-      .select(col("query_id"), col("emb").as("embedding"),
-        col("p.cell").as("cell"))
+    val assigned = Similarity.probeRows(
+      doubles(queries).withColumnRenamed("vec_id", "query_id"), "embedding",
+      collectCentroids(spark, indexDir), nprobe, LongType, "cell")
     val probes = Similarity.sq8Quantize(assigned)
       .filter(col("sq") > 0)
       .select(col("query_id"), col("cell"), col("q").as("qq"),
@@ -177,6 +161,7 @@ object IndexPipeline {
         (col("pos") + 1).cast("long").as("rank"),
         col("s.cand_id").as("cand_id"),
         floor(col("s.sim") * 1000000 + 0.5).cast("long").as("sim_e6"))
-    qIn.select("query_id").join(ranked, Seq("query_id"), "left")
+    queries.select(col("vec_id").as("query_id"))
+      .join(ranked, Seq("query_id"), "left")
   }
 }

@@ -65,28 +65,35 @@ object NavIndexPipeline {
   private def readAttach(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/attach").select(AttachCols.map(col): _*)
 
-  private def writeEmb(df: DataFrame, indexDir: String,
-      mode: SaveMode): Unit =
+  /** Writes (vec_id, embedding, cell) rows into `dir`'s cell
+    * directories.
+    */
+  private def writeEmb(df: DataFrame, dir: String, mode: SaveMode): Unit =
     df.select(col("vec_id"), col("embedding"), col("cell"))
       .repartition(col("cell"))
       .sortWithinPartitions(col("cell"), col("vec_id"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$indexDir/emb")
+      .write.mode(mode).partitionBy("cell").parquet(dir)
 
-  /** Swap-in rewrite: write to `<dir>.next`, then atomically (at the
+  /** Swap-in rewrite: `write` to `<dir>.next`, then atomically (at the
     * filesystem's rename granularity) replace `<dir>` — the only safe
     * way to rewrite an artifact a job also READS (Spark cannot
-    * overwrite a directory mid-scan).
+    * overwrite a directory mid-scan), and a failed job never
+    * half-deletes the store.
     */
-  private def swapWrite(spark: SparkSession, df: DataFrame,
-      dir: String): Unit = {
+  private def swap(spark: SparkSession, dir: String)(
+      write: String => Unit): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
     val next = new Path(dir + ".next")
-    df.write.mode(SaveMode.Overwrite).parquet(next.toString)
+    write(next.toString)
     fs.delete(new Path(dir), true)
     require(fs.rename(next, new Path(dir)),
       s"NavIndexPipeline: rename ${next} -> $dir failed")
   }
+
+  private def swapWrite(spark: SparkSession, df: DataFrame,
+      dir: String): Unit =
+    swap(spark, dir)(df.write.mode(SaveMode.Overwrite).parquet(_))
 
   /** Train cells, build the α-pruned navigable graph (e28's exact
     * composition: trainedCells → probed kNN → symmetrize →
@@ -98,7 +105,7 @@ object NavIndexPipeline {
     val tc = Similarity.trainedCells(toDouble(embeddings), perCell, iters)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = tc.count()
-    writeEmb(tc, indexDir, SaveMode.Overwrite)
+    writeEmb(tc, s"$indexDir/emb", SaveMode.Overwrite)
     // One centroid collect (bounded k×dims driver handoff) feeds the
     // stored centroid table, the medoid entries AND the probed-kNN
     // routing kernel — previously three identical per-cell mean
@@ -135,17 +142,15 @@ object NavIndexPipeline {
       delta: DataFrame, alpha100: Long = 120, maxDegree: Int = 16,
       maxCandidates: Int = 32, nprobe: Int = 2): Long = {
     import graft.functions.NearestCentroidCell.nearest_centroid
-    val base = readEmb(spark, indexDir)
     val d = toDouble(delta)
-    Similarity.navigableAttach(base, d, "cell", alpha100, maxDegree,
-        maxCandidates, nprobe)
+    Similarity.navigableAttach(readEmb(spark, indexDir), d, "cell", alpha100,
+        maxDegree, maxCandidates, nprobe)
       .write.mode(SaveMode.Append).parquet(s"$indexDir/attach")
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .select(col("cell").cast("long"), col("cvec")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val dc = d.withColumn("cell", nearest_centroid(col("embedding"), cents))
+    val dc = d.withColumn("cell", nearest_centroid(col("embedding"),
+      Similarity.codebook(
+        spark.read.parquet(s"$indexDir/centroids").select("cell", "cvec"))))
     val n = dc.count()
-    writeEmb(dc, indexDir, SaveMode.Append)
+    writeEmb(dc, s"$indexDir/emb", SaveMode.Append)
     n
   }
 
@@ -211,17 +216,8 @@ object NavIndexPipeline {
     // emb/ is partitioned (dynamic-overwrite semantics differ by
     // config) — swap the whole tree: read is already materialized by
     // the persist + count above, but the swap still writes to .next
-    // first so a failed job never half-deletes the store.
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    kept.repartition(col("cell"))
-      .sortWithinPartitions(col("cell"), col("vec_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell")
-      .parquet(s"$indexDir/emb.next")
-    fs.delete(new Path(s"$indexDir/emb"), true)
-    require(fs.rename(new Path(s"$indexDir/emb.next"),
-      new Path(s"$indexDir/emb")),
-      s"NavIndexPipeline: rename $indexDir/emb.next failed")
+    // first.
+    swap(spark, s"$indexDir/emb")(writeEmb(kept, _, SaveMode.Overwrite))
     kept.unpersist()
     swapWrite(spark,
       spark.read.parquet(s"$indexDir/entries")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.NearestCentroidCell.nearest_centroid
 import graft.functions.CosineSimilarity.cosine_sim
 import graft.functions.TopKByScore.top_k_by_score
+import graft.operators.Similarity
 
 /** Streaming ANN: top-k cosine search for embedding vectors AS THEY
   * ARRIVE, against a static IVF-indexed corpus — the online
@@ -43,7 +44,8 @@ object AnnStream {
     * codebooks baked in. Pure map-side generated code — stateless,
     * no shuffle, no watermark; the output (4 longs per vector
     * instead of the raw embedding) is what a streaming pipeline
-    * appends to the compressed index the e11 ADC search reads.
+    * appends to the compressed index the e11 ADC search reads. The
+    * BATCH fold (operators.Similarity.pqQuantize) runs unchanged.
     *
     * @param vectors streaming (vec_id, embedding) — double array
     * @param books per-subspace (cell, centroid) codebooks, subspace
@@ -51,12 +53,8 @@ object AnnStream {
     */
   def pqEncode(vectors: DataFrame,
       books: Seq[Seq[(Long, Array[Double])]], subDims: Int): DataFrame =
-    books.zipWithIndex.foldLeft(
-      vectors.select(col("vec_id"), col("embedding"))) {
-      case (df, (book, m)) =>
-        df.withColumn(s"code_$m", nearest_centroid(
-          expr(s"slice(embedding, ${m * subDims + 1}, $subDims)"), book))
-    }.drop("embedding")
+    Similarity.pqQuantize(vectors.select(col("vec_id"), col("embedding")),
+      "embedding", books, subDims).drop("embedding")
 
   /** Ingest-time SQ8 scalar quantization — e16's int8 storage layout
     * produced as vectors ARRIVE: per-vector codes + exact integer
@@ -68,7 +66,7 @@ object AnnStream {
     * append-mode streams — parity asserted in AnnStreamSpec.
     */
   def sq8Encode(vectors: DataFrame): DataFrame =
-    graft.operators.Similarity.sq8Quantize(vectors)
+    Similarity.sq8Quantize(vectors)
 
   /** Ingest-time BINARY quantization — e37's sign-code layout
     * produced as vectors ARRIVE: two 32-bit sign words per vector,
@@ -79,16 +77,12 @@ object AnnStream {
     * append-mode streams — parity asserted in AnnStreamSpec.
     */
   def bqEncode(vectors: DataFrame): DataFrame =
-    graft.operators.Similarity.bqQuantize(vectors)
+    Similarity.bqQuantize(vectors)
 
   def probeTopK(queries: DataFrame, corpusWithCells: DataFrame,
       centroids: DataFrame, k: Int, watermark: String = "1 hour",
       windowLen: String = "1 hour"): DataFrame = {
-    val cents = centroids
-      .select(col("cell").cast("long"), col("cvec"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .toSeq
+    val cents = Similarity.codebook(centroids.select("cell", "cvec"))
     val assigned = queries.select(col("vec_id").as("query_id"),
       col("ingest_ts"), col("embedding").as("query_emb"),
       nearest_centroid(col("embedding"), cents).as("cell"))

@@ -1272,6 +1272,136 @@ class OperatorsSpec extends SparkSpec {
     assert(got.collect().toSet == want.collect().toSet)
   }
 
+  test("IVF probe and nav attach: kernel routing matches the window and array_sort formulations") {
+    // Parity pin for routing every probe through the nearest-cells
+    // kernel. The references are the earlier formulations: a
+    // row_number window over query × centroid rows (ivfProbeTopK) and
+    // a broadcast centroid array sorted per row by (-cos, label)
+    // (navigableAttach's probe step, then its prune and link rows).
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.AlphaPruneKept.alpha_prune
+    import graft.functions.TopKByScore.top_k_by_score
+    def windowIvf(emb: DataFrame, queries: DataFrame, labelCol: String,
+        k: Int, nprobe: Int): DataFrame = {
+      val cent = Similarity.centroidVectors(emb, labelCol)
+      val q = queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("query_emb"))
+      val wAssign = Window.partitionBy("query_id")
+        .orderBy(col("csim").desc, col("label"))
+      val assigned = q.join(broadcast(cent))
+        .withColumn("csim", cosine_sim(col("query_emb"), col("cvec")))
+        .withColumn("rn", row_number().over(wAssign))
+        .filter(col("rn") <= nprobe)
+        .select(col("query_id"), col("query_emb"), col("label"))
+      val cand = emb.select(col(labelCol).as("label"),
+        col("vec_id").as("cand_id"), col("embedding").as("cand_emb"))
+      cand.join(broadcast(assigned),
+          cand("label") === assigned("label") &&
+            col("cand_id") =!= col("query_id"))
+        .withColumn("sim", cosine_sim(col("query_emb"), col("cand_emb")))
+        .select(col("query_id"), col("sim"), col("cand_id"),
+          cand("label").cast("long").as("tag"))
+        .groupBy("query_id")
+        .agg(top_k_by_score(col("sim"), col("cand_id"), col("tag"), k).as("tk"))
+        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "s")))
+        .select(col("query_id"), col("s.tag").cast("int").as("label"),
+          (col("pos") + 1).as("rank"), col("s.cand_id").as("cand_id"),
+          round(col("s.sim"), 6).as("sim"))
+    }
+    def arraySortAttach(embBase: DataFrame, embDelta: DataFrame,
+        labelCol: String, nprobe: Int): DataFrame = {
+      val centArr = Similarity.centroidVectors(embBase, labelCol)
+        .agg(array_sort(collect_list(struct(col("label"), col("cvec"))))
+          .as("cents"))
+      val probes = embDelta
+        .select(col("vec_id"), col("embedding").as("ea"))
+        .crossJoin(broadcast(centArr))
+        .select(col("vec_id"), col("ea"),
+          explode(slice(array_sort(transform(col("cents"), c =>
+            struct((-cosine_sim(col("ea"), c.getField("cvec"))).as("neg"),
+              c.getField("label").as("label")))), 1, nprobe)).as("p"))
+        .select(col("vec_id"), col("ea"), col("p.label").as("label"))
+      val cand = embBase.select(col(labelCol).as("label"),
+        col("vec_id").as("nbr_id"), col("embedding").as("eb"))
+      val sel = probes.join(cand, Seq("label"))
+        .withColumn("se",
+          floor(cosine_sim(col("ea"), col("eb")) * 1000000 + 0.5).cast("long"))
+        .groupBy("vec_id")
+        .agg(top_k_by_score(col("se").cast("double"), col("nbr_id"),
+          lit(0L), 32).as("tk"))
+        .select(col("vec_id"), explode(col("tk")).as("t"))
+        .select(col("vec_id"), col("t.cand_id").as("nbr_id"),
+          col("t.sim").cast("long").as("se"))
+      val en = embBase.select(col("vec_id").as("nbr_id"),
+          expr("transform(embedding, v -> cast(v as double))").as("e"))
+        .withColumn("nrm", expr("sqrt(aggregate(zip_with(e, e, " +
+          "(x, y) -> x * y), cast(0 as double), (s, v) -> s + v))"))
+      val fwd = sel.join(en, "nbr_id")
+        .groupBy("vec_id")
+        .agg(collect_list(struct(col("nbr_id").as("nbr"), col("se"),
+          col("nrm"), col("e"))).as("cands"))
+        .select(col("vec_id"),
+          posexplode(alpha_prune(col("cands"), 120L, 16)).as(Seq("pos", "s")))
+        .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
+          col("s.nbr").as("nbr_id"), col("s.se").as("sim_e6"))
+      fwd.select(col("vec_id"), lit("fwd").as("kind"), col("rank"),
+          col("nbr_id"), col("sim_e6"))
+        .union(fwd.select(col("nbr_id").as("vec_id"),
+          lit("back").as("kind"), lit(null).cast("long").as("rank"),
+          col("vec_id").as("nbr_id"), col("sim_e6")))
+    }
+    // Small fixture with an int label and TIED centroids: labels 1
+    // and 2 hold the same vectors, so every query near them scores
+    // both cells equally and the tie must go to label 1.
+    val fixture = (0 until 24).map { i =>
+      val (lab, j) = (i % 4, i / 4)
+      val base = lab match {
+        case 0 => Array(1.0f, 0.1f, 0.0f, 0.0f)
+        case 1 | 2 => Array(0.1f, 1.0f, 0.0f, 0.0f)
+        case _ => Array(0.0f, 0.2f, 1.0f, 0.0f)
+      }
+      (i.toLong, lab, base.updated(3, 0.1f * (j + 1))
+        .updated(0, base(0) + 0.05f * (j % 3)))
+    }.toDF("vec_id", "label", "embedding")
+    val tc = Similarity.trainedCells(
+      Tables.embeddings(spark, "/root/testdata/sf0.001"))
+    for ((emb, labelCol) <- Seq((tc, "cell"), (fixture, "label"))) {
+      val nCells = emb.select(labelCol).distinct().count().toInt
+      val qs = emb.filter(col("vec_id") % 5 === 0)
+      // Split by vec_id div 4, so the fixture's base keeps its tie.
+      val isDelta = (col("vec_id") / 4).cast("long") % 3 === 0
+      val base = emb.filter(!isDelta)
+      val delta = emb.filter(isDelta)
+      for (nprobe <- Seq(1, 2, nCells + 1)) {
+        val ivf = Similarity.ivfProbeTopK(emb, qs, labelCol, 4, nprobe)
+          .collect().toSet
+        assert(ivf.nonEmpty)
+        assert(ivf == windowIvf(emb, qs, labelCol, 4, nprobe).collect().toSet,
+          s"ivfProbeTopK on $labelCol, nprobe $nprobe")
+        val att = Similarity.navigableAttach(base, delta, labelCol,
+          nprobe = nprobe).collect().toSet
+        assert(att.nonEmpty)
+        assert(att == arraySortAttach(base, delta, labelCol, nprobe)
+          .collect().toSet, s"navigableAttach on $labelCol, nprobe $nprobe")
+      }
+    }
+    // An empty centroid table routes nothing; a null label fails naming
+    // its column instead of a NullPointerException.
+    val empty = fixture.limit(0)
+    assert(Similarity.ivfProbeTopK(empty, fixture, "label", 4).collect()
+      .isEmpty)
+    assert(Similarity.navigableAttach(empty, fixture, "label").collect()
+      .isEmpty)
+    val nulled = fixture.withColumn("label",
+      when(col("vec_id") =!= 0, col("label")))
+    for (run <- Seq(() => Similarity.ivfProbeTopK(nulled, fixture, "label", 4),
+        () => Similarity.navigableAttach(nulled, fixture, "label"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("null `label`"), e.getMessage)
+    }
+  }
+
   test("convergence-driven kmeans reaches the fixed-round fixpoint") {
     // On cleanly separated cones Lloyd stabilizes in a few rounds:
     // residual-driven training must land on the same centroids as a

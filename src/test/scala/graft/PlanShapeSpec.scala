@@ -22,16 +22,12 @@ class PlanShapeSpec extends SparkSpec {
       val p = plan(q)
       assert(p.contains("ObjectHashAggregate"),
         s"$q lost the top_k_by_score partial aggregate")
-      // e4/e5/e8/e17 rank CENTROID assignments with a window (bounded
-      // nlist rows), e24 likewise — what must never appear is a
-      // window over the scored candidate rows, which carries the
-      // full corpus. The candidate path is the aggregate;
-      // brute-force e1/e16 and bulk e6 must have no window at all.
-      if (q != "e4_ann_ivf_probe" && q != "e8_ann_learned" &&
-          q != "e17_ivf_sq8" && q != "e21_ivf_pq" &&
-          q != "e24_filtered_ivf")
-        assert(!p.contains("RunningWindowFunction") && !p.contains("Window"),
-          s"$q ranks candidates through a window sort")
+      // No window at all: candidates rank through the aggregate, and
+      // the IVF queries (e4/e8/e17/e21/e24) route to their cells
+      // through the nearest-cells kernel, not a window over query ×
+      // centroid rows.
+      assert(!p.contains("RunningWindowFunction") && !p.contains("Window"),
+        s"$q ranks candidates or cells through a window sort")
     }
   }
 
