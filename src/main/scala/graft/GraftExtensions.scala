@@ -30,42 +30,34 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1))
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("text_canon"),
-      new ExpressionInfo(classOf[TextCanonExpr].getName, "text_canon"),
-      (exprs: Seq[Expression]) => TextCanonExpr(exprs.head)
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersSketch].getName,
-        "heavy_hitters"),
-      (exprs: Seq[Expression]) => HeavyHittersSketch(exprs.head,
-        intLit(exprs(1), "heavy_hitters"))
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
-      (exprs: Seq[Expression]) => KmvSketch(exprs.head,
-        intLit(exprs(1), "kmv_sketch"))
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_sketch"),
-      new ExpressionInfo(classOf[HllSketch].getName, "hll_sketch"),
-      (exprs: Seq[Expression]) => HllSketch(exprs.head,
-        intLit(exprs(1), "hll_sketch"))
-    ))
-    // The TextHash kernel family: unary array/string transforms.
-    def unary(name: String, cls: Class[_],
-        build: Expression => Expression): Unit =
+    // The one registration path: every call is checked for its arity
+    // before its builder runs, so a short or long call fails naming
+    // the function instead of indexing past its argument list.
+    def fn(name: String, cls: Class[_], arity: Int)(
+        build: Seq[Expression] => Expression): Unit =
       ext.injectFunction((
         new FunctionIdentifier(name),
         new ExpressionInfo(cls.getName, name),
-        (exprs: Seq[Expression]) => build(exprs.head)))
+        (exprs: Seq[Expression]) => {
+          if (exprs.length != arity) throw new IllegalArgumentException(
+            s"$name expects $arity argument(s), got ${exprs.length}")
+          build(exprs)
+        }))
+    def unary(name: String, cls: Class[_],
+        build: Expression => Expression): Unit =
+      fn(name, cls, 1)(es => build(es.head))
+    // expression + integer literal (a state size or an n-gram width)
+    def sized(name: String, cls: Class[_],
+        build: (Expression, Int) => Expression): Unit =
+      fn(name, cls, 2)(es => build(es.head, intLit(es(1), name)))
+    fn("cosine_sim", classOf[CosineSimilarity], 2)(
+      es => CosineSimilarity(es.head, es(1)))
+    unary("text_canon", classOf[TextCanonExpr], TextCanonExpr)
+    sized("heavy_hitters", classOf[HeavyHittersSketch],
+      HeavyHittersSketch(_, _))
+    sized("kmv_sketch", classOf[KmvSketch], KmvSketch(_, _))
+    sized("hll_sketch", classOf[HllSketch], HllSketch(_, _))
+    // The TextHash kernel family: unary array/string transforms.
     unary("token_hashes", classOf[TokenHashesExpr], TokenHashesExpr)
     unary("shingle_set", classOf[ShingleSetExpr], ShingleSetExpr)
     unary("minhash_sig", classOf[MinHashSigExpr], MinHashSigExpr)
@@ -75,33 +67,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     unary("embed_simhash2", classOf[EmbedSimHash2Expr], EmbedSimHash2Expr)
     unary("string_poly_hash", classOf[StringHashExpr], StringHashExpr)
     unary("bpe_units", classOf[BpeUnitsExpr], BpeUnitsExpr)
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[NGramHashesExpr].getName, "ngram_hashes"),
-      (exprs: Seq[Expression]) => NGramHashesExpr(exprs.head,
-        intLit(exprs(1), "ngram_hashes"))
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("ngram_hashes_pos"),
-      new ExpressionInfo(classOf[NGramHashesPosExpr].getName,
-        "ngram_hashes_pos"),
-      (exprs: Seq[Expression]) => NGramHashesPosExpr(exprs.head,
-        intLit(exprs(1), "ngram_hashes_pos"))
-    ))
-    ext.injectFunction((
-      new FunctionIdentifier("top_k_by_score"),
-      new ExpressionInfo(classOf[TopKByScore].getName, "top_k_by_score"),
-      (exprs: Seq[Expression]) => {
-        if (exprs.length != 4) throw new IllegalArgumentException(
-          s"top_k_by_score expects 4 arguments (score, id, tag, k), " +
-            s"got ${exprs.length}")
-        val k = exprs(3) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"top_k_by_score: k must be an integer literal, got $other")
-        }
-        TopKByScore(exprs(0), exprs(1), exprs(2), k)
-      }
-    ))
+    sized("ngram_hashes", classOf[NGramHashesExpr], NGramHashesExpr)
+    sized("ngram_hashes_pos", classOf[NGramHashesPosExpr], NGramHashesPosExpr)
+    fn("top_k_by_score", classOf[TopKByScore], 4)(es =>
+      TopKByScore(es(0), es(1), es(2), intLit(es(3), "top_k_by_score")))
   }
 }

@@ -37,21 +37,28 @@ object TextHashKernels {
     val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val s = tokens.getUTF8String(i).toString
-      var h = 0L
-      var j = 0
-      while (j < s.length) {
-        val cp = s.codePointAt(j)
-        h = (h * 31 + cp) % P
-        j += Character.charCount(cp)
-      }
-      out(i) = h
+      out(i) = charFold(tokens.getUTF8String(i).toString)
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  /** Distinct 3-gram shingle hashes (first-occurrence order). */
+  /** The codepoint fold of [[tokenHashes]] and [[stringHash]]. */
+  private def charFold(s: String): Long = {
+    var h = 0L
+    var j = 0
+    while (j < s.length) {
+      val cp = s.codePointAt(j)
+      h = (h * 31 + cp) % P
+      j += Character.charCount(cp)
+    }
+    h
+  }
+
+  /** Distinct 3-gram shingle hashes (first-occurrence order). Its own
+    * fold, not [[gramFold]] at n = 3: the two differ when the first
+    * hash lies outside [0, P), which TextHashKernelSpec pins.
+    */
   def shingleSet(th: ArrayData): ArrayData = {
     val n = th.numElements()
     if (n < 3) return new GenericArrayData(Array.emptyLongArray)
@@ -63,6 +70,11 @@ object TextHashKernels {
       seen.add(s)
       i += 1
     }
+    longs(seen)
+  }
+
+  /** A distinct-hash set as a bigint array, in its iteration order. */
+  private def longs(seen: java.util.Set[java.lang.Long]): ArrayData = {
     val out = new Array[Long](seen.size)
     val it = seen.iterator()
     var k = 0
@@ -122,20 +134,10 @@ object TextHashKernels {
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var i = 0
     while (i <= m - n) {
-      var h = 0L
-      var j = 0
-      while (j < n) {
-        h = (h * 31 + th.getLong(i + j)) % P
-        j += 1
-      }
-      seen.add(h)
+      seen.add(gramFold(th, i, n))
       i += 1
     }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = it.next(); k += 1 }
-    new GenericArrayData(out)
+    longs(seen)
   }
 
   /** POSITIONAL n-gram hashes: one entry per gram start (no dedup),
@@ -150,16 +152,23 @@ object TextHashKernels {
     val out = new Array[Long](m - n + 1)
     var i = 0
     while (i <= m - n) {
-      var h = 0L
-      var j = 0
-      while (j < n) {
-        h = (h * 31 + th.getLong(i + j)) % P
-        j += 1
-      }
-      out(i) = h
+      out(i) = gramFold(th, i, n)
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** The gram fold of both n-gram kernels: (h·31 + th[i+j]) mod P over
+    * j < n.
+    */
+  private def gramFold(th: ArrayData, i: Int, n: Int): Long = {
+    var h = 0L
+    var j = 0
+    while (j < n) {
+      h = (h * 31 + th.getLong(i + j)) % P
+      j += 1
+    }
+    h
   }
 
   /** 64-bit SimHash over token hashes (multiplicity-weighted): bits
@@ -231,164 +240,118 @@ object TextHashKernels {
   }
 
   /** Whole-string polynomial hash (the document fingerprint). */
-  def stringHash(s: UTF8String): Long = {
-    val str = s.toString
-    var h = 0L
-    var j = 0
-    while (j < str.length) {
-      val cp = str.codePointAt(j)
-      h = (h * 31 + cp) % P
-      j += Character.charCount(cp)
+  def stringHash(s: UTF8String): Long = charFold(s.toString)
+}
+
+/** Base for the unary kernel expressions: the child type check, and
+  * a codegen'd call of the static `TextHashKernels.<kernelName>` on
+  * the child plus the integer `args` (the n-gram width) — one call
+  * per row, zero per-element dispatch. `inputType` ignores array
+  * element nullability. Serializable itself, so that tasks can
+  * deserialize the concrete case classes through its parameters.
+  */
+abstract class KernelExpression(kernelName: String, inputType: DataType,
+    override val dataType: DataType, args: Int*)
+    extends UnaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult =
+    (child.dataType, inputType) match {
+      case (ArrayType(t, _), ArrayType(u, _)) if t == u =>
+        TypeCheckResult.TypeCheckSuccess
+      case (t, u) if t == u => TypeCheckResult.TypeCheckSuccess
+      case (other, _) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects ${inputType.simpleString}, got ${other.catalogString}")
     }
-    h
-  }
+
+  override protected def nullSafeEval(a: Any): Any = kernel(a)
+
+  protected def kernel(a: Any): Any
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextHashKernels.$kernelName(" +
+      (c +: args.map(_.toString)).mkString(", ") + ")")
 }
 
 /** Base for unary array→array kernel expressions. */
-abstract class KernelArrayExpression extends UnaryExpression {
-  protected def kernelName: String
-  protected def inputElemType: DataType
+abstract class KernelArrayExpression(kernelName: String, inputElem: DataType,
+    args: Int*) extends KernelExpression(kernelName, ArrayType(inputElem),
+  ArrayType(LongType, containsNull = false), args: _*)
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(t, _) if t == inputElemType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<${inputElemType.simpleString}>, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(a: Any): Any =
-    kernel(a.asInstanceOf[ArrayData])
-
-  protected def kernel(a: ArrayData): ArrayData
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.$kernelName($c)")
-}
-
-case class TokenHashesExpr(child: Expression) extends KernelArrayExpression {
-  override protected def kernelName: String = "tokenHashes"
-  override protected def inputElemType: DataType = StringType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.tokenHashes(a)
+case class TokenHashesExpr(child: Expression)
+    extends KernelArrayExpression("tokenHashes", StringType) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.tokenHashes(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class ShingleSetExpr(child: Expression) extends KernelArrayExpression {
-  override protected def kernelName: String = "shingleSet"
-  override protected def inputElemType: DataType = LongType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.shingleSet(a)
+case class ShingleSetExpr(child: Expression)
+    extends KernelArrayExpression("shingleSet", LongType) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.shingleSet(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 case class NGramHashesExpr(child: Expression, n: Int)
-    extends KernelArrayExpression {
-  override protected def kernelName: String = "ngramHashes"
-  override protected def inputElemType: DataType = LongType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.ngramHashes(a, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.ngramHashes($c, $n)")
+    extends KernelArrayExpression("ngramHashes", LongType, n) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.ngramHashes(a.asInstanceOf[ArrayData], n)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
 case class NGramHashesPosExpr(child: Expression, n: Int)
-    extends KernelArrayExpression {
-  override protected def kernelName: String = "ngramHashesPos"
-  override protected def inputElemType: DataType = LongType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.ngramHashesPos(a, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.ngramHashesPos($c, $n)")
+    extends KernelArrayExpression("ngramHashesPos", LongType, n) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.ngramHashesPos(a.asInstanceOf[ArrayData], n)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class MinHashSigExpr(child: Expression) extends KernelArrayExpression {
-  override protected def kernelName: String = "minHashSig"
-  override protected def inputElemType: DataType = LongType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.minHashSig(a)
+case class MinHashSigExpr(child: Expression)
+    extends KernelArrayExpression("minHashSig", LongType) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.minHashSig(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class BandSigsExpr(child: Expression) extends KernelArrayExpression {
-  override protected def kernelName: String = "bandSigs"
-  override protected def inputElemType: DataType = LongType
-  override protected def kernel(a: ArrayData): ArrayData =
-    TextHashKernels.bandSigs(a)
+case class BandSigsExpr(child: Expression)
+    extends KernelArrayExpression("bandSigs", LongType) {
+  override protected def kernel(a: Any): Any =
+    TextHashKernels.bandSigs(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash expects array<bigint>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(a: Any): Any =
+case class SimHashExpr(child: Expression)
+    extends KernelExpression("simHash", ArrayType(LongType), LongType) {
+  override protected def kernel(a: Any): Any =
     TextHashKernels.simHash(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.simHash($c)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class EmbedSimHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"embed_simhash expects array<double>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(a: Any): Any =
+case class EmbedSimHashExpr(child: Expression)
+    extends KernelExpression("embedSimHash", ArrayType(DoubleType), LongType) {
+  override protected def kernel(a: Any): Any =
     TextHashKernels.embedSimHash(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.embedSimHash($c)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class EmbedSimHash2Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"embed_simhash2 expects array<double>, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(a: Any): Any =
+case class EmbedSimHash2Expr(child: Expression)
+    extends KernelExpression("embedSimHash2", ArrayType(DoubleType), LongType) {
+  override protected def kernel(a: Any): Any =
     TextHashKernels.embedSimHash2(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.embedSimHash2($c)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-case class StringHashExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"string_poly_hash expects string, got ${other.catalogString}")
-  }
-  override protected def nullSafeEval(a: Any): Any =
+case class StringHashExpr(child: Expression)
+    extends KernelExpression("stringHash", StringType, LongType) {
+  override protected def kernel(a: Any): Any =
     TextHashKernels.stringHash(a.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TextHashKernels.stringHash($c)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

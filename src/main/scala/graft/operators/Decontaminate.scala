@@ -40,27 +40,8 @@ object Decontaminate {
     * @param n probe width in tokens
     * @return (doc_id, probe_src) contaminated pairs
     */
-  def matches(corpus: DataFrame, probes: DataFrame, n: Int = 8): DataFrame = {
-    val grams = corpus.select(col("doc_id"),
-      explode(ngram_hashes(token_hashes(split(col("norm"), " ")), n)).as("g"))
-    // get() (0-based, null on out-of-range), not element_at: under
-    // ANSI mode element_at THROWS on a malformed probe with fewer
-    // than n tokens (empty gram array); a null gram hash instead
-    // equi-joins nothing, so short probes simply match no documents.
-    val p = probes.select(col("probe_src"), col("probe"),
-      get(ngram_hashes(token_hashes(split(col("probe"), " ")), n), lit(0))
-        .as("g"))
-    val cand = grams.join(broadcast(p), Seq("g"))
-      .filter(col("doc_id") =!= col("probe_src"))
-      .select("doc_id", "probe_src", "probe")
-      .distinct()
-    // Exact verification on collisions only: the space padding makes
-    // the substring check token-aligned at both ends.
-    cand.join(corpus, Seq("doc_id"))
-      .filter(instr(concat(lit(" "), col("norm"), lit(" ")),
-        concat(lit(" "), col("probe"), lit(" "))) > 0)
-      .select("doc_id", "probe_src")
-  }
+  def matches(corpus: DataFrame, probes: DataFrame, n: Int = 8): DataFrame =
+    matchesPruned(corpus, probes, n)((grams, _) => grams)
 
   /** [[matches]] with a runtime BLOOM PRUNE on the exploded gram
     * stream (operators.BloomPrune): the probe grams build a bloom
@@ -73,19 +54,34 @@ object Decontaminate {
     * the result is IDENTICAL to [[matches]] for any fpp.
     */
   def matchesBloomPruned(corpus: DataFrame, probes: DataFrame,
-      n: Int = 8, fpp: Double = 0.01): DataFrame = {
+      n: Int = 8, fpp: Double = 0.01): DataFrame =
+    matchesPruned(corpus, probes, n)((grams, p) =>
+      BloomPrune.pruneMightContain(grams, col("g"),
+        p.filter(col("g").isNotNull), col("g"),
+        expectedItems = 100000L, fpp = fpp))
+
+  /** The one body of both matchers: gram explode, probe gram,
+    * candidate join and aligned verify; `prune` may drop corpus grams
+    * (doc_id, g) that no probe gram (probe_src, probe, g) can equal
+    * before the candidate join.
+    */
+  private def matchesPruned(corpus: DataFrame, probes: DataFrame, n: Int)(
+      prune: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val grams = corpus.select(col("doc_id"),
       explode(ngram_hashes(token_hashes(split(col("norm"), " ")), n)).as("g"))
+    // get() (0-based, null on out-of-range), not element_at: under
+    // ANSI mode element_at THROWS on a malformed probe with fewer
+    // than n tokens (empty gram array); a null gram hash instead
+    // equi-joins nothing, so short probes simply match no documents.
     val p = probes.select(col("probe_src"), col("probe"),
       get(ngram_hashes(token_hashes(split(col("probe"), " ")), n), lit(0))
         .as("g"))
-    val pruned = BloomPrune.pruneMightContain(grams, col("g"),
-      p.filter(col("g").isNotNull), col("g"),
-      expectedItems = 100000L, fpp = fpp)
-    val cand = pruned.join(broadcast(p), Seq("g"))
+    val cand = prune(grams, p).join(broadcast(p), Seq("g"))
       .filter(col("doc_id") =!= col("probe_src"))
       .select("doc_id", "probe_src", "probe")
       .distinct()
+    // Exact verification on collisions only: the space padding makes
+    // the substring check token-aligned at both ends.
     cand.join(corpus, Seq("doc_id"))
       .filter(instr(concat(lit(" "), col("norm"), lit(" ")),
         concat(lit(" "), col("probe"), lit(" "))) > 0)

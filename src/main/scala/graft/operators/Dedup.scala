@@ -25,14 +25,22 @@ import graft.functions.TextHashExprs._
   *     SimHash) are pure map-side higher-order functions inside
   *     whole-stage codegen — zero shuffles, no UDFs.
   *
+  * Every pair operator runs one candidate → verify chain, each step
+  * written once below: token hashes → shingle sets
+  * ([[shingleRows]]) → MinHash band rows ([[bandRows]]) or a
+  * df-capped rare-key index ([[rareKeyed]]) → bucket self-join
+  * ([[bucketPairs]]) → exact Jaccard verify ([[verifyJaccard]]). The
+  * streaming twins (graft.streaming.DocStream) call the same steps.
+  *
   * Cache lifetime: the pair operators persist their signature/set
-  * tables (MEMORY_AND_DISK) because the RETURNED plan reads them
-  * twice — candidate generation and exact verification — so the
-  * blocks must outlive this call and cannot be unpersisted here. The
-  * caller owns the lifetime: `df.sparkSession.catalog.clearCache()`
-  * (or unpersisting via the plan's cached leaves) after materializing
-  * the result; unreferenced blocks otherwise age out via LRU, which
-  * is safe (MEMORY_AND_DISK recomputes) but not free.
+  * tables (MEMORY_AND_DISK), all through the one helper [[cached]],
+  * because the RETURNED plan reads them twice — candidate generation
+  * and exact verification — so the blocks must outlive this call and
+  * cannot be unpersisted here. The caller owns the lifetime:
+  * `df.sparkSession.catalog.clearCache()` (or unpersisting via the
+  * plan's cached leaves) after materializing the result;
+  * unreferenced blocks otherwise age out via LRU, which is safe
+  * (MEMORY_AND_DISK recomputes) but not free.
   */
 object Dedup {
 
@@ -79,17 +87,57 @@ object Dedup {
     * Compiled kernel expression (TextHashKernels) — same values as
     * the TextHash HOF formulation, ~40x faster.
     */
-  def tokenHashes(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      token_hashes(expr(TextHash.sparkTokens("text"))).as("th"))
+  def tokenHashes(docs: DataFrame): DataFrame = hashRows(docs, col("doc_id"))
+
+  private def hashRows(docs: DataFrame, keep: Column*): DataFrame =
+    docs.select(keep :+
+      token_hashes(expr(TextHash.sparkTokens("text"))).as("th"): _*)
 
   /** (doc_id, sh: array<bigint>) distinct 3-gram shingle hashes for
     * docs with ≥ 3 tokens.
     */
-  def shingleSets(docs: DataFrame): DataFrame =
-    tokenHashes(docs)
+  def shingleSets(docs: DataFrame): DataFrame = shingleRows(docs, col("doc_id"))
+
+  /** `keep` plus `sh`, the distinct 3-gram shingle hashes of `text`,
+    * for docs with ≥ 3 tokens — the one shingle builder of the batch
+    * operators and their streaming twins. Lazy: nothing is
+    * persisted, so streaming frames pass through it.
+    */
+  private[graft] def shingleRows(docs: DataFrame, keep: Column*): DataFrame =
+    hashRows(docs, keep: _*)
       .filter(size(col("th")) >= 3)
-      .select(col("doc_id"), shingle_set(col("th")).as("sh"))
+      .withColumn("sh", shingle_set(col("th"))).drop("th")
+
+  /** Caches `df` for a returned plan that reads it more than once —
+    * the file's one persist; the caller releases it (header note).
+    */
+  private def cached(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  private def persistedSets(docs: DataFrame): DataFrame =
+    cached(shingleSets(docs))
+
+  /** (doc_id, s) — one row per (doc, shingle). */
+  private def inverted(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("sh")).as("s"))
+
+  /** The rows of `rows` whose `key` occurs in at most `cap` rows (its
+    * document frequency, rows being distinct per (doc, key)): the
+    * df-capped rare-key index the candidate self-joins bucket on.
+    */
+  private def rareKeyed(rows: DataFrame, key: String, cap: Int): DataFrame =
+    rows.join(rows.groupBy(key).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= cap).select(key), key)
+
+  /** Distinct doc pairs (da < db) sharing a bucket: the self-join of
+    * (doc_id, keys…) rows on equal `keys`.
+    */
+  private def bucketPairs(rows: DataFrame, keys: String*): DataFrame =
+    rows.as("a").join(rows.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+      .distinct()
 
   /** All-pairs n-gram Jaccard ≥ `minJaccard` via PREFIX-FILTERED
     * candidates (round 14 — see [[ngramJaccardFromSets]] for the
@@ -121,10 +169,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double,
       maxShingleDf: Int = DefaultMaxShingleDf): DataFrame =
     ngramJaccardFromSets(persistedSets(docs), minJaccard, maxShingleDf)
-
-  private def persistedSets(docs: DataFrame): DataFrame =
-    shingleSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** PREFIX-FILTERED candidate path over PRE-persisted shingle sets
     * (the shared entry for the direct operator and
@@ -169,7 +213,7 @@ object Dedup {
     */
   private def ngramJaccardFromSets(sets: DataFrame, minJaccard: Double,
       maxShingleDf: Int): DataFrame = {
-    val inv = sets.select(col("doc_id"), explode(col("sh")).as("s"))
+    val inv = inverted(sets)
     // df per shingle is a partial-agg count on the same key the
     // candidate self-join shuffles on, so every join below is
     // co-partitioned.
@@ -214,15 +258,14 @@ object Dedup {
     // graphBeamSearch double-reference pattern); the cut is
     // near-dup-pair-sized, never corpus-sized.
     import graft.operators.Checkpointing.CutOps
-    val verified = verifyJaccard(candidates, sets, minJaccard)
+    val verified = verifyPairs(candidates, sets, sets, minJaccard)
       .lineageCut
     // The df-cap candidate law, post-verify: the old path only ever
     // GENERATED pairs sharing a rare shingle; equivalently, drop the
     // (few) verified pairs that share none. The check joins the
     // verified pair list (near-dup-sized, never corpus-sized)
     // against the rare slice of the inverted index.
-    val invRare = inv.join(dfS.filter(col("df") <= maxShingleDf)
-      .select("s"), "s")
+    val invRare = rareKeyed(inv, "s", maxShingleDf)
     val sharesRare = verified.select("da", "db")
       .join(invRare.select(col("doc_id").as("da"), col("s")), "da")
       .join(invRare.select(col("doc_id").as("db"), col("s")),
@@ -306,22 +349,10 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, minContainment: Double,
       maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
-    val sets = shingleSets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val inv = sets.select(col("doc_id"), explode(col("sh")).as("s"))
-    val rare = inv.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxShingleDf)
-      .select("s")
-    val invRare = inv.join(rare, "s")
-    val candidates = invRare.as("a").join(invRare.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    candidates
-      .join(sets.select(col("doc_id").as("da"), col("sh").as("sha")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("sh").as("shb")), "db")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("long"))
+    val sets = persistedSets(docs)
+    val candidates =
+      bucketPairs(rareKeyed(inverted(sets), "s", maxShingleDf), "s")
+    intersected(withSetA(candidates, sets), sets)
       .withColumn("ca", col("inter").cast("double") / size(col("sha")))
       .withColumn("cb", col("inter").cast("double") / size(col("shb")))
       .filter(greatest(col("ca"), col("cb")) >= minContainment)
@@ -365,13 +396,10 @@ object Dedup {
     // the maintained-artifact/streaming path ([[winnowFingerprintTable]]
     // persists the raw fingerprints under the header's caller-release
     // convention — they feed the df count AND both self-join sides).
-    val fpsRare = winnowFingerprintTable(docs, k, w, maxFpDf)
-    val candidates = fpsRare.as("a").join(fpsRare.as("b"),
-        col("a.hash") === col("b.hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    verifyJaccard(candidates, persistedSets(docs), minJaccard)
+    val candidates =
+      bucketPairs(winnowFingerprintTable(docs, k, w, maxFpDf), "hash")
+    val sets = persistedSets(docs)
+    verifyPairs(candidates, sets, sets, minJaccard)
   }
 
   /** The df-capped winnowing fingerprint table (doc_id, hash) — the
@@ -382,15 +410,9 @@ object Dedup {
     * dropped (the MOSS §5 boilerplate cut — see [[DefaultMaxFpDf]]).
     */
   def winnowFingerprintTable(docs: DataFrame, k: Int = 3, w: Int = 4,
-      maxFpDf: Int = DefaultMaxFpDf): DataFrame = {
-    val fps = TextAnalysis.winnowingFingerprints(docs, k, w)
-      .select(col("doc_id"), col("hash")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rare = fps.groupBy("hash").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxFpDf)
-      .select("hash")
-    fps.join(rare, "hash")
-  }
+      maxFpDf: Int = DefaultMaxFpDf): DataFrame =
+    rareKeyed(cached(TextAnalysis.winnowingFingerprints(docs, k, w)
+      .select(col("doc_id"), col("hash")).distinct()), "hash", maxFpDf)
 
   /** Incremental winnowing near-dup detection: a DELTA batch checked
     * against an existing CORPUS — d82's candidate path in
@@ -410,35 +432,46 @@ object Dedup {
   def winnowingAgainst(delta: DataFrame, corpus: DataFrame,
       minJaccard: Double, k: Int = 3, w: Int = 4,
       maxFpDf: Int = DefaultMaxFpDf): DataFrame = {
-    val dSets = shingleSets(delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cSets = shingleSets(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (dSets, cSets) = (persistedSets(delta), persistedSets(corpus))
     val dFp = TextAnalysis.winnowingFingerprints(delta, k, w)
       .select(col("doc_id").as("da"), col("hash")).distinct()
     val candidates = dFp
       .join(winnowFingerprintTable(corpus, k, w, maxFpDf)
         .select(col("doc_id").as("db"), col("hash")), "hash")
       .select("da", "db").distinct()
-    verifyJaccard2(candidates, dSets, cSets, minJaccard)
+    verifyPairs(candidates, dSets, cSets, minJaccard)
   }
 
-  /** Exact-Jaccard verification of candidate pairs against the full
-    * shingle sets; shared by the inverted-index and LSH paths.
+  /** Exact-Jaccard verification of candidate pairs (da, db) against
+    * the full shingle sets; shared by every pair operator.
     * `setsA`/`setsB` are the da/db sides — the same table for
-    * self-joins, distinct tables for the delta-vs-corpus path.
+    * self-joins, distinct tables for the delta-vs-corpus paths.
     */
-  private def verifyJaccard(candidates: DataFrame, sets: DataFrame,
-      minJaccard: Double): DataFrame =
-    verifyJaccard2(candidates, sets, sets, minJaccard)
-
-  private def verifyJaccard2(candidates: DataFrame, setsA: DataFrame,
+  private def verifyPairs(candidates: DataFrame, setsA: DataFrame,
       setsB: DataFrame, minJaccard: Double): DataFrame =
-    candidates
-      .join(setsA.select(col("doc_id").as("da"), col("sh").as("sha")), "da")
-      .join(setsB.select(col("doc_id").as("db"), col("sh").as("shb")), "db")
+    verifyJaccard(withSetA(candidates, setsA), setsB, minJaccard)
+
+  /** `pairs` with the da side's shingle set as `sha`. */
+  private def withSetA(pairs: DataFrame, setsA: DataFrame): DataFrame =
+    pairs.join(setsA.select(col("doc_id").as("da"), col("sh").as("sha")), "da")
+
+  /** Rows carrying (da, sha, db) with the db side's set as `shb` and
+    * the intersection size `inter` — the set joins and intersection
+    * of both the Jaccard verify and [[containmentPairs]].
+    */
+  private def intersected(rows: DataFrame, setsB: DataFrame): DataFrame =
+    rows.join(setsB.select(col("doc_id").as("db"), col("sh").as("shb")), "db")
       .withColumn("inter",
         size(array_intersect(col("sha"), col("shb"))).cast("long"))
+
+  /** The exact-Jaccard verify: rows carrying (da, sha, db) — batch
+    * candidates after [[withSetA]], or a stream that carried its own
+    * set through the candidate join — scored against `setsB`.
+    * @return (da, db, jaccard_e6) with Jaccard ≥ `minJaccard`
+    */
+  private[graft] def verifyJaccard(rows: DataFrame, setsB: DataFrame,
+      minJaccard: Double): DataFrame =
+    intersected(rows, setsB)
       .withColumn("jaccard", col("inter").cast("double") /
         (size(col("sha")) + size(col("shb")) - col("inter")))
       .filter(col("jaccard") >= minJaccard)
@@ -458,21 +491,12 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, minJaccard: Double): DataFrame =
     minhashLshFromSets(persistedSets(docs), minJaccard)
 
+  // Exact verification only on candidates: array_intersect on the
+  // (already distinct) shingle sets.
   private def minhashLshFromSets(sets: DataFrame,
-      minJaccard: Double): DataFrame = {
-    val bands = sets
-      .select(col("doc_id"), minhash_sig(col("sh")).as("mh"))
-      .select(col("doc_id"),
-        posexplode(band_sigs(col("mh"))).as(Seq("band", "sig")))
-    val candidates = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    // Exact verification only on candidates: array_intersect on the
-    // (already distinct) shingle sets.
-    verifyJaccard(candidates, sets, minJaccard)
-  }
+      minJaccard: Double): DataFrame =
+    verifyPairs(bucketPairs(bandTable(sets), "band", "sig"), sets, sets,
+      minJaccard)
 
   /** Incremental near-dup detection: a DELTA batch checked against an
     * existing CORPUS — the continuous-ingestion path (d3's self-join
@@ -488,12 +512,9 @@ object Dedup {
     */
   def minhashLshAgainst(delta: DataFrame, corpus: DataFrame,
       minJaccard: Double): DataFrame = {
-    val dSets = shingleSets(delta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cSets = shingleSets(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (dSets, cSets) = (persistedSets(delta), persistedSets(corpus))
     val candidates = lshCandidates(bandTable(dSets), bandTable(cSets))
-    verifyJaccard2(candidates, dSets, cSets, minJaccard)
+    verifyPairs(candidates, dSets, cSets, minJaccard)
   }
 
   /** (doc_id, band, sig) LSH band table from shingle sets — the
@@ -501,10 +522,17 @@ object Dedup {
     * (sources.Bucketed) so every incremental [[lshCandidates]] probe
     * reads it exchange-free; BucketedSpec pins that composition.
     */
-  def bandTable(sets: DataFrame): DataFrame = sets
-    .select(col("doc_id"), minhash_sig(col("sh")).as("mh"))
-    .select(col("doc_id"),
-      posexplode(band_sigs(col("mh"))).as(Seq("band", "sig")))
+  def bandTable(sets: DataFrame): DataFrame = bandRows(sets, "doc_id")
+
+  /** `keep` plus one (band, sig) row per LSH band of the MinHash
+    * signature of `sh` — the one band layout of the batch operators
+    * and their streaming twins.
+    */
+  private[graft] def bandRows(sets: DataFrame, keep: String*): DataFrame = {
+    val kc = keep.map(col)
+    sets.select(kc :+ minhash_sig(col("sh")).as("mh"): _*)
+      .select(kc :+ posexplode(band_sigs(col("mh"))).as(Seq("band", "sig")): _*)
+  }
 
   /** Delta-vs-corpus candidate generation: the (band, sig) composite
     * equi-join between a delta band table and the (ideally bucketed)
@@ -695,8 +723,7 @@ object Dedup {
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming < TextHash.SimBands,
       s"pigeonhole banding needs maxHamming < ${TextHash.SimBands}")
-    val fps = simhashFingerprints(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = cached(simhashFingerprints(docs))
     val w = TextHash.SimBandBits
     val mask = (1L << w) - 1
     val banded = fps.select(col("doc_id"), col("f"),

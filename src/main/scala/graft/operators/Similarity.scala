@@ -924,14 +924,20 @@ object Similarity {
 
   /** An attach's kept edges (vec_id, rank, nbr_id, sim_e6) as 'fwd'
     * rows, plus each edge's reverse as a 'back' row (rank null) — the
-    * backlink that keeps the new node reachable.
+    * backlink that keeps the new node reachable. Both rows come from
+    * one pass over `fwd`: a union of two projections of it would plan
+    * the attach twice, and AQE reuses only the exchanges inside, so
+    * the reduce sides after them (the top-k merge, the α-prune) would
+    * run once per branch.
     */
   private def linkRows(fwd: DataFrame): DataFrame =
-    fwd.select(col("vec_id"), lit("fwd").as("kind"), col("rank"),
-        col("nbr_id"), col("sim_e6"))
-      .union(fwd.select(col("nbr_id").as("vec_id"),
-        lit("back").as("kind"), lit(null).cast("long").as("rank"),
-        col("vec_id").as("nbr_id"), col("sim_e6")))
+    fwd.select(explode(array(
+        struct(col("vec_id"), lit("fwd").as("kind"), col("rank"),
+          col("nbr_id"), col("sim_e6")),
+        struct(col("nbr_id").as("vec_id"), lit("back").as("kind"),
+          lit(null).cast("long").as("rank"), col("vec_id").as("nbr_id"),
+          col("sim_e6")))).as("l"))
+      .select("l.*")
 
   /** The delta→base probed-candidate step shared by the flat and
     * hierarchical attach paths: route each delta vector to its

@@ -1418,6 +1418,40 @@ object PipelineQueries {
       |  round(adc, 6) AS adc
       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
+  /** The packing queries' prelude (d25, d72, d73): token counts
+    * lineage-cut ONCE, so the shard scalar and every packer run share
+    * one corpus scan (the round-11 double-scan fix; PlanShapeSpec pins
+    * it), and the corpus-sized shard count — a bounded driver scalar
+    * the oracles recompute as the same ceil of the same sum.
+    */
+  private def countedShards(s: SparkSession, d: String): (DataFrame, Int) = {
+    val counted = TextAnalysis
+      .countedTokens(Tables.documents(s, d)).lineageCut
+    val total = counted
+      .select(coalesce(sum("n_tokens"), lit(0L))).head.getLong(0)
+    (counted, TextAnalysis.shardsFor(total, seqTokens = 64,
+      targetSeqsPerShard = 200))
+  }
+
+  /** d55's per-document 8-gram novelty (doc_id, n_grams, n_dup,
+    * novelty_e4), also d58's novelty signal: the share of a doc's
+    * 8-grams that occur only once corpus-wide, e4-scaled.
+    */
+  private def gramNovelty(docs: DataFrame): DataFrame = {
+    import graft.functions.TextHashExprs.ngram_hashes
+    val grams = Dedup.tokenHashes(docs)
+      .select(col("doc_id"), explode(ngram_hashes(col("th"), 8)).as("g"))
+    val occ = grams.groupBy("g").agg(count(lit(1)).as("occ"))
+    grams.join(occ, "g")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_grams"),
+        sum(when(col("occ") >= 2, 1L).otherwise(0L)).as("n_dup"))
+      .select(col("doc_id"), col("n_grams"), col("n_dup"),
+        floor((lit(1.0) - col("n_dup").cast("double")
+          / col("n_grams")) * 10000 + 0.5).cast("long")
+          .as("novelty_e4"))
+  }
+
   def all: Seq[Q] = Seq(
 
     // Exact dedup: hash-partitioned groupBy on the normalized text,
@@ -2027,19 +2061,8 @@ object PipelineQueries {
     // exchange on the shard key, identical on both engines.
     Q("d25_pack_sequences",
       (s, d) => {
-        import graft.operators.Checkpointing.CutOps
-        // Shards sized to the corpus (never a constant): total token
-        // count is one aggregate — a bounded driver scalar — and the
-        // oracle recomputes the identical ceil from the same sum.
-        // The tokenized counts are lineage-cut ONCE so the scalar
-        // and the packer share a single corpus scan (the round-11
-        // double-scan fix; PlanShapeSpec pins it on d72).
-        val counted = TextAnalysis
-          .countedTokens(Tables.documents(s, d)).lineageCut
-        val total = counted
-          .select(coalesce(sum("n_tokens"), lit(0L))).head.getLong(0)
-        val shards = TextAnalysis.shardsFor(total, seqTokens = 64,
-          targetSeqsPerShard = 200)
+        // Shards sized to the corpus (never a constant).
+        val (counted, shards) = countedShards(s, d)
         TextAnalysis.packSequencesCounted(counted, seqTokens = 64,
             shards = shards)
           .orderBy("doc_id")
@@ -2092,15 +2115,7 @@ object PipelineQueries {
     // eligible index on both engines).
     Q("d72_ffd_pack",
       (s, d) => {
-        import graft.operators.Checkpointing.CutOps
-        // One corpus scan: counts cut once, shared by the shard
-        // scalar and the fold (PlanShapeSpec pins the shape).
-        val counted = TextAnalysis
-          .countedTokens(Tables.documents(s, d)).lineageCut
-        val total = counted
-          .select(coalesce(sum("n_tokens"), lit(0L))).head.getLong(0)
-        val shards = TextAnalysis.shardsFor(total, seqTokens = 64,
-          targetSeqsPerShard = 200)
+        val (counted, shards) = countedShards(s, d)
         TextAnalysis.packSequencesFfdCounted(counted, seqTokens = 64,
             shards = shards)
           .orderBy("doc_id")
@@ -2171,16 +2186,10 @@ object PipelineQueries {
     // (cap, shard).
     Q("d73_pack_curve",
       (s, d) => {
-        import graft.operators.Checkpointing.CutOps
         // One tokenization for the scalar AND all four cap runs —
         // before the counted refactor each cap re-scanned and
         // re-tokenized the corpus (5 scans per evaluation).
-        val counted = TextAnalysis
-          .countedTokens(Tables.documents(s, d)).lineageCut
-        val total = counted
-          .select(coalesce(sum("n_tokens"), lit(0L))).head.getLong(0)
-        val shards = TextAnalysis.shardsFor(total, seqTokens = 64,
-          targetSeqsPerShard = 200)
+        val (counted, shards) = countedShards(s, d)
         Seq(64, 128, 256, 512).map { cap =>
           TextAnalysis.packSequencesFfdCounted(counted, seqTokens = cap,
               shards = shards)
@@ -8958,22 +8967,7 @@ object PipelineQueries {
     // on the same key, one doc_id partial agg — the d44 skeleton
     // minus the interval fold.
     Q("d55_novelty",
-      (s, d) => {
-        import graft.functions.TextHashExprs.ngram_hashes
-        val grams = Dedup.tokenHashes(Tables.documents(s, d))
-          .select(col("doc_id"), explode(ngram_hashes(col("th"), 8))
-            .as("g"))
-        val occ = grams.groupBy("g").agg(count(lit(1)).as("occ"))
-        grams.join(occ, "g")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("occ") >= 2, 1L).otherwise(0L)).as("n_dup"))
-          .select(col("doc_id"), col("n_grams"), col("n_dup"),
-            floor((lit(1.0) - col("n_dup").cast("double")
-              / col("n_grams")) * 10000 + 0.5).cast("long")
-              .as("novelty_e4"))
-          .orderBy("doc_id")
-      },
+      (s, d) => gramNovelty(Tables.documents(s, d)).orderBy("doc_id"),
       Some {
         val gramFold = (0 until 8).foldLeft("CAST(0 AS BIGINT)")(
           (a, j) => s"(($a * 31 + th[i+$j]) % ${TextHash.P})")
@@ -9441,19 +9435,9 @@ object PipelineQueries {
     // the contract is the adaptive bucketing, not the weights.
     Q("d58_quality_ensemble",
       (s, d) => {
-        import graft.functions.TextHashExprs.ngram_hashes
         val docs = Tables.documents(s, d)
-        val grams = Dedup.tokenHashes(docs)
-          .select(col("doc_id"), explode(ngram_hashes(col("th"), 8))
-            .as("g"))
-        val occ = grams.groupBy("g").agg(count(lit(1)).as("occ"))
-        val nov = grams.join(occ, "g")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("ng"),
-            sum(when(col("occ") >= 2, 1L).otherwise(0L)).as("nd"))
-          .select(col("doc_id"),
-            floor((lit(1.0) - col("nd").cast("double") / col("ng"))
-              * 10000 + 0.5).cast("long").as("nov"))
+        val nov = gramNovelty(docs)
+          .select(col("doc_id"), col("novelty_e4").as("nov"))
         val base = docs
           .withColumn("tk", expr(TextHash.sparkTokens("text")))
           .select(col("doc_id"), size(col("tk")).cast("long").as("len"),

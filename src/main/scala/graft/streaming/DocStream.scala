@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextHash
-import graft.functions.TextHashExprs.{band_sigs, minhash_sig, shingle_set, token_hashes}
+import graft.functions.TextHashExprs.token_hashes
 import graft.operators.{Dedup, PiiScrub, Sampling, TextAnalysis}
 
 /** Structured Streaming twins of the document-pipeline surface
@@ -89,10 +89,8 @@ object DocStream {
     */
   def hllPerLang(docs: DataFrame, p: Int = 6): DataFrame = {
     import graft.functions.HllSketch.hll_sketch
-    docs.select(col("lang"),
-        token_hashes(expr(TextHash.sparkTokens("text"))).as("th"))
-      .filter(size(col("th")) >= 3)
-      .select(col("lang"), explode(shingle_set(col("th"))).as("s0"))
+    Dedup.shingleRows(docs, col("lang"))
+      .select(col("lang"), explode(col("sh")).as("s0"))
       .select(col("lang"),
         (col("s0") * Sampling.Mixer % Sampling.MixMod).as("h"))
       .groupBy("lang")
@@ -146,45 +144,29 @@ object DocStream {
     */
   def incrementalDedupAgainstSets(delta: DataFrame, corpusSets: DataFrame,
       minJaccard: Double, watermark: String = "1 hour"): DataFrame = {
-    // Stream side: per-doc shingle sets + band signatures, all pure
-    // map-side kernel expressions (ingest_ts rides along for the
-    // watermark).
-    val dSets = delta
-      .select(col("doc_id").as("da"), col("ingest_ts"),
-        token_hashes(expr(TextHash.sparkTokens("text"))).as("th"))
-      .filter(size(col("th")) >= 3)
-      .select(col("da"), col("ingest_ts"),
-        shingle_set(col("th")).as("sha"))
-    val dBands = dSets.select(col("da"), col("ingest_ts"), col("sha"),
-      posexplode(band_sigs(minhash_sig(col("sha")))).as(Seq("band", "sig")))
-    val cSets = corpusSets
-    val cBands = cSets.select(col("doc_id").as("db"),
-      posexplode(band_sigs(minhash_sig(col("sh")))).as(Seq("band", "sig")))
-    verifyAgainstSets(dBands
+    // Stream side: per-doc shingle sets + band rows through the batch
+    // builders, all pure map-side kernel expressions (ingest_ts rides
+    // along for the watermark, the set through the candidate join).
+    val dSets = Dedup.shingleRows(delta, col("doc_id").as("da"),
+      col("ingest_ts"))
+    verifyAgainstSets(Dedup.bandRows(dSets, "da", "ingest_ts", "sh")
       .withWatermark("ingest_ts", watermark)
-      .join(cBands, Seq("band", "sig"))
-      .select(col("da"), col("ingest_ts"), col("sha"), col("db"))
-      .dropDuplicatesWithinWatermark("da", "db"), cSets, minJaccard)
+      .join(Dedup.bandTable(corpusSets).withColumnRenamed("doc_id", "db"),
+        Seq("band", "sig")), corpusSets, minJaccard)
   }
 
-  /** The exact-Jaccard verify tail shared by both streaming
-    * incremental twins (MinHash bands and winnowing fingerprints) —
-    * one definition of the verification arithmetic (the batch
-    * verifyJaccard2 protocol: floor(j·1e6 + 0.5) — rule-free on
-    * rounding boundaries). Input must carry (da, sha, db).
+  /** The candidate tail shared by both streaming incremental twins
+    * (MinHash bands and winnowing fingerprints): multi-key collisions
+    * dedup within the watermark, then the batch operators' exact
+    * Jaccard verify ([[Dedup.verifyJaccard]]) runs on the set each
+    * arriving doc carried through its candidate join. Input must
+    * carry (da, ingest_ts, sh, db).
     */
   private def verifyAgainstSets(cands: DataFrame, corpusSets: DataFrame,
       minJaccard: Double): DataFrame =
-    cands
-      .join(corpusSets.select(col("doc_id").as("db"),
-        col("sh").as("shb")), "db")
-      .withColumn("inter",
-        size(array_intersect(col("sha"), col("shb"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sha")) + size(col("shb")) - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("da"), col("db"),
-        floor(col("jaccard") * 1000000 + 0.5).cast("long").as("jaccard_e6"))
+    Dedup.verifyJaccard(cands
+      .select(col("da"), col("ingest_ts"), col("sh").as("sha"), col("db"))
+      .dropDuplicatesWithinWatermark("da", "db"), corpusSets, minJaccard)
 
   /** Streaming incremental WINNOWING near-dup detection —
     * [[Dedup.winnowingAgainst]] (the d82 candidate path) in its
@@ -220,21 +202,12 @@ object DocStream {
     // Stream side: shingle set + fingerprint hashes in ONE map-side
     // pass (the set rides through the candidate join so the verify
     // needs no second stream-side tokenize).
-    val dRows = delta
-      .select(col("doc_id").as("da"), col("ingest_ts"),
-        token_hashes(expr(TextHash.sparkTokens("text"))).as("th"),
-        col("text"))
-      .filter(size(col("th")) >= 3)
-      .select(col("da"), col("ingest_ts"),
-        shingle_set(col("th")).as("sha"), col("text"))
-    val dFp = TextAnalysis.winnowingFingerprintHashes(dRows, k, w)
-    verifyAgainstSets(dFp
+    val dRows = Dedup.shingleRows(delta, col("doc_id").as("da"),
+      col("ingest_ts"), col("text"))
+    verifyAgainstSets(TextAnalysis.winnowingFingerprintHashes(dRows, k, w)
       .withWatermark("ingest_ts", watermark)
       .join(corpusFps.select(col("doc_id").as("db"), col("hash")),
-        Seq("hash"))
-      .select(col("da"), col("ingest_ts"), col("sha"), col("db"))
-      .dropDuplicatesWithinWatermark("da", "db"), corpusSets,
-      minJaccard)
+        Seq("hash")), corpusSets, minJaccard)
   }
 
   /** Ingestion-time NOVELTY scoring — d55's audit in its incremental

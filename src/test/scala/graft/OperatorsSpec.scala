@@ -527,9 +527,9 @@ class OperatorsSpec extends SparkSpec {
         val at = rnd.nextInt(math.max(1, toks.length - 3))
         (src, toks.slice(at, at + 4).mkString(" "))
       }.distinct
-      val got = operators.Decontaminate.matches(
-          corpus.toDF("doc_id", "norm"), probes.toDF("probe_src", "probe"),
-          n = 4)
+      val (cdf, pdf) =
+        (corpus.toDF("doc_id", "norm"), probes.toDF("probe_src", "probe"))
+      val got = operators.Decontaminate.matches(cdf, pdf, n = 4)
         .as[(Long, Long)].collect().toSet
       val want = (for {
         (id, norm) <- corpus
@@ -537,6 +537,14 @@ class OperatorsSpec extends SparkSpec {
         if id != src && s" $norm ".contains(s" $probe ")
       } yield (id, src)).toSet
       assert(got == want, s"round $round")
+      // The bloom-pruned variant drops only grams no probe can equal,
+      // so any false-positive rate gives the same pairs.
+      for (fpp <- Seq(0.01, 0.5)) {
+        val bloom = operators.Decontaminate
+          .matchesBloomPruned(cdf, pdf, n = 4, fpp = fpp)
+          .as[(Long, Long)].collect().toSet
+        assert(bloom == want, s"round $round, bloom fpp $fpp")
+      }
     }
   }
 

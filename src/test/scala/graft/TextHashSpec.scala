@@ -93,6 +93,43 @@ class TextHashKernelSpec extends SparkSpec {
     assert(both.filter(
       col("sh") =!= col("shk") || col("mh") =!= col("mhk") ||
         col("f") =!= col("fk") || col("b") =!= col("bk")).count() == 0)
+    // Out-of-domain hash arrays — negative elements, elements ≥ P,
+    // fewer than 3 or than n elements: the kernel folds must equal
+    // the spec on every input, not only on token hashes in [0, P).
+    // Magnitudes stay ≤ 3·10⁹, so no 64-bit product overflows.
+    val P = TextHash.P
+    val odd = Seq(Seq(-5L, 3L, -1000000000L, 7L, -5L, 3L),
+      Seq(P, P + 1, -100L, 2 * P + 3, 3000000000L), Seq(P + 1, -100L, 5L),
+      Seq(-1L, -2L), Seq(P + 7), Seq.empty[Long]).toDF("th")
+    // The n-gram fold of the kernels' doc, as a HOF over `th`.
+    def grams(n: Int) = expr(s"CASE WHEN size(th) >= $n THEN " +
+      s"transform(sequence(0, size(th) - $n), i -> aggregate(" +
+      s"slice(th, i + 1, $n), CAST(0 AS BIGINT), (h, t) -> " +
+      s"(h * 31 + t) % $P)) ELSE CAST(array() AS array<bigint>) END")
+    val oddBoth = odd.select(col("th"),
+        expr(TextHash.sparkShingles("th")).as("sh"),
+        shingle_set(col("th")).as("shk"),
+        expr(TextHash.sparkSimHash("th")).as("f"),
+        simhash(col("th")).as("fk"))
+      .select(col("*"),
+        expr(s"IF(size(th) >= 3, ${TextHash.sparkMinHash("sh")}, NULL)")
+          .as("mh"),
+        minhash_sig(col("shk")).as("mhk"))
+      .select(col("*"),
+        expr(s"IF(size(th) >= 3, ${TextHash.sparkBandSigs("mh")}, NULL)")
+          .as("b"),
+        when(size(col("th")) >= 3, band_sigs(col("mhk"))).as("bk"))
+    assert(oddBoth.filter(col("sh") =!= col("shk") ||
+      col("f") =!= col("fk") || col("mh") =!= col("mhk") ||
+      col("b") =!= col("bk")).count() == 0)
+    for (n <- Seq(2, 3, 4))
+      assert(odd.filter(ngram_hashes_pos(col("th"), n) =!= grams(n) ||
+        ngram_hashes(col("th"), n) =!= array_distinct(grams(n)))
+        .count() == 0, s"n-gram kernels != fold at n = $n")
+    // Why shingle_set keeps its own formula: at a first hash ≥ P the
+    // n = 3 gram fold reduces it first and lands elsewhere.
+    assert(odd.filter(size(col("th")) === 3 &&
+      shingle_set(col("th")) =!= ngram_hashes(col("th"), 3)).count() == 1)
   }
 
   test("string_poly_hash == HOF doc fingerprint") {
@@ -186,5 +223,18 @@ class TextHashKernelSpec extends SparkSpec {
     val ecol = Seq(Seq(1.0, -2.0, 4.0, 8.0)).toDF("v")
       .select(embed_simhash(col("v")).as("e")).head()
     assert(esql == ecol)
+    // A wrong call fails naming its function: a short call, a long
+    // call and a non-literal size.
+    Seq("hll_sketch(size(tk))" -> "hll_sketch",
+        "token_hashes(tk, tk)" -> "token_hashes",
+        "ngram_hashes(token_hashes(tk), size(tk))" -> "ngram_hashes")
+      .foreach { case (call, fn) =>
+        val e = intercept[Exception](
+          spark.sql(s"SELECT $call FROM kreg").collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+          .mkString(" | ")
+        assert(msgs.contains(fn), s"$call: $msgs")
+      }
   }
 }
