@@ -39,6 +39,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 object CheckpointBridge {
 
+  /** Cuts that could not associate the final plan's output with the
+    * logical output and so declared `UnknownPartitioning`, like a stock
+    * checkpoint. Each one costs the frame's readers a re-shuffle (about
+    * 2x on the wiki pass), so specs pin it at zero for the PageRank
+    * paths: a Spark upgrade that changes the association shows there.
+    */
+  private[graftbridge] val fallbacks =
+    new java.util.concurrent.atomic.AtomicLong
+
   /** True when `df`'s optimized plan is a single scan of an already
     * checkpointed RDD, i.e. `df` is a cut (under at most a no-op
     * projection) and re-cutting it would only copy its blocks.
@@ -97,6 +106,7 @@ object CheckpointBridge {
             .map(so => rewrite(so).asInstanceOf[SortOrder])
           (p, o)
         case None =>
+          fallbacks.incrementAndGet()
           (UnknownPartitioning(internalRdd.getNumPartitions),
             Seq.empty[SortOrder])
       }

@@ -267,6 +267,10 @@ class GraphSpec extends SparkSpec {
     assert(peak10 > 0)
     assert(peak30 < peak10 + peak10 / 10,
       s"30-round peak $peak30 B vs 10-round $peak10 B")
+    // The pages themselves stay small: 20 maps of a few hundred keys
+    // fit in 20 session-sized (4 MB) pages, where Spark's default
+    // page (64 MB under a 7 GB heap) holds over a GB for them.
+    assert(peak10 < (128L << 20), s"10-round peak $peak10 B")
   }
 
   test("runOnPages at 8 partitions matches the 1-partition run") {
