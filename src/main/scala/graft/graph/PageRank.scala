@@ -180,10 +180,10 @@ object PageRank {
     * rounds fuse into a single stage whose task holds every round's
     * partial and final aggregation maps at once, at least one memory
     * page each: the 10 fused rounds of a 2,000-page wiki pass peak at
-    * 90 MB, 2 × 4 MB a round at [[graft.GraftSession]]'s page size
-    * (650 MB, 2 × 32 MB a round, at Spark's default page under a 4 GB
-    * heap). Cutting after this many rounds bounds that peak. 10 is the
-    * reference's round count, so its pipeline stays cut-free.
+    * 90 MB under a 4 GB heap, 2 × 4 MB a round at
+    * [[graft.GraftSession]]'s page size. Cutting after this many rounds
+    * bounds that peak. 10 is the reference's round count, so its
+    * pipeline stays cut-free.
     */
   private val MaxFusedRounds = 10
 
